@@ -19,7 +19,8 @@ This module preserves those semantics without an LLM dependency:
   MCP tools: 1 product → search_product then compare_results by the
   best hit's barcode; N products → find_best_basket (+
   calculate_savings when comparable) — every call dispatched through
-  mcp.execute_tool (schema-validated), never more than
+  mcp.execute_tool (schema-validated) over one (products,
+  supermarkets) pair opened per session, never more than
   MAX_ITERATIONS tool rounds.
 - ``answer`` formatting accepts an optional ``phrase(context) ->
   str`` hook where the reference calls the LLM; the default is a
@@ -33,7 +34,7 @@ from typing import Any, Callable
 
 from pyspark.sql import SparkSession
 
-from . import mcp
+from . import mcp, tools
 
 MAX_ITERATIONS = 3  # simple-proxy.js:1786
 DEFAULT_LOCATION = "ישראל"  # prompt default, simple-proxy.js:2233
@@ -155,11 +156,12 @@ def run_shopping_session(
     parsed = parse_shopping_query(message)
     products = parsed["products"]
     tool_calls: list[dict[str, Any]] = []
+    frames = tools.open_frames(spark, sf_dir)
 
     def call(name: str, arguments: dict[str, Any]) -> Any:
         if len(tool_calls) >= MAX_ITERATIONS:
             raise RuntimeError(f"tool budget exceeded ({MAX_ITERATIONS})")
-        result = mcp.execute_tool(spark, sf_dir, name, arguments)
+        result = mcp.execute_tool(*frames, name, arguments)
         tool_calls.append({"tool": name, "arguments": arguments})
         return result
 

@@ -19,6 +19,7 @@ Semantics ledger (SURVEY.md §2):
   basket_store_totals A6/A7 prerequisite (argmin offer per
                       store×product, mcp.py savings-0 convention)
   store_stats         A2/A3/A5
+  store_directory     store list with city/name ILIKE filters
 """
 
 from __future__ import annotations
@@ -225,3 +226,16 @@ def store_stats(products: DataFrame, supermarkets: DataFrame) -> DataFrame:
             ),
         )
     )
+
+
+def store_directory(
+    supermarkets: DataFrame, city: str | None = None, name: str | None = None
+) -> DataFrame:
+    """Store list with optional case-insensitive substring filters on
+    city and name, ordered by (name, supermarket_id) (mcp.py:475-483)."""
+    df = supermarkets
+    if city:
+        df = df.where(F.lower(F.col("city")).contains(city.lower()))
+    if name:
+        df = df.where(F.lower(F.col("name")).contains(name.lower()))
+    return df.orderBy("name", "supermarket_id")

@@ -34,7 +34,9 @@ filters; nothing here shuffles.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+import os
+
+from pyspark.sql import DataFrame, functions as F
 
 from .catalog import Catalog
 from .functions.money import dec, dec_lit
@@ -64,10 +66,6 @@ PRODUCTS_CTE = """products AS (
     l_shipdate AS collected_at
   FROM lineitem JOIN part ON l_partkey = p_partkey
 )"""
-
-# The single most load-bearing expression in the reference (F4,
-# products.py:84 etc.): effective price = coalesce(promo, price).
-EFF_SQL = "COALESCE(promo_price, price)"
 
 
 def domain_sql(body: str) -> str:
@@ -123,7 +121,10 @@ def products(cat: Catalog, materialized: bool = True) -> DataFrame:
         # files under it (artifacts.py).
         publish(_products_expr(cat), path)
         _SILVER_BUILT.add(path)
-    return cat.spark.read.parquet(path)
+    # Read the version the link points at, not the link: a frame held
+    # across requests keeps its files when another process republishes
+    # (publish leaves superseded versions in place).
+    return cat.spark.read.parquet(os.path.realpath(path))
 
 
 def _products_expr(cat: Catalog) -> DataFrame:
@@ -167,7 +168,3 @@ def _products_expr(cat: Catalog) -> DataFrame:
             F.col("l_extendedprice").alias("_price_raw"),
         )
     )
-
-
-def effective() -> Column:
-    return F.coalesce(F.col("promo_price"), F.col("price"))

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame
 
 from .tools import ALL_TOOLS
 
@@ -175,6 +175,8 @@ def validate_arguments(name: str, arguments: dict[str, Any]) -> None:
     """Minimal JSON-schema check: required present, declared types,
     no undeclared properties (the subset the reference's FastAPI
     layer enforces via pydantic)."""
+    if not isinstance(arguments, dict):
+        raise ToolValidationError(f"{name}: arguments must be an object")
     schema = TOOL_SCHEMAS[name]["inputSchema"]
     props = schema["properties"]
     for req in schema["required"]:
@@ -222,12 +224,13 @@ def list_tools() -> list[dict[str, Any]]:
 
 
 def execute_tool(
-    spark: SparkSession, sf_dir: str, name: str, arguments: dict[str, Any]
+    prods: DataFrame, dim: DataFrame, name: str, arguments: dict[str, Any]
 ) -> Any:
     """POST /api/mcp/tools/{name} analog (mcp.py:593-625): unknown
     tool → KeyError; invalid arguments → ToolValidationError;
-    otherwise dispatch to the DataFrame-backed implementation."""
+    otherwise dispatch to the DataFrame-backed implementation over the
+    caller's (products, supermarkets) pair (tools.open_frames)."""
     if name not in ALL_TOOLS:
         raise KeyError(f"unknown tool {name!r}")
     validate_arguments(name, arguments)
-    return ALL_TOOLS[name](spark, sf_dir, **arguments)
+    return ALL_TOOLS[name](prods, dim, **arguments)

@@ -20,8 +20,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
+from ..domain import effective
 from ..functions.money import to_double
-from ..mapping import domain_sql, effective, products
+from ..mapping import domain_sql, products
 from ..registry import register
 
 _ORACLE_Q07 = domain_sql("""

@@ -445,7 +445,7 @@ def search_trigram_index(
     tags=("filter", "time"),
 )
 def q05_recent_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..mapping import effective
+    from ..domain import effective
 
     df = products(Catalog(spark, sf_dir))
     return (

@@ -133,7 +133,7 @@ FROM spread
     tags=("agg", "stats", "variance"),
 )
 def q55_price_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..mapping import effective
+    from ..domain import effective
 
     df = products(Catalog(spark, sf_dir))
     eff2 = effective().cast("decimal(18,2)")

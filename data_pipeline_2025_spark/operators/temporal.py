@@ -65,7 +65,7 @@ ASOF JOIN obs o
     tags=("temporal", "asof", "window"),
 )
 def q53_asof_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..mapping import effective
+    from ..domain import effective
 
     df = products(Catalog(spark, sf_dir)).where(
         F.col("barcode").isin(*ASOF_BARCODES)
@@ -118,7 +118,7 @@ WINDOW w AS (PARTITION BY supermarket_id, barcode ORDER BY collected_at)
     tags=("temporal", "scd2", "window"),
 )
 def q54_price_validity_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..mapping import effective
+    from ..domain import effective
 
     df = products(Catalog(spark, sf_dir)).where(
         F.col("barcode").isin(*ASOF_BARCODES)
@@ -353,7 +353,7 @@ WHERE rn = 1
     tags=("temporal", "asof", "window"),
 )
 def q140_nearest_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..mapping import effective
+    from ..domain import effective
 
     df = products(Catalog(spark, sf_dir)).where(
         F.col("barcode").isin(*ASOF_BARCODES)

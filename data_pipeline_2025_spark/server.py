@@ -2,25 +2,29 @@
 the engine (salim/app/server/main.py:68-76 root + routers). Every
 @router route in the reference's four route files (products.py,
 supermarkets.py, utils.py, mcp.py) has a matching entry in the route
-table below, including the single-row fetches (/products/{id},
+tables below, including the single-row fetches (/products/{id},
 /supermarkets/{id}), /products/price-history/{barcode}, and the MCP
 metadata/health endpoints.
 
 FastAPI is not installed in this container, so the server is plain
 stdlib (ThreadingHTTPServer + a regex route table): zero
-dependencies, actually serves requests, and the handler functions
-are plain (spark, sf_dir, params) callables any ASGI framework can
-mount 1:1 if present. Parameter validation mirrors the reference's
-FastAPI Query constraints (limit ∈ [1,1000] default 100, offset ≥ 0,
-days ∈ [1,365] default 30 — products.py:22-31,239) including the
-422 status FastAPI returns on violations, and 404 for an unknown
-barcode (products.py:190-192).
+dependencies, actually serves requests. ``create_server`` opens the
+(products, supermarkets) pair once; each handler is a plain
+``(prods, dim, params, **path_args)`` callable over that pair —
+``params`` is the query string for GET and the JSON body for POST —
+composing the same ``domain`` queries the MCP tools use, so any ASGI
+framework can mount them 1:1. Parameter validation mirrors the
+reference's FastAPI Query constraints (limit ∈ [1,1000] default 100,
+offset ≥ 0, days ∈ [1,365] default 30 — products.py:22-31,239)
+including the 422 status FastAPI returns on violations, 404 for an
+unknown barcode (products.py:190-192), and FastAPI's bare 500 body.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 import json
+import logging
 import re
 import threading
 from decimal import Decimal
@@ -28,12 +32,14 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
 from urllib.parse import parse_qs, urlparse
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import domain, mcp
 from .catalog import Catalog
 from .mapping import products, supermarkets
+
+_log = logging.getLogger(__name__)
 
 
 class HttpError(Exception):
@@ -108,9 +114,8 @@ _PRODUCT_COLS = [
 ]
 
 
-def get_products(spark: SparkSession, sf_dir: str, params: dict) -> list[dict]:
+def get_products(prods: DataFrame, dim: DataFrame, params: dict) -> list[dict]:
     """GET /products (products.py:20-64)."""
-    prods = products(Catalog(spark, sf_dir))
     page = domain.search_products(
         prods,
         term=params.get("q") or params.get("name"),
@@ -126,11 +131,10 @@ def get_products(spark: SparkSession, sf_dir: str, params: dict) -> list[dict]:
     return _rows(page.select(*_PRODUCT_COLS))
 
 
-def get_barcode(spark: SparkSession, sf_dir: str, barcode: str) -> list[dict]:
+def get_barcode(prods: DataFrame, dim: DataFrame, params: dict, barcode: str) -> list[dict]:
     """GET /products/barcode/{barcode} (products.py:174-226): offers
     across stores sorted cheapest-first; 404 when unknown."""
-    cat = Catalog(spark, sf_dir)
-    offers = domain.compare_offers(products(cat), supermarkets(cat), barcode)
+    offers = domain.compare_offers(prods, dim, barcode)
     out = _rows(
         offers.select(
             *_PRODUCT_COLS,
@@ -144,15 +148,14 @@ def get_barcode(spark: SparkSession, sf_dir: str, barcode: str) -> list[dict]:
     return out
 
 
-def get_product(spark: SparkSession, sf_dir: str, product_id: str) -> dict:
+def get_product(prods: DataFrame, dim: DataFrame, params: dict, product_id: str) -> dict:
     """GET /products/{product_id} (products.py:148-160): fetch one
     row by primary key, 404 when absent. The reference key is a
     serial int; ours is the md5 surrogate the mapping layer derives
     (mapping.py:19), so the path segment is the hash string — same
     contract (exact-match single fetch), engine-native key."""
     row = (
-        products(Catalog(spark, sf_dir))
-        .where(F.col("product_id") == product_id)
+        prods.where(F.col("product_id") == product_id)
         .limit(1)
         .select(*_PRODUCT_COLS)
         .collect()
@@ -162,30 +165,24 @@ def get_product(spark: SparkSession, sf_dir: str, product_id: str) -> dict:
     return _jsonable(row[0].asDict())
 
 
-def get_supermarket(spark: SparkSession, sf_dir: str, supermarket_id: int) -> dict:
+def get_supermarket(
+    prods: DataFrame, dim: DataFrame, params: dict, supermarket_id: str
+) -> dict:
     """GET /supermarkets/{supermarket_id} (supermarkets.py:24-35):
     one dim row by id, 404 when absent."""
-    row = (
-        supermarkets(Catalog(spark, sf_dir))
-        .where(F.col("supermarket_id") == supermarket_id)
-        .limit(1)
-        .collect()
-    )
+    row = dim.where(F.col("supermarket_id") == int(supermarket_id)).limit(1).collect()
     if not row:
         raise HttpError(404, "Supermarket not found")
     return _jsonable(row[0].asDict())
 
 
-def get_history(
-    spark: SparkSession, sf_dir: str, barcode: str, params: dict
-) -> dict:
+def get_history(prods: DataFrame, dim: DataFrame, params: dict, barcode: str) -> dict:
     """GET /products/barcode/{barcode}/history (products.py:229-296):
     history window + trend + low/high. Anchored at the data's max
     collected_at (the reference anchors at now(); a data anchor keeps
     the response deterministic)."""
     days = _int_param(params, "days", 30, lo=1, hi=365)
-    cat = Catalog(spark, sf_dir)
-    prods = products(cat).where(F.col("barcode") == barcode)
+    prods = prods.where(F.col("barcode") == barcode)
     anchor_row = prods.agg(F.max("collected_at").alias("m")).collect()[0]
     if anchor_row["m"] is None:
         raise HttpError(404, f"no products with barcode {barcode}")
@@ -207,31 +204,23 @@ def get_history(
     }
 
 
-def get_lowest_prices(spark: SparkSession, sf_dir: str, params: dict) -> list[dict]:
+def get_lowest_prices(prods: DataFrame, dim: DataFrame, params: dict) -> list[dict]:
     """GET /products/lowest-prices (products.py:82-143)."""
     limit = _int_param(params, "limit", 20, lo=1, hi=1000)
-    cat = Catalog(spark, sf_dir)
-    page = domain.lowest_prices_page(products(cat), limit=limit)
+    page = domain.lowest_prices_page(prods, limit=limit)
     return _rows(page.select(*_PRODUCT_COLS, "eff", "savings_pct"))
 
 
-def get_supermarkets(spark: SparkSession, sf_dir: str, params: dict) -> list[dict]:
+def get_supermarkets(prods: DataFrame, dim: DataFrame, params: dict) -> list[dict]:
     """GET /supermarkets (+ city/name filters, mcp.py:475-483)."""
-    dim = supermarkets(Catalog(spark, sf_dir))
-    if params.get("city"):
-        dim = dim.where(F.lower(F.col("city")).contains(params["city"].lower()))
-    if params.get("name"):
-        dim = dim.where(F.lower(F.col("name")).contains(params["name"].lower()))
-    return _rows(dim.orderBy("name", "supermarket_id"))
+    return _rows(domain.store_directory(dim, params.get("city"), params.get("name")))
 
 
 def get_supermarket_products(
-    spark: SparkSession, sf_dir: str, supermarket_id: int, params: dict
+    prods: DataFrame, dim: DataFrame, params: dict, supermarket_id: str
 ) -> list[dict]:
     """GET /supermarkets/{id}/products (supermarkets.py:38-58)."""
-    prods = products(Catalog(spark, sf_dir)).where(
-        F.col("supermarket_id") == supermarket_id
-    )
+    prods = prods.where(F.col("supermarket_id") == int(supermarket_id))
     if params.get("category"):
         prods = prods.where(F.col("category") == params["category"])
     if params.get("q"):
@@ -244,38 +233,30 @@ def get_supermarket_products(
     )
 
 
-def get_categories(spark: SparkSession, sf_dir: str) -> list[str]:
-    """GET /categories (utils.py:17-18): sorted distinct, nulls out."""
-    df = products(Catalog(spark, sf_dir))
-    return [
-        r["category"]
-        for r in df.select("category").dropna().distinct().orderBy("category").collect()
-    ]
+def _distinct(prods: DataFrame, col: str) -> list[str]:
+    """Sorted distinct values of one column, nulls out."""
+    return [r[col] for r in prods.select(col).dropna().distinct().orderBy(col).collect()]
 
 
-def get_brands(spark: SparkSession, sf_dir: str) -> list[str]:
+def get_categories(prods: DataFrame, dim: DataFrame, params: dict) -> list[str]:
+    """GET /categories (utils.py:17-18)."""
+    return _distinct(prods, "category")
+
+
+def get_brands(prods: DataFrame, dim: DataFrame, params: dict) -> list[str]:
     """GET /brands (utils.py:28-29)."""
-    df = products(Catalog(spark, sf_dir))
-    return [
-        r["brand"]
-        for r in df.select("brand").dropna().distinct().orderBy("brand").collect()
-    ]
+    return _distinct(prods, "brand")
 
 
-def get_stats(spark: SparkSession, sf_dir: str) -> dict:
+def get_stats(prods: DataFrame, dim: DataFrame, params: dict) -> dict:
     """GET /stats (utils.py:40-50): counts, on-sale share, avg price
     (percentages as Python-float math — A3)."""
-    cat = Catalog(spark, sf_dir)
-    row = (
-        products(cat)
-        .agg(
-            F.count(F.lit(1)).alias("total_products"),
-            F.countDistinct("supermarket_id").alias("total_supermarkets"),
-            F.count("promo_price").alias("products_on_sale"),
-            F.avg(F.col("price").cast("double")).alias("avg_price"),
-        )
-        .collect()[0]
-    )
+    row = prods.agg(
+        F.count(F.lit(1)).alias("total_products"),
+        F.countDistinct("supermarket_id").alias("total_supermarkets"),
+        F.count("promo_price").alias("products_on_sale"),
+        F.avg(F.col("price").cast("double")).alias("avg_price"),
+    ).collect()[0]
     total = row["total_products"]
     on_sale = row["products_on_sale"]
     return {
@@ -287,120 +268,12 @@ def get_stats(spark: SparkSession, sf_dir: str) -> dict:
     }
 
 
-# ------------------------------------------------------------- routing
-
-_ROUTES: list[tuple[str, re.Pattern[str], Any]] = []
-
-
-def _route(method: str, pattern: str):
-    def deco(fn):
-        _ROUTES.append((method, re.compile(f"^{pattern}$"), fn))
-        return fn
-
-    return deco
-
-
-@_route("GET", r"/")
-def _root(ctx, m, params, body):
-    # main.py:68-70 welcome banner
-    return {"message": "Welcome to Salim API - Israeli Supermarket Price Comparison"}
-
-
-@_route("GET", r"/health")
-def _health(ctx, m, params, body):
-    # utils.py:56-59
-    return {"status": "healthy", "service": "salim-api"}
-
-
-@_route("GET", r"/products")
-def _products(ctx, m, params, body):
-    return get_products(ctx["spark"], ctx["sf_dir"], params)
-
-
-@_route("GET", r"/products/lowest-prices")
-def _lowest(ctx, m, params, body):
-    return get_lowest_prices(ctx["spark"], ctx["sf_dir"], params)
-
-
-@_route("GET", r"/products/price-history/(?P<barcode>[^/]+)")
-def _price_history(ctx, m, params, body):
-    # the reference's literal path (products.py:228)
-    return get_history(ctx["spark"], ctx["sf_dir"], m["barcode"], params)
-
-
-@_route("GET", r"/products/barcode/(?P<barcode>[^/]+)/history")
-def _history(ctx, m, params, body):
-    # engine-native alias of /products/price-history/{barcode}
-    return get_history(ctx["spark"], ctx["sf_dir"], m["barcode"], params)
-
-
-@_route("GET", r"/products/barcode/(?P<barcode>[^/]+)")
-def _barcode(ctx, m, params, body):
-    return get_barcode(ctx["spark"], ctx["sf_dir"], m["barcode"])
-
-
-@_route("GET", r"/products/(?P<pid>[^/]+)")
-def _product(ctx, m, params, body):
-    # registered AFTER /products/lowest-prices and the barcode routes
-    # so the literal segments win, as FastAPI's router resolves them
-    return get_product(ctx["spark"], ctx["sf_dir"], m["pid"])
-
-
-@_route("GET", r"/supermarkets")
-def _supermarkets(ctx, m, params, body):
-    return get_supermarkets(ctx["spark"], ctx["sf_dir"], params)
-
-
-@_route("GET", r"/supermarkets/(?P<sid>\d+)")
-def _supermarket(ctx, m, params, body):
-    return get_supermarket(ctx["spark"], ctx["sf_dir"], int(m["sid"]))
-
-
-@_route("GET", r"/supermarkets/(?P<sid>\d+)/products")
-def _super_products(ctx, m, params, body):
-    return get_supermarket_products(
-        ctx["spark"], ctx["sf_dir"], int(m["sid"]), params
-    )
-
-
-@_route("GET", r"/categories")
-def _categories(ctx, m, params, body):
-    return get_categories(ctx["spark"], ctx["sf_dir"])
-
-
-@_route("GET", r"/brands")
-def _brands(ctx, m, params, body):
-    return get_brands(ctx["spark"], ctx["sf_dir"])
-
-
-@_route("GET", r"/stats")
-def _stats(ctx, m, params, body):
-    return get_stats(ctx["spark"], ctx["sf_dir"])
-
-
-@_route("GET", r"/api/mcp/health")
-def _mcp_health(ctx, m, params, body):
-    # mcp.py:637-643
-    return {"status": "healthy", "mcpConnected": True, "server": mcp.server_info()}
-
-
-@_route("GET", r"/api/mcp/server/info")
-def _mcp_info(ctx, m, params, body):
-    return {"server": mcp.server_info()}
-
-
-@_route("GET", r"/api/mcp/tools")
-def _mcp_list(ctx, m, params, body):
-    return {"tools": mcp.list_tools()}
-
-
-@_route("POST", r"/api/mcp/tools/(?P<name>[^/]+)")
-def _mcp_exec(ctx, m, params, body):
-    name = m["name"]
+def post_tool(prods: DataFrame, dim: DataFrame, body: Any, name: str) -> dict:
+    """POST /api/mcp/tools/{name} (mcp.py:593-625)."""
+    if not isinstance(body, dict):
+        raise HttpError(422, "body must be a JSON object")
     try:
-        result = mcp.execute_tool(
-            ctx["spark"], ctx["sf_dir"], name, (body or {}).get("arguments", {})
-        )
+        result = mcp.execute_tool(prods, dim, name, body.get("arguments", {}))
     except KeyError:
         raise HttpError(404, f"unknown tool {name}")
     except mcp.ToolValidationError as exc:
@@ -408,21 +281,65 @@ def _mcp_exec(ctx, m, params, body):
     return {"tool": name, "result": _jsonable(result)}
 
 
-def _dispatch(ctx, method, path, params, body):
-    for m, pattern, fn in _ROUTES:
+# ------------------------------------------------------------- routing
+
+# GET routes whose answer never changes.
+_STATIC: dict[str, Any] = {
+    # main.py:68-70 welcome banner
+    "/": {"message": "Welcome to Salim API - Israeli Supermarket Price Comparison"},
+    "/health": {"status": "healthy", "service": "salim-api"},  # utils.py:56-59
+    # mcp.py:637-643, 580-591
+    "/api/mcp/health": {"status": "healthy", "mcpConnected": True, "server": mcp.server_info()},
+    "/api/mcp/server/info": {"server": mcp.server_info()},
+    "/api/mcp/tools": {"tools": mcp.list_tools()},
+}
+
+# (method, path pattern, handler name), first match wins: the literal
+# /products/... routes come before /products/{product_id}, as
+# FastAPI's router resolves them.
+_ROUTES: list[tuple[str, re.Pattern[str], str]] = [
+    (method, re.compile(f"^{pattern}$"), handler)
+    for method, pattern, handler in (
+        ("GET", r"/products", "get_products"),
+        ("GET", r"/products/lowest-prices", "get_lowest_prices"),
+        # the reference's literal path (products.py:228) and the
+        # engine-native alias serve the same payload
+        ("GET", r"/products/price-history/(?P<barcode>[^/]+)", "get_history"),
+        ("GET", r"/products/barcode/(?P<barcode>[^/]+)/history", "get_history"),
+        ("GET", r"/products/barcode/(?P<barcode>[^/]+)", "get_barcode"),
+        ("GET", r"/products/(?P<product_id>[^/]+)", "get_product"),
+        ("GET", r"/supermarkets", "get_supermarkets"),
+        ("GET", r"/supermarkets/(?P<supermarket_id>\d+)", "get_supermarket"),
+        ("GET", r"/supermarkets/(?P<supermarket_id>\d+)/products", "get_supermarket_products"),
+        ("GET", r"/categories", "get_categories"),
+        ("GET", r"/brands", "get_brands"),
+        ("GET", r"/stats", "get_stats"),
+        ("POST", r"/api/mcp/tools/(?P<name>[^/]+)", "post_tool"),
+    )
+]
+
+
+def _dispatch(frames, method: str, path: str, params: Any) -> Any:
+    if method == "GET" and path in _STATIC:
+        return _STATIC[path]
+    for m, pattern, handler in _ROUTES:
         match = pattern.match(path)
         if match and m == method:
-            return fn(ctx, match.groupdict(), params, body)
+            # looked up by name at call time, so a rebound module
+            # attribute (a wrapper, a test double) serves the request
+            return globals()[handler](*frames, params, **match.groupdict())
     raise HttpError(404, f"no route for {method} {path}")
 
 
 def create_server(
     spark: SparkSession, sf_dir: str, host: str = "127.0.0.1", port: int = 0
 ) -> ThreadingHTTPServer:
-    """Build (not start) the HTTP server; port 0 = ephemeral.
-    Call .serve_forever() in a thread; .server_address[1] is the
-    bound port."""
-    ctx = {"spark": spark, "sf_dir": sf_dir}
+    """Build (not start) the HTTP server; port 0 = ephemeral. The
+    (products, supermarkets) pair is opened here, once, and every
+    request reads it. Call .serve_forever() in a thread;
+    .server_address[1] is the bound port."""
+    cat = Catalog(spark, sf_dir)
+    frames = (products(cat), supermarkets(cat))
 
     class Handler(BaseHTTPRequestHandler):
         def log_message(self, *args):  # quiet test output
@@ -436,23 +353,35 @@ def create_server(
             self.end_headers()
             self.wfile.write(data)
 
-        def _handle(self, method: str) -> None:
-            parsed = urlparse(self.path)
-            params = {k: v[0] for k, v in parse_qs(parsed.query).items()}
-            body = None
-            length = int(self.headers.get("Content-Length") or 0)
-            if length:
-                try:
-                    body = json.loads(self.rfile.read(length))
-                except json.JSONDecodeError:
-                    self._respond(422, {"detail": "invalid JSON body"})
-                    return
+        def _read_body(self) -> Any:
+            """The parsed JSON body, {} when there is none."""
             try:
-                result = _dispatch(ctx, method, parsed.path.rstrip("/") or "/", params, body)
+                length = int(self.headers.get("Content-Length") or 0)
+            except ValueError:
+                length = -1
+            if length < 0:
+                raise HttpError(400, "invalid Content-Length")
+            if not length:
+                return {}
+            try:
+                return json.loads(self.rfile.read(length))
+            except ValueError:  # not JSON, or not UTF-8
+                raise HttpError(422, "invalid JSON body")
+
+        def _handle(self, method: str) -> None:
+            try:
+                parsed = urlparse(self.path)
+                body = self._read_body()
+                if method == "GET":
+                    params = {k: v[0] for k, v in parse_qs(parsed.query).items()}
+                else:
+                    params = body
+                result = _dispatch(frames, method, parsed.path.rstrip("/") or "/", params)
             except HttpError as exc:
                 self._respond(exc.status, {"detail": exc.detail})
-            except Exception as exc:  # parity with FastAPI's 500
-                self._respond(500, {"detail": f"{type(exc).__name__}: {exc}"})
+            except Exception:  # FastAPI's default 500: no internals leak
+                _log.exception("%s %s failed", method, self.path)
+                self._respond(500, {"detail": "Internal Server Error"})
             else:
                 self._respond(200, result)
 

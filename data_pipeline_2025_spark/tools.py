@@ -7,36 +7,39 @@ get_store_info) plus the two JS-layer tools
 (simple-proxy.js:1243-1619: find_most_expensive_basket,
 calculate_savings). Result dict shapes follow mcp.py:159-296.
 
-Each tool composes the already-oracle-tested operators; collection
-happens here (tools return JSON-able dicts, the reference's tool
-contract), so every limit is applied BEFORE collect.
+Every tool takes the (products, supermarkets) pair first — open it
+once per server or session with ``open_frames`` — and composes the
+oracle-tested ``domain`` queries, the same ones the REST routes use.
+Collection happens here (tools return JSON-able dicts, the
+reference's tool contract), so every limit is applied BEFORE collect.
 """
 
 from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import domain
 from .catalog import Catalog
 from .functions.money import to_double
-from .mapping import effective, products, supermarkets
+from .mapping import products, supermarkets
 
 SEARCH_LIMIT = 10  # mcp.py:155
 
 
-def _offers(spark: SparkSession, sf_dir: str):
+def open_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The (products, supermarkets) pair every tool takes."""
     cat = Catalog(spark, sf_dir)
     return products(cat), supermarkets(cat)
 
 
-def search_product(spark: SparkSession, sf_dir: str, term: str) -> list[dict[str, Any]]:
+def search_product(prods: DataFrame, dim: DataFrame, term: str) -> list[dict[str, Any]]:
     """Name search, top-10 by (effective price, product_id)."""
-    prods, _ = _offers(spark, sf_dir)
     rows = (
         prods.where(F.lower(F.col("canonical_name")).contains(term.lower()))
-        .orderBy(effective(), "product_id")
+        .orderBy(domain.effective(), "product_id")
         .limit(SEARCH_LIMIT)
         .select(
             "product_id",
@@ -52,20 +55,18 @@ def search_product(spark: SparkSession, sf_dir: str, term: str) -> list[dict[str
     return [r.asDict() for r in rows]
 
 
-def compare_results(spark: SparkSession, sf_dir: str, barcode: str) -> dict[str, Any]:
+def compare_results(prods: DataFrame, dim: DataFrame, barcode: str) -> dict[str, Any]:
     """Cross-store comparison for one barcode (mcp.py:197-296):
     offers sorted cheapest-first, best price + cheapest store,
     savings vs most expensive."""
-    prods, dim = _offers(spark, sf_dir)
     offers = (
-        prods.where(F.col("barcode") == barcode)
-        .join(F.broadcast(dim), "supermarket_id")
+        domain.compare_offers(prods, dim, barcode)
         .select(
             "supermarket_id",
             F.col("name").alias("supermarket_name"),
             to_double(F.col("price")).alias("price"),
             to_double(F.col("promo_price")).alias("promo_price"),
-            to_double(effective()).alias("effective_price"),
+            to_double(F.col("effective_price")).alias("effective_price"),
             "product_id",
         )
         .orderBy("effective_price", "product_id")
@@ -87,7 +88,7 @@ def compare_results(spark: SparkSession, sf_dir: str, barcode: str) -> dict[str,
 
 
 def resolve_basket_terms(
-    spark: SparkSession, sf_dir: str, terms: list[str]
+    prods: DataFrame, terms: list[str]
 ) -> tuple[list[str], list[str]]:
     """Resolve mixed barcode/name basket terms to barcodes.
 
@@ -106,12 +107,11 @@ def resolve_basket_terms(
     name_terms = sorted({t for t in terms if not t.isdigit()})
     resolved: dict[str, str] = {}
     if name_terms:
-        prods, _ = _offers(spark, sf_dir)
         terms_arr = F.array(*[F.lit(t) for t in name_terms])
         hits = prods.select(
             "barcode",
             "product_id",
-            effective().alias("_eff"),
+            domain.effective().alias("_eff"),
             F.explode(
                 F.filter(
                     terms_arr,
@@ -138,29 +138,40 @@ def resolve_basket_terms(
     return barcodes, unresolved
 
 
-def _basket_totals(spark: SparkSession, sf_dir: str, barcodes: list[str]):
-    from .domain import basket_store_totals
-
-    prods, dim = _offers(spark, sf_dir)
-    totals = basket_store_totals(prods, dim, barcodes)
-    return totals.select(
-        "supermarket_id",
-        F.col("supermarket_name").alias("name"),
-        to_double(F.round("total_price", 2)).alias("total_price"),
-        to_double(F.round("total_effective", 2)).alias("total_promo_price"),
-        to_double(F.round("total_savings", 2)).alias("total_savings"),
-        "product_count",
+def _complete_baskets(
+    prods: DataFrame, dim: DataFrame, terms: list[str]
+) -> tuple[list[str], list[str], list[dict[str, Any]]]:
+    """The one basket path: resolve the terms, total each store's
+    basket, keep the complete ones (A7), cheapest first with ties by
+    supermarket_id. Returns (barcodes, unresolved terms, stores)."""
+    barcodes, unresolved = resolve_basket_terms(prods, terms)
+    if not barcodes:
+        return barcodes, unresolved, []
+    rows = (
+        domain.basket_store_totals(prods, dim, barcodes)
+        .where(F.col("product_count") == len(barcodes))
+        .select(
+            "supermarket_id",
+            "supermarket_name",
+            to_double(F.round("total_price", 2)).alias("total_price"),
+            to_double(F.round("total_effective", 2)).alias("total_promo_price"),
+            to_double(F.round("total_savings", 2)).alias("total_savings"),
+            "product_count",
+        )
+        .orderBy("total_promo_price", "supermarket_id")
+        .collect()
     )
+    return barcodes, unresolved, [r.asDict() for r in rows]
 
 
 def find_best_basket(
-    spark: SparkSession, sf_dir: str, barcodes: list[str]
+    prods: DataFrame, dim: DataFrame, barcodes: list[str]
 ) -> dict[str, Any]:
     """Cheapest complete basket (mcp.py:319-447): per-store totals,
     complete filter (A7), ascending rank, best/worst summary.
     Entries may be barcodes OR name terms — names are resolved the
     way the reference's tool resolves them (mcp.py:320-352)."""
-    barcodes, unresolved = resolve_basket_terms(spark, sf_dir, barcodes)
+    barcodes, unresolved, stores = _complete_baskets(prods, dim, barcodes)
     if not barcodes:
         return {
             "requested_products": 0,
@@ -168,23 +179,6 @@ def find_best_basket(
             "stores": [],
             "unresolved": unresolved,
         }
-    totals = _basket_totals(spark, sf_dir, barcodes)
-    complete = (
-        totals.where(F.col("product_count") == len(barcodes))
-        .orderBy("total_promo_price", "supermarket_id")
-        .collect()
-    )
-    stores = [
-        {
-            "supermarket_id": r["supermarket_id"],
-            "supermarket_name": r["name"],
-            "total_price": r["total_price"],
-            "total_promo_price": r["total_promo_price"],
-            "total_savings": r["total_savings"],
-            "product_count": r["product_count"],
-        }
-        for r in complete
-    ]
     out: dict[str, Any] = {
         "requested_products": len(barcodes),
         "complete_baskets": len(stores),
@@ -203,110 +197,76 @@ def find_best_basket(
 
 
 def find_most_expensive_basket(
-    spark: SparkSession, sf_dir: str, barcodes: list[str]
+    prods: DataFrame, dim: DataFrame, barcodes: list[str]
 ) -> dict[str, Any]:
     """The JS layer's descending variant (simple-proxy.js:1079-1110),
     top-5 slice (O3). Accepts barcodes or name terms."""
-    barcodes, _ = resolve_basket_terms(spark, sf_dir, barcodes)
-    if not barcodes:
-        return {"stores": []}
-    totals = _basket_totals(spark, sf_dir, barcodes)
-    rows = (
-        totals.where(F.col("product_count") == len(barcodes))
-        .orderBy(F.col("total_promo_price").desc(), "supermarket_id")
-        .limit(5)
-        .collect()
-    )
+    _, _, stores = _complete_baskets(prods, dim, barcodes)
+    # a stable descending sort keeps ties in supermarket_id order
+    stores.sort(key=lambda s: s["total_promo_price"], reverse=True)
     return {
         "stores": [
             {
-                "supermarket_name": r["name"],
-                "total_promo_price": r["total_promo_price"],
-                "product_count": r["product_count"],
+                "supermarket_name": s["supermarket_name"],
+                "total_promo_price": s["total_promo_price"],
+                "product_count": s["product_count"],
             }
-            for r in rows
+            for s in stores[:5]
         ]
     }
 
 
 def calculate_savings(
-    spark: SparkSession, sf_dir: str, barcodes: list[str]
+    prods: DataFrame, dim: DataFrame, barcodes: list[str]
 ) -> dict[str, Any]:
     """Cheapest vs most expensive complete basket: amount, pct
     (1-decimal string), recommendation (simple-proxy.js:625-703).
     Accepts barcodes or name terms."""
-    barcodes, _ = resolve_basket_terms(spark, sf_dir, barcodes)
-    if not barcodes:
-        return {"comparable": False, "complete_baskets": 0}
-    totals = _basket_totals(spark, sf_dir, barcodes)
-    complete = (
-        totals.where(F.col("product_count") == len(barcodes))
-        .orderBy("total_promo_price", "supermarket_id")
-        .collect()
-    )
-    if len(complete) < 2:
-        return {"comparable": False, "complete_baskets": len(complete)}
-    best, worst = complete[0], complete[-1]
+    _, _, stores = _complete_baskets(prods, dim, barcodes)
+    if len(stores) < 2:
+        return {"comparable": False, "complete_baskets": len(stores)}
+    best, worst = stores[0], stores[-1]
     amount = round(worst["total_promo_price"] - best["total_promo_price"], 2)
     pct = amount * 100 / worst["total_promo_price"]
     return {
         "comparable": True,
-        "cheapest_store": best["name"],
-        "most_expensive_store": worst["name"],
+        "cheapest_store": best["supermarket_name"],
+        "most_expensive_store": worst["supermarket_name"],
         "savings_amount": amount,
         "savings_percent": f"{pct:.1f}",
         "price_range": f"{best['total_promo_price']} - {worst['total_promo_price']}",
-        "recommendation": best["name"],
+        "recommendation": best["supermarket_name"],
     }
 
 
 def get_stores(
-    spark: SparkSession, sf_dir: str, city: str | None = None, name: str | None = None
+    prods: DataFrame, dim: DataFrame, city: str | None = None, name: str | None = None
 ) -> list[dict[str, Any]]:
     """Store directory with optional ILIKE filters (mcp.py:475-483)."""
-    _, dim = _offers(spark, sf_dir)
-    if city:
-        dim = dim.where(F.lower(F.col("city")).contains(city.lower()))
-    if name:
-        dim = dim.where(F.lower(F.col("name")).contains(name.lower()))
-    return [
-        r.asDict()
-        for r in dim.orderBy("name", "supermarket_id").collect()
-    ]
+    return [r.asDict() for r in domain.store_directory(dim, city, name).collect()]
 
 
 def get_store_info(
-    spark: SparkSession, sf_dir: str, supermarket_id: int
+    prods: DataFrame, dim: DataFrame, supermarket_id: int
 ) -> dict[str, Any]:
     """Per-store profile (mcp.py:531-556): counts, promo share,
-    category roster."""
-    prods, dim = _offers(spark, sf_dir)
-    store = dim.where(F.col("supermarket_id") == supermarket_id).collect()
+    category roster. A store with no products has zero counts."""
+    store_dim = dim.where(F.col("supermarket_id") == supermarket_id)
+    store = store_dim.collect()
     if not store:
         return {"found": False, "supermarket_id": supermarket_id}
-    stats = (
-        prods.where(F.col("supermarket_id") == supermarket_id)
-        .agg(
-            F.count(F.lit(1)).alias("product_count"),
-            F.count("promo_price").alias("promo_count"),
-            F.array_join(F.array_sort(F.collect_set("category")), ",").alias(
-                "categories"
-            ),
-        )
-        .collect()[0]
-    )
-    pct = (
-        stats["promo_count"] * 100 / stats["product_count"]
-        if stats["product_count"]
-        else 0.0
-    )
+    stats = domain.store_stats(
+        prods.where(F.col("supermarket_id") == supermarket_id), store_dim
+    ).collect()
+    empty = {"product_count": 0, "promo_count": 0, "sale_pct": 0.0, "categories": ""}
+    s = stats[0] if stats else empty
     return {
         "found": True,
         **store[0].asDict(),
-        "product_count": stats["product_count"],
-        "products_on_sale": stats["promo_count"],
-        "sale_percentage": round(pct, 1),
-        "categories": stats["categories"].split(",") if stats["categories"] else [],
+        "product_count": s["product_count"],
+        "products_on_sale": s["promo_count"],
+        "sale_percentage": round(s["sale_pct"], 1),
+        "categories": s["categories"].split(",") if s["categories"] else [],
     }
 
 

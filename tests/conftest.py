@@ -31,3 +31,11 @@ def sf_smoke() -> str:
 @pytest.fixture(scope="session")
 def sf_correct() -> str:
     return SF_CORRECT
+
+
+@pytest.fixture(scope="session")
+def smoke_frames(spark, sf_smoke):
+    """The (products, supermarkets) pair at sf0.001, opened once."""
+    from data_pipeline_2025_spark.tools import open_frames
+
+    return open_frames(spark, sf_smoke)

@@ -71,7 +71,7 @@ def test_basket_plan_uses_basket_tools(spark, sf_smoke):
         assert res["basket"]["best_store"] in res["answer"]
 
 
-def test_basket_plan_resolves_each_name_term(spark, sf_smoke):
+def test_basket_plan_resolves_each_name_term(spark, sf_smoke, smoke_frames):
     """The reference's worked example ('milk, bread and eggs')
     prices N DIFFERENT products — each term must resolve to ITS OWN
     best search hit, not to N hits of the first term."""
@@ -80,7 +80,7 @@ def test_basket_plan_resolves_each_name_term(spark, sf_smoke):
     # expected resolution = top search hit per term, per the
     # reference's best-match rule (mcp.py:322-347)
     terms = ["widget", "bolt", "rod"]
-    expected = [tools.search_product(spark, sf_smoke, t)[0]["barcode"] for t in terms]
+    expected = [tools.search_product(*smoke_frames, t)[0]["barcode"] for t in terms]
     assert len(set(expected)) == 3, "fixture terms must hit distinct products"
 
     res = run_shopping_session(spark, sf_smoke, "i need widget, bolt and rod")
@@ -93,16 +93,16 @@ def test_basket_plan_resolves_each_name_term(spark, sf_smoke):
     assert "unresolved" not in basket
     # the basket the agent priced is the basket of the 3 resolved
     # barcodes — byte-identical to calling the tool on them directly
-    direct = tools.find_best_basket(spark, sf_smoke, expected)
+    direct = tools.find_best_basket(*smoke_frames, expected)
     assert basket == direct
 
 
-def test_resolve_basket_terms_mixed_and_unresolved(spark, sf_smoke):
+def test_resolve_basket_terms_mixed_and_unresolved(smoke_frames):
     from data_pipeline_2025_spark import tools
 
-    top_widget = tools.search_product(spark, sf_smoke, "widget")[0]["barcode"]
+    top_widget = tools.search_product(*smoke_frames, "widget")[0]["barcode"]
     barcodes, unresolved = tools.resolve_basket_terms(
-        spark, sf_smoke, ["7", "widget", "zzz-no-such-product"]
+        smoke_frames[0], ["7", "widget", "zzz-no-such-product"]
     )
     assert barcodes == ["7", top_widget]
     assert unresolved == ["zzz-no-such-product"]

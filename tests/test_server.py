@@ -5,11 +5,17 @@ reference's FastAPI routes."""
 from __future__ import annotations
 
 import json
+import os
+import socket
+import sys
+import threading
 import urllib.error
 import urllib.request
+from urllib.parse import urlparse
 
 import pytest
 
+from data_pipeline_2025_spark import catalog, server
 from data_pipeline_2025_spark.server import serve_background
 
 
@@ -184,3 +190,143 @@ def test_mcp_over_http(base_url):
         f"{base_url}/api/mcp/tools/search_product", {"arguments": {}}
     )
     assert code == 422 and "term" in detail["detail"]
+    # a body or arguments that is not a JSON object
+    for payload in ([], {"arguments": "term"}, {"arguments": [1]}):
+        code, detail = _status_of(f"{base_url}/api/mcp/tools/search_product", payload)
+        assert code == 422 and "object" in detail["detail"], payload
+
+
+def _raw(base_url: str, request: bytes):
+    """Send raw request bytes; return (status, JSON body)."""
+    url = urlparse(base_url)
+    with socket.create_connection((url.hostname, url.port), timeout=120) as sock:
+        sock.sendall(request)
+        data = b""
+        while chunk := sock.recv(65536):
+            data += chunk
+    head, _, body = data.partition(b"\r\n\r\n")
+    return int(head.split()[1]), json.loads(body)
+
+
+@pytest.mark.parametrize("length", [b"abc", b"-5"])
+def test_malformed_content_length_gets_400(base_url, length):
+    request = (
+        b"POST /api/mcp/tools/search_product HTTP/1.1\r\nHost: localhost\r\n"
+        b"Content-Length: " + length + b"\r\n\r\n"
+    )
+    status, body = _raw(base_url, request)
+    assert status == 400 and "Content-Length" in body["detail"]
+
+
+def test_500_hides_the_exception(base_url, monkeypatch):
+    def boom(*args, **kwargs):
+        raise RuntimeError("plan text that must not leak")
+
+    monkeypatch.setattr(server, "get_categories", boom)
+    assert _status_of(f"{base_url}/categories") == (
+        500,
+        {"detail": "Internal Server Error"},
+    )
+
+
+def _offers_or_empty(url: str) -> list:
+    try:
+        return _get(url)[1]
+    except urllib.error.HTTPError as e:
+        assert e.code == 404
+        return []
+
+
+@pytest.mark.parametrize("barcode", ["50", "no-such-barcode"])
+def test_rest_and_mcp_compare_agree(base_url, barcode):
+    rest = _offers_or_empty(f"{base_url}/products/barcode/{barcode}")
+    _, mcp = _post(
+        f"{base_url}/api/mcp/tools/compare_results", {"arguments": {"barcode": barcode}}
+    )
+    assert [(o["product_id"], o["effective_price"]) for o in rest] == [
+        (o["product_id"], o["effective_price"]) for o in mcp["result"]["results"]
+    ]
+    assert bool(rest) == (barcode == "50")
+
+
+def test_rest_and_mcp_store_lists_agree(base_url):
+    _, stores = _get(f"{base_url}/supermarkets")
+    city = stores[0]["city"][:3].lower()
+    _, rest = _get(f"{base_url}/supermarkets?city={city}")
+    _, mcp = _post(f"{base_url}/api/mcp/tools/get_stores", {"arguments": {"city": city}})
+    assert rest and all(city in s["city"].lower() for s in rest)
+    assert rest == mcp["result"]
+
+
+def test_requests_open_no_tables(spark, sf_smoke, monkeypatch):
+    """The (products, supermarkets) pair is opened when the server is
+    created; requests after that read no table."""
+    srv, _ = serve_background(spark, sf_smoke)
+    loads = []
+    load_table = catalog.load_table
+
+    def counting(*args, **kwargs):
+        loads.append(args)
+        return load_table(*args, **kwargs)
+
+    monkeypatch.setattr(catalog, "load_table", counting)
+    base = "http://%s:%d" % srv.server_address
+    try:
+        for path in ("/products?q=widget", "/products/barcode/50",
+                     "/products/barcode/50/history?days=365", "/products/lowest-prices",
+                     "/supermarkets", "/stats", "/categories", "/brands"):
+            assert _get(base + path)[0] == 200
+        for tool, args in (("search_product", {"term": "widget"}),
+                           ("find_best_basket", {"barcodes": ["3", "7", "widget"]}),
+                           ("get_store_info", {"supermarket_id": 1})):
+            assert _post(f"{base}/api/mcp/tools/{tool}", {"arguments": args})[0] == 200
+    finally:
+        srv.shutdown()
+        srv.server_close()
+    assert loads == []
+
+
+def test_requests_survive_a_republished_silver(spark, sf_smoke, base_url):
+    """Another process publishing the products silver again swaps its
+    link; a server that opened the frames before keeps answering."""
+    from data_pipeline_2025_spark import artifacts, mapping
+
+    path = mapping.silver_products_path(sf_smoke)
+    artifacts.publish(spark.read.parquet(path), path)
+    status, offers = _get(f"{base_url}/products/barcode/50")
+    assert status == 200 and offers
+
+
+def test_concurrent_requests_share_the_frames(base_url):
+    """More clients than cores read the one frames pair at once and
+    get the answers a lone client gets."""
+    paths = [
+        f"{base_url}/products/barcode/50",
+        f"{base_url}/products?q=widget&limit=5",
+        f"{base_url}/supermarkets",
+    ]
+    want = {p: _get(p)[1] for p in paths}
+    got, errors = [], []
+
+    def client(path):
+        try:
+            got.append((path, _get(path)[1]))
+        except Exception as exc:  # reported by the assertion below
+            errors.append(exc)
+
+    threads = [
+        threading.Thread(target=client, args=(paths[i % len(paths)],))
+        for i in range(2 * (os.cpu_count() or 1))
+    ]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == [] and len(got) == len(threads)
+    assert all(body == want[path] for path, body in got)

@@ -13,15 +13,14 @@ plan's total order enables.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
 from ..functions.money import to_double
 from ..mapping import domain_sql, products
 from ..registry import register
+from ..streaming import txn
 
 # Fixed parameters: the driver compares deterministic result sets, so
 # each query pins the reference endpoint's parameters to one
@@ -251,131 +250,103 @@ def q47_trigram_fuzzy_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # names. The index-side half is what the reference's GIN index
 # actually buys (tables.sql:48): a materialized posting list
 # trigram → name, so a search touches only the postings of the
-# term's own trigrams. Layout IS the index (SURVEY §4): the gold
-# table is partitioned by the trigram's first character (~bounded
-# fan-out, no thousands of tiny dirs) with row-group stats on tg —
-# a term with T trigrams reads ≤ T first-char partitions and only
-# the row groups whose min/max straddle its trigrams. At 100 TB the
-# index is rebuilt incrementally per ingest partition; here it is
-# built lazily once per sf_dir.
+# term's own trigrams. The index is one streaming/txn.py table of
+# (name, n_name, tg) postings: every build or update stages exactly
+# ONE parquet file sorted by tg — row-group min/max stats on tg then
+# skip every row group whose range misses the term's trigrams — and
+# publishes it with ONE txn commit, so readers see whole updates or
+# none. At 100 TB the index grows by one file per ingest batch; here
+# the sf_dir index is built once per process.
 
 _INDEX_CACHE: set[str] = set()
 
 
 def trigram_index_path(sf_dir: str) -> str:
     # Hardened scratch location (md5 key, per-uid 0700 root —
-    # artifacts.py). The index itself stays a real directory rather
-    # than a symlink-swapped artifact because update_trigram_index
-    # APPENDS into its tg1 partitions; the rare concurrent initial
-    # build is last-writer-wins over identical deterministic content
-    # (inputs are immutable per sf_dir).
+    # artifacts.py). The index is a txn table rather than a
+    # symlink-swapped artifact: readers go through the committed
+    # snapshot, so a concurrent rebuild (a replace commit over
+    # identical deterministic content) never tears a reader, and
+    # files of any earlier layout in the directory stay invisible.
     from ..artifacts import artifact_path
 
     return artifact_path(sf_dir, "trigram_index")
 
 
-def _postings_frame(names: DataFrame) -> DataFrame:
-    """(name, n_name, tg, tg1) posting rows for a names frame."""
-    padded = F.concat(F.lit("  "), F.lower("name"), F.lit(" "))
+def names_frame(spark: SparkSession, names: list[str]) -> DataFrame:
+    """A one-column ``name`` frame over a driver-side name list — an
+    Arrow local relation, so indexing it never re-reads the source
+    the names came from."""
+    import pandas as pd
+
+    return spark.createDataFrame(pd.DataFrame({"name": names}, dtype=object), "name STRING")
+
+
+def _padded() -> Column:
+    return F.concat(F.lit("  "), F.lower("name"), F.lit(" "))
+
+
+def _stage_postings(names: DataFrame, path: str) -> list[str]:
+    """Stage the (name, n_name, tg) postings of ``names`` as one file
+    sorted by tg (invisible until committed)."""
     tgs = F.array_distinct(
         F.expr("transform(sequence(1, length(padded) - 2), i -> substring(padded, i, 3))")
     )
-    return (
-        names.withColumn("padded", padded)
+    postings = (
+        names.withColumn("padded", _padded())
         .withColumn("tgs", tgs)
-        .withColumn("n_name", F.size("tgs"))
-        .select("name", "n_name", F.explode("tgs").alias("tg"))
-        .withColumn("tg1", F.substring("tg", 1, 1))
+        .select("name", F.size("tgs").alias("n_name"), F.explode("tgs").alias("tg"))
     )
-
-
-def _manifest_path(path: str) -> str:
-    return path + "_names"
+    return txn.stage_append(postings.coalesce(1).sortWithinPartitions("tg", "name"), path, ())
 
 
 def build_trigram_index_at(
     spark: SparkSession, names: DataFrame, path: str
 ) -> str:
-    """Materialize the posting list plus the indexed-name manifest
-    (the S6 landed-set pattern: the manifest is what makes later
-    incremental updates idempotent)."""
-    from ..sources.gold import write_gold
-
-    write_gold(_postings_frame(names), path, partition_by=("tg1",))
-    names.select("name").write.mode("overwrite").parquet(_manifest_path(path))
+    """Publish the postings of ``names`` (distinct, column ``name``)
+    as the whole index at ``path``: one staged file, one replace
+    commit. A rebuild over an existing index retires its files."""
+    txn.commit_replace_table(path, _stage_postings(names, path))
     return path
 
 
 def update_trigram_index(
-    spark: SparkSession, path: str, new_names: DataFrame
+    spark: SparkSession, path: str, names: list[str]
 ) -> int:
-    """Incremental, idempotent index maintenance — the 100 TB path
-    (a full rebuild per ingest batch would rescan the entire name
-    corpus). Already-indexed names are dropped by an anti-join
-    against the name manifest (one narrow column, broadcastable for
-    typical batch sizes); the parquet append then touches ONLY the
-    tg1 partitions the fresh postings land in — untouched partition
-    directories are never rewritten (asserted in tests). Returns the
-    number of newly indexed names.
+    """Index those of ``names`` that the committed postings do not
+    hold yet; returns how many that was. ``names`` is a driver-side
+    list bounded by one ingest micro-batch (``start_price_ingest``
+    collects it with the batch's touched dates).
 
-    Crash consistency WITHOUT Delta: postings append first, manifest
-    second. A crash between the two appends leaves orphan postings
-    whose names are not yet in the manifest, so the retry re-derives
-    the same fresh set and re-appends them — and duplicate postings
-    are HARMLESS because the read side aggregates with
-    countDistinct(tg) (search_trigram_index), never raw counts. The
-    opposite order (manifest first) would turn a crash into names
-    that are "known" but have no postings — a permanent silent gap.
-    tests/test_ingest.py::test_index_update_crash_between_writes
-    injects a crash between the appends and proves a retry converges
-    to the same search results as a cleanly built index. In a
-    deployment both appends become one Delta MERGE and the orphan
-    postings disappear; here a periodic compaction (rewrite postings
-    distinct per tg1 partition) bounds the garbage."""
-    from ..sources.gold import write_gold
-
-    known = spark.read.parquet(_manifest_path(path)).select("name")
-    fresh = new_names.select("name").distinct().join(known, "name", "left_anti")
-    n_fresh = fresh.count()
-    if n_fresh == 0:
+    Already-indexed names come from ONE scan of the committed
+    postings: the row whose tg is the name's own leading trigram
+    (each indexed name has exactly one). The fresh names' postings
+    are staged as one file and published with one txn commit, so a
+    crash before the commit leaves only invisible orphans
+    (``txn.vacuum`` reclaims them) and the retry re-derives the same
+    fresh set — with one writer per index, as the ingest stream's
+    checkpoint gives, every (name, tg) posting is committed once."""
+    if not names:
         return 0
-    write_gold(_postings_frame(fresh), path, partition_by=("tg1",), mode="append")
-    fresh.write.mode("append").parquet(_manifest_path(path))
-    return n_fresh
-
-
-def compact_trigram_index(spark: SparkSession, path: str) -> int:
-    """Rewrite the posting list distinct per (name, tg) — the
-    periodic compaction that bounds the garbage crash-retries of
-    update_trigram_index can leave behind (duplicate postings are
-    read-harmless via countDistinct, but they cost scan bytes).
-    Runs in the index's own maintenance loop — same single-writer
-    assumption as the appends themselves, so the directory swap
-    needs no cross-process lock. Returns postings removed."""
-    import shutil
-
-    from ..sources.gold import write_gold
-
-    idx = spark.read.parquet(path)
-    before = idx.count()
-    deduped = idx.dropDuplicates(["name", "tg"]).cache()
-    after = deduped.count()
-    if after == before:
-        deduped.unpersist()
-        return 0
-    tmp = f"{path}.compact-{os.getpid()}"
-    write_gold(deduped, tmp, partition_by=("tg1",))
-    deduped.unpersist()
-    old = f"{path}.old-{os.getpid()}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-    return before - after
+    idx = txn.read_committed(spark, path)
+    known: set[str] = set()
+    if idx is not None:
+        lead = F.substring(_padded(), 1, 3)
+        known = {
+            r["name"]
+            for r in idx.where(F.col("name").isin(names) & (F.col("tg") == lead))
+            .select("name")
+            .collect()
+        }
+    fresh = sorted(set(names) - known)
+    if fresh:
+        txn.commit_append(path, _stage_postings(names_frame(spark, fresh), path))
+    return len(fresh)
 
 
 def build_trigram_index(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the trigram → name posting list as a gold table
-    (idempotent per sf_dir)."""
+    """Materialize the trigram → name posting list of sf_dir's part
+    names (once per process)."""
     path = trigram_index_path(sf_dir)
     if path in _INDEX_CACHE:
         return path
@@ -391,8 +362,8 @@ def build_trigram_index(spark: SparkSession, sf_dir: str) -> str:
     oracle=_ORACLE_Q47,  # identical semantics to the scan-side half
     doc="Fuzzy search through the materialized trigram inverted "
     "index (pg_trgm GIN analog, tables.sql:48): candidates come "
-    "from the term's own posting lists only — partition-pruned on "
-    "first char, tg IN-filter pushed to the parquet scan.",
+    "from the term's own posting lists only — tg IN-filter pushed "
+    "to the parquet scan of the committed postings.",
     tags=("search", "fuzzy", "trigram", "index"),
 )
 def q67_trigram_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -408,26 +379,22 @@ def search_trigram_index(
     threshold: float = SIM_THRESHOLD,
     k: int = TOP_FUZZY,
 ) -> DataFrame:
-    """Fuzzy search against a materialized trigram index at `path`:
-    candidates come from the term's own posting lists only."""
-    from ..sources.gold import read_gold
-
+    """Fuzzy search against the committed trigram index at `path`:
+    candidates come from the term's own posting lists only. An index
+    with no commit yet answers an empty (name, sim) frame."""
+    idx = txn.read_committed(spark, path)
+    if idx is None:
+        return spark.createDataFrame([], "name STRING, sim DOUBLE")
     term_tgs = _trigrams(term)
-    n_term = len(term_tgs)
-    idx = read_gold(spark, path)
-    postings = idx.where(
-        F.col("tg1").isin(sorted({t[0] for t in term_tgs}))
-        & F.col("tg").isin(term_tgs)
-    )
-    # countDistinct, not count: postings may contain duplicates after
-    # a crash-retry of update_trigram_index (see its docstring) and
-    # the sim score must not inflate. Identical on a clean index —
-    # _postings_frame emits each (name, tg) once.
-    scored = postings.groupBy("name").agg(
-        F.countDistinct("tg").alias("shared"), F.max("n_name").alias("n_name")
+    # count, not countDistinct: the txn commit publishes each
+    # (name, tg) posting once (update_trigram_index).
+    scored = (
+        idx.where(F.col("tg").isin(term_tgs))
+        .groupBy("name")
+        .agg(F.count(F.lit(1)).alias("shared"), F.max("n_name").alias("n_name"))
     )
     sim = F.col("shared").cast("double") / (
-        F.col("n_name") + F.lit(n_term) - F.col("shared")
+        F.col("n_name") + F.lit(len(term_tgs)) - F.col("shared")
     )
     return (
         scored.select("name", sim.alias("sim"))

@@ -98,11 +98,12 @@ def start_price_ingest(
     cadence, T4).
 
     With ``index_dir`` set, each micro-batch also maintains the
-    trigram search index (the pg_trgm GIN analog): new item names
-    append postings into only their own tg1 partitions; replayed
-    names are no-ops via the index's name manifest — so the serving
-    index stays fresh with the data, exactly like the reference's
-    index updating on INSERT."""
+    trigram search index (the pg_trgm GIN analog, a txn table): the
+    first batch builds it, and each later batch commits one file of
+    postings for its item names the index does not hold yet —
+    replayed names are no-ops — so the serving index stays fresh with
+    the data, exactly like the reference's index updating on
+    INSERT."""
     raw = (
         spark.readStream.format("text")
         .option("wholetext", "true")
@@ -120,26 +121,20 @@ def start_price_ingest(
             PARTITION_COL, F.to_date("price_update_date")
         )
         spark_ = batch.sparkSession
-        # Index names come from the PRE-anti-join batch: if a crash
-        # lands between the sink append and the index update, the
-        # replayed batch is fully absorbed by the anti-join below, so
-        # a post-anti-join names frame would be empty and those names
-        # would NEVER be indexed. Re-posting already-indexed names is
-        # a no-op via the index's name manifest, so the wider frame
-        # costs nothing on the happy path.
-        index_names = (
-            batch.select(F.col("item_name").alias("name"))
-            .where(F.col("name").isNotNull())
-            .distinct()
-        )
+        # One collect of the batch's distinct (event date, item name)
+        # pairs — bounded by one micro-batch, a driver-side list like
+        # the touched dates alone. Index names come from it, i.e. from
+        # the PRE-anti-join batch: if a crash lands between the sink
+        # commit and the index update, the replayed batch is fully
+        # absorbed by the anti-join below, so a post-anti-join names
+        # frame would be empty and those names would NEVER be
+        # indexed. Re-posting already-indexed names is a no-op
+        # (update_trigram_index skips names the index holds).
+        pairs = batch.select(PARTITION_COL, "item_name").distinct().collect()
+        names = sorted({r["item_name"] for r in pairs} - {None})
         committed = read_silver(spark_, sink_dir)
         if committed is not None:
-            # One row per event date in the micro-batch — bounded by
-            # the replay window, tiny driver-side list.
-            touched = [
-                r[PARTITION_COL]
-                for r in batch.select(PARTITION_COL).distinct().collect()
-            ]
+            touched = list({r[PARTITION_COL] for r in pairs})
             existing = scoped_existing_keys(committed, touched)
             # eqNullSafe: a NULL key column (e.g. malformed
             # PriceUpdateDate) must still match its replayed twin, or
@@ -154,16 +149,14 @@ def start_price_ingest(
         new_files = txn.stage_append(batch, sink_dir, (PARTITION_COL,))
         _publish_silver(sink_dir, new_files)
         if index_dir is not None:
-            from ..operators.search import (
-                _manifest_path,
-                build_trigram_index_at,
-                update_trigram_index,
-            )
+            from ..operators import search
 
-            if os.path.exists(_manifest_path(index_dir)):
-                update_trigram_index(spark_, index_dir, index_names)
+            if txn.versions(index_dir):
+                search.update_trigram_index(spark_, index_dir, names)
             else:
-                build_trigram_index_at(spark_, index_names, index_dir)
+                search.build_trigram_index_at(
+                    spark_, search.names_frame(spark_, names), index_dir
+                )
 
     return (
         silver.writeStream.foreachBatch(write_batch)

@@ -42,9 +42,10 @@ def test_gold_roundtrip_preserves_decimals(spark, sf_smoke, tmp_path):
 
 
 def test_trigram_index_incremental_update(spark, tmp_path):
-    """Incremental index maintenance: new names append postings into
-    ONLY their own tg1 partitions; already-indexed names are no-ops
-    (manifest anti-join); search sees the new names immediately."""
+    """Incremental index maintenance: an update with fresh names
+    commits exactly one new file and leaves every file committed
+    before it unchanged; an update with no fresh names commits
+    nothing; search sees the new names immediately."""
     import os
 
     from data_pipeline_2025_spark.operators.search import (
@@ -52,30 +53,33 @@ def test_trigram_index_incremental_update(spark, tmp_path):
         search_trigram_index,
         update_trigram_index,
     )
+    from data_pipeline_2025_spark.streaming import txn
 
     path = str(tmp_path / "tg_index")
     base = spark.createDataFrame(
         [("widget bolt",), ("gadget nut",)], ["name"]
     )
     build_trigram_index_at(spark, base, path)
+    files_before = txn.committed_files(path)
+    assert len(files_before) == 1
+    stat_before = {f: os.stat(os.path.join(path, f)).st_mtime_ns for f in files_before}
+    head = txn.versions(path)[-1]
 
-    # a tg1 partition no new name will touch ('w' from 'widget')
-    w_dir = next(
-        os.path.join(path, d) for d in os.listdir(path) if d == "tg1=w"
-    )
-    before = sorted(os.listdir(w_dir))
-
-    # duplicate name → 0 new; fresh name → appended once
-    assert update_trigram_index(spark, path, base.limit(1)) == 0
-    fresh = spark.createDataFrame([("sprocket cam",), ("widget bolt",)], ["name"])
+    # already-indexed name → 0 new, no commit
+    assert update_trigram_index(spark, path, ["widget bolt"]) == 0
+    assert txn.versions(path)[-1] == head
+    # fresh name → exactly one committed file more
+    fresh = ["sprocket cam", "widget bolt"]
     assert update_trigram_index(spark, path, fresh) == 1
-
-    # untouched 'w' partition files unchanged ('sprocket cam' has no
-    # trigram starting with w)
-    assert sorted(os.listdir(w_dir)) == before
+    files_after = txn.committed_files(path)
+    assert txn.versions(path)[-1] == head + 1
+    assert set(files_before) < set(files_after) and len(files_after) == 2
+    assert {
+        f: os.stat(os.path.join(path, f)).st_mtime_ns for f in files_before
+    } == stat_before
 
     # no duplicate postings for the re-sent name
-    idx = read_gold(spark, path)
+    idx = txn.read_committed(spark, path)
     assert (
         idx.where(F.col("name") == "widget bolt").count()
         == idx.where(F.col("name") == "widget bolt").select("tg").distinct().count()
@@ -87,3 +91,64 @@ def test_trigram_index_incremental_update(spark, tmp_path):
 
     # idempotent re-send after the append
     assert update_trigram_index(spark, path, fresh) == 0
+    assert txn.committed_files(path) == files_after
+
+
+def test_index_without_a_commit_answers_empty(spark, tmp_path):
+    """An index directory that is missing, empty, or staged but never
+    committed answers a search with an empty (name, sim) frame."""
+    from data_pipeline_2025_spark.operators.search import (
+        _stage_postings,
+        names_frame,
+        search_trigram_index,
+    )
+
+    missing = str(tmp_path / "missing")
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    staged = str(tmp_path / "staged")
+    _stage_postings(names_frame(spark, ["widget bolt"]), staged)
+    for path in (missing, str(empty), staged):
+        got = search_trigram_index(spark, path, "widget bolt")
+        assert got.columns == ["name", "sim"]
+        assert got.collect() == []
+
+
+def test_trigram_index_ignores_an_earlier_layout(spark, sf_smoke, tmp_path):
+    """A directory at trigram_index_path that still holds the earlier
+    layout (postings partitioned by first character, plus a name
+    manifest beside it) is read only through its committed snapshot:
+    q67 over it agrees with the scan-side q47."""
+    import os
+    import shutil
+
+    from data_pipeline_2025_spark.operators import search
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    os.symlink(os.path.join(sf_smoke, "part.parquet"), sf / "part.parquet")
+    index = search.trigram_index_path(str(sf))
+    # the earlier layout, holding a bogus exact match for the fuzzy term
+    stale = spark.createDataFrame([(search.FUZZY_TERM,)], ["name"])
+    tgs = F.array_distinct(
+        F.expr("transform(sequence(1, length(padded) - 2), i -> substring(padded, i, 3))")
+    )
+    (
+        stale.withColumn("padded", search._padded())
+        .withColumn("tgs", tgs)
+        .select("name", F.size("tgs").alias("n_name"), F.explode("tgs").alias("tg"))
+        .withColumn("tg1", F.substring("tg", 1, 1))
+        .write.mode("overwrite").partitionBy("tg1").parquet(index)
+    )
+    stale.write.mode("overwrite").parquet(index + "_names")
+
+    try:
+        got = search.q67_trigram_index_search(spark, str(sf)).collect()
+        want = search.q47_trigram_fuzzy_search(spark, str(sf)).collect()
+    finally:
+        search._INDEX_CACHE.discard(index)
+        shutil.rmtree(os.path.dirname(index), ignore_errors=True)
+    assert got and [(r["name"], round(r["sim"], 12)) for r in got] == [
+        (r["name"], round(r["sim"], 12)) for r in want
+    ]
+    assert search.FUZZY_TERM not in {r["name"] for r in got}

@@ -409,8 +409,8 @@ def test_silver_first_commit_crash_no_absorption(spark, price_dir, tmp_path, mon
 def test_ingest_maintains_trigram_index(spark, price_dir, tmp_path):
     """With index_dir set, every micro-batch keeps the trigram search
     index fresh: new names are posted once, replayed files change
-    nothing (manifest idempotence), and the index is immediately
-    searchable — the GIN-updates-on-INSERT behavior."""
+    nothing (already-indexed names are skipped), and the index is
+    immediately searchable — the GIN-updates-on-INSERT behavior."""
     import shutil
 
     from data_pipeline_2025_spark.streaming.ingest import start_price_ingest
@@ -436,66 +436,119 @@ def test_ingest_maintains_trigram_index(spark, price_dir, tmp_path):
     assert any(r["name"] == "פריט 100" for r in hits)
 
 
-def test_index_update_crash_between_writes(spark, tmp_path):
+def test_index_update_crash_between_writes(spark, tmp_path, monkeypatch):
     """Crash-injection for update_trigram_index: the crash window is
-    'postings appended, manifest append lost'. A retry after restart
-    must converge to the same search results as a cleanly built
-    index — duplicate postings must not inflate sim scores (the read
-    side aggregates countDistinct(tg)) and the manifest must end up
-    with each name exactly once."""
+    'postings staged, commit not published'. The orphan postings must
+    stay invisible to search, a retry after restart must converge to
+    the same search results as a cleanly built index with every
+    name's postings committed once, and vacuum must reclaim the
+    orphan file."""
+    import os
+
     from data_pipeline_2025_spark.operators.search import (
-        _manifest_path,
-        _postings_frame,
         build_trigram_index_at,
+        names_frame,
         search_trigram_index,
         update_trigram_index,
     )
-    from data_pipeline_2025_spark.sources.gold import write_gold
+    from data_pipeline_2025_spark.streaming import txn
 
     idx = str(tmp_path / "tg_idx")
     base = spark.createDataFrame([("alpha bread",), ("beta milk",)], ["name"])
     build_trigram_index_at(spark, base, idx)
+    committed_before = txn.committed_files(idx)
 
-    new = spark.createDataFrame([("gamma eggs",), ("alpha bread",)], ["name"])
-    # Reproduce the crash state exactly: the fresh postings landed,
-    # the manifest append did not.
-    known = spark.read.parquet(_manifest_path(idx)).select("name")
-    fresh = new.select("name").distinct().join(known, "name", "left_anti")
-    write_gold(_postings_frame(fresh), idx, partition_by=("tg1",), mode="append")
+    def hits(path):
+        rows = search_trigram_index(spark, path, "gama eggs", threshold=0.05).collect()
+        return [(r["name"], r["sim"]) for r in rows]
 
-    # Retry after restart: re-derives the same fresh set (manifest
-    # didn't advance), re-appends postings, lands the manifest.
+    before = hits(idx)
+    new = ["gamma eggs", "alpha bread"]
+    staged: list[str] = []
+    stage = txn.stage_append
+
+    def stage_then_crash(*a, **k):
+        staged.extend(stage(*a, **k))
+        raise RuntimeError("injected crash before the index commit")
+
+    monkeypatch.setattr(txn, "stage_append", stage_then_crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        update_trigram_index(spark, idx, new)
+    monkeypatch.setattr(txn, "stage_append", stage)
+
+    # the orphan postings are on disk but invisible
+    assert len(staged) == 1 and os.path.exists(os.path.join(idx, staged[0]))
+    assert txn.committed_files(idx) == committed_before
+    assert hits(idx) == before
+    assert "gamma eggs" not in {n for n, _ in before}
+
+    # retry after restart: same fresh set, one commit
     assert update_trigram_index(spark, idx, new) == 1
     assert update_trigram_index(spark, idx, new) == 0  # now a no-op
 
     clean = str(tmp_path / "tg_clean")
     build_trigram_index_at(
-        spark, base.unionByName(new).distinct(), clean
+        spark, base.unionByName(names_frame(spark, new)).distinct(), clean
     )
-    got = search_trigram_index(spark, idx, "gama eggs", threshold=0.05).collect()
-    want = search_trigram_index(spark, clean, "gama eggs", threshold=0.05).collect()
-    assert [(r["name"], r["sim"]) for r in got] == [
-        (r["name"], r["sim"]) for r in want
-    ]
-    counts = (
-        spark.read.parquet(_manifest_path(idx)).groupBy("name").count().collect()
-    )
-    assert counts and all(r["count"] == 1 for r in counts)
-
-    # compaction: removes the crash-retry duplicates, search results
-    # and posting distinctness unchanged afterwards
-    from data_pipeline_2025_spark.operators.search import compact_trigram_index
-
-    removed = compact_trigram_index(spark, idx)
-    assert removed > 0
-    assert compact_trigram_index(spark, idx) == 0  # idempotent
-    got2 = search_trigram_index(spark, idx, "gama eggs", threshold=0.05).collect()
-    assert [(r["name"], r["sim"]) for r in got2] == [
-        (r["name"], r["sim"]) for r in want
-    ]
-    postings = spark.read.parquet(idx)
+    want = hits(clean)
+    assert hits(idx) == want and "gamma eggs" in {n for n, _ in want}
+    postings = txn.read_committed(spark, idx)
     assert postings.count() == postings.dropDuplicates(["name", "tg"]).count()
-    # steady state: after crash-retry + compaction the index is
-    # byte-for-byte the same SIZE as one built cleanly in one shot —
-    # retries add zero permanent garbage.
-    assert postings.count() == spark.read.parquet(clean).count()
+    assert postings.count() == txn.read_committed(spark, clean).count()
+    assert {r["name"] for r in postings.select("name").distinct().collect()} == {
+        "alpha bread", "beta milk", "gamma eggs"
+    }
+
+    # vacuum reclaims exactly the orphan; search results unchanged
+    assert txn.vacuum(idx) == staged
+    assert not os.path.exists(os.path.join(idx, staged[0]))
+    assert hits(idx) == want
+
+
+def test_index_names_come_from_the_pre_anti_join_batch(
+    spark, price_dir, tmp_path, monkeypatch
+):
+    """A crash between the silver commit and the index update must
+    not lose the batch's names: the replayed batch is absorbed by the
+    silver anti-join, so only names taken BEFORE the anti-join still
+    reach the index on the retry."""
+    from data_pipeline_2025_spark.operators import search
+    from data_pipeline_2025_spark.streaming import txn
+    from data_pipeline_2025_spark.streaming.ingest import read_silver, start_price_ingest
+
+    sink, ckpt, idx = (str(tmp_path / d) for d in ("silver", "ckpt", "tg_index"))
+    start_price_ingest(spark, price_dir, sink, ckpt, index_dir=idx).awaitTermination()
+
+    # a second batch with names the index does not hold yet
+    txt = open(f"{price_dir}/f2.json").read().replace('"400"', '"500"')
+    txt = txt.replace("פריט 400", "פריט 500")
+    open(f"{price_dir}/f3_new.json", "w").write(txt)
+    assert "פריט 500" in txt
+    real_update = search.update_trigram_index
+    calls = []
+
+    def crash_once(*a, **k):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("injected crash after the silver commit")
+        return real_update(*a, **k)
+
+    monkeypatch.setattr(search, "update_trigram_index", crash_once)
+    q = start_price_ingest(spark, price_dir, sink, ckpt, index_dir=idx)
+    with pytest.raises(Exception, match="injected crash"):
+        q.awaitTermination()
+    silver_rows = read_silver(spark, sink).count()
+    assert silver_rows == 5  # the silver commit landed before the crash
+
+    start_price_ingest(spark, price_dir, sink, ckpt, index_dir=idx).awaitTermination()
+    assert len(calls) == 2
+    assert read_silver(spark, sink).count() == silver_rows  # replay absorbed
+    postings = {
+        r["name"]: set(r["tgs"])
+        for r in txn.read_committed(spark, idx)
+        .groupBy("name").agg(F.collect_set("tg").alias("tgs")).collect()
+    }
+    hits = search.search_trigram_index(spark, idx, "פריט 50", threshold=0.2).collect()
+    assert postings.get("פריט 500") == set(search._trigrams("פריט 500"))
+    assert any(r["name"] == "פריט 500" for r in hits)
+    assert set(postings) == {"פריט 100", "פריט 200", "פריט 300", "פריט 400", "פריט 500"}

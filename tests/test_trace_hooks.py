@@ -1,13 +1,17 @@
-"""Guard for the hooks of perfbench's traced serve run
-(perfbench/workload_serve.py ``_install_tracing``).
+"""Guard for the hooks of perfbench's traced serve and ingest runs
+(perfbench/workload_serve.py ``_install_tracing``, the wraps in
+perfbench/workload_ingest.py ``run``).
 
-The traced run wraps module attributes of the serving layers by name.
-A renamed attribute makes the traced run raise; a handler that the
-request path holds by reference instead of looking it up by name
-silently records no span. This test installs the hooks read-only,
-sends one request of every serve kind and variant, and checks that
-every wrapped ``server``, ``mcp``, ``tools`` and ``domain`` function
-recorded a span, while no request opened a table.
+A traced run wraps module attributes of the layers by name. A renamed
+attribute makes the traced run raise; a function that the code path
+holds by reference instead of looking it up by name silently records
+no span. The serve test installs the hooks read-only, sends one
+request of every serve kind and variant, and checks that every
+wrapped ``server``, ``mcp``, ``tools`` and ``domain`` function
+recorded a span, while no request opened a table. The ingest test
+installs the ingest run's wraps, runs two drops, and checks that the
+index build recorded a span on the first drop and the index update
+on the second.
 """
 
 from __future__ import annotations
@@ -76,3 +80,43 @@ def test_traced_serve_hooks_record_every_layer(spark, sf_smoke, monkeypatch):
     # server-thread spans carry the request id the URL hook set
     assert all(op is not None for _, name, *_, op in tr.spans if name.startswith("server."))
 
+
+
+
+def test_traced_ingest_hooks_record_build_and_update(spark, tmp_path, monkeypatch):
+    monkeypatch.syspath_prepend(PERFBENCH)
+    import datagen
+    from tracing import Tracer
+
+    from data_pipeline_2025_spark.operators import search
+    from data_pipeline_2025_spark.streaming import ingest, txn
+
+    src, sink, ckpt, index = (str(tmp_path / d) for d in ("landing", "silver", "ckpt", "index"))
+    os.makedirs(src)
+    tr = Tracer()
+    # the wraps of workload_ingest.run's traced phase (inline there)
+    txn_names = [f"txn.{fn}" for fn in ("stage_append", "commit_append", "read_committed")]
+    try:
+        for name in txn_names:
+            tr.wrap(txn, name.split(".")[1], name)
+        tr.wrap(search, "update_trigram_index", "search.update_trigram_index")
+        tr.wrap(search, "build_trigram_index_at", "search.build_trigram_index_at")
+        for d in range(2):
+            for fname, data in datagen.price_drop(201, d)[0]:
+                with open(os.path.join(src, fname), "wb") as f:
+                    f.write(data)
+            tr.default_op = f"d{d}"
+            q = ingest.start_price_ingest(spark, src, sink, ckpt, index_dir=index)
+            q.awaitTermination()
+            assert q.exception() is None
+    finally:
+        tr.restore()
+
+    calls: dict[tuple[str, str], int] = {}
+    for _, name, *_, op in tr.spans:
+        calls[name, op] = calls.get((name, op), 0) + 1
+    assert calls.get(("search.build_trigram_index_at", "d0"), 0) >= 1
+    assert calls.get(("search.update_trigram_index", "d1"), 0) >= 1
+    # drop 1 reads the committed silver and index, and stages and
+    # commits a file to each
+    assert [n for n in txn_names if calls.get((n, "d1"), 0) < 1] == []

@@ -12,14 +12,15 @@ layout, each fixed here:
   root is now per-uid and created with mode 0700;
 - **overwrite-under-reader races** — ``mode('overwrite')`` deletes
   files first, so a concurrent process mid-read sees missing files.
-  :func:`publish` writes to a fresh versioned directory and then
-  atomically swaps a symlink (``os.replace`` of a symlink is atomic
-  on POSIX): readers that resolved the old version keep reading it
-  untouched, new readers see the new one. Inputs are immutable per
-  sf_dir and builds deterministic, so concurrent publishers write
-  identical content and either winner is correct. Superseded
-  version directories are left for the OS tmp reaper (bounded: one
-  per publisher process).
+  Every artifact is a ``streaming/txn.py`` table: :func:`publish`
+  stages the new files invisibly and makes them the whole table with
+  one replace commit; superseded files stay until ``txn.vacuum``, so
+  a frame another process holds keeps its files. Readers go through
+  ``txn.read_committed``, which lists only committed files — staged
+  orphans of a crashed publish and files of any earlier layout in
+  the directory are never read. Inputs are immutable per sf_dir and
+  builds deterministic, so concurrent publishers commit identical
+  content and either order is correct.
 """
 
 from __future__ import annotations
@@ -27,9 +28,11 @@ from __future__ import annotations
 import hashlib
 import os
 import tempfile
-import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
+
+from .streaming import txn
 
 
 def artifact_root() -> str:
@@ -46,18 +49,28 @@ def artifact_path(sf_dir: str, name: str) -> str:
 
 
 def publish(df: DataFrame, path: str, partition_by: tuple[str, ...] = ()) -> str:
-    """Atomically (re)publish a deterministic parquet artifact at
-    ``path``: write a fresh versioned directory, then swap ``path``
-    as a symlink onto it. Safe against concurrent readers (they keep
-    the version they resolved) and concurrent publishers (last
-    symlink swap wins; content is identical by determinism)."""
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    version = f"{path}.v-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(version)
-    tmp_link = f"{version}.lnk"
-    os.symlink(version, tmp_link)
-    os.replace(tmp_link, path)  # atomic symlink swap
+    """Make ``df`` the whole txn table at ``path``: stage its files,
+    then one replace commit. A crash before the commit leaves only
+    invisible orphans; readers see the old table or the new one."""
+    txn.commit_replace_table(path, txn.stage_append(df, path, partition_by))
+    return path
+
+
+# Artifact paths published by this process: each is rebuilt once per
+# process, so it is always fresh against the source parquet.
+_BUILT: set[str] = set()
+
+
+def materialize(
+    sf_dir: str,
+    name: str,
+    build: Callable[[], DataFrame],
+    partition_by: tuple[str, ...] = (),
+) -> str:
+    """The path of sf_dir's artifact ``name``, publishing ``build()``
+    there the first time this process asks for it."""
+    path = artifact_path(sf_dir, name)
+    if path not in _BUILT:
+        publish(build(), path, partition_by)
+        _BUILT.add(path)
     return path

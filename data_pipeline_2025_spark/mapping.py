@@ -34,12 +34,12 @@ filters; nothing here shuffles.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
 
+from .artifacts import materialize
 from .catalog import Catalog
 from .functions.money import dec, dec_lit
+from .streaming import txn
 
 SUPERMARKETS_CTE = """supermarkets AS (
   SELECT s_suppkey AS supermarket_id, s_name AS name, n_name AS city
@@ -87,44 +87,18 @@ def supermarkets(cat: Catalog) -> DataFrame:
     )
 
 
-# Materialized-silver registry: sf_dirs whose products table has
-# been written this process (rebuilt once per process → always fresh
-# vs the source parquet, amortized across every domain query).
-_SILVER_BUILT: set[str] = set()
-
-
-def silver_products_path(sf_dir: str) -> str:
-    from .artifacts import artifact_path
-
-    return artifact_path(sf_dir, "products_silver")
-
-
-def products(cat: Catalog, materialized: bool = True) -> DataFrame:
-    """The products fact view. ``materialized=True`` (default) reads
-    a silver parquet table written once per (process, sf_dir) — the
-    engine's ingest-time materialization, mirroring the reference
-    where `products` IS a loaded Postgres table (tables.sql:14-41),
-    not a per-query join. The md5 surrogate id is computed once at
-    write time instead of per query (SCALE.md: "materialize the id
-    at ingest"); every domain query then scans a columnar table with
-    pushed filters and no join. ``materialized=False`` returns the
-    defining expression (used by the builder itself and available
-    for pipelines that want fusion with upstream operators)."""
-    if not materialized:
-        return _products_expr(cat)
-    path = silver_products_path(cat.sf_dir)
-    if path not in _SILVER_BUILT:
-        from .artifacts import publish
-
-        # Atomic symlink-swap publish: a concurrent process mid-read
-        # keeps its resolved version; overwrite-in-place would delete
-        # files under it (artifacts.py).
-        publish(_products_expr(cat), path)
-        _SILVER_BUILT.add(path)
-    # Read the version the link points at, not the link: a frame held
-    # across requests keeps its files when another process republishes
-    # (publish leaves superseded versions in place).
-    return cat.spark.read.parquet(os.path.realpath(path))
+def products(cat: Catalog) -> DataFrame:
+    """The products fact view: a silver txn table published once per
+    (process, sf_dir) — the engine's ingest-time materialization,
+    mirroring the reference where `products` IS a loaded Postgres
+    table (tables.sql:14-41), not a per-query join. The md5 surrogate
+    id is computed once at write time instead of per query (SCALE.md:
+    "materialize the id at ingest"); every domain query then scans a
+    columnar table with pushed filters and no join. The read is the
+    committed snapshot, so a frame held across requests keeps its
+    files when another process republishes (artifacts.py)."""
+    path = materialize(cat.sf_dir, "products_silver", lambda: _products_expr(cat))
+    return txn.read_committed(cat.spark, path)
 
 
 def _products_expr(cat: Catalog) -> DataFrame:

@@ -13,9 +13,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..artifacts import materialize
 from ..catalog import Catalog
 from ..functions.money import dec, money_out, to_double
 from ..registry import register
+from ..streaming import txn
 
 _ORACLE_Q21 = """
 SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
@@ -177,7 +179,7 @@ def q24_user_event_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------- continuous aggregate (q75)
 #
 # The TimescaleDB continuous-aggregate / lambda pattern Spark-style:
-# history is served from a MATERIALIZED hourly rollup (gold parquet,
+# history is served from a MATERIALIZED hourly rollup (a txn table,
 # partitioned by day — time-scoped reads prune at the file index),
 # only the live tail is aggregated from raw events at query time.
 # The split is on an hour boundary, so no output window straddles
@@ -189,14 +191,6 @@ def q24_user_event_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 # materialized + tail composes to exactly the direct answer.
 
 CAGG_SPLIT = "2024-01-24 00:00:00"
-
-_CAGG_BUILT: set[str] = set()
-
-
-def _cagg_path(sf_dir: str) -> str:
-    from ..artifacts import artifact_path
-
-    return artifact_path(sf_dir, "events_hourly_cagg")
 
 
 def _hourly(df: DataFrame) -> DataFrame:
@@ -226,27 +220,23 @@ ORDER BY window_start, event_type
     "q75_continuous_aggregate",
     oracle=_ORACLE_Q75,
     doc="Continuous-aggregate pattern: materialized hourly rollup "
-    "(gold parquet partitioned by day) for history + query-time "
+    "(txn table partitioned by day) for history + query-time "
     "aggregation of the live tail only, hour-aligned split — the "
     "union equals the direct rollup exactly (oracle-proved).",
     tags=("events", "gold", "continuous-aggregate"),
 )
 def q75_continuous_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..artifacts import publish
-    from ..sources.gold import read_gold
-
     cat = Catalog(spark, sf_dir)
     split = F.lit(CAGG_SPLIT).cast("timestamp")
-    path = _cagg_path(sf_dir)
-    if path not in _CAGG_BUILT:
-        hist = _hourly(cat.events.where(F.col("ts") < split)).withColumn(
+    path = materialize(
+        sf_dir,
+        "events_hourly_cagg",
+        lambda: _hourly(cat.events.where(F.col("ts") < split)).withColumn(
             "day", F.to_date("window_start")
-        )
-        # Atomic symlink-swap publish (artifacts.py) — same layout
-        # write_gold would produce, safe under concurrent readers.
-        publish(hist, path, partition_by=("day",))
-        _CAGG_BUILT.add(path)
-    materialized = read_gold(spark, path).drop("day")
+        ),
+        partition_by=("day",),
+    )
+    materialized = txn.read_committed(spark, path).drop("day")
     tail = _hourly(cat.events.where(F.col("ts") >= split))
     return materialized.unionByName(tail).orderBy("window_start", "event_type")
 

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import artifact_path, materialize, publish
 from ..catalog import Catalog
 from ..functions.money import to_double
 from ..mapping import domain_sql, products
@@ -256,20 +257,12 @@ def q47_trigram_fuzzy_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # skip every row group whose range misses the term's trigrams — and
 # publishes it with ONE txn commit, so readers see whole updates or
 # none. At 100 TB the index grows by one file per ingest batch; here
-# the sf_dir index is built once per process.
-
-_INDEX_CACHE: set[str] = set()
+# the sf_dir index is built once per process (artifacts.materialize).
 
 
 def trigram_index_path(sf_dir: str) -> str:
-    # Hardened scratch location (md5 key, per-uid 0700 root —
-    # artifacts.py). The index is a txn table rather than a
-    # symlink-swapped artifact: readers go through the committed
-    # snapshot, so a concurrent rebuild (a replace commit over
-    # identical deterministic content) never tears a reader, and
-    # files of any earlier layout in the directory stay invisible.
-    from ..artifacts import artifact_path
-
+    # Hardened scratch location (md5 key, per-uid 0700 root) of the
+    # txn table build_trigram_index publishes (artifacts.py).
     return artifact_path(sf_dir, "trigram_index")
 
 
@@ -286,28 +279,29 @@ def _padded() -> Column:
     return F.concat(F.lit("  "), F.lower("name"), F.lit(" "))
 
 
-def _stage_postings(names: DataFrame, path: str) -> list[str]:
-    """Stage the (name, n_name, tg) postings of ``names`` as one file
-    sorted by tg (invisible until committed)."""
+def postings(names: DataFrame) -> DataFrame:
+    """The (name, n_name, tg) postings of ``names`` as one partition
+    sorted by tg — staged, it is one file whose row groups prune on
+    tg."""
     tgs = F.array_distinct(
         F.expr("transform(sequence(1, length(padded) - 2), i -> substring(padded, i, 3))")
     )
-    postings = (
+    return (
         names.withColumn("padded", _padded())
         .withColumn("tgs", tgs)
         .select("name", F.size("tgs").alias("n_name"), F.explode("tgs").alias("tg"))
+        .coalesce(1)
+        .sortWithinPartitions("tg", "name")
     )
-    return txn.stage_append(postings.coalesce(1).sortWithinPartitions("tg", "name"), path, ())
 
 
 def build_trigram_index_at(
     spark: SparkSession, names: DataFrame, path: str
 ) -> str:
     """Publish the postings of ``names`` (distinct, column ``name``)
-    as the whole index at ``path``: one staged file, one replace
-    commit. A rebuild over an existing index retires its files."""
-    txn.commit_replace_table(path, _stage_postings(names, path))
-    return path
+    as the whole index at ``path``. A rebuild over an existing index
+    retires its files."""
+    return publish(postings(names), path)
 
 
 def update_trigram_index(
@@ -340,21 +334,21 @@ def update_trigram_index(
         }
     fresh = sorted(set(names) - known)
     if fresh:
-        txn.commit_append(path, _stage_postings(names_frame(spark, fresh), path))
+        staged = txn.stage_append(postings(names_frame(spark, fresh)), path, ())
+        txn.commit_append(path, staged)
     return len(fresh)
 
 
 def build_trigram_index(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the trigram → name posting list of sf_dir's part
     names (once per process)."""
-    path = trigram_index_path(sf_dir)
-    if path in _INDEX_CACHE:
-        return path
-    cat = Catalog(spark, sf_dir)
-    names = cat.part.select(F.col("p_name").alias("name")).distinct()
-    build_trigram_index_at(spark, names, path)
-    _INDEX_CACHE.add(path)
-    return path
+    return materialize(
+        sf_dir,
+        "trigram_index",
+        lambda: postings(
+            Catalog(spark, sf_dir).part.select(F.col("p_name").alias("name")).distinct()
+        ),
+    )
 
 
 @register(

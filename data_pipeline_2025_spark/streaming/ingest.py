@@ -37,8 +37,6 @@ O(history). With Delta the same scoping is the MERGE predicate
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -51,15 +49,9 @@ DEDUP_KEY = ["chain_id", "store_id", "item_code", "price_update_date", "raw_hash
 PARTITION_COL = "ingest_date"
 
 
-def read_silver(spark: SparkSession, sink_dir: str) -> DataFrame | None:
-    """The serving read of the silver sink: the committed snapshot
-    when the sink is transactional (crash orphans invisible), the
-    plain directory read for legacy/externally-written sinks."""
-    if txn.is_transactional(sink_dir):
-        return txn.read_committed(spark, sink_dir)
-    if os.path.exists(sink_dir):
-        return spark.read.parquet(sink_dir)
-    return None
+# The serving read of the silver sink: its committed snapshot (crash
+# orphans invisible), None before the first commit.
+read_silver = txn.read_committed
 
 
 def scoped_existing_keys(
@@ -98,8 +90,9 @@ def start_price_ingest(
     cadence, T4).
 
     With ``index_dir`` set, each micro-batch also maintains the
-    trigram search index (the pg_trgm GIN analog, a txn table): the
-    first batch builds it, and each later batch commits one file of
+    trigram search index (the pg_trgm GIN analog, a txn table): a
+    batch that finds no committed index builds it from every name in
+    the committed silver, and each later batch commits one file of
     postings for its item names the index does not hold yet —
     replayed names are no-ops — so the serving index stays fresh with
     the data, exactly like the reference's index updating on
@@ -132,7 +125,7 @@ def start_price_ingest(
         # (update_trigram_index skips names the index holds).
         pairs = batch.select(PARTITION_COL, "item_name").distinct().collect()
         names = sorted({r["item_name"] for r in pairs} - {None})
-        committed = read_silver(spark_, sink_dir)
+        committed = txn.read_committed(spark_, sink_dir)
         if committed is not None:
             touched = list({r[PARTITION_COL] for r in pairs})
             existing = scoped_existing_keys(committed, touched)
@@ -148,14 +141,20 @@ def start_price_ingest(
         # boundary (see module docstring).
         new_files = txn.stage_append(batch, sink_dir, (PARTITION_COL,))
         _publish_silver(sink_dir, new_files)
-        if index_dir is not None:
+        if index_dir is not None and names:
             from ..operators import search
 
             if txn.versions(index_dir):
                 search.update_trigram_index(spark_, index_dir, names)
             else:
+                # a fresh (or lost) index covers every committed name,
+                # not just this batch's (a batch with names leaves the
+                # silver with a commit)
+                silver_names = txn.read_committed(spark_, sink_dir).select(
+                    F.col("item_name").alias("name")
+                )
                 search.build_trigram_index_at(
-                    spark_, search.names_frame(spark_, names), index_dir
+                    spark_, silver_names.dropna().distinct(), index_dir
                 )
 
     return (

@@ -131,10 +131,10 @@ def is_transactional(sink_dir: str) -> bool:
     creates the directory before it moves a single data file, so a
     crash during the sink's FIRST-ever commit (files renamed into the
     partition layout, no log entry yet) still reads as
-    transactional. The committed snapshot is then empty — the
-    legacy directory-scan fallback must never see those orphans, or
-    the ingest idempotence anti-join would absorb the replayed batch
-    against rows vacuum later deletes (permanent loss)."""
+    transactional, with an empty committed snapshot —
+    :func:`read_committed` returns None there, and no reader scans
+    the directory, so the ingest idempotence anti-join never absorbs
+    the replayed batch against orphans vacuum later deletes."""
     return os.path.isdir(_txn_dir(sink_dir))
 
 

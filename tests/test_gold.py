@@ -6,6 +6,7 @@ actually prunes (PartitionFilters in the scan, one directory read)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_pipeline_2025_spark.catalog import Catalog
@@ -98,16 +99,17 @@ def test_index_without_a_commit_answers_empty(spark, tmp_path):
     """An index directory that is missing, empty, or staged but never
     committed answers a search with an empty (name, sim) frame."""
     from data_pipeline_2025_spark.operators.search import (
-        _stage_postings,
         names_frame,
+        postings,
         search_trigram_index,
     )
+    from data_pipeline_2025_spark.streaming import txn
 
     missing = str(tmp_path / "missing")
     empty = tmp_path / "empty"
     empty.mkdir()
     staged = str(tmp_path / "staged")
-    _stage_postings(names_frame(spark, ["widget bolt"]), staged)
+    txn.stage_append(postings(names_frame(spark, ["widget bolt"])), staged, ())
     for path in (missing, str(empty), staged):
         got = search_trigram_index(spark, path, "widget bolt")
         assert got.columns == ["name", "sim"]
@@ -122,6 +124,7 @@ def test_trigram_index_ignores_an_earlier_layout(spark, sf_smoke, tmp_path):
     import os
     import shutil
 
+    from data_pipeline_2025_spark import artifacts
     from data_pipeline_2025_spark.operators import search
 
     sf = tmp_path / "sf"
@@ -146,9 +149,50 @@ def test_trigram_index_ignores_an_earlier_layout(spark, sf_smoke, tmp_path):
         got = search.q67_trigram_index_search(spark, str(sf)).collect()
         want = search.q47_trigram_fuzzy_search(spark, str(sf)).collect()
     finally:
-        search._INDEX_CACHE.discard(index)
+        artifacts._BUILT.discard(index)
         shutil.rmtree(os.path.dirname(index), ignore_errors=True)
     assert got and [(r["name"], round(r["sim"], 12)) for r in got] == [
         (r["name"], round(r["sim"], 12)) for r in want
     ]
     assert search.FUZZY_TERM not in {r["name"] for r in got}
+
+
+@pytest.mark.parametrize("layout", ["fresh", "pre-change link"])
+def test_crashed_or_pre_change_publish_is_invisible(spark, tmp_path, monkeypatch, layout):
+    """An artifact reads only what publish committed: a publish that
+    crashes before its commit leaves the previous rows in place and
+    only orphans for vacuum, and a path that is still a symlink onto
+    an older version directory (the layout before txn publishing)
+    shows none of that directory's rows."""
+    import os
+
+    from data_pipeline_2025_spark import artifacts
+    from data_pipeline_2025_spark.streaming import txn
+
+    path = str(tmp_path / "artifact")
+    legacy: list[str] = []
+    if layout == "pre-change link":
+        version = path + ".v-1-0123abcd"
+        spark.createDataFrame([(-1,)], "k INT").write.parquet(version)
+        os.symlink(version, path)
+        legacy = [f for f in os.listdir(version) if f.endswith(".parquet")]
+
+    def rows():
+        return sorted(r["k"] for r in txn.read_committed(spark, path).collect())
+
+    build = lambda: spark.range(7).selectExpr("CAST(id AS INT) AS k")  # noqa: E731
+    artifacts.publish(build(), path)
+    assert rows() == sorted(r["k"] for r in build().collect())
+
+    staged: list[str] = []
+
+    def crash(sink_dir, new_files):
+        staged.extend(new_files)
+        raise RuntimeError("injected crash before the publish commit")
+
+    monkeypatch.setattr(txn, "commit_replace_table", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        artifacts.publish(spark.range(100, 103).selectExpr("CAST(id AS INT) AS k"), path)
+    assert staged and rows() == list(range(7))
+    assert txn.vacuum(path) == sorted(staged + legacy)
+    assert rows() == list(range(7))

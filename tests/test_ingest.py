@@ -552,3 +552,44 @@ def test_index_names_come_from_the_pre_anti_join_batch(
     assert postings.get("פריט 500") == set(search._trigrams("פריט 500"))
     assert any(r["name"] == "פריט 500" for r in hits)
     assert set(postings) == {"פריט 100", "פריט 200", "פריט 300", "פריט 400", "פריט 500"}
+
+
+def test_a_lost_index_is_rebuilt_from_the_whole_silver(spark, price_dir, tmp_path):
+    """A batch that finds no committed index (fresh, deleted, or an
+    earlier layout) builds it from every name in the committed
+    silver, not only from its own names: after two drops, a deleted
+    index and a third drop, every committed name is findable and the
+    postings equal a fresh build over the same names."""
+    import shutil
+
+    from data_pipeline_2025_spark.operators import search
+    from data_pipeline_2025_spark.streaming import txn
+    from data_pipeline_2025_spark.streaming.ingest import read_silver, start_price_ingest
+
+    sink, ckpt, idx = (str(tmp_path / d) for d in ("silver", "ckpt", "tg_index"))
+
+    def drop(fname: str, codes: list[str]) -> None:
+        with open(f"{price_dir}/{fname}", "w") as f:
+            f.write(_price_file("7290700100008", "003", [_item(c) for c in codes]))
+        start_price_ingest(spark, price_dir, sink, ckpt, index_dir=idx).awaitTermination()
+
+    start_price_ingest(spark, price_dir, sink, ckpt, index_dir=idx).awaitTermination()
+    drop("d2.json", ["500", "600"])
+    shutil.rmtree(idx)
+    drop("d3.json", ["700"])
+
+    names = sorted(
+        r["item_name"] for r in read_silver(spark, sink).select("item_name").distinct().collect()
+    )
+    assert len(names) == 7
+    for name in names:
+        hits = search.search_trigram_index(spark, idx, name).collect()
+        assert name in {r["name"] for r in hits}
+
+    clean = str(tmp_path / "tg_clean")
+    search.build_trigram_index_at(spark, search.names_frame(spark, names), clean)
+
+    def postings(path):
+        return sorted(tuple(r) for r in txn.read_committed(spark, path).collect())
+
+    assert postings(idx) == postings(clean)

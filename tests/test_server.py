@@ -287,14 +287,23 @@ def test_requests_open_no_tables(spark, sf_smoke, monkeypatch):
 
 
 def test_requests_survive_a_republished_silver(spark, sf_smoke, base_url):
-    """Another process publishing the products silver again swaps its
-    link; a server that opened the frames before keeps answering."""
-    from data_pipeline_2025_spark import artifacts, mapping
+    """Another process publishing the products silver again commits
+    new files over it and leaves the superseded ones on disk, so a
+    server that opened the frames before keeps answering the same
+    offers."""
+    from data_pipeline_2025_spark import artifacts
+    from data_pipeline_2025_spark.streaming import txn
 
-    path = mapping.silver_products_path(sf_smoke)
-    artifacts.publish(spark.read.parquet(path), path)
-    status, offers = _get(f"{base_url}/products/barcode/50")
+    url = f"{base_url}/products/barcode/50"
+    before = _get(url)
+    path = artifacts.artifact_path(sf_smoke, "products_silver")
+    files = txn.committed_files(path)
+    artifacts.publish(txn.read_committed(spark, path), path)
+    assert txn.committed_files(path) != files
+    assert all(os.path.exists(os.path.join(path, f)) for f in files)
+    status, offers = _get(url)
     assert status == 200 and offers
+    assert (status, offers) == before
 
 
 def test_concurrent_requests_share_the_frames(base_url):

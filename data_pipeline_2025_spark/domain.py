@@ -20,6 +20,17 @@ Semantics ledger (SURVEY.md §2):
                       store×product, mcp.py savings-0 convention)
   store_stats         A2/A3/A5
   store_directory     store list with city/name ILIKE filters
+
+Point requests (one barcode, a basket's barcodes, one store) run in
+one partition: each key-filtered query calls ``coalesce(1)`` right
+after its key filter, so every window, aggregate and join after it is
+satisfied by SinglePartition and plans no Exchange. ``with_stores``
+joins the store dimension inside that partition, and ``ordered``
+sorts a small result there instead of paying a global orderBy's
+range-sample job. A whole-table input is never coalesced — search,
+lowest prices and the store-wide aggregates (price_trend,
+history_minmax and store_stats over a whole table) keep their
+parallel plans and broadcast the dimension.
 """
 
 from __future__ import annotations
@@ -34,6 +45,22 @@ def effective() -> Column:
     """coalesce(promo_price, price) — F4, the system's load-bearing
     expression (products.py:84 et al.)."""
     return F.coalesce(F.col("promo_price"), F.col("price"))
+
+
+def ordered(df: DataFrame, *cols) -> DataFrame:
+    """``df`` sorted by ``cols`` in one partition: for a small result
+    (a key-filtered answer, the store dimension, a distinct list),
+    where a global orderBy would add a range-sample job and a
+    shuffle."""
+    return df.coalesce(1).sortWithinPartitions(*cols)
+
+
+def with_stores(offers: DataFrame, supermarkets: DataFrame) -> DataFrame:
+    """Join the store dimension to key-filtered ``offers`` (one
+    partition): the dimension is coalesced too and hash-joined inside
+    that task, so the plan needs neither an exchange nor a broadcast
+    job."""
+    return offers.join(supermarkets.coalesce(1).hint("shuffle_hash"), "supermarket_id")
 
 
 def search_products(
@@ -86,11 +113,11 @@ def compare_offers(
     products: DataFrame, supermarkets: DataFrame, barcode: str
 ) -> DataFrame:
     """All offers for one barcode across stores (products.py:162-226):
-    broadcast dimension join, savings = price - promo (NULL when no
-    promo — the products.py:214 convention)."""
+    store dimension joined in one partition, savings = price - promo
+    (NULL when no promo — the products.py:214 convention)."""
+    offers = products.where(F.col("barcode") == barcode).coalesce(1)
     return (
-        products.where(F.col("barcode") == barcode)
-        .join(F.broadcast(supermarkets), "supermarket_id")
+        with_stores(offers, supermarkets)
         .withColumn("effective_price", effective())
         .withColumn("savings", F.col("price") - F.col("promo_price"))
     )
@@ -128,11 +155,16 @@ def lowest_prices_page(products: DataFrame, limit: int = 20) -> DataFrame:
 
 
 def price_history(products: DataFrame, barcode: str, cutoff) -> DataFrame:
-    """History for one barcode since cutoff (products.py:229-260)."""
-    return products.where(
-        (F.col("barcode") == barcode)
-        & (F.col("collected_at") >= F.lit(cutoff).cast("timestamp"))
-    ).withColumn("effective_price", effective())
+    """History for one barcode since cutoff (products.py:229-260);
+    ``cutoff`` is a timestamp literal or a Column."""
+    return (
+        products.where(
+            (F.col("barcode") == barcode)
+            & (F.col("collected_at") >= F.lit(cutoff).cast("timestamp"))
+        )
+        .coalesce(1)
+        .withColumn("effective_price", effective())
+    )
 
 
 def _history_frame(products: DataFrame) -> DataFrame:
@@ -140,47 +172,57 @@ def _history_frame(products: DataFrame) -> DataFrame:
         F.col("collected_at").desc(), "product_id"
     )
     wc = Window.partitionBy("barcode")
-    return (
-        products.withColumn("eff", effective())
-        .withColumn("rn", F.row_number().over(wo))
-        .withColumn("cnt", F.count(F.lit(1)).over(wc))
+    return products.withColumns(
+        {
+            "eff": effective(),
+            "rn": F.row_number().over(wo),
+            "cnt": F.count(F.lit(1)).over(wc),
+        }
     )
 
 
-def price_trend(products: DataFrame) -> DataFrame:
-    """A13 (products.py:283-296): newest-first ordering, first
-    len//2 rows = recent half; recent > older*1.05 → increasing,
-    < older*0.95 → decreasing, else stable. Requires ≥2 points."""
-    h = _history_frame(products)
-    half = F.floor(F.col("cnt") / 2)
-    recent_sum = F.sum(F.when(F.col("rn") <= half, F.col("eff")))
-    recent_n = F.sum(F.when(F.col("rn") <= half, 1).otherwise(0))
-    older_sum = F.sum(F.when(F.col("rn") > half, F.col("eff")))
-    older_n = F.sum(F.when(F.col("rn") > half, 1).otherwise(0))
-    agg = (
-        h.groupBy("barcode")
-        .agg(
-            F.max("cnt").alias("points"),
-            (to_double(recent_sum) / recent_n).alias("recent_avg"),
-            (to_double(older_sum) / older_n).alias("older_avg"),
-        )
-        .where(F.col("points") >= 2)
-    )
-    return agg.withColumn(
-        "trend",
-        F.when(F.col("recent_avg") > F.col("older_avg") * 1.05, "increasing")
-        .when(F.col("recent_avg") < F.col("older_avg") * 0.95, "decreasing")
-        .otherwise("stable"),
-    )
-
-
-def history_minmax(products: DataFrame) -> DataFrame:
-    """current / lowest / highest effective per barcode (A14)."""
+def history_minmax(products: DataFrame, *extra: Column) -> DataFrame:
+    """current / lowest / highest effective per barcode (A14).
+    ``extra`` aggregates over the same rows (``eff``, ``rn``, ``cnt``
+    in scope) ride along in the one groupBy."""
     h = _history_frame(products)
     return h.groupBy("barcode").agg(
         to_double(F.max(F.when(F.col("rn") == 1, F.col("eff")))).alias("current_d"),
         to_double(F.min("eff")).alias("low_d"),
         to_double(F.max("eff")).alias("high_d"),
+        *extra,
+    )
+
+
+def price_trend(
+    products: DataFrame, *extra: Column, min_points: int = 2
+) -> DataFrame:
+    """A13 (products.py:283-296): newest-first ordering, first
+    len//2 rows = recent half; recent > older*1.05 → increasing,
+    < older*0.95 → decreasing, else stable. Keeps barcodes with at
+    least ``min_points`` points (2 — a trend needs two; one point,
+    whose recent half is empty, reads stable).
+
+    Computed in history_minmax's groupBy, so a row also carries
+    current/low/high and ``extra``: the served history gets its whole
+    answer from one aggregate."""
+    half = F.floor(F.col("cnt") / 2)
+    recent_sum = F.sum(F.when(F.col("rn") <= half, F.col("eff")))
+    recent_n = F.sum(F.when(F.col("rn") <= half, 1).otherwise(0))
+    older_sum = F.sum(F.when(F.col("rn") > half, F.col("eff")))
+    older_n = F.sum(F.when(F.col("rn") > half, 1).otherwise(0))
+    agg = history_minmax(
+        products,
+        F.max("cnt").alias("points"),
+        (to_double(recent_sum) / recent_n).alias("recent_avg"),
+        (to_double(older_sum) / older_n).alias("older_avg"),
+        *extra,
+    ).where(F.col("points") >= min_points)
+    return agg.withColumn(
+        "trend",
+        F.when(F.col("recent_avg") > F.col("older_avg") * 1.05, "increasing")
+        .when(F.col("recent_avg") < F.col("older_avg") * 0.95, "decreasing")
+        .otherwise("stable"),
     )
 
 
@@ -191,13 +233,15 @@ def basket_store_totals(
     store×product (argmin w/ product_id tie-break), then sums.
     Caller applies the complete-basket filter (A7:
     product_count == len(barcodes))."""
-    offers = products.where(F.col("barcode").isin(*barcodes)).withColumn(
-        "eff", effective()
+    offers = (
+        products.where(F.col("barcode").isin(*barcodes))
+        .coalesce(1)
+        .withColumn("eff", effective())
     )
     w = Window.partitionBy("supermarket_id", "barcode").orderBy("eff", "product_id")
     best = offers.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1)
     return (
-        best.join(F.broadcast(supermarkets), "supermarket_id")
+        with_stores(best, supermarkets)
         .groupBy("supermarket_id", F.col("name").alias("supermarket_name"))
         .agg(
             F.sum("price").alias("total_price"),
@@ -238,4 +282,4 @@ def store_directory(
         df = df.where(F.lower(F.col("city")).contains(city.lower()))
     if name:
         df = df.where(F.lower(F.col("name")).contains(name.lower()))
-    return df.orderBy("name", "supermarket_id")
+    return ordered(df, "name", "supermarket_id")

@@ -87,6 +87,13 @@ def supermarkets(cat: Catalog) -> DataFrame:
     )
 
 
+def in_memory(df: DataFrame) -> DataFrame:
+    """A small frame (the ~100-row store dimension) collected once
+    into a local relation, so a query that reads or broadcasts it
+    rescans no file and runs no nested join."""
+    return df.sparkSession.createDataFrame(df.toPandas(), df.schema)
+
+
 def products(cat: Catalog) -> DataFrame:
     """The products fact view: a silver txn table published once per
     (process, sf_dir) — the engine's ingest-time materialization,

@@ -25,7 +25,10 @@ from .tools import ALL_TOOLS
 
 _STR = {"type": "string"}
 _INT = {"type": "integer"}
-_STR_ARRAY = {"type": "array", "items": {"type": "string"}}
+# A basket's totals run as one task over one IN list of its barcodes,
+# and each name term adds a column to the resolving aggregate: cap it.
+MAX_BASKET_ITEMS = 100
+_BASKET = {"type": "array", "items": {"type": "string"}, "maxItems": MAX_BASKET_ITEMS}
 
 # JSON-schema tool declarations (shape of reference mcp.py:58-142).
 TOOL_SCHEMAS: dict[str, dict[str, Any]] = {
@@ -57,7 +60,7 @@ TOOL_SCHEMAS: dict[str, dict[str, Any]] = {
         "carrying every item, best/worst summary.",
         "inputSchema": {
             "type": "object",
-            "properties": {"barcodes": _STR_ARRAY},
+            "properties": {"barcodes": _BASKET},
             "required": ["barcodes"],
         },
     },
@@ -67,7 +70,7 @@ TOOL_SCHEMAS: dict[str, dict[str, Any]] = {
         "complete baskets.",
         "inputSchema": {
             "type": "object",
-            "properties": {"barcodes": _STR_ARRAY},
+            "properties": {"barcodes": _BASKET},
             "required": ["barcodes"],
         },
     },
@@ -77,7 +80,7 @@ TOOL_SCHEMAS: dict[str, dict[str, Any]] = {
         "expensive complete basket: amount, percent, recommendation.",
         "inputSchema": {
             "type": "object",
-            "properties": {"barcodes": _STR_ARRAY},
+            "properties": {"barcodes": _BASKET},
             "required": ["barcodes"],
         },
     },
@@ -173,8 +176,8 @@ class ToolValidationError(ValueError):
 
 def validate_arguments(name: str, arguments: dict[str, Any]) -> None:
     """Minimal JSON-schema check: required present, declared types,
-    no undeclared properties (the subset the reference's FastAPI
-    layer enforces via pydantic)."""
+    array ``maxItems``, no undeclared properties (the subset the
+    reference's FastAPI layer enforces via pydantic)."""
     if not isinstance(arguments, dict):
         raise ToolValidationError(f"{name}: arguments must be an object")
     schema = TOOL_SCHEMAS[name]["inputSchema"]
@@ -192,6 +195,9 @@ def validate_arguments(name: str, arguments: dict[str, Any]) -> None:
             raise ToolValidationError(
                 f"{name}: {key!r} must be {props[key]['type']}"
             )
+        limit = props[key].get("maxItems")
+        if limit is not None and len(val) > limit:
+            raise ToolValidationError(f"{name}: {key!r} has more than {limit} items")
         items = props[key].get("items")
         if items and not all(
             isinstance(x, _JSON_TYPES[items["type"]]) for x in val

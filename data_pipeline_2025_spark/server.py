@@ -32,12 +32,12 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
 from urllib.parse import parse_qs, urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import domain, mcp
 from .catalog import Catalog
-from .mapping import products, supermarkets
+from .mapping import in_memory, products, supermarkets
 
 _log = logging.getLogger(__name__)
 
@@ -134,15 +134,10 @@ def get_products(prods: DataFrame, dim: DataFrame, params: dict) -> list[dict]:
 def get_barcode(prods: DataFrame, dim: DataFrame, params: dict, barcode: str) -> list[dict]:
     """GET /products/barcode/{barcode} (products.py:174-226): offers
     across stores sorted cheapest-first; 404 when unknown."""
-    offers = domain.compare_offers(prods, dim, barcode)
-    out = _rows(
-        offers.select(
-            *_PRODUCT_COLS,
-            F.col("name").alias("supermarket_name"),
-            "effective_price",
-            "savings",
-        ).orderBy("effective_price", "product_id")
+    offers = domain.compare_offers(prods, dim, barcode).select(
+        *_PRODUCT_COLS, F.col("name").alias("supermarket_name"), "effective_price", "savings"
     )
+    out = _rows(domain.ordered(offers, "effective_price", "product_id"))
     if not out:
         raise HttpError(404, f"no products with barcode {barcode}")
     return out
@@ -180,27 +175,32 @@ def get_history(prods: DataFrame, dim: DataFrame, params: dict, barcode: str) ->
     """GET /products/barcode/{barcode}/history (products.py:229-296):
     history window + trend + low/high. Anchored at the data's max
     collected_at (the reference anchors at now(); a data anchor keeps
-    the response deterministic)."""
+    the response deterministic). One query, one row: the anchor is a
+    window over the barcode's rows, and one groupBy returns the trend,
+    low/high and the entries, newest first."""
     days = _int_param(params, "days", 30, lo=1, hi=365)
-    prods = prods.where(F.col("barcode") == barcode)
-    anchor_row = prods.agg(F.max("collected_at").alias("m")).collect()[0]
-    if anchor_row["m"] is None:
-        raise HttpError(404, f"no products with barcode {barcode}")
-    cutoff = anchor_row["m"] - _dt.timedelta(days=days)
-    hist = domain.price_history(prods, barcode, cutoff)
-    entries = _rows(
-        hist.select("product_id", "price", "promo_price", "effective_price", "collected_at")
-        .orderBy(F.col("collected_at").desc(), "product_id")
+    keyed = prods.where(F.col("barcode") == barcode).coalesce(1)
+    anchor = F.max("collected_at").over(Window.partitionBy("barcode"))
+    hist = domain.price_history(
+        keyed.withColumn("_anchor", anchor),
+        barcode,
+        F.col("_anchor") - F.expr(f"INTERVAL {days} DAYS"),
     )
-    trend = domain.price_trend(hist).collect()
-    minmax = domain.history_minmax(hist).collect()
+    entry = F.struct("rn", "product_id", "price", "promo_price", "effective_price", "collected_at")
+    entries = F.array_sort(F.collect_list(entry)).alias("entries")
+    rows = domain.price_trend(hist, entries, min_points=1).collect()
+    if not rows:
+        raise HttpError(404, f"no products with barcode {barcode}")
+    s = rows[0]
     return {
         "barcode": barcode,
         "days": days,
-        "price_history": entries,
-        "trend": trend[0]["trend"] if trend else "stable",
-        "lowest_price": minmax[0]["low_d"] if minmax else None,
-        "highest_price": minmax[0]["high_d"] if minmax else None,
+        "price_history": [
+            _jsonable({k: v for k, v in e.asDict().items() if k != "rn"}) for e in s["entries"]
+        ],
+        "trend": s["trend"],
+        "lowest_price": s["low_d"],
+        "highest_price": s["high_d"],
     }
 
 
@@ -235,7 +235,7 @@ def get_supermarket_products(
 
 def _distinct(prods: DataFrame, col: str) -> list[str]:
     """Sorted distinct values of one column, nulls out."""
-    return [r[col] for r in prods.select(col).dropna().distinct().orderBy(col).collect()]
+    return [r[col] for r in domain.ordered(prods.select(col).dropna().distinct(), col).collect()]
 
 
 def get_categories(prods: DataFrame, dim: DataFrame, params: dict) -> list[str]:
@@ -336,10 +336,11 @@ def create_server(
 ) -> ThreadingHTTPServer:
     """Build (not start) the HTTP server; port 0 = ephemeral. The
     (products, supermarkets) pair is opened here, once, and every
-    request reads it. Call .serve_forever() in a thread;
-    .server_address[1] is the bound port."""
+    request reads it; the store dimension is held in memory. Call
+    .serve_forever() in a thread; .server_address[1] is the bound
+    port."""
     cat = Catalog(spark, sf_dir)
-    frames = (products(cat), supermarkets(cat))
+    frames = (products(cat), in_memory(supermarkets(cat)))
 
     class Handler(BaseHTTPRequestHandler):
         def log_message(self, *args):  # quiet test output

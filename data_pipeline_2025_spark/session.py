@@ -34,6 +34,12 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Quieter local runs; harmless on a cluster.
     "spark.ui.showConsoleProgress": "false",
+    # PySpark otherwise records the Python call site of every Column
+    # function for error messages, at about four extra py4j round
+    # trips each: a served history request made 562 round trips with
+    # it and 314 without, and building the plan is most of a point
+    # request's cost (SCALE.md, serving patterns).
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     # The driver's events.parquet stores ts as TIMESTAMP(NANOS),
     # which Spark refuses by default; read it as long nanos and let
     # the catalog convert to a microsecond timestamp (truncation —

@@ -11,7 +11,8 @@ Every tool takes the (products, supermarkets) pair first — open it
 once per server or session with ``open_frames`` — and composes the
 oracle-tested ``domain`` queries, the same ones the REST routes use.
 Collection happens here (tools return JSON-able dicts, the
-reference's tool contract), so every limit is applied BEFORE collect.
+reference's tool contract), so every limit is applied BEFORE collect,
+and each tool call collects once.
 """
 
 from __future__ import annotations
@@ -24,15 +25,16 @@ from pyspark.sql import functions as F
 from . import domain
 from .catalog import Catalog
 from .functions.money import to_double
-from .mapping import products, supermarkets
+from .mapping import in_memory, products, supermarkets
 
 SEARCH_LIMIT = 10  # mcp.py:155
 
 
 def open_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """The (products, supermarkets) pair every tool takes."""
+    """The (products, supermarkets) pair every tool takes; the store
+    dimension is held in memory."""
     cat = Catalog(spark, sf_dir)
-    return products(cat), supermarkets(cat)
+    return products(cat), in_memory(supermarkets(cat))
 
 
 def search_product(prods: DataFrame, dim: DataFrame, term: str) -> list[dict[str, Any]]:
@@ -59,19 +61,18 @@ def compare_results(prods: DataFrame, dim: DataFrame, barcode: str) -> dict[str,
     """Cross-store comparison for one barcode (mcp.py:197-296):
     offers sorted cheapest-first, best price + cheapest store,
     savings vs most expensive."""
-    offers = (
-        domain.compare_offers(prods, dim, barcode)
-        .select(
+    offers = domain.ordered(
+        domain.compare_offers(prods, dim, barcode).select(
             "supermarket_id",
             F.col("name").alias("supermarket_name"),
             to_double(F.col("price")).alias("price"),
             to_double(F.col("promo_price")).alias("promo_price"),
             to_double(F.col("effective_price")).alias("effective_price"),
             "product_id",
-        )
-        .orderBy("effective_price", "product_id")
-        .collect()
-    )
+        ),
+        "effective_price",
+        "product_id",
+    ).collect()
     if not offers:
         return {"found": False, "barcode": barcode, "results": []}
     best = offers[0]
@@ -97,9 +98,10 @@ def resolve_basket_terms(
     "best match" rule — first hit whose name contains the term —
     always selects the ilike-search's top result, i.e. the cheapest
     matching offer. That is ``min_by((effective, product_id))`` per
-    term, so the whole list resolves in ONE Spark job here instead
-    of a search per term: explode each product row into the terms it
-    matches, then a tiny groupBy on ≤|terms| keys.
+    term, so the whole list resolves in ONE global aggregate here
+    instead of a search per term: one ``min_by`` column per term,
+    whose key is null on rows that do not match it (``min_by`` skips
+    null keys, so a term with no hit resolves to null).
 
     Returns (barcodes in term order, deduped; unresolved terms).
     All-digit terms are treated as already-barcodes (pass-through).
@@ -107,26 +109,17 @@ def resolve_basket_terms(
     name_terms = sorted({t for t in terms if not t.isdigit()})
     resolved: dict[str, str] = {}
     if name_terms:
-        terms_arr = F.array(*[F.lit(t) for t in name_terms])
-        hits = prods.select(
-            "barcode",
-            "product_id",
-            domain.effective().alias("_eff"),
-            F.explode(
-                F.filter(
-                    terms_arr,
-                    lambda t: F.lower(F.col("canonical_name")).contains(F.lower(t)),
-                )
-            ).alias("term"),
-        )
-        top = hits.groupBy("term").agg(
-            F.min_by("barcode", F.struct("_eff", "product_id")).alias("barcode")
-        )
-        # Driver-side collect is bounded by |name_terms| rows (one
-        # argmin per term — basket size caps it, same bound as the
-        # reference's own per-term loop, mcp.py:379-419), never by
-        # corpus size.
-        resolved = {r["term"]: r["barcode"] for r in top.collect()}
+        name = F.lower(F.col("canonical_name"))
+        key = F.struct(domain.effective(), F.col("product_id"))
+        # one row, |name_terms| columns: the basket size caps it
+        # (mcp.MAX_BASKET_ITEMS), never the corpus size
+        row = prods.agg(
+            *[
+                F.min_by("barcode", F.when(name.contains(F.lower(F.lit(t))), key)).alias(f"t{i}")
+                for i, t in enumerate(name_terms)
+            ]
+        ).collect()[0]
+        resolved = dict(zip(name_terms, row))
     barcodes: list[str] = []
     unresolved: list[str] = []
     for t in terms:
@@ -147,7 +140,7 @@ def _complete_baskets(
     barcodes, unresolved = resolve_basket_terms(prods, terms)
     if not barcodes:
         return barcodes, unresolved, []
-    rows = (
+    rows = domain.ordered(
         domain.basket_store_totals(prods, dim, barcodes)
         .where(F.col("product_count") == len(barcodes))
         .select(
@@ -157,10 +150,10 @@ def _complete_baskets(
             to_double(F.round("total_effective", 2)).alias("total_promo_price"),
             to_double(F.round("total_savings", 2)).alias("total_savings"),
             "product_count",
-        )
-        .orderBy("total_promo_price", "supermarket_id")
-        .collect()
-    )
+        ),
+        "total_promo_price",
+        "supermarket_id",
+    ).collect()
     return barcodes, unresolved, [r.asDict() for r in rows]
 
 
@@ -251,21 +244,24 @@ def get_store_info(
 ) -> dict[str, Any]:
     """Per-store profile (mcp.py:531-556): counts, promo share,
     category roster. A store with no products has zero counts."""
-    store_dim = dim.where(F.col("supermarket_id") == supermarket_id)
-    store = store_dim.collect()
-    if not store:
-        return {"found": False, "supermarket_id": supermarket_id}
+    store = dim.where(F.col("supermarket_id") == supermarket_id).coalesce(1)
     stats = domain.store_stats(
-        prods.where(F.col("supermarket_id") == supermarket_id), store_dim
-    ).collect()
-    empty = {"product_count": 0, "promo_count": 0, "sale_pct": 0.0, "categories": ""}
-    s = stats[0] if stats else empty
+        prods.where(F.col("supermarket_id") == supermarket_id).coalesce(1), store
+    ).drop("supermarket_name")
+    # both sides are one partition: a hash join inside the task, not a
+    # broadcast of the stats with a job of its own
+    rows = store.join(stats.hint("shuffle_hash"), "supermarket_id", "left").collect()
+    if not rows:
+        return {"found": False, "supermarket_id": supermarket_id}
+    s = rows[0]
     return {
         "found": True,
-        **store[0].asDict(),
-        "product_count": s["product_count"],
-        "products_on_sale": s["promo_count"],
-        "sale_percentage": round(s["sale_pct"], 1),
+        "supermarket_id": s["supermarket_id"],
+        "name": s["name"],
+        "city": s["city"],
+        "product_count": s["product_count"] or 0,
+        "products_on_sale": s["promo_count"] or 0,
+        "sale_percentage": round(s["sale_pct"] or 0.0, 1),
         "categories": s["categories"].split(",") if s["categories"] else [],
     }
 

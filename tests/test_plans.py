@@ -5,6 +5,8 @@ a 100 TB run."""
 
 from __future__ import annotations
 
+import re
+
 from data_pipeline_2025_spark import registry
 from data_pipeline_2025_spark.plans import plan_of as _plan_of
 
@@ -1312,3 +1314,46 @@ def test_q264_foldin_has_no_windows_and_appends_via_semi_join(
     # separate partial_counts)
     assert "partial_sum" in plan or "partial_count" in plan
     assert "CartesianProduct" not in plan
+
+
+def _served_plan(spark, monkeypatch, handler, *args) -> str:
+    """The plan of the frame a serve handler collects."""
+    df_type = type(spark.range(1))
+    collected = []
+    collect = df_type.collect
+
+    def capture(df):
+        collected.append(df)
+        return collect(df)
+
+    monkeypatch.setattr(df_type, "collect", capture)
+    handler(*args)
+    monkeypatch.undo()
+    assert len(collected) == 1  # one action per request
+    return _plan_of(collected[0], "simple")
+
+
+def test_served_point_queries_plan_no_shuffle(spark, smoke_frames, monkeypatch):
+    """Served compare and history run in one partition after the key
+    filter, the store dimension joined inside it: their plans hold no
+    Exchange, so no shuffle, no range-sample job and no broadcast
+    job."""
+    from data_pipeline_2025_spark import server, tools
+
+    plans = [
+        _served_plan(spark, monkeypatch, server.get_barcode, *smoke_frames, {}, "50"),
+        _served_plan(spark, monkeypatch, tools.compare_results, *smoke_frames, "50"),
+        _served_plan(spark, monkeypatch, server.get_history, *smoke_frames, {"days": "90"}, "50"),
+    ]
+    for plan in plans:
+        assert "products_silver" in plan
+        assert re.findall(r"\w*Exchange", plan) == [], plan
+
+
+def test_whole_table_history_queries_keep_their_shuffle(spark, sf_smoke):
+    """No coalesce(1) leaks into whole-table use: the registry's trend
+    and min/max over every barcode still hash-partition by barcode."""
+    for name in ("q12_price_trend", "q13_history_minmax"):
+        plan = plan_of(spark, name, sf_smoke, mode="simple")
+        assert "Exchange hashpartitioning(barcode" in plan, name
+        assert "Coalesce" not in plan, name

@@ -339,3 +339,189 @@ def test_concurrent_requests_share_the_frames(base_url):
     assert not any(t.is_alive() for t in threads)
     assert errors == [] and len(got) == len(threads)
     assert all(body == want[path] for path, body in got)
+
+
+@pytest.mark.parametrize("extra, status", [(0, 200), (1, 422)])
+def test_basket_size_cap_over_http(base_url, extra, status):
+    from data_pipeline_2025_spark.mcp import MAX_BASKET_ITEMS
+
+    basket = [str(i) for i in range(1, MAX_BASKET_ITEMS + 1 + extra)]
+    url = f"{base_url}/api/mcp/tools/find_best_basket"
+    payload = {"arguments": {"barcodes": basket}}
+    if status == 200:
+        assert _post(url, payload)[0] == 200
+    else:
+        code, body = _status_of(url, payload)
+        assert code == 422 and "more than" in body["detail"]
+
+
+# ------------------------------------------- one Spark action per request
+
+BASKET_ARGS = {"arguments": {"barcodes": ["3", "7", "widget", "blue"]}}
+# (method, path, params, most Spark jobs): one request of every serve
+# kind and variant; params are the query for GET and the body for POST
+JOB_BUDGET = [
+    ("GET", "/products", {"q": "widget", "limit": "20"}, 1),
+    ("POST", "/api/mcp/tools/search_product", {"arguments": {"term": "widget"}}, 1),
+    ("GET", "/products/lowest-prices", {"limit": "20"}, 1),
+    ("GET", "/products/barcode/50", {}, 2),
+    ("GET", "/products/barcode/900000050", {}, 2),
+    ("POST", "/api/mcp/tools/compare_results", {"arguments": {"barcode": "50"}}, 2),
+    ("POST", "/api/mcp/tools/compare_results", {"arguments": {"barcode": "900000050"}}, 2),
+    ("GET", "/products/barcode/50/history", {"days": "30"}, 2),
+    ("GET", "/products/barcode/50/history", {"days": "90"}, 2),
+    ("GET", "/products/barcode/50/history", {"days": "365"}, 2),
+    ("GET", "/products/barcode/900000050/history", {"days": "30"}, 2),
+    ("POST", "/api/mcp/tools/find_best_basket", BASKET_ARGS, 4),
+    ("POST", "/api/mcp/tools/find_most_expensive_basket", BASKET_ARGS, 4),
+    ("POST", "/api/mcp/tools/calculate_savings", BASKET_ARGS, 4),
+    ("POST", "/api/mcp/tools/get_store_info", {"arguments": {"supermarket_id": 1}}, 3),
+    ("GET", "/supermarkets", {"city": "a"}, 2),
+    ("POST", "/api/mcp/tools/get_stores", {"arguments": {"city": "a"}}, 2),
+    ("GET", "/categories", {}, 2),
+    ("GET", "/brands", {}, 2),
+]
+
+
+def _serve(frames, method, path, params):
+    """One request through the route table, in-process; an HTTP error
+    status is an answer too."""
+    try:
+        return server._dispatch(frames, method, path, params)
+    except server.HttpError as exc:
+        return exc.status
+
+
+@pytest.mark.parametrize(
+    "method, path, params, budget",
+    JOB_BUDGET,
+    ids=[f"{p}{'-' + str(q) if q else ''}" for _, p, q, _ in JOB_BUDGET],
+)
+def test_request_job_budget(spark, smoke_frames, method, path, params, budget):
+    """Key-filtered requests run in one partition, so a request costs
+    one result job plus at most a broadcast of the store dimension and
+    (baskets with name terms) the term-resolving aggregate."""
+    sc = spark.sparkContext
+    group = f"budget {method} {path} {params}"
+    sc.setJobGroup(group, group)
+    try:
+        _serve(smoke_frames, method, path, params)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= budget, jobs
+
+
+# (method, path, params) of the key-filtered handlers and the store list
+POINT_REQUESTS = [
+    ("GET", "/products/barcode/50", {}),
+    ("POST", "/api/mcp/tools/compare_results", {"arguments": {"barcode": "7"}}),
+    ("GET", "/products/barcode/144/history", {"days": "365"}),
+    ("GET", "/products/barcode/50/history", {"days": "30"}),
+    ("POST", "/api/mcp/tools/find_best_basket", BASKET_ARGS),
+    ("POST", "/api/mcp/tools/find_most_expensive_basket", BASKET_ARGS),
+    ("POST", "/api/mcp/tools/calculate_savings", BASKET_ARGS),
+    ("POST", "/api/mcp/tools/get_store_info", {"arguments": {"supermarket_id": 1}}),
+    ("GET", "/supermarkets", {}),
+    ("POST", "/api/mcp/tools/get_stores", {"arguments": {"city": "a"}}),
+    ("GET", "/categories", {}),
+]
+
+
+def test_point_requests_do_not_depend_on_input_partitioning(smoke_frames):
+    """Each answer is sorted inside one partition, so frames split into
+    several partitions must give exactly the answers the opened
+    frames give."""
+    prods, dim = smoke_frames
+    split = (prods.repartition(3, "product_id"), dim.repartition(3))
+    for method, path, params in POINT_REQUESTS:
+        assert _serve(split, method, path, params) == _serve(smoke_frames, method, path, params), path
+
+
+# ------------------------------------------------- history vs DuckDB
+
+
+@pytest.fixture(scope="module")
+def duck(sf_smoke):
+    from .oracle import duckdb_connect
+
+    con = duckdb_connect(sf_smoke)
+    yield con
+    con.close()
+
+
+def _history_oracle(duck, barcode: str, days: int) -> dict:
+    """The history answer recomputed in DuckDB: the entries since the
+    barcode's latest point minus ``days``, newest first, and the A13
+    trend and low/high computed from them in Python."""
+    from data_pipeline_2025_spark.mapping import domain_sql
+
+    rows = duck.execute(
+        domain_sql(
+            """, h AS (SELECT * FROM products WHERE barcode = $barcode)
+            SELECT product_id, price, promo_price, COALESCE(promo_price, price), collected_at
+            FROM h WHERE collected_at >= (SELECT max(collected_at) FROM h) - to_days($days)
+            ORDER BY collected_at DESC, product_id"""
+        ),
+        {"barcode": barcode, "days": days},
+    ).fetchall()
+    effs = [r[3] for r in rows]
+    half = len(effs) // 2
+    trend = "stable"
+    if half:
+        recent = float(sum(effs[:half])) / half
+        older = float(sum(effs[half:])) / (len(effs) - half)
+        if recent > older * 1.05:
+            trend = "increasing"
+        elif recent < older * 0.95:
+            trend = "decreasing"
+    as_float = lambda v: None if v is None else float(v)  # noqa: E731
+    return {
+        "barcode": barcode,
+        "days": days,
+        "price_history": [
+            {
+                "product_id": pid,
+                "price": as_float(price),
+                "promo_price": as_float(promo),
+                "effective_price": as_float(eff),
+                "collected_at": at.isoformat(),
+            }
+            for pid, price, promo, eff, at in rows
+        ],
+        "trend": trend,
+        "lowest_price": as_float(min(effs)),
+        "highest_price": as_float(max(effs)),
+    }
+
+
+@pytest.mark.parametrize("days", [1, 30, 365])
+@pytest.mark.parametrize("barcode", ["7", "50", "144"])
+def test_history_matches_duckdb(smoke_frames, duck, barcode, days):
+    got = server.get_history(*smoke_frames, {"days": str(days)}, barcode=barcode)
+    assert got == _history_oracle(duck, barcode, days)
+
+
+def test_history_of_one_point_is_stable(smoke_frames, duck):
+    """A one-day window that holds only the latest point: no recent
+    half, so the trend is stable."""
+    from data_pipeline_2025_spark.mapping import domain_sql
+
+    barcode = duck.execute(
+        domain_sql(
+            """, h AS (SELECT barcode, collected_at,
+                      max(collected_at) OVER (PARTITION BY barcode) AS latest
+                      FROM products)
+            SELECT barcode FROM h WHERE collected_at >= latest - to_days(1)
+            GROUP BY barcode HAVING count(*) = 1 ORDER BY barcode LIMIT 1"""
+        )
+    ).fetchone()[0]
+    got = server.get_history(*smoke_frames, {"days": "1"}, barcode=barcode)
+    assert len(got["price_history"]) == 1 and got["trend"] == "stable"
+    assert got == _history_oracle(duck, barcode, 1)
+
+
+def test_history_of_an_unknown_barcode_is_404(smoke_frames):
+    with pytest.raises(server.HttpError) as err:
+        server.get_history(*smoke_frames, {"days": "30"}, barcode="900000050")
+    assert err.value.status == 404

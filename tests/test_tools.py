@@ -7,6 +7,8 @@ from __future__ import annotations
 
 from decimal import Decimal
 
+import pytest
+
 from data_pipeline_2025_spark import tools
 
 BASKET = ["3", "7", "11", "19", "23"]
@@ -178,3 +180,18 @@ def test_most_expensive_basket_tie_order(spark):
         ("store4", 10.0),
         ("store2", 3.0),
     ]
+
+
+@pytest.mark.parametrize("tool", ["find_best_basket", "find_most_expensive_basket", "calculate_savings"])
+def test_basket_size_is_capped(smoke_frames, tool):
+    """A basket of ``MAX_BASKET_ITEMS`` terms runs; one more is
+    rejected before any query is built."""
+    from data_pipeline_2025_spark import mcp
+
+    full = [str(i) for i in range(1, mcp.MAX_BASKET_ITEMS + 1)]
+    res = mcp.execute_tool(*smoke_frames, tool, {"barcodes": full})
+    keys = set(res)
+    shape = mcp.RESULT_SHAPES[tool]
+    assert shape["always"] <= keys <= shape["always"] | shape["conditional"]
+    with pytest.raises(mcp.ToolValidationError, match="more than"):
+        mcp.execute_tool(*smoke_frames, tool, {"barcodes": full + ["1"]})

@@ -18,7 +18,10 @@ Semantics ledger (SURVEY.md §2):
   history_minmax      A14 + W2 latest row
   basket_store_totals A6/A7 prerequisite (argmin offer per
                       store×product, mcp.py savings-0 convention)
-  store_stats         A2/A3/A5
+  cheapest_per_name   the per-name argmin a basket's name terms
+                      resolve against (mcp.py:308-352)
+  store_profiles      A2/A3/A5 per store id, products only
+  store_stats         store_profiles + the store names (q15)
   store_directory     store list with city/name ILIKE filters
 
 Point requests (one barcode, a basket's barcodes, one store) run in
@@ -31,14 +34,49 @@ range-sample job. A whole-table input is never coalesced — search,
 lowest prices and the store-wide aggregates (price_trend,
 history_minmax and store_stats over a whole table) keep their
 parallel plans and broadcast the dimension.
+
+A served request never aggregates the whole table for an answer that
+does not depend on its key. Such an answer (the stats, the category
+and brand lists, the per-store profiles, the lowest-price head and
+the per-name cheapest offers a basket's name terms resolve against)
+is a function of the products frame alone, and a held frame is one
+committed snapshot, so ``held`` computes it once per frame; a request
+then filters or pages that small held value.
 """
 
 from __future__ import annotations
+
+import threading
+import weakref
+from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .functions.money import to_double
+
+
+# products frame -> {name: (the lock its build holds, [value once built])}
+_HELD: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_HELD_LOCK = threading.Lock()
+
+
+def held(products: DataFrame, name: str, build: Callable[[], Any]) -> Any:
+    """``build()``, computed once per products frame and kept while
+    the frame lives. A frame the server or a session holds reads one
+    committed snapshot (``txn.read_committed``), so the value never
+    goes stale; a new frame (a reopened snapshot, a repartitioned or a
+    test's own frame) gets its own values. Concurrent first requests
+    build a value once; a build that raises is retried by the next
+    request. ``build`` must depend on ``products`` alone, and its value
+    must not reference the frame, or the frame would never be freed."""
+    with _HELD_LOCK:
+        slots = _HELD.setdefault(products, {})
+        lock, box = slots.setdefault(name, (threading.Lock(), []))
+    with lock:
+        if not box:
+            box.append(build())
+    return box[0]
 
 
 def effective() -> Column:
@@ -226,6 +264,21 @@ def price_trend(
     )
 
 
+def cheapest_per_name(products: DataFrame) -> DataFrame:
+    """The cheapest offer of each lowercased name: one row per
+    ``name`` = lower(canonical_name) with the argmin
+    ``(eff, product_id)`` and its ``barcode``. A predicate on the name
+    alone (a basket term's ``contains``) picks the same argmin over
+    these rows as over every offer, from a table as small as the
+    number of distinct names."""
+    best = F.min(F.struct(effective().alias("eff"), "product_id", "barcode"))
+    return (
+        products.groupBy(F.lower(F.col("canonical_name")).alias("name"))
+        .agg(best.alias("best"))
+        .select("name", "best.*")
+    )
+
+
 def basket_store_totals(
     products: DataFrame, supermarkets: DataFrame, barcodes: list[str]
 ) -> DataFrame:
@@ -252,24 +305,28 @@ def basket_store_totals(
     )
 
 
-def store_stats(products: DataFrame, supermarkets: DataFrame) -> DataFrame:
-    """Per-store profile (A2/A3/A5, mcp.py:531-556)."""
+def store_profiles(products: DataFrame) -> DataFrame:
+    """Per-store profile by ``supermarket_id`` (A2/A3/A5,
+    mcp.py:531-556): counts, promo share, average price and the sorted
+    category roster. Products only, so a server holds it per frame."""
     total = F.count(F.lit(1))
     promo = F.count("promo_price")
-    return (
-        products.join(F.broadcast(supermarkets), "supermarket_id")
-        .groupBy("supermarket_id", F.col("name").alias("supermarket_name"))
-        .agg(
-            total.alias("product_count"),
-            promo.alias("promo_count"),
-            (promo.cast("double") * 100 / total).alias("sale_pct"),
-            (to_double(F.sum("price")) / total).alias("avg_price_d"),
-            F.countDistinct("category").alias("category_count"),
-            F.array_join(F.array_sort(F.collect_set("category")), ",").alias(
-                "categories"
-            ),
-        )
+    return products.groupBy("supermarket_id").agg(
+        total.alias("product_count"),
+        promo.alias("promo_count"),
+        (promo.cast("double") * 100 / total).alias("sale_pct"),
+        (to_double(F.sum("price")) / total).alias("avg_price_d"),
+        F.countDistinct("category").alias("category_count"),
+        F.array_join(F.array_sort(F.collect_set("category")), ",").alias("categories"),
     )
+
+
+def store_stats(products: DataFrame, supermarkets: DataFrame) -> DataFrame:
+    """``store_profiles`` of the stores in the dimension, with their
+    names. The name is a function of the id, so aggregating before the
+    join gives the join-then-group answer (q15's oracle)."""
+    names = supermarkets.select("supermarket_id", F.col("name").alias("supermarket_name"))
+    return store_profiles(products).join(F.broadcast(names), "supermarket_id")
 
 
 def store_directory(

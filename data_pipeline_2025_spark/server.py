@@ -41,6 +41,12 @@ from .mapping import in_memory, products, supermarkets
 
 _log = logging.getLogger(__name__)
 
+MAX_LIMIT = 1000  # the reference's cap on ``limit`` (products.py:22-31)
+# A request body larger than this is refused (413) before it is read;
+# the largest valid body, a basket of mcp.MAX_BASKET_ITEMS terms, is
+# a few KB.
+MAX_BODY_BYTES = 64 * 1024
+
 
 class HttpError(Exception):
     def __init__(self, status: int, detail: str):
@@ -126,7 +132,7 @@ def get_products(prods: DataFrame, dim: DataFrame, params: dict) -> list[dict]:
         max_price=_float_param(params, "max_price"),
         supermarket_id=_int_param(params, "supermarket_id", None),
         offset=_int_param(params, "offset", 0, lo=0),
-        limit=_int_param(params, "limit", 100, lo=1, hi=1000),
+        limit=_int_param(params, "limit", 100, lo=1, hi=MAX_LIMIT),
     )
     return _rows(page.select(*_PRODUCT_COLS))
 
@@ -205,9 +211,19 @@ def get_history(prods: DataFrame, dim: DataFrame, params: dict, barcode: str) ->
 
 
 def get_lowest_prices(prods: DataFrame, dim: DataFrame, params: dict) -> list[dict]:
-    """GET /products/lowest-prices (products.py:82-143)."""
-    limit = _int_param(params, "limit", 20, lo=1, hi=1000)
-    page = domain.lowest_prices_page(prods, limit=limit)
+    """GET /products/lowest-prices (products.py:82-143). A page holds
+    at most ``3 * MAX_LIMIT`` rows, so it is computed over the frame's
+    held head of that many cheapest offers, not over the whole table;
+    the head is one partition, so the page's top-k shuffles nothing."""
+    limit = _int_param(params, "limit", 20, lo=1, hi=MAX_LIMIT)
+    head = domain.held(
+        prods,
+        "lowest_head",
+        lambda: in_memory(
+            prods.orderBy(domain.effective(), "product_id").limit(3 * MAX_LIMIT)
+        ).coalesce(1),
+    )
+    page = domain.lowest_prices_page(head, limit=limit)
     return _rows(page.select(*_PRODUCT_COLS, "eff", "savings_pct"))
 
 
@@ -227,15 +243,18 @@ def get_supermarket_products(
         prods = prods.where(
             F.lower(F.col("canonical_name")).contains(params["q"].lower())
         )
-    limit = _int_param(params, "limit", 100, lo=1, hi=1000)
+    limit = _int_param(params, "limit", 100, lo=1, hi=MAX_LIMIT)
     return _rows(
         prods.orderBy("product_id").limit(limit).select(*_PRODUCT_COLS)
     )
 
 
 def _distinct(prods: DataFrame, col: str) -> list[str]:
-    """Sorted distinct values of one column, nulls out."""
-    return [r[col] for r in domain.ordered(prods.select(col).dropna().distinct(), col).collect()]
+    """Sorted distinct values of one column, nulls out; held per
+    frame."""
+    return list(domain.held(prods, f"distinct {col}", lambda: [
+        r[col] for r in domain.ordered(prods.select(col).dropna().distinct(), col).collect()
+    ]))
 
 
 def get_categories(prods: DataFrame, dim: DataFrame, params: dict) -> list[str]:
@@ -248,9 +267,7 @@ def get_brands(prods: DataFrame, dim: DataFrame, params: dict) -> list[str]:
     return _distinct(prods, "brand")
 
 
-def get_stats(prods: DataFrame, dim: DataFrame, params: dict) -> dict:
-    """GET /stats (utils.py:40-50): counts, on-sale share, avg price
-    (percentages as Python-float math — A3)."""
+def _stats(prods: DataFrame) -> dict:
     row = prods.agg(
         F.count(F.lit(1)).alias("total_products"),
         F.countDistinct("supermarket_id").alias("total_supermarkets"),
@@ -266,6 +283,12 @@ def get_stats(prods: DataFrame, dim: DataFrame, params: dict) -> dict:
         "sale_percentage": round(on_sale * 100 / total, 1) if total else 0.0,
         "average_price": round(row["avg_price"], 2) if row["avg_price"] else None,
     }
+
+
+def get_stats(prods: DataFrame, dim: DataFrame, params: dict) -> dict:
+    """GET /stats (utils.py:40-50): counts, on-sale share, avg price
+    (percentages as Python-float math — A3); held per frame."""
+    return dict(domain.held(prods, "stats", lambda: _stats(prods)))
 
 
 def post_tool(prods: DataFrame, dim: DataFrame, body: Any, name: str) -> dict:
@@ -362,6 +385,8 @@ def create_server(
                 length = -1
             if length < 0:
                 raise HttpError(400, "invalid Content-Length")
+            if length > MAX_BODY_BYTES:
+                raise HttpError(413, f"body over {MAX_BODY_BYTES} bytes")
             if not length:
                 return {}
             try:

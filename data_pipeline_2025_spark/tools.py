@@ -98,10 +98,13 @@ def resolve_basket_terms(
     "best match" rule — first hit whose name contains the term —
     always selects the ilike-search's top result, i.e. the cheapest
     matching offer. That is ``min_by((effective, product_id))`` per
-    term, so the whole list resolves in ONE global aggregate here
-    instead of a search per term: one ``min_by`` column per term,
-    whose key is null on rows that do not match it (``min_by`` skips
-    null keys, so a term with no hit resolves to null).
+    term, so the whole list resolves in ONE aggregate here instead of
+    a search per term: one ``min_by`` column per term, whose key is
+    null on rows that do not match it (``min_by`` skips null keys, so
+    a term with no hit resolves to null). ``contains`` reads only the
+    name, so the aggregate runs over the frame's held cheapest offer
+    per name (``domain.cheapest_per_name``, one partition) instead of
+    over every offer.
 
     Returns (barcodes in term order, deduped; unresolved terms).
     All-digit terms are treated as already-barcodes (pass-through).
@@ -109,13 +112,16 @@ def resolve_basket_terms(
     name_terms = sorted({t for t in terms if not t.isdigit()})
     resolved: dict[str, str] = {}
     if name_terms:
-        name = F.lower(F.col("canonical_name"))
-        key = F.struct(domain.effective(), F.col("product_id"))
+        names = domain.held(
+            prods, "cheapest_per_name",
+            lambda: in_memory(domain.cheapest_per_name(prods)).coalesce(1),
+        )
+        key = F.struct("eff", "product_id")
         # one row, |name_terms| columns: the basket size caps it
         # (mcp.MAX_BASKET_ITEMS), never the corpus size
-        row = prods.agg(
+        row = names.agg(
             *[
-                F.min_by("barcode", F.when(name.contains(F.lower(F.lit(t))), key)).alias(f"t{i}")
+                F.min_by("barcode", F.when(F.col("name").contains(F.lower(F.lit(t))), key)).alias(f"t{i}")
                 for i, t in enumerate(name_terms)
             ]
         ).collect()[0]
@@ -243,25 +249,26 @@ def get_store_info(
     prods: DataFrame, dim: DataFrame, supermarket_id: int
 ) -> dict[str, Any]:
     """Per-store profile (mcp.py:531-556): counts, promo share,
-    category roster. A store with no products has zero counts."""
-    store = dim.where(F.col("supermarket_id") == supermarket_id).coalesce(1)
-    stats = domain.store_stats(
-        prods.where(F.col("supermarket_id") == supermarket_id).coalesce(1), store
-    ).drop("supermarket_name")
-    # both sides are one partition: a hash join inside the task, not a
-    # broadcast of the stats with a job of its own
-    rows = store.join(stats.hint("shuffle_hash"), "supermarket_id", "left").collect()
-    if not rows:
+    category roster. A store with no products has zero counts. The
+    store row is a filter over the in-memory dimension and the profile
+    a filter over the frame's held ``domain.store_profiles``: both are
+    local relations, so neither runs a Spark job."""
+    store = dim.where(F.col("supermarket_id") == supermarket_id).collect()
+    if not store:
         return {"found": False, "supermarket_id": supermarket_id}
-    s = rows[0]
+    profiles = domain.held(
+        prods, "store_profiles", lambda: in_memory(domain.store_profiles(prods))
+    )
+    stats = profiles.where(F.col("supermarket_id") == supermarket_id).collect()
+    s = stats[0] if stats else {"product_count": 0, "promo_count": 0, "sale_pct": 0.0, "categories": None}
     return {
         "found": True,
-        "supermarket_id": s["supermarket_id"],
-        "name": s["name"],
-        "city": s["city"],
-        "product_count": s["product_count"] or 0,
-        "products_on_sale": s["promo_count"] or 0,
-        "sale_percentage": round(s["sale_pct"] or 0.0, 1),
+        "supermarket_id": store[0]["supermarket_id"],
+        "name": store[0]["name"],
+        "city": store[0]["city"],
+        "product_count": s["product_count"],
+        "products_on_sale": s["promo_count"],
+        "sale_percentage": round(s["sale_pct"], 1),
         "categories": s["categories"].split(",") if s["categories"] else [],
     }
 

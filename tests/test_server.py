@@ -218,6 +218,26 @@ def test_malformed_content_length_gets_400(base_url, length):
     assert status == 400 and "Content-Length" in body["detail"]
 
 
+@pytest.mark.parametrize("extra, status", [(0, 200), (1, 413)])
+def test_body_size_cap(base_url, extra, status):
+    """A body over ``MAX_BODY_BYTES`` is refused from its
+    Content-Length alone, before any of it is sent; a body of exactly
+    the cap is served."""
+    head = (
+        b"POST /api/mcp/tools/search_product HTTP/1.1\r\nHost: localhost\r\n"
+        b"Content-Length: %d\r\n\r\n" % (server.MAX_BODY_BYTES + extra)
+    )
+    body = b""
+    if status == 200:
+        body = b'{"arguments": {"term": "widget"}, "pad": ""}'
+        body = body[:-2] + b"x" * (server.MAX_BODY_BYTES - len(body)) + b'"}'
+        assert len(body) == server.MAX_BODY_BYTES
+    got, payload = _raw(base_url, head + body)
+    assert got == status, payload
+    if status == 200:
+        assert payload["tool"] == "search_product" and payload["result"]
+
+
 def test_500_hides_the_exception(base_url, monkeypatch):
     def boom(*args, **kwargs):
         raise RuntimeError("plan text that must not leak")
@@ -358,8 +378,9 @@ def test_basket_size_cap_over_http(base_url, extra, status):
 # ------------------------------------------- one Spark action per request
 
 BASKET_ARGS = {"arguments": {"barcodes": ["3", "7", "widget", "blue"]}}
-# (method, path, params, most Spark jobs): one request of every serve
-# kind and variant; params are the query for GET and the body for POST
+# (method, path, params, most Spark jobs of a warm request): one
+# request of every serve kind and variant; params are the query for
+# GET and the body for POST
 JOB_BUDGET = [
     ("GET", "/products", {"q": "widget", "limit": "20"}, 1),
     ("POST", "/api/mcp/tools/search_product", {"arguments": {"term": "widget"}}, 1),
@@ -372,14 +393,15 @@ JOB_BUDGET = [
     ("GET", "/products/barcode/50/history", {"days": "90"}, 2),
     ("GET", "/products/barcode/50/history", {"days": "365"}, 2),
     ("GET", "/products/barcode/900000050/history", {"days": "30"}, 2),
-    ("POST", "/api/mcp/tools/find_best_basket", BASKET_ARGS, 4),
-    ("POST", "/api/mcp/tools/find_most_expensive_basket", BASKET_ARGS, 4),
-    ("POST", "/api/mcp/tools/calculate_savings", BASKET_ARGS, 4),
-    ("POST", "/api/mcp/tools/get_store_info", {"arguments": {"supermarket_id": 1}}, 3),
+    ("POST", "/api/mcp/tools/find_best_basket", BASKET_ARGS, 2),
+    ("POST", "/api/mcp/tools/find_most_expensive_basket", BASKET_ARGS, 2),
+    ("POST", "/api/mcp/tools/calculate_savings", BASKET_ARGS, 2),
+    ("POST", "/api/mcp/tools/get_store_info", {"arguments": {"supermarket_id": 1}}, 0),
     ("GET", "/supermarkets", {"city": "a"}, 2),
     ("POST", "/api/mcp/tools/get_stores", {"arguments": {"city": "a"}}, 2),
-    ("GET", "/categories", {}, 2),
-    ("GET", "/brands", {}, 2),
+    ("GET", "/stats", {}, 0),
+    ("GET", "/categories", {}, 0),
+    ("GET", "/brands", {}, 0),
 ]
 
 
@@ -398,9 +420,14 @@ def _serve(frames, method, path, params):
     ids=[f"{p}{'-' + str(q) if q else ''}" for _, p, q, _ in JOB_BUDGET],
 )
 def test_request_job_budget(spark, smoke_frames, method, path, params, budget):
-    """Key-filtered requests run in one partition, so a request costs
-    one result job plus at most a broadcast of the store dimension and
-    (baskets with name terms) the term-resolving aggregate."""
+    """Key-filtered requests run in one partition, so a warm request
+    costs one result job plus at most a broadcast of the store
+    dimension; a basket's name terms add one job over the frame's held
+    cheapest offer per name, and lowest prices pages its held head.
+    Answers that do not depend on the request's key are held per
+    frame, so a warm request for them runs no job. The first request
+    (untimed) builds what the frame holds."""
+    _serve(smoke_frames, method, path, params)
     sc = spark.sparkContext
     group = f"budget {method} {path} {params}"
     sc.setJobGroup(group, group)
@@ -409,7 +436,37 @@ def test_request_job_budget(spark, smoke_frames, method, path, params, budget):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 1 <= len(jobs) <= budget, jobs
+    assert len(jobs) <= budget, jobs
+
+
+def test_held_values_are_built_once_per_frame(smoke_frames, monkeypatch):
+    """Concurrent first requests on a frame build its held value once,
+    and later requests reuse it; the value goes away with the
+    frame."""
+    import gc
+    from concurrent.futures import ThreadPoolExecutor
+
+    from data_pipeline_2025_spark import domain
+
+    builds = []
+    stats = server._stats
+
+    def counting(prods):
+        builds.append(prods)
+        return stats(prods)
+
+    monkeypatch.setattr(server, "_stats", counting)
+    prods, dim = smoke_frames
+    fresh = prods.select("*")
+    with ThreadPoolExecutor(4) as pool:
+        first = list(pool.map(lambda _: _serve((fresh, dim), "GET", "/stats", {}), range(4)))
+    assert len(builds) == 1 and builds[0] is fresh
+    assert _serve((fresh, dim), "GET", "/stats", {}) == first[0]
+    assert all(answer == first[0] for answer in first) and len(builds) == 1
+    held = len(domain._HELD)
+    del builds[:], fresh
+    gc.collect()
+    assert len(domain._HELD) == held - 1
 
 
 # (method, path, params) of the key-filtered handlers and the store list
@@ -424,14 +481,17 @@ POINT_REQUESTS = [
     ("POST", "/api/mcp/tools/get_store_info", {"arguments": {"supermarket_id": 1}}),
     ("GET", "/supermarkets", {}),
     ("POST", "/api/mcp/tools/get_stores", {"arguments": {"city": "a"}}),
+    ("GET", "/stats", {}),
     ("GET", "/categories", {}),
+    ("GET", "/brands", {}),
 ]
 
 
 def test_point_requests_do_not_depend_on_input_partitioning(smoke_frames):
     """Each answer is sorted inside one partition, so frames split into
     several partitions must give exactly the answers the opened
-    frames give."""
+    frames give. A repartitioned frame is a new frame, so its held
+    values are built again from it."""
     prods, dim = smoke_frames
     split = (prods.repartition(3, "product_id"), dim.repartition(3))
     for method, path, params in POINT_REQUESTS:
@@ -525,3 +585,116 @@ def test_history_of_an_unknown_barcode_is_404(smoke_frames):
     with pytest.raises(server.HttpError) as err:
         server.get_history(*smoke_frames, {"days": "30"}, barcode="900000050")
     assert err.value.status == 404
+
+
+# ----------------------------------- held snapshot answers vs DuckDB
+
+
+def _duck_float(v):
+    return None if v is None else float(v)
+
+
+def test_stats_and_lists_match_duckdb(smoke_frames, duck):
+    from data_pipeline_2025_spark.mapping import domain_sql
+
+    total, stores, on_sale, avg = duck.execute(
+        domain_sql(
+            """SELECT CAST(count(*) AS BIGINT), CAST(count(DISTINCT supermarket_id) AS BIGINT),
+                      CAST(count(promo_price) AS BIGINT), avg(CAST(price AS DOUBLE))
+               FROM products"""
+        )
+    ).fetchone()
+    assert _serve(smoke_frames, "GET", "/stats", {}) == {
+        "total_products": total,
+        "total_supermarkets": stores,
+        "products_on_sale": on_sale,
+        "sale_percentage": round(on_sale * 100 / total, 1),
+        "average_price": round(avg, 2),
+    }
+    for path, col in (("/categories", "category"), ("/brands", "brand")):
+        want = duck.execute(
+            domain_sql(f"SELECT DISTINCT {col} FROM products WHERE {col} IS NOT NULL ORDER BY 1")
+        ).fetchall()
+        assert _serve(smoke_frames, "GET", path, {}) == [v for (v,) in want], path
+
+
+def test_store_info_matches_duckdb_for_every_store(smoke_frames, duck):
+    from data_pipeline_2025_spark import tools
+    from data_pipeline_2025_spark.mapping import domain_sql
+
+    rows = duck.execute(
+        domain_sql(
+            """SELECT s.supermarket_id, s.name, s.city, CAST(count(p.product_id) AS BIGINT),
+                      CAST(count(p.promo_price) AS BIGINT),
+                      string_agg(DISTINCT p.category, ',' ORDER BY p.category)
+               FROM supermarkets s LEFT JOIN products p USING (supermarket_id)
+               GROUP BY ALL ORDER BY 1"""
+        )
+    ).fetchall()
+    assert len(rows) == smoke_frames[1].count()
+    for sid, name, city, total, promo, cats in rows:
+        assert tools.get_store_info(*smoke_frames, sid) == {
+            "found": True,
+            "supermarket_id": sid,
+            "name": name,
+            "city": city,
+            "product_count": total,
+            "products_on_sale": promo,
+            "sale_percentage": round(promo * 100 / total, 1) if total else 0.0,
+            "categories": cats.split(",") if cats else [],
+        }, sid
+
+
+def test_basket_terms_resolve_as_duckdb(smoke_frames, duck):
+    """Every word and every full name of the corpus, an unmatched and
+    an upper-cased term resolve to the cheapest offer whose name
+    contains the term (perfbench's serve oracle)."""
+    from data_pipeline_2025_spark import tools
+    from data_pipeline_2025_spark.mapping import domain_sql
+
+    names = [n for (n,) in duck.execute(domain_sql("SELECT DISTINCT canonical_name FROM products"))
+             .fetchall()]
+    words = {w for n in names for w in n.split()}
+    terms = sorted(set(names) | words) + ["zzz-no-such-product", names[0].upper()]
+    for term in terms:
+        hit = duck.execute(
+            domain_sql(
+                """SELECT barcode FROM products
+                   WHERE contains(lower(canonical_name), lower($term))
+                   ORDER BY COALESCE(promo_price, price), product_id LIMIT 1"""
+            ),
+            {"term": term},
+        ).fetchone()
+        want = ([hit[0]], []) if hit else ([], [term])
+        assert tools.resolve_basket_terms(smoke_frames[0], [term]) == want, term
+
+
+@pytest.mark.parametrize("limit", [1, 20, 1000])
+def test_lowest_page_matches_duckdb(smoke_frames, duck, limit):
+    from data_pipeline_2025_spark.mapping import domain_sql
+
+    rows = duck.execute(
+        domain_sql(
+            """, page AS (
+                 SELECT *, COALESCE(promo_price, price) AS eff FROM products
+                 ORDER BY eff, product_id LIMIT 3 * $limit)
+               SELECT product_id, supermarket_id, barcode, canonical_name, brand, category,
+                      price, promo_price, collected_at, eff,
+                      CASE WHEN eff < max(eff) OVER ()
+                           THEN CAST(max(eff) OVER () - eff AS DOUBLE) * 100
+                                / CAST(max(eff) OVER () AS DOUBLE) END
+               FROM page ORDER BY eff, product_id"""
+        ),
+        {"limit": limit},
+    ).fetchall()
+    want = [
+        dict(
+            zip(
+                server._PRODUCT_COLS + ["eff", "savings_pct"],
+                [*r[:6], _duck_float(r[6]), _duck_float(r[7]), r[8].isoformat(),
+                 _duck_float(r[9]), r[10]],
+            )
+        )
+        for r in rows
+    ]
+    assert _serve(smoke_frames, "GET", "/products/lowest-prices", {"limit": str(limit)}) == want

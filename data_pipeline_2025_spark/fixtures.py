@@ -20,7 +20,10 @@ normative schemas — Decimal prices, not doubles.
 
 from __future__ import annotations
 
+import glob
+import os
 import random
+import shutil
 from datetime import datetime, timedelta
 from decimal import Decimal, ROUND_HALF_UP
 
@@ -203,3 +206,17 @@ def write_fixtures(out_dir: str) -> tuple[str, str]:
         pa.Table.from_pylist(products, schema=_PRODUCT_SCHEMA), ppath
     )
     return mpath, ppath
+
+
+def write_single_file(df, dst: str, mtime: float | None = None) -> None:
+    """Write DataFrame ``df`` as the one parquet file ``dst`` — a file
+    stream's source drop. Spark writes the frame as one partition to
+    a hidden sibling directory, its part file moves to ``dst``, and
+    ``mtime`` (when given) orders the drop for the stream's listing."""
+    tmp = os.path.join(os.path.dirname(dst), "_tmp-" + os.path.basename(dst))
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    (part,) = glob.glob(os.path.join(tmp, "part-*.parquet"))
+    shutil.move(part, dst)
+    shutil.rmtree(tmp)
+    if mtime is not None:
+        os.utime(dst, (mtime, mtime))

@@ -169,16 +169,15 @@ def txn_compact(
         if not vs:
             return {}
         head = vs[-1]
+        snap = txn._snapshot_at(sink_dir, head)
         by_dir: dict[str, list[str]] = {}
-        for f in txn.listing_at(sink_dir, head):
+        for f in snap.listing:
             by_dir.setdefault(os.path.dirname(f), []).append(f)
         todo = {d: fs for d, fs in by_dir.items() if len(fs) >= min_files}
         if not todo:
             return {}
         results: dict[str, tuple[int, int]] = {}
         new_files: list[str] = []
-        snapshot_dvs = txn._snapshot_at(sink_dir, head)[2]
-        snapshot_refs = txn.dvrefs_at(sink_dir, head)
         for part_dir, files in sorted(todo.items()):
             paths = [os.path.join(sink_dir, f) for f in files]
             total_bytes = sum(os.path.getsize(p) for p in paths)
@@ -194,14 +193,7 @@ def txn_compact(
             # (round 6). The replace commit then retires the old
             # files' DVs with the files, so the compacted output is
             # DV-free by construction.
-            fileset = set(files)
-            part_dvs = {f: v for f, v in snapshot_dvs.items() if f in fileset}
-            part_refs = {
-                r: kept
-                for r, c in snapshot_refs.items()
-                if (kept := {p: n for p, n in c.items() if p in fileset})
-            }
-            df = txn._apply_dv(spark, df, sink_dir, part_dvs, part_refs)
+            df = txn._apply_dv(spark, df, sink_dir, snap, set(files))
             staged = txn.stage_append(
                 df.coalesce(int(n_out)), sink_dir, partition_cols
             )

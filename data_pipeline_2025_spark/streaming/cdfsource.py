@@ -126,35 +126,26 @@ class _ChangeUnit(InputPartition):
 
 def _relevant_refs(snap, rel: str) -> tuple:
     return tuple(
-        sorted(ref for ref, counts in snap[6].items() if rel in counts)
+        sorted(ref for ref, counts in snap.dvrefs.items() if rel in counts)
     )
 
 
 def _plan_units(sink_dir: str, frm: int, to: int):
     """One _ChangeUnit per changed file per commit in (frm, to] —
     manifest metadata only."""
-    log = txn._scan_log(sink_dir)
-    if frm == 0:
-        prev_listing: dict = {}
-        prev_snap = None
-    else:
-        prev_snap = txn._snapshot_at(sink_dir, frm)
-        prev_listing = prev_snap[0]
+    prev_snap = txn._snapshot_at(sink_dir, frm) if frm else txn.EMPTY
     units = []
-    for v in range(frm + 1, to + 1):
-        if v not in log:
-            continue
-        snap = txn._snapshot_at(sink_dir, v)
-        listing = snap[0]
+    for v, snap in txn._replay(sink_dir, frm, to, prev_snap):
+        listing, prev_listing = snap.listing, prev_snap.listing
 
         def unit(kind, rel):
             return _ChangeUnit(
                 kind,
                 v,
                 rel,
-                tuple(prev_snap[2].get(rel, ())) if prev_snap else (),
-                tuple(snap[2].get(rel, ())),
-                _relevant_refs(prev_snap, rel) if prev_snap else (),
+                tuple(prev_snap.dvs.get(rel, ())),
+                tuple(snap.dvs.get(rel, ())),
+                _relevant_refs(prev_snap, rel),
                 _relevant_refs(snap, rel),
             )
 
@@ -173,7 +164,7 @@ def _plan_units(sink_dir: str, frm: int, to: int):
             if u.inline_prev == u.inline_cur and u.refs_prev == u.refs_cur:
                 continue
             units.append(u)
-        prev_listing, prev_snap = listing, snap
+        prev_snap = snap
     return units
 
 

@@ -180,9 +180,9 @@ def split_ascending(
     """Write the documents table as `parts` single-file ascending
     doc_id ranges with increasing mtimes, so the file stream replays
     a time-ordered crawl (oldest first)."""
-    import glob as _glob
-    import shutil
     import time
+
+    from ..fixtures import write_single_file
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     max_id = docs.agg(F.max("doc_id")).collect()[0][0] or 0
@@ -191,20 +191,11 @@ def split_ascending(
     now = time.time()
     for p in range(parts):
         lo, hi = p * step, (p + 1) * step
-        tmp = os.path.join(out_dir, f"_tmp{p:03d}")
-        (
-            docs.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(tmp)
+        write_single_file(
+            docs.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)),
+            os.path.join(out_dir, f"part{p:03d}.parquet"),
+            now + p,
         )
-        # flatten to one file per range so the stream's listing and
-        # the schema probe both see plain parquet files
-        (part_file,) = _glob.glob(os.path.join(tmp, "part-*.parquet"))
-        dst = os.path.join(out_dir, f"part{p:03d}.parquet")
-        shutil.move(part_file, dst)
-        shutil.rmtree(tmp)
-        os.utime(dst, (now + p, now + p))
 
 
 _ORACLE_Q120 = f"""

@@ -16,8 +16,8 @@ tests/test_ingest.py proves duplicate file delivery does not
 duplicate rows.
 
 The sink append is TRANSACTIONAL (streaming/txn.py): each
-micro-batch is staged invisibly and published by one atomic manifest
-swap, so a crash mid-batch leaves readers on the previous snapshot —
+micro-batch is staged invisibly and published by one atomic log-entry
+create, so a crash mid-batch leaves readers on the previous snapshot —
 old-or-new, never partial (the reference's Postgres transaction
 boundary, rabbitmq-to-postgres/app.py:158-176). Crucially, the
 idempotence anti-join reads the COMMITTED snapshot: orphaned files

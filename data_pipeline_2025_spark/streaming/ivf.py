@@ -120,9 +120,9 @@ def split_ascending_embeddings(
 ) -> None:
     """Embeddings as `parts` single-file ascending vec_id ranges
     (same fixture shape as dedupgate.split_ascending)."""
-    import glob as _glob
-    import shutil
     import time
+
+    from ..fixtures import write_single_file
 
     embs = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     max_id = embs.agg(F.max("vec_id")).collect()[0][0] or 0
@@ -131,18 +131,11 @@ def split_ascending_embeddings(
     now = time.time()
     for p in range(parts):
         lo, hi = p * step, (p + 1) * step
-        tmp = os.path.join(out_dir, f"_tmp{p:03d}")
-        (
-            embs.where((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(tmp)
+        write_single_file(
+            embs.where((F.col("vec_id") >= lo) & (F.col("vec_id") < hi)),
+            os.path.join(out_dir, f"part{p:03d}.parquet"),
+            now + p,
         )
-        (part_file,) = _glob.glob(os.path.join(tmp, "part-*.parquet"))
-        dst = os.path.join(out_dir, f"part{p:03d}.parquet")
-        shutil.move(part_file, dst)
-        shutil.rmtree(tmp)
-        os.utime(dst, (now + p, now + p))
 
 
 _ORACLE_Q126 = f"""

@@ -29,13 +29,25 @@ an atomic exclusive-create primitive:
    EEXIST — creation IS the commit (no separate pointer swap, no
    claimed-but-unpublished limbo state).
 
+**One fold, one snapshot.** A version's table state is a
+:class:`Snapshot` (listing with stats, schema, deletion vectors,
+checks, partition spec, column mapping, DV sidecar refs), and
+:func:`_fold` is the only code that gives a log line its meaning:
+it applies one entry to the snapshot before it. Reading version v
+folds the nearest checkpoint at-or-below v onto :data:`EMPTY`, then
+each delta after it. Every read pins one version and takes files,
+schema, DVs and column mapping from that one snapshot.
+
 **Commit cost is O(batch), not O(table)** (round-5): a normal commit
-writes a DELTA entry listing only the files it adds (plus, for
-replace commits, the partition directories it retires); every
-``CHECKPOINT_EVERY``-th version is a CHECKPOINT holding the full
-listing, so reconstructing any snapshot reads one checkpoint plus at
-most ``CHECKPOINT_EVERY - 1`` deltas. This is the Delta-log shape
-(JSON commits + parquet checkpoints) in two plain-text file kinds.
+writes a DELTA entry — the partition directories it retires
+(``~dir``), then what it adds, written in the checkpoint grammar by
+:func:`_serialize`. Every ``CHECKPOINT_EVERY``-th version is a
+CHECKPOINT instead: ``_serialize(_fold(head, delta))``, the reader's
+own replay written down, so reconstructing any snapshot reads one
+checkpoint plus at most ``CHECKPOINT_EVERY - 1`` deltas. Writers
+build only their delta lines; :func:`_publish` is the one CAS loop
+that turns them into an entry. This is the Delta-log shape (JSON
+commits + parquet checkpoints) in two plain-text file kinds.
 
 **Data-skipping statistics** (round-6): every committed file line
 may carry the file's per-column min/max bounds, harvested from the
@@ -98,10 +110,12 @@ unlisted files.
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import os
 import time
 import uuid
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -184,51 +198,129 @@ def _split_stats(token: str) -> tuple[str, str | None]:
     return token, None
 
 
-def _snapshot_at(
-    sink_dir: str, version: int
-) -> tuple[
-    dict[str, str | None],
-    str | None,
-    dict[str, list[int]],
-    dict[str, str],
-    str | None,
-    dict[str, str],
-    dict[str, dict[str, int]],
-]:
-    """Reconstruct snapshot ``version`` as ``({relative path ->
-    stats json or None}, schema DDL or None, {relative path ->
-    sorted deleted row positions}, {check name -> SQL expr},
-    partition spec or None, {physical column -> logical name},
-    {DV sidecar ref -> {relative path -> deleted-row count}})``:
-    nearest checkpoint at-or-below it, then forward-apply the
-    deltas — at most CHECKPOINT_EVERY-1 of them. Delta ops:
-    ``+path[\tstats]`` adds a file, ``~dir`` retires every current
-    file in partition ``dir`` (the replace commit),
-    ``#schema\t<ddl>`` sets the snapshot's read schema from this
-    version on (SCHEMA EVOLUTION — Delta's metaData action),
-    ``#check\t<name>\t<expr>`` records a CHECK constraint enforced
-    on every subsequent append (round 6 — Delta's table
-    constraints), ``-path\t[positions]`` marks row positions of
-    ``path`` deleted (DELETION VECTORS, round 6 — Delta's DV
-    sidecars: row-level deletes without rewriting the file; unions
-    accumulate across commits, and a retired file's DV retires with
-    it), ``%dv\t<ref>\t{path: count}`` references an EXECUTOR-WRITTEN
-    deletion-vector sidecar (round 7 — Delta's real DV shape: the
-    position lists live in a parquet sidecar under ``_txn/<ref>``,
-    the manifest carries only the ref plus O(#files) per-file
-    counts, so a 10⁹-row erasure costs the manifest — and the
-    driver — nothing proportional to deleted rows),
-    ``#partspec\t<desc>`` records the ACTIVE partition spec
-    from this version on (round 6 — Iceberg's partition-spec
-    evolution: a spec change is ONE metadata line; files written
-    under earlier specs are never rewritten, and reads/pruning stay
-    correct because skipping is driven by per-file STATS, not by
-    directory layout — hidden partitioning), ``#op\t<name>``
-    records COMMIT INTENT (round 9 — Delta's ``operation`` field:
-    write/merge/delete/optimize/replace/restore/meta; per-commit,
-    never checkpoint-carried, read via :func:`commit_op`, ignored
-    here). Checkpoints carry schema + checks + partspec + live DVs
-    forward; later schema/partspec lines win."""
+class Snapshot(NamedTuple):
+    """One committed table state: what a version reads as."""
+
+    listing: dict[str, str | None]  # relative path -> stats json or None
+    schema: str | None  # read-schema DDL
+    dvs: dict[str, list[int]]  # relative path -> sorted deleted rows
+    checks: dict[str, str]  # CHECK name -> SQL expression
+    partspec: str | None  # active partition spec
+    colmap: dict[str, str]  # physical column -> logical name
+    dvrefs: dict[str, dict[str, int]]  # DV sidecar ref -> {path: count}
+
+
+EMPTY = Snapshot({}, None, {}, {}, None, {}, {})
+
+
+def _fold(snap: Snapshot, lines: list[str]) -> Snapshot:
+    """Apply one log entry to ``snap`` — the only code that gives a
+    log line its meaning (``snap`` itself is never mutated):
+
+    - ``~dir`` retires every file of partition ``dir`` with its DVs
+      (the replace commit); all drops apply before the entry's other
+      lines;
+    - ``+path[\tstats]`` (or a bare ``path[\tstats]``, the
+      checkpoint form) adds a file with its footer stats;
+    - ``-path\t[positions]`` marks row positions of ``path`` deleted
+      (inline DELETION VECTORS — unions accumulate across commits);
+    - ``%dv\t<ref>\t{path: count}`` references an executor-written
+      DV sidecar under ``_txn/<ref>`` (the positions live in parquet,
+      the log carries O(#files) counts);
+    - ``#schema\t<ddl>``, ``#partspec\t<spec>`` and
+      ``#colmap\t{physical: logical}`` set the read schema, the
+      active partition spec and the column mapping from this version
+      on; ``#check\t<name>\t<expr>`` adds a CHECK constraint;
+    - ``#op\t<name>`` tags the commit's intent (:func:`commit_op`) and
+      is no snapshot state; other unknown ``#``/``%`` lines are
+      skipped (forward compatibility).
+
+    DVs and sidecar counts of files the result no longer lists drop
+    with them."""
+    drops = {line[1:] for line in lines if line.startswith("~")}
+    listing = (
+        {p: s for p, s in snap.listing.items() if os.path.dirname(p) not in drops}
+        if drops
+        else dict(snap.listing)
+    )
+    dvs = {p: v for p, v in snap.dvs.items() if p in listing}
+    dvrefs = {
+        r: {p: n for p, n in c.items() if p in listing}
+        for r, c in snap.dvrefs.items()
+    }
+    schema, partspec, colmap = snap.schema, snap.partspec, snap.colmap
+    checks = dict(snap.checks)
+    for line in lines:
+        if line.startswith("~"):
+            continue
+        if line.startswith("%dv\t"):
+            _kind, ref, counts_json = line.split("\t", 2)
+            with contextlib.suppress(ValueError):
+                parsed = json.loads(counts_json)
+                if isinstance(parsed, dict):
+                    dvrefs[ref] = {str(p): int(n) for p, n in parsed.items()}
+        elif line.startswith("%"):
+            pass
+        elif line.startswith("#schema\t"):
+            schema = line.split("\t", 1)[1]
+        elif line.startswith("#partspec\t"):
+            partspec = line.split("\t", 1)[1]
+        elif line.startswith("#colmap\t"):
+            with contextlib.suppress(ValueError):
+                parsed = json.loads(line.split("\t", 1)[1])
+                if isinstance(parsed, dict):
+                    colmap = {str(k): str(v) for k, v in parsed.items()}
+        elif line.startswith("#check\t"):
+            _, name, expr = line.split("\t", 2)
+            checks[name] = expr
+        elif line.startswith("#"):
+            pass
+        elif line.startswith("-"):
+            path, posjson = _split_stats(line[1:])
+            if posjson:
+                dvs[path] = sorted({*dvs.get(path, ()), *json.loads(posjson)})
+        else:
+            path, stats = _split_stats(line[1:] if line.startswith("+") else line)
+            listing[path] = stats
+    return Snapshot(
+        listing,
+        schema,
+        {p: v for p, v in dvs.items() if p in listing},
+        checks,
+        partspec,
+        colmap,
+        {
+            r: kept
+            for r, c in dvrefs.items()
+            if (kept := {p: n for p, n in c.items() if p in listing})
+        },
+    )
+
+
+def _serialize(snap: Snapshot) -> list[str]:
+    """The checkpoint form of ``snap``: ``_fold(EMPTY, lines) == snap``."""
+    return (
+        ([f"#schema\t{snap.schema}"] if snap.schema is not None else [])
+        + ([f"#partspec\t{snap.partspec}"] if snap.partspec is not None else [])
+        + (
+            [f"#colmap\t{json.dumps(snap.colmap, sort_keys=True)}"]
+            if snap.colmap
+            else []
+        )
+        + [f"#check\t{n}\t{e}" for n, e in sorted(snap.checks.items())]
+        + [p if s is None else f"{p}\t{s}" for p, s in snap.listing.items()]
+        + [f"-{p}\t{json.dumps(v)}" for p, v in sorted(snap.dvs.items())]
+        + [
+            f"%dv\t{r}\t{json.dumps(c, sort_keys=True)}"
+            for r, c in sorted(snap.dvrefs.items())
+        ]
+    )
+
+
+def _snapshot_at(sink_dir: str, version: int) -> Snapshot:
+    """Reconstruct snapshot ``version``: fold the nearest checkpoint
+    at-or-below it onto EMPTY, then its deltas — at most
+    CHECKPOINT_EVERY-1 of them."""
     log = _scan_log(sink_dir)
     if version not in log:
         raise FileNotFoundError(
@@ -242,112 +334,48 @@ def _snapshot_at(
         raise FileNotFoundError(
             f"no checkpoint at or below version {version} in {sink_dir}"
         )
-    listing: dict[str, str | None] = {}
-    schema: str | None = None
-    partspec: str | None = None
-    colmap: dict[str, str] = {}
-    dvs: dict[str, set[int]] = {}
-    dvrefs: dict[str, dict[str, int]] = {}
-    checks: dict[str, str] = {}
+    snap = EMPTY
+    for seq in range(ckpt, version + 1):
+        snap = _fold(snap, _read_entry(sink_dir, log[seq]))
+    return snap
 
-    def _apply(line: str) -> None:
-        nonlocal schema, partspec, colmap
-        if line.startswith("%dv\t"):
-            _kind, ref, counts_json = line.split("\t", 2)
-            with contextlib.suppress(ValueError):
-                parsed = json.loads(counts_json)
-                if isinstance(parsed, dict):
-                    dvrefs[ref] = {
-                        str(p): int(n) for p, n in parsed.items()
-                    }
-        elif line.startswith("%"):
-            pass  # unknown sidecar line kinds: forward-compat
-        elif line.startswith("#schema\t"):
-            schema = line.split("\t", 1)[1]
-        elif line.startswith("#partspec\t"):
-            partspec = line.split("\t", 1)[1]
-        elif line.startswith("#colmap\t"):
-            # COLUMN MAPPING (round 6 — Delta's column-mapping
-            # analog): {physical name -> logical name}. Physical
-            # names are frozen at table creation; a RENAME is one
-            # metadata line changing only the logical surface.
-            with contextlib.suppress(ValueError):
-                parsed = json.loads(line.split("\t", 1)[1])
-                if isinstance(parsed, dict):
-                    colmap = {str(k): str(v) for k, v in parsed.items()}
-        elif line.startswith("#check\t"):
-            _, name, expr = line.split("\t", 2)
-            checks[name] = expr
-        elif line.startswith("#"):
-            pass  # unknown metadata line kinds: forward-compat
-        elif line.startswith("-"):
-            path, posjson = _split_stats(line[1:])
-            if posjson:
-                dvs.setdefault(path, set()).update(json.loads(posjson))
-        elif line.startswith("+"):
-            path, stats = _split_stats(line[1:])
-            listing[path] = stats
+
+def _snap(sink_dir: str, version: int | None = None) -> Snapshot:
+    """Snapshot ``version`` (default: the head, pinned by one log
+    listing), or EMPTY itself when the log has no commits."""
+    vs = versions(sink_dir)
+    if not vs:
+        return EMPTY
+    return _snapshot_at(sink_dir, vs[-1] if version is None else version)
+
+
+def _replay(
+    sink_dir: str, frm: int = 0, to: int | None = None, start: Snapshot = EMPTY
+):
+    """``(version, Snapshot)`` for every committed version in
+    ``(frm, to]``, oldest first, given ``start`` = the snapshot at
+    ``frm``: each entry folds onto the snapshot before it (a
+    checkpoint onto EMPTY), so the range costs one read per entry. A
+    version after a gap in the log is rebuilt from its own
+    checkpoint."""
+    log = _scan_log(sink_dir)
+    snap, prev = start, frm
+    for v in sorted(s for s in log if s > frm and (to is None or s <= to)):
+        if log[v].endswith(_CKPT_SUFFIX):
+            snap = _fold(EMPTY, _read_entry(sink_dir, log[v]))
+        elif v == prev + 1:
+            snap = _fold(snap, _read_entry(sink_dir, log[v]))
         else:
-            path, stats = _split_stats(line)
-            listing[path] = stats
-
-    for line in _read_entry(sink_dir, log[ckpt]):
-        _apply(line)
-    for seq in range(ckpt + 1, version + 1):
-        ops = _read_entry(sink_dir, log[seq])
-        drops = {op[1:] for op in ops if op.startswith("~")}
-        if drops:
-            listing = {
-                p: s
-                for p, s in listing.items()
-                if os.path.dirname(p) not in drops
-            }
-            dvs = {
-                p: v
-                for p, v in dvs.items()
-                if os.path.dirname(p) not in drops
-            }
-            dvrefs = {
-                r: kept
-                for r, c in dvrefs.items()
-                if (kept := {
-                    p: n
-                    for p, n in c.items()
-                    if os.path.dirname(p) not in drops
-                })
-            }
-        for op in ops:
-            if not op.startswith("~"):
-                _apply(op)
-    dvs = {p: v for p, v in dvs.items() if p in listing}
-    dvrefs = {
-        r: kept
-        for r, c in dvrefs.items()
-        if (kept := {p: n for p, n in c.items() if p in listing})
-    }
-    return (
-        listing,
-        schema,
-        {p: sorted(v) for p, v in dvs.items()},
-        checks,
-        partspec,
-        colmap,
-        dvrefs,
-    )
-
-
-def _entries_at(sink_dir: str, version: int) -> dict[str, str | None]:
-    return _snapshot_at(sink_dir, version)[0]
+            snap = _snapshot_at(sink_dir, v)
+        prev = v
+        yield v, snap
 
 
 def schema_at(sink_dir: str, version: int | None = None) -> str | None:
     """The snapshot's recorded read-schema DDL (None when no commit
     ever declared one — pre-round-6 sinks read with parquet's own
     inferred schema, unchanged)."""
-    vs = versions(sink_dir)
-    if not vs:
-        return None
-    return _snapshot_at(sink_dir, vs[-1] if version is None else version)[1]
+    return _snap(sink_dir, version).schema
 
 
 def partspec_at(sink_dir: str, version: int | None = None) -> str | None:
@@ -355,10 +383,7 @@ def partspec_at(sink_dir: str, version: int | None = None) -> str | None:
     declared one). Spec history across still-reconstructible
     versions is ``[(v, partspec_at(sink, v)) for v in versions(...)]``
     — each lookup is manifest bytes only."""
-    vs = versions(sink_dir)
-    if not vs:
-        return None
-    return _snapshot_at(sink_dir, vs[-1] if version is None else version)[4]
+    return _snap(sink_dir, version).partspec
 
 
 def dv_at(sink_dir: str, version: int | None = None) -> dict[str, list[int]]:
@@ -369,13 +394,9 @@ def dv_at(sink_dir: str, version: int | None = None) -> dict[str, list[int]]:
     memory by definition; production paths never call this (reads
     anti-join the sidecars as DataFrames via :func:`_apply_dv`,
     counting uses :func:`dv_counts_at` — O(#files))."""
-    vs = versions(sink_dir)
-    if not vs:
-        return {}
-    v = vs[-1] if version is None else version
-    snap = _snapshot_at(sink_dir, v)
-    out: dict[str, set[int]] = {p: set(ps) for p, ps in snap[2].items()}
-    for ref, counts in snap[6].items():
+    snap = _snap(sink_dir, version)
+    out: dict[str, set[int]] = {p: set(ps) for p, ps in snap.dvs.items()}
+    for ref, counts in snap.dvrefs.items():
         for path, pos in _read_dv_sidecar(sink_dir, ref):
             if path in counts:
                 out.setdefault(path, set()).add(pos)
@@ -388,10 +409,15 @@ def dvrefs_at(
     """The snapshot's DV sidecar references: {sidecar ref ->
     {relative data-file path -> deleted-row count}} — manifest bytes
     only, O(#files) regardless of deleted-row count."""
-    vs = versions(sink_dir)
-    if not vs:
-        return {}
-    return _snapshot_at(sink_dir, vs[-1] if version is None else version)[6]
+    return _snap(sink_dir, version).dvrefs
+
+
+def _dv_counts(snap: Snapshot) -> dict[str, int]:
+    out: dict[str, int] = {p: len(ps) for p, ps in snap.dvs.items()}
+    for counts in snap.dvrefs.values():
+        for path, n in counts.items():
+            out[path] = out.get(path, 0) + n
+    return out
 
 
 def dv_counts_at(
@@ -404,15 +430,7 @@ def dv_counts_at(
     Disjointness across sources is by construction: delete_where /
     merge_upsert_dv locate against the DV-applied snapshot, so a
     position is never deleted twice while dead."""
-    vs = versions(sink_dir)
-    if not vs:
-        return {}
-    snap = _snapshot_at(sink_dir, vs[-1] if version is None else version)
-    out: dict[str, int] = {p: len(ps) for p, ps in snap[2].items()}
-    for counts in snap[6].values():
-        for path, n in counts.items():
-            out[path] = out.get(path, 0) + n
-    return out
+    return _dv_counts(_snap(sink_dir, version))
 
 
 def _read_dv_sidecar(sink_dir: str, ref: str) -> list[tuple[str, int]]:
@@ -438,10 +456,7 @@ def checks_at(sink_dir: str, version: int | None = None) -> dict[str, str]:
     (empty for sinks that never declared one). Carried through
     checkpoints like the schema line; enforced by
     :func:`commit_append_checked` on every new batch."""
-    vs = versions(sink_dir)
-    if not vs:
-        return {}
-    return _snapshot_at(sink_dir, vs[-1] if version is None else version)[3]
+    return _snap(sink_dir, version).checks
 
 
 def commit_delete(sink_dir: str, dv: dict[str, list[int]]) -> None:
@@ -517,29 +532,24 @@ def _dv_pos_df(
     return reduce(lambda a, b: a.unionByName(b), pieces)
 
 
-def _apply_dv(
-    spark,
-    df,
-    sink_dir: str,
-    dvs: dict[str, list[int]],
-    dvrefs: dict[str, dict[str, int]] | None = None,
-):
-    """Filter a snapshot DataFrame through its deletion vectors: an
-    anti-join of (file, row position) against the DV set — inline
-    lists broadcast, sidecar refs read executor-side (round 7: the
+def _apply_dv(spark, df, sink_dir: str, snap: Snapshot, files: set[str]):
+    """Filter a read of ``files`` through ``snap``'s deletion vectors
+    on those files: an anti-join of (file, row position) against the
+    DV set — inline lists broadcast, sidecar refs read executor-side
+    (round 7: the
     positions of a 10⁹-row delete never touch the driver). No-op
     (and no plan change) for DV-free snapshots. Paths are normalized
     to absolute form on both sides (the reader reports
     file:-prefixed URIs)."""
     from pyspark.sql import functions as F
 
-    dv_df = _dv_pos_df(spark, sink_dir, dvs, dvrefs)
+    dv_df = _dv_pos_df(spark, sink_dir, snap.dvs, snap.dvrefs, restrict=files)
     if dv_df is None:
         return df
     # inline-only DV sets are small by contract → force the
     # broadcast; sidecar-backed sets can be arbitrarily large → let
     # AQE choose (it still broadcasts the common small case)
-    if not dvrefs:
+    if not any(p in files for c in snap.dvrefs.values() for p in c):
         dv_df = F.broadcast(dv_df)
     cols = df.columns
     keyed = df.withColumn(
@@ -554,7 +564,7 @@ def _apply_dv(
 
 
 def _listing_at(sink_dir: str, version: int) -> list[str]:
-    return list(_entries_at(sink_dir, version))
+    return list(_snapshot_at(sink_dir, version).listing)
 
 
 def listing_at(sink_dir: str, version: int) -> list[str]:
@@ -572,10 +582,7 @@ def committed_files(sink_dir: str) -> list[str]:
     scan pins a version once — entries are immutable, so concurrent
     commits after this call don't tear the listing (snapshot
     isolation)."""
-    vs = versions(sink_dir)
-    if not vs:
-        return []
-    return _listing_at(sink_dir, vs[-1])
+    return list(_snap(sink_dir).listing)
 
 
 def commit_op(sink_dir: str, version: int) -> str | None:
@@ -716,14 +723,11 @@ def stats_at(
     (min, max)}} read from the manifest alone (one checkpoint + few
     deltas of BYTES — no data-file access). Files committed before
     round 6 simply have no entry."""
-    vs = versions(sink_dir)
-    if not vs:
-        return {}
-    v = vs[-1] if version is None else version
-    return {
-        path: _parse_stats(stats)[1]
-        for path, stats in _entries_at(sink_dir, v).items()
-    }
+    return _stats_index(_snap(sink_dir, version))
+
+
+def _stats_index(snap: Snapshot) -> dict[str, dict[str, tuple]]:
+    return {path: _parse_stats(stats)[1] for path, stats in snap.listing.items()}
 
 
 def metadata_agg(
@@ -741,16 +745,16 @@ def metadata_agg(
     every file AND a DV-free snapshot — a deleted row could be the
     extremum, so any DV forces the caller back to a scan (the same
     rule Delta applies). Zero data files are opened at any size."""
-    vs = versions(sink_dir)
-    if not vs:
+    snap = _snap(sink_dir, version)
+    if snap is EMPTY:
         return {"count": None, "min": None, "max": None}
-    v = vs[-1] if version is None else version
-    entries, _schema, dvs, _checks, _ps, _cm, dvrefs = _snapshot_at(sink_dir, v)
     total = 0
     count_ok = True
     mn = mx = None
-    minmax_ok = col is not None and bool(entries) and not dvs and not dvrefs
-    for path, stats in entries.items():
+    minmax_ok = (
+        col is not None and bool(snap.listing) and not snap.dvs and not snap.dvrefs
+    )
+    for path, stats in snap.listing.items():
         n, cols = _parse_stats(stats)
         if n is None:
             count_ok = False
@@ -763,9 +767,7 @@ def metadata_agg(
                 mx = hi if mx is None else max(mx, hi)
             else:
                 minmax_ok = False
-    deleted = sum(len(p) for p in dvs.values()) + sum(
-        n for counts in dvrefs.values() for n in counts.values()
-    )
+    deleted = sum(_dv_counts(snap).values())
     return {
         "count": (total - deleted) if count_ok else None,
         "min": mn if minmax_ok else None,
@@ -796,17 +798,11 @@ def table_health(
     health says WHICH dirs are backlog; commit_replace_dirs retires
     exactly those."""
     vs = versions(sink_dir)
-    if not vs:
-        return {
-            "files": 0, "rows": 0, "small_files": 0,
-            "small_file_fraction": 0.0, "dv_files": 0, "deleted_rows": 0,
-            "partition_dirs": 0, "versions": 0,
-        }
-    entries, _s, dvs, _c, _p, _cm, dvrefs = _snapshot_at(sink_dir, vs[-1])
+    snap = _snapshot_at(sink_dir, vs[-1]) if vs else EMPTY
     rows_ok = True
     rows = 0
     small = 0
-    for _path, stats in entries.items():
+    for stats in snap.listing.values():
         n, _cols = _parse_stats(stats)
         if n is None:
             rows_ok = False
@@ -814,21 +810,17 @@ def table_health(
         rows += n
         if n < target_rows_per_file // 2:
             small += 1
-    dv_paths = set(dvs) | {
-        p for counts in dvrefs.values() for p in counts
-    }
-    deleted = sum(len(p) for p in dvs.values()) + sum(
-        n for counts in dvrefs.values() for n in counts.values()
-    )
-    nfiles = len(entries)
+    dv_counts = _dv_counts(snap)
+    deleted = sum(dv_counts.values())
+    nfiles = len(snap.listing)
     return {
         "files": nfiles,
         "rows": (rows - deleted) if rows_ok else None,
         "small_files": small,
         "small_file_fraction": (small / nfiles) if nfiles else 0.0,
-        "dv_files": len(dv_paths),
+        "dv_files": len(dv_counts),
         "deleted_rows": deleted,
-        "partition_dirs": len({os.path.dirname(p) for p in entries}),
+        "partition_dirs": len({os.path.dirname(p) for p in snap.listing}),
         "versions": len(vs),
     }
 
@@ -848,7 +840,13 @@ def prune_files(
     never a filter, so the caller still applies the exact predicate
     to the surviving rows (same contract as parquet row-group
     skipping)."""
-    index = stats_at(sink_dir, version)
+    return _prune_range(_snap(sink_dir, version), predicate)
+
+
+def _prune_range(
+    snap: Snapshot, predicate: dict[str, tuple]
+) -> tuple[list[str], int]:
+    index = _stats_index(snap)
     kept: list[str] = []
     for path, cols in index.items():
         skip = False
@@ -1104,12 +1102,14 @@ def blooms_at(
     entry; a ``None`` type code marks a pre-type-guard spec
     (probe-time guard then falls back to the column's BOUNDS
     type)."""
-    vs = versions(sink_dir)
-    if not vs:
-        return {}
-    v = vs[-1] if version is None else version
+    return _blooms(sink_dir, _snap(sink_dir, version))
+
+
+def _blooms(
+    sink_dir: str, snap: Snapshot
+) -> dict[str, dict[str, tuple[int, int, str, str | None]]]:
     out: dict[str, dict[str, tuple[int, int, str, str | None]]] = {}
-    for path, stats in _entries_at(sink_dir, v).items():
+    for path, stats in snap.listing.items():
         if stats is None:
             continue
         try:
@@ -1155,8 +1155,14 @@ def prune_files_eq(
     k bits unset). No false negatives by construction; files without
     stats/bloom for ``col`` are kept. The caller still applies the
     exact predicate to the survivors."""
-    index = stats_at(sink_dir, version)
-    blooms = blooms_at(sink_dir, version)
+    return _prune_eq(sink_dir, _snap(sink_dir, version), col, value)
+
+
+def _prune_eq(
+    sink_dir: str, snap: Snapshot, col: str, value
+) -> tuple[list[str], int]:
+    index = _stats_index(snap)
+    blooms = _blooms(sink_dir, snap)
     kept: list[str] = []
     for path, cols in index.items():
         skip = False
@@ -1241,9 +1247,15 @@ def prune_files_in(
     degrade to :func:`prune_files` with the key set's (min, max)
     envelope and let the per-file bloom sidecars absorb point
     selectivity."""
+    return _prune_in(sink_dir, _snap(sink_dir, version), col, values)
+
+
+def _prune_in(
+    sink_dir: str, snap: Snapshot, col: str, values
+) -> tuple[list[str], int]:
     import bisect
 
-    index = stats_at(sink_dir, version)
+    index = _stats_index(snap)
     try:
         keys = sorted(set(values))
     except TypeError:
@@ -1252,7 +1264,7 @@ def prune_files_in(
         return list(index), len(index)
     if not keys:
         return [], len(index)
-    blooms = blooms_at(sink_dir, version)
+    blooms = _blooms(sink_dir, snap)
     kept: list[str] = []
     for path, cols in index.items():
         if col not in cols:
@@ -1368,26 +1380,21 @@ def read_committed(
     (:func:`prune_files_in`); an empty key set reads no files and
     returns None, which is the exact ``IN ()`` answer.
     The caller must still apply the exact predicate (kept files may
-    contain non-matching rows)."""
+    contain non-matching rows). Files, schema, DVs and column mapping
+    all come from one snapshot: a commit landing mid-call is never
+    half seen."""
+    snap = _snap(sink_dir)
     if prune_eq is not None:
-        files, _total = prune_files_eq(sink_dir, prune_eq[0], prune_eq[1])
+        files = _prune_eq(sink_dir, snap, *prune_eq)[0]
     elif prune_in is not None:
-        files, _total = prune_files_in(sink_dir, prune_in[0], prune_in[1])
+        files = _prune_in(sink_dir, snap, *prune_in)[0]
     elif prune:
-        files, _total = prune_files(sink_dir, prune)
+        files = _prune_range(snap, prune)[0]
     else:
-        files = committed_files(sink_dir)
+        files = list(snap.listing)
     if not files:
         return None
-    reader = spark.read.option("basePath", sink_dir)
-    schema = schema_at(sink_dir)
-    if schema is not None:
-        reader = reader.schema(schema)
-    df = reader.parquet(*[os.path.join(sink_dir, f) for f in files])
-    vs = versions(sink_dir)
-    snap = _snapshot_at(sink_dir, vs[-1])
-    df = _apply_dv(spark, df, sink_dir, snap[2], snap[6])
-    return _apply_colmap(df, snap[5])
+    return _read_files(spark, sink_dir, snap, files)
 
 
 def read_version(spark: SparkSession, sink_dir: str, version: int) -> DataFrame:
@@ -1397,17 +1404,25 @@ def read_version(spark: SparkSession, sink_dir: str, version: int) -> DataFrame:
     vacuum — the log IS the table state. After :func:`prune_log`,
     versions beyond the retained horizon raise FileNotFoundError
     (clean refusal, never a wrong snapshot)."""
-    entries, schema, dvs, _checks, _ps, colmap, dvrefs = _snapshot_at(
-        sink_dir, version
-    )
-    files = list(entries)
-    if not files:
+    snap = _snapshot_at(sink_dir, version)
+    if not snap.listing:
         return spark.read.format("parquet").schema("__empty STRING").load()
+    return _read_files(spark, sink_dir, snap, list(snap.listing))
+
+
+def _read_files(
+    spark: SparkSession, sink_dir: str, snap: Snapshot, files: list[str]
+) -> DataFrame:
+    """``files`` (sink-relative) as ``snap`` reads them: under its
+    schema, through its deletion vectors on those files, with its
+    column mapping applied. ``basePath`` keeps the hive partition
+    columns, so partition filters still prune the file list."""
     reader = spark.read.option("basePath", sink_dir)
-    if schema is not None:
-        reader = reader.schema(schema)
+    if snap.schema is not None:
+        reader = reader.schema(snap.schema)
     df = reader.parquet(*[os.path.join(sink_dir, f) for f in files])
-    return _apply_colmap(_apply_dv(spark, df, sink_dir, dvs, dvrefs), colmap)
+    df = _apply_dv(spark, df, sink_dir, snap, set(files))
+    return _apply_colmap(df, snap.colmap)
 
 
 def stage_append(df: DataFrame, sink_dir: str, partition_by: tuple[str, ...]) -> list[str]:
@@ -1489,7 +1504,8 @@ def _commit(
     drop_dirs: list[str] | None = None,
     op: str | None = None,
 ) -> bool:
-    """Read-log → build-entry → CAS-create, retrying on contention.
+    """Build one commit's delta lines and publish them through
+    :func:`_publish` (the CAS loop, retried on contention).
 
     ``op`` (round 9) records COMMIT INTENT as a ``#op\\t<name>``
     metadata line — the analog of Delta's ``operation`` field on
@@ -1533,125 +1549,67 @@ def _commit(
             parsed["b"] = {**parsed.get("b", {}), **per_col}
             stats[path] = json.dumps(parsed, separators=(",", ":"))
 
-    def _token(path: str) -> str:
-        s = stats.get(path)
-        return path if s is None else f"{path}\t{s}"
+    # what this commit adds, in the checkpoint grammar; only its
+    # drop set depends on the head it lands on
+    added = _serialize(
+        Snapshot(
+            {f: stats.get(f) for f in new_files},
+            schema_ddl,
+            {p: sorted(v) for p, v in (delete_dv or {}).items()},
+            dict([add_check]) if add_check else {},
+            partspec,
+            colmap or {},
+            dict([dv_ref]) if dv_ref else {},
+        )
+    )
 
+    def delta(head: Callable[[], Snapshot]) -> list[str]:
+        drops: set[str] = set()
+        if replace:
+            # explicit drop dirs retire what incremental OPTIMIZE
+            # rewrote into a different dir family; a full-snapshot
+            # replace drops every dir of the head it lands on
+            drops = {os.path.dirname(f) for f in new_files} | set(drop_dirs or ())
+            if replace_all:
+                drops |= {os.path.dirname(f) for f in head().listing}
+        return [f"~{d}" for d in sorted(drops)] + added
+
+    return _publish(sink_dir, op, delta, expected_version) is not None
+
+
+def _publish(
+    sink_dir: str,
+    op: str | None,
+    delta: Callable[[Callable[[], Snapshot]], list[str]],
+    expected_version: int | None = None,
+) -> int | None:
+    """The one CAS loop every commit goes through: read the log head,
+    build this commit's delta lines with ``delta(head)`` (``head()``
+    reads the head snapshot, at most once per attempt), and
+    exclusive-create the next version; on losing the race, re-read
+    and rebuild. At a checkpoint version the entry is
+    ``_serialize(_fold(head, delta))`` instead — the reader's own
+    replay, written down — so the head snapshot is read only there
+    and where ``delta`` asks for it. ``op`` tags the entry either
+    way. Returns the committed version, or None when
+    ``expected_version`` is set and the head is not it."""
     while True:
         vs = versions(sink_dir)
-        head = vs[-1] if vs else 0
-        if expected_version is not None and head != expected_version:
-            return False
-        seq = head + 1
+        version = vs[-1] if vs else 0
+        if expected_version is not None and version != expected_version:
+            return None
+        head = functools.cache(
+            lambda v=version: _snapshot_at(sink_dir, v) if v else EMPTY
+        )
+        lines = delta(head)
+        seq = version + 1
         is_ckpt = seq % CHECKPOINT_EVERY == 1  # v1, v11, v21, ...
-        drop_set = {os.path.dirname(f) for f in new_files} if replace else set()
-        if replace and drop_dirs:
-            # explicit drop set (incremental OPTIMIZE: retire exactly
-            # the directories whose files were rewritten, even though
-            # the rewritten output lands in a different dir family)
-            drop_set |= set(drop_dirs)
-        if replace and replace_all and head:
-            # full-snapshot replace: every dir the CURRENT head lists
-            # drops too (recomputed per retry — the head may move)
-            drop_set |= {
-                os.path.dirname(f) for f in _listing_at(sink_dir, head)
-            }
-        replaced_dirs = sorted(drop_set)
         if is_ckpt:
-            (
-                base,
-                cur_schema,
-                cur_dvs,
-                cur_checks,
-                cur_partspec,
-                cur_cm,
-                cur_dvrefs,
-            ) = (
-                _snapshot_at(sink_dir, vs[-1])
-                if vs
-                else ({}, None, {}, {}, None, {}, {})
-            )
-            if replace:
-                drops = set(replaced_dirs)
-                base = {
-                    p: s
-                    for p, s in base.items()
-                    if os.path.dirname(p) not in drops
-                }
-                cur_dvs = {
-                    p: v
-                    for p, v in cur_dvs.items()
-                    if os.path.dirname(p) not in drops
-                }
-                cur_dvrefs = {
-                    r: kept
-                    for r, c in cur_dvrefs.items()
-                    if (kept := {
-                        p: n
-                        for p, n in c.items()
-                        if os.path.dirname(p) not in drops
-                    })
-                }
-            if delete_dv:
-                for p, v in delete_dv.items():
-                    cur_dvs[p] = sorted(set(cur_dvs.get(p, [])) | set(v))
-            if dv_ref:
-                cur_dvrefs = {**cur_dvrefs, dv_ref[0]: dict(dv_ref[1])}
-            if add_check:
-                cur_checks = {**cur_checks, add_check[0]: add_check[1]}
-            eff_schema = schema_ddl if schema_ddl is not None else cur_schema
-            eff_partspec = partspec if partspec is not None else cur_partspec
-            eff_cm = colmap if colmap is not None else cur_cm
-            lines = (
-                [f"#op\t{op}"] if op is not None else []
-            ) + (
-                [f"#schema\t{eff_schema}"] if eff_schema is not None else []
-            ) + (
-                [f"#partspec\t{eff_partspec}"]
-                if eff_partspec is not None
-                else []
-            ) + (
-                [f"#colmap\t{json.dumps(eff_cm, sort_keys=True)}"]
-                if eff_cm
-                else []
-            ) + [
-                f"#check\t{n}\t{e}" for n, e in sorted(cur_checks.items())
-            ] + [
-                p if s is None else f"{p}\t{s}" for p, s in base.items()
-            ] + [_token(f) for f in new_files] + [
-                f"-{p}\t{json.dumps(v)}" for p, v in sorted(cur_dvs.items())
-            ] + [
-                f"%dv\t{r}\t{json.dumps(c, sort_keys=True)}"
-                for r, c in sorted(cur_dvrefs.items())
-            ]
-        else:
-            lines = (
-                [f"#op\t{op}"] if op is not None else []
-            ) + (
-                [f"#schema\t{schema_ddl}"] if schema_ddl is not None else []
-            ) + (
-                [f"#partspec\t{partspec}"] if partspec is not None else []
-            ) + (
-                [f"#colmap\t{json.dumps(colmap, sort_keys=True)}"]
-                if colmap is not None
-                else []
-            ) + (
-                [f"#check\t{add_check[0]}\t{add_check[1]}"] if add_check else []
-            ) + [f"~{d}" for d in replaced_dirs] + [
-                f"+{_token(f)}" for f in new_files
-            ] + [
-                f"-{p}\t{json.dumps(sorted(v))}"
-                for p, v in sorted((delete_dv or {}).items())
-            ] + (
-                [
-                    f"%dv\t{dv_ref[0]}\t"
-                    f"{json.dumps(dv_ref[1], sort_keys=True)}"
-                ]
-                if dv_ref
-                else []
-            )
+            lines = _serialize(_fold(head(), lines))
+        if op is not None:
+            lines = [f"#op\t{op}"] + lines
         if _try_commit(sink_dir, seq, lines, is_ckpt):
-            return True
+            return seq
 
 
 def commit_append(
@@ -1706,17 +1664,15 @@ def restore(sink_dir: str, version: int) -> int:
     the target predates the first schema declaration the current
     (wider, backward-compatible) read schema remains. The delta
     entry is the existing grammar composed: ``~dir`` for every
-    current-or-target partition (which also clears their DVs),
-    ``+path\\tstats`` re-adds the target listing, ``-path [pos]``
-    re-declares the target's DVs. Returns the new head version."""
-    target, t_schema, t_dvs, _t_checks, t_partspec, t_cm, t_dvrefs = (
-        _snapshot_at(sink_dir, version)
-    )
+    current-or-target partition (which also clears their DVs), then
+    the target's own serialization, which re-adds its listing with
+    stats and re-declares its DVs. Returns the new head version."""
+    target = _snapshot_at(sink_dir, version)
     missing = [
-        p for p in target if not os.path.exists(os.path.join(sink_dir, p))
+        p for p in target.listing if not os.path.exists(os.path.join(sink_dir, p))
     ] + [
         r
-        for r in t_dvrefs
+        for r in target.dvrefs
         if not os.path.isdir(os.path.join(_txn_dir(sink_dir), r))
     ]
     if missing:
@@ -1724,64 +1680,32 @@ def restore(sink_dir: str, version: int) -> int:
             f"restore to v{version} impossible: {len(missing)} data/DV "
             f"file(s) already vacuumed, e.g. {missing[0]}"
         )
-    t_tokens = [p if s is None else f"{p}\t{s}" for p, s in target.items()]
-    t_dv_lines = [
-        f"-{p}\t{json.dumps(v)}" for p, v in sorted(t_dvs.items())
-    ] + [
-        # sidecar refs roll back by RE-REFERENCE — the immutable
-        # sidecar files are shared between the target version and
-        # the restore commit (protected from vacuum by either)
-        f"%dv\t{r}\t{json.dumps(c, sort_keys=True)}"
-        for r, c in sorted(t_dvrefs.items())
-    ]
-    while True:
-        vs = versions(sink_dir)
-        head = vs[-1] if vs else 0
-        seq = head + 1
-        is_ckpt = seq % CHECKPOINT_EVERY == 1
-        cur, cur_schema, _cur_dvs, cur_checks, cur_partspec, cur_cm, _cur_refs = (
-            _snapshot_at(sink_dir, head)
-            if vs
-            else ({}, None, {}, {}, None, {}, {})
+
+    def delta(head: Callable[[], Snapshot]) -> list[str]:
+        # drop every current and target dir (with their DVs), then
+        # re-add the target: its listing with stats, DVs and sidecar
+        # refs (re-referenced — immutable sidecars are shared with the
+        # target version), under the current CHECKs. The colmap rolls
+        # back EXACTLY — a target without one resets the mapping —
+        # while schema and partspec keep the current ones when the
+        # target predates them
+        cur = head()
+        dirs = {os.path.dirname(p) for p in [*cur.listing, *target.listing]}
+        return (
+            [f"~{d}" for d in sorted(dirs)]
+            + (["#colmap\t{}"] if cur.colmap and not target.colmap else [])
+            + _serialize(
+                target._replace(
+                    schema=target.schema if target.schema is not None else cur.schema,
+                    partspec=target.partspec
+                    if target.partspec is not None
+                    else cur.partspec,
+                    checks={},
+                )
+            )
         )
-        eff_schema = t_schema if t_schema is not None else cur_schema
-        eff_ps = t_partspec if t_partspec is not None else cur_partspec
-        # colmap rolls back EXACTLY (unlike the schema, where keeping
-        # the current wider schema is the backward-compatible choice):
-        # a target without a mapping means physical names ARE the
-        # logical names, and the explicit `{}` line resets any
-        # current mapping (an absent delta line would mean no change)
-        schema_lines = (
-            [f"#schema\t{eff_schema}"] if eff_schema is not None else []
-        ) + ([f"#partspec\t{eff_ps}"] if eff_ps is not None else []) + (
-            [f"#colmap\t{json.dumps(t_cm, sort_keys=True)}"]
-            if (t_cm or cur_cm)
-            else []
-        )
-        check_lines = [
-            f"#check\t{n}\t{e}" for n, e in sorted(cur_checks.items())
-        ]
-        if is_ckpt:
-            lines = (
-                ["#op\trestore"]
-                + schema_lines
-                + check_lines
-                + t_tokens
-                + t_dv_lines
-            )
-        else:
-            dirs = sorted(
-                {os.path.dirname(p) for p in list(cur) + list(target)}
-            )
-            lines = (
-                ["#op\trestore"]
-                + schema_lines
-                + [f"~{d}" for d in dirs]
-                + [f"+{t}" for t in t_tokens]
-                + t_dv_lines
-            )
-        if _try_commit(sink_dir, seq, lines, is_ckpt):
-            return seq
+
+    return _publish(sink_dir, "restore", delta)
 
 
 def history(sink_dir: str) -> list[dict]:
@@ -1796,22 +1720,22 @@ def history(sink_dir: str) -> list[dict]:
     The audit surface of the table format: what changed, when, and
     what each version would read as."""
     out: list[dict] = []
-    for v in versions(sink_dir):
-        listing, schema, dvs, checks, partspec, _cm, _refs = _snapshot_at(
-            sink_dir, v
-        )
-        agg = metadata_agg(sink_dir, version=v)
+    for v, snap in _replay(sink_dir):
+        counts = [_parse_stats(s)[0] for s in snap.listing.values()]
+        deleted = sum(_dv_counts(snap).values())
         out.append(
             {
                 "version": v,
                 "op": commit_op(sink_dir, v),
                 "is_checkpoint": v % CHECKPOINT_EVERY == 1,
-                "n_files": len(listing),
-                "n_dv_positions": sum(dv_counts_at(sink_dir, v).values()),
-                "n_rows": agg["count"],
-                "has_schema": schema is not None,
-                "n_checks": len(checks),
-                "partspec": partspec,
+                "n_files": len(snap.listing),
+                "n_dv_positions": deleted,
+                "n_rows": None
+                if None in counts
+                else sum(counts) - deleted,
+                "has_schema": snap.schema is not None,
+                "n_checks": len(snap.checks),
+                "partspec": snap.partspec,
             }
         )
     return out
@@ -1863,19 +1787,12 @@ def commit_append_checked(
     quality gate a 100 TB ingest needs (a bad batch caught at commit
     time costs one batch scan; caught downstream it costs a
     table-wide audit + DV erasure)."""
-    checks = checks_at(sink_dir)
-    if checks and new_files:
+    snap = _snap(sink_dir)
+    if snap.checks and new_files:
         from pyspark.sql import functions as F
 
-        reader = spark.read.option("basePath", sink_dir)
-        schema = schema_at(sink_dir)
-        if schema is not None:
-            reader = reader.schema(schema)
-        df = _apply_colmap(
-            reader.parquet(*[os.path.join(sink_dir, f) for f in new_files]),
-            colmap_at(sink_dir),
-        )
-        for name, expr in sorted(checks.items()):
+        df = _read_files(spark, sink_dir, snap, new_files)
+        for name, expr in sorted(snap.checks.items()):
             bad = df.where(~F.expr(expr)).count()
             if bad:
                 raise CheckViolation(name, expr, bad)
@@ -1979,7 +1896,7 @@ def vacuum(
     :func:`prune_log` to shrink that set. False (default) protects
     only the CURRENT snapshot — past versions become unreadable, the
     documented trade-off of immediate reclamation."""
-    protected = set(committed_files(sink_dir))
+    protected: set[str] = set()
     # files staged on a live WAP branch (round 6) are not orphans —
     # they are awaiting audit/publish and may outlive any retention
     # window; Iceberg likewise protects branch-referenced files.
@@ -2014,28 +1931,17 @@ def vacuum(
             if isinstance(spec, dict) and isinstance(spec.get("r"), str)
         }
 
-    vs = versions(sink_dir)
+    retained = (
+        [snap for _v, snap in _replay(sink_dir)]
+        if protect_log_versions
+        else [_snap(sink_dir)]
+    )
     protected_refs: set[str] = set()
-    if vs:
-        head_snap = _snapshot_at(sink_dir, vs[-1])
-        protected_refs.update(head_snap[6])
-        for stats in head_snap[0].values():
+    for snap in retained:
+        protected.update(snap.listing)
+        protected_refs.update(snap.dvrefs)
+        for stats in snap.listing.values():
             protected_refs.update(_bloom_refs(stats))
-    if protect_log_versions:
-        log = _scan_log(sink_dir)
-        for fname in log.values():
-            for line in _read_entry(sink_dir, fname):
-                if line.startswith("%dv\t"):
-                    protected_refs.add(line.split("\t", 2)[1])
-                    continue
-                if line.startswith(("~", "#", "%")):
-                    continue
-                if line.startswith("-"):
-                    continue
-                token = line[1:] if line.startswith("+") else line
-                path, stats = _split_stats(token)
-                protected.add(path)
-                protected_refs.update(_bloom_refs(stats))
     cutoff = time.time() - retain_seconds
     removed: list[str] = []
     for root, dirs, files in os.walk(sink_dir):
@@ -2324,13 +2230,11 @@ def _files_df(
     schema: str | None,
 ):
     """Read specific committed files keyed by (normalized path, row
-    position) — the building block of the change feed."""
+    position) under ``schema`` alone (no DVs, no column mapping) —
+    the building block of the change feed."""
     from pyspark.sql import functions as F
 
-    reader = spark.read.option("basePath", sink_dir)
-    if schema is not None:
-        reader = reader.schema(schema)
-    df = reader.parquet(*[os.path.join(sink_dir, f) for f in files])
+    df = _read_files(spark, sink_dir, EMPTY._replace(schema=schema), files)
     return df.withColumn(
         "__p", F.regexp_replace(F.col("_metadata.file_path"), "^file:/*", "/")
     ).withColumn("__i", F.col("_metadata.row_index"))
@@ -2404,26 +2308,13 @@ def read_changes(
         to_version = vs[-1] if vs else 0
     if to_version <= from_version:
         return None
-    target_schema = schema_at(sink_dir, to_version)
-
-    if from_version == 0:
-        prev_listing: dict[str, str | None] = {}
-        prev_dvs: dict[str, list[int]] = {}
-        prev_refs: dict[str, dict[str, int]] = {}
-    else:
-        prev_snap = _snapshot_at(sink_dir, from_version)
-        prev_listing, prev_dvs, prev_refs = (
-            prev_snap[0],
-            prev_snap[2],
-            prev_snap[6],
-        )
+    target = _snapshot_at(sink_dir, to_version)
+    prev = _snapshot_at(sink_dir, from_version) if from_version else EMPTY
+    prev_listing, prev_dvs, prev_refs = prev.listing, prev.dvs, prev.dvrefs
 
     pieces = []
-    for v in range(from_version + 1, to_version + 1):
-        if v not in _scan_log(sink_dir):
-            continue
-        snap = _snapshot_at(sink_dir, v)
-        cur_listing, cur_dvs, cur_refs = snap[0], snap[2], snap[6]
+    for v, snap in _replay(sink_dir, from_version, to_version, prev):
+        cur_listing, cur_dvs, cur_refs = snap.listing, snap.dvs, snap.dvrefs
         added = [p for p in cur_listing if p not in prev_listing]
         removed = [p for p in prev_listing if p not in cur_listing]
         # DV diff at the SIDECAR-REF level (round 7): a ref is
@@ -2438,7 +2329,7 @@ def read_changes(
             r: c for r, c in prev_refs.items() if r not in cur_refs
         }
         if added:
-            ins = _files_df(spark, sink_dir, added, target_schema)
+            ins = _files_df(spark, sink_dir, added, target.schema)
             pos = _dv_pos_df(
                 spark,
                 sink_dir,
@@ -2448,7 +2339,7 @@ def read_changes(
             )
             pieces.append((v, "insert", _pos_join_df(ins, pos, "left_anti")))
         if removed:
-            dels = _files_df(spark, sink_dir, removed, target_schema)
+            dels = _files_df(spark, sink_dir, removed, target.schema)
             pos = _dv_pos_df(
                 spark,
                 sink_dir,
@@ -2468,7 +2359,7 @@ def read_changes(
             | {p for c in added_refs.values() for p in c if p in surviving}
         )
         if dead_paths:
-            d = _files_df(spark, sink_dir, dead_paths, target_schema)
+            d = _files_df(spark, sink_dir, dead_paths, target.schema)
             pos = _dv_pos_df(
                 spark, sink_dir, new_dead, added_refs, restrict=set(dead_paths)
             )
@@ -2483,7 +2374,7 @@ def read_changes(
             | {p for c in removed_refs.values() for p in c if p in surviving}
         )
         if undead_paths:
-            u = _files_df(spark, sink_dir, undead_paths, target_schema)
+            u = _files_df(spark, sink_dir, undead_paths, target.schema)
             pos = _dv_pos_df(
                 spark, sink_dir, undead, removed_refs, restrict=set(undead_paths)
             )
@@ -2498,7 +2389,7 @@ def read_changes(
     # the feed emits LOGICAL column names under to_version's mapping,
     # mirroring read_version — a renamed table's incremental consumer
     # must see the same names its snapshot reads do (advisor round-6)
-    cm = colmap_at(sink_dir, to_version)
+    cm = target.colmap
     labeled = [
         df.select(
             *[F.col(c).alias(cm.get(c, c)) for c in data_cols],
@@ -2706,17 +2597,13 @@ def wap_read(
     staged batches — what the table WOULD look like after publish.
     Production readers (read_committed) never see any of it."""
     staged = wap_files(sink_dir, branch)
-    main = read_committed(spark, sink_dir)
+    snap = _snap(sink_dir)
+    main = (
+        _read_files(spark, sink_dir, snap, list(snap.listing)) if snap.listing else None
+    )
     if not staged:
         return main
-    reader = spark.read.option("basePath", sink_dir)
-    schema = schema_at(sink_dir)
-    if schema is not None:
-        reader = reader.schema(schema)
-    branch_df = _apply_colmap(
-        reader.parquet(*[os.path.join(sink_dir, f) for f in staged]),
-        colmap_at(sink_dir),
-    )
+    branch_df = _read_files(spark, sink_dir, snap, staged)
     if main is None:
         return branch_df
     return main.unionByName(branch_df, allowMissingColumns=True)
@@ -2828,14 +2715,10 @@ def metadata_count_by_dir(
     (pre-round-6 stats lines). Zero data files opened at any table
     size — the manifest answers the partition histogram a 100 TB
     table's planner (and its operator dashboards) ask constantly."""
-    vs = versions(sink_dir)
-    if not vs:
-        return {}
-    v = vs[-1] if version is None else version
-    entries = _entries_at(sink_dir, v)
-    deleted = dv_counts_at(sink_dir, v)
+    snap = _snap(sink_dir, version)
+    deleted = _dv_counts(snap)
     out: dict[str, int] = {}
-    for path, stats in entries.items():
+    for path, stats in snap.listing.items():
         n, _cols = _parse_stats(stats)
         if n is None:
             return None
@@ -2863,10 +2746,7 @@ def _apply_colmap(df, colmap: dict[str, str]):
 def colmap_at(sink_dir: str, version: int | None = None) -> dict[str, str]:
     """The snapshot's column mapping: {physical name -> logical
     name} (empty when no rename ever happened)."""
-    vs = versions(sink_dir)
-    if not vs:
-        return {}
-    return _snapshot_at(sink_dir, vs[-1] if version is None else version)[5]
+    return _snap(sink_dir, version).colmap
 
 
 def to_physical(df, sink_dir: str):
@@ -2933,11 +2813,11 @@ def _physical_columns(sink_dir: str) -> list[str]:
     declared read schema when present, else from any committed
     file's footer stats keys plus partition dirs (best effort —
     enough to resolve a rename target)."""
-    schema = schema_at(sink_dir)
-    if schema is not None:
-        return [f.split()[0].strip("`") for f in _split_ddl_top(schema)]
+    snap = _snap(sink_dir)
+    if snap.schema is not None:
+        return [f.split()[0].strip("`") for f in _split_ddl_top(snap.schema)]
     cols: set[str] = set()
-    for path, stats in _entries_at(sink_dir, versions(sink_dir)[-1]).items():
+    for path, stats in snap.listing.items():
         _n, bounds = _parse_stats(stats)
         cols.update(bounds)
         d = os.path.dirname(path)

@@ -463,10 +463,9 @@ def _split_events_by_time(spark: SparkSession, sf_dir: str, out_dir: str) -> Non
     assumed: a late row arriving in the finalization batch itself is
     still absorbed), (2) the lower half — now strictly later than
     every finalized window, hence dropped."""
-    import glob as _glob
-    import os
-    import shutil
     import time
+
+    from ..fixtures import write_single_file
 
     events = spark.read.parquet(table_path(sf_dir, "events"))
     row = events.agg(
@@ -486,13 +485,7 @@ def _split_events_by_time(spark: SparkSession, sf_dir: str, out_dir: str) -> Non
         events.where(ts < F.lit(mid)),
     )
     for i, frame in enumerate(frames):
-        tmp = os.path.join(out_dir, f"_tmp{i:03d}")
-        frame.coalesce(1).write.mode("overwrite").parquet(tmp)
-        (pf,) = _glob.glob(os.path.join(tmp, "part-*.parquet"))
-        dst = os.path.join(out_dir, f"part{i:03d}.parquet")
-        shutil.move(pf, dst)
-        shutil.rmtree(tmp)
-        os.utime(dst, (now + i, now + i))
+        write_single_file(frame, os.path.join(out_dir, f"part{i:03d}.parquet"), now + i)
 
 
 _ORACLE_Q137 = """

@@ -463,6 +463,9 @@ def test_held_values_are_built_once_per_frame(smoke_frames, monkeypatch):
     assert len(builds) == 1 and builds[0] is fresh
     assert _serve((fresh, dim), "GET", "/stats", {}) == first[0]
     assert all(answer == first[0] for answer in first) and len(builds) == 1
+    # frames earlier tests left in reference cycles would otherwise
+    # leave the map in the same collection as this one
+    gc.collect()
     held = len(domain._HELD)
     del builds[:], fresh
     gc.collect()

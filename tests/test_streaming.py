@@ -10,6 +10,8 @@ import json
 
 from pyspark.sql import functions as F
 
+from data_pipeline_2025_spark.fixtures import write_single_file
+
 SCHEMA = "event_id LONG, ts STRING, value DOUBLE"
 
 
@@ -369,18 +371,11 @@ def test_dedup_gate_end_to_end(spark, tmp_path):
     other = "one two three four five six seven eight nine ten"
 
     def chunk(name, rows, mtime):
-        df = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-        tmp = str(tmp_path / f"_w_{name}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        import glob as _glob
-        import shutil
-
-        os.makedirs(src, exist_ok=True)
-        (pf,) = _glob.glob(os.path.join(tmp, "part-*.parquet"))
-        dst = os.path.join(src, f"{name}.parquet")
-        shutil.move(pf, dst)
-        shutil.rmtree(tmp)
-        os.utime(dst, (mtime, mtime))
+        write_single_file(
+            spark.createDataFrame(rows, "doc_id LONG, text STRING"),
+            os.path.join(src, f"{name}.parquet"),
+            mtime,
+        )
 
     import time
 
@@ -429,18 +424,12 @@ def test_ivf_indexer_end_to_end(spark, tmp_path):
     ckpt2 = str(tmp_path / "ivf_ckpt2")
 
     def chunk(name, rows):
-        df = spark.createDataFrame(
-            rows, "vec_id LONG, embedding ARRAY<FLOAT>, label INT"
+        write_single_file(
+            spark.createDataFrame(
+                rows, "vec_id LONG, embedding ARRAY<FLOAT>, label INT"
+            ),
+            os.path.join(src, f"{name}.parquet"),
         )
-        tmp = str(tmp_path / f"_w_{name}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        import glob as _glob
-        import shutil
-
-        os.makedirs(src, exist_ok=True)
-        (pf,) = _glob.glob(os.path.join(tmp, "part-*.parquet"))
-        shutil.move(pf, os.path.join(src, f"{name}.parquet"))
-        shutil.rmtree(tmp)
 
     # seed vectors 0..7 are the codebook; 20/21 land nearest 0/1
     base = [(i, [float(i)] * 64, i) for i in range(8)]
@@ -566,7 +555,6 @@ def test_dedup_gate_crash_between_verdicts_and_store(spark, tmp_path):
     fresh checkpoint: the replay must re-append the missing
     signatures WITHOUT duplicating verdicts, and a later duplicate
     doc must still be blocked by the recovered store."""
-    import glob as _glob
     import os
     import shutil
     import time
@@ -580,15 +568,11 @@ def test_dedup_gate_crash_between_verdicts_and_store(spark, tmp_path):
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
 
     def chunk(name, rows, mtime):
-        df = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-        tmp = str(tmp_path / f"_w_{name}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        os.makedirs(src, exist_ok=True)
-        (pf,) = _glob.glob(os.path.join(tmp, "part-*.parquet"))
-        dst = os.path.join(src, f"{name}.parquet")
-        shutil.move(pf, dst)
-        shutil.rmtree(tmp)
-        os.utime(dst, (mtime, mtime))
+        write_single_file(
+            spark.createDataFrame(rows, "doc_id LONG, text STRING"),
+            os.path.join(src, f"{name}.parquet"),
+            mtime,
+        )
 
     t0 = time.time()
     chunk("b000", [(0, base)], t0)

@@ -2001,8 +2001,19 @@ def _mk_batch(spark, ids, day):
     )
 
 
-@pytest.mark.parametrize("seed", _GRAMMAR_SEEDS)
-def test_txn_random_op_sequences_match_model(spark, tmp_path, seed):
+# Each seed also runs with a checkpoint every 2nd version, so every
+# op kind lands on checkpoint versions: a checkpoint must read back
+# exactly as the delta it replaces would have.
+@pytest.mark.parametrize(
+    "seed, every",
+    [pytest.param(s, None, id=str(s)) for s in _GRAMMAR_SEEDS]
+    + [pytest.param(s, 2, id=f"{s}-every2") for s in _GRAMMAR_SEEDS],
+)
+def test_txn_random_op_sequences_match_model(
+    spark, tmp_path, monkeypatch, seed, every
+):
+    if every is not None:
+        monkeypatch.setattr(txn, "CHECKPOINT_EVERY", every)
     rng = _random.Random(seed)
     sink = str(tmp_path / f"t{seed}")
     live: dict[int, str] = {}  # id -> day (model of the live table)
@@ -2398,3 +2409,175 @@ def test_cdf_images_keep_null_key_rows(spark, tmp_path):
     four = txn.read_changes_with_images(spark, sink, 0, 1, "id")
     rows = {(r["id"], r["_change_type"]) for r in four.collect()}
     assert rows == {(None, "insert"), (1, "insert")}
+
+
+# ---------------------------------------------------------------
+# The log grammar, pinned on a hand-written log (no Spark): every
+# line kind, forward-compatible unknown lines, a second checkpoint,
+# and the snapshot each version must replay to. Logs written by
+# earlier writers (``+path`` deltas, bare paths in checkpoints) must
+# keep reading the same.
+
+_F1, _F2, _F3 = "day=a/f1.parquet", "day=b/f2.parquet", "day=a/f3.parquet"
+_F4, _F5, _F6 = "day=b/f4.parquet", "day=c/f5.parquet", "day=c/f6.parquet"
+_S1 = '{"n":3,"c":{"id":[0,2]}}'
+_DDL1 = "id BIGINT, day STRING"
+_DDL2 = "id BIGINT, day STRING, extra INT"
+
+_HAND_LOG = [
+    ("c", [
+        "#op\twrite",
+        f"#schema\t{_DDL1}",
+        "#partspec\tday",
+        "#check\tpos\tid >= 0",
+        f"{_F1}\t{_S1}",
+        _F2,
+        f"-{_F1}\t[1]",
+        f'%dv\tdv/r1\t{{"{_F2}": 2}}',
+    ]),
+    ("d", [
+        "#op\twrite",
+        f'+{_F3}\t{{"n":1}}',
+        f"-{_F1}\t[0, 1]",
+        "#x\tfuture metadata",
+        "%y\tfuture sidecar",
+    ]),
+    ("d", [
+        "#op\treplace",
+        "~day=b",
+        f"+{_F4}",
+        '#colmap\t{"id": "key"}',
+    ]),
+    ("d", [
+        f"#schema\t{_DDL2}",
+        "#check\tsmall\tid < 100",
+        f'%dv\tdv/r2\t{{"{_F3}": 1, "{_F4}": 1}}',
+    ]),
+    ("d", [
+        "#op\trestore",
+        "~day=a",
+        _F5,
+        "#colmap\t{}",
+        "#partspec\tdays(ts, 2024-01-01) AS d",
+    ]),
+    ("c", [
+        f"#schema\t{_DDL2}",
+        "#check\tpos\tid >= 0",
+        "#check\tsmall\tid < 100",
+        _F4,
+        _F5,
+        f'{_F6}\t{{"n":4}}',
+        f"-{_F6}\t[3]",
+        f'%dv\tdv/r2\t{{"{_F4}": 1}}',
+    ]),
+    ("d", ["~day=b", f"-{_F6}\t[0]"]),
+]
+
+_HAND_SNAPSHOTS = [
+    (
+        {_F1: _S1, _F2: None}, _DDL1, {_F1: [1]}, {"pos": "id >= 0"},
+        "day", {}, {"dv/r1": {_F2: 2}},
+    ),
+    (
+        {_F1: _S1, _F2: None, _F3: '{"n":1}'}, _DDL1, {_F1: [0, 1]},
+        {"pos": "id >= 0"}, "day", {}, {"dv/r1": {_F2: 2}},
+    ),
+    (
+        {_F1: _S1, _F3: '{"n":1}', _F4: None}, _DDL1, {_F1: [0, 1]},
+        {"pos": "id >= 0"}, "day", {"id": "key"}, {},
+    ),
+    (
+        {_F1: _S1, _F3: '{"n":1}', _F4: None}, _DDL2, {_F1: [0, 1]},
+        {"pos": "id >= 0", "small": "id < 100"}, "day", {"id": "key"},
+        {"dv/r2": {_F3: 1, _F4: 1}},
+    ),
+    (
+        {_F4: None, _F5: None}, _DDL2, {},
+        {"pos": "id >= 0", "small": "id < 100"},
+        "days(ts, 2024-01-01) AS d", {}, {"dv/r2": {_F4: 1}},
+    ),
+    (
+        {_F4: None, _F5: None, _F6: '{"n":4}'}, _DDL2, {_F6: [3]},
+        {"pos": "id >= 0", "small": "id < 100"}, None, {},
+        {"dv/r2": {_F4: 1}},
+    ),
+    (
+        {_F5: None, _F6: '{"n":4}'}, _DDL2, {_F6: [0, 3]},
+        {"pos": "id >= 0", "small": "id < 100"}, None, {}, {},
+    ),
+]
+
+
+def _write_hand_log(sink):
+    log_dir = os.path.join(sink, "_txn")
+    os.makedirs(log_dir)
+    for v, (kind, lines) in enumerate(_HAND_LOG, start=1):
+        with open(os.path.join(log_dir, f"v-{v:08d}.{kind}.txt"), "w") as f:
+            f.write("\n".join(lines) + "\n")
+
+
+def test_log_grammar_replays_hand_written_log(tmp_path):
+    sink = str(tmp_path / "t")
+    _write_hand_log(sink)
+    assert txn.versions(sink) == list(range(1, len(_HAND_LOG) + 1))
+    for v, want in enumerate(_HAND_SNAPSHOTS, start=1):
+        assert txn._snapshot_at(sink, v) == want, f"version {v}"
+    assert [txn.commit_op(sink, v) for v in txn.versions(sink)] == [
+        "write", "write", "replace", None, "restore", None, None,
+    ]
+    assert txn.committed_files(sink) == [_F5, _F6]
+    assert txn.dv_counts_at(sink) == {_F6: 2}
+    assert txn.checks_at(sink, 1) == {"pos": "id >= 0"}
+
+
+def test_checkpoint_is_the_fold_serialized(tmp_path):
+    """A checkpoint is a snapshot written in the log's own grammar:
+    folding it onto the empty snapshot gives that snapshot back, and
+    the replay of every version reads the same as its reconstruction
+    from the nearest checkpoint."""
+    sink = str(tmp_path / "t")
+    _write_hand_log(sink)
+    for v, want in enumerate(_HAND_SNAPSHOTS, start=1):
+        snap = txn.Snapshot(*want)
+        assert txn._fold(txn.EMPTY, txn._serialize(snap)) == snap, v
+    assert [snap for _v, snap in txn._replay(sink)] == _HAND_SNAPSHOTS
+    assert [snap for _v, snap in txn._replay(sink, 2, 5, txn._snapshot_at(sink, 2))] == (
+        _HAND_SNAPSHOTS[2:5]
+    )
+
+
+# A commit landing while one read is in flight must be invisible to
+# it: the read pins the head once and takes files, schema, DVs and
+# column mapping from that one snapshot. The injected replace lands
+# right after the read's first log listing.
+
+
+@pytest.mark.parametrize("reader", ["read_committed", "wap_read"])
+def test_read_pins_one_version(spark, tmp_path, monkeypatch, reader):
+    sink = str(tmp_path / "t")
+    txn.commit_append(sink, txn.stage_append(_mk(spark, 0, 10, "a"), sink, ("day",)))
+    assert txn.delete_where(spark, sink, F.col("id") == 0) == 1  # v2
+    replacement = txn.stage_append(_mk(spark, 100, 103, "b"), sink, ("day",))
+    branch = txn.stage_append(_mk(spark, 200, 202, "c"), sink, ("day",))
+    txn.wap_stage(sink, "audit", branch)
+    real_versions = txn.versions
+    landed = []
+
+    def versions_then_replace(sink_dir):
+        vs = real_versions(sink_dir)
+        if not landed:
+            landed.append(vs)
+            txn.commit_replace_table(sink, replacement)  # v3
+        return vs
+
+    monkeypatch.setattr(txn, "versions", versions_then_replace)
+    if reader == "read_committed":
+        df, want = txn.read_committed(spark, sink), set(range(1, 10))
+    else:
+        df = txn.wap_read(spark, sink, "audit")
+        want = set(range(1, 10)) | {200, 201}
+    got = sorted(r["id"] for r in df.collect())
+    assert landed == [[1, 2]] and real_versions(sink) == [1, 2, 3]
+    assert got == sorted(want)
+    head = txn.read_committed(spark, sink)
+    assert {r["id"] for r in head.collect()} == {100, 101, 102}

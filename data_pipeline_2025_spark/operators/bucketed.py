@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..artifacts import artifact_path
+from ..artifacts import artifact_path, sf_key
 from ..catalog import Catalog
 from ..functions.money import dec, money_out
 from ..registry import register
@@ -40,17 +40,10 @@ from ..registry import register
 N_BUCKETS = 8
 
 
-def _sf_key(sf_dir: str) -> str:
-    import hashlib
-    import os
-
-    return hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:16]
-
-
 def ensure_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Materialize orders/lineitem as bucketed external tables (once
     per session+sf_dir) and return their catalog names."""
-    key = _sf_key(sf_dir)
+    key = sf_key(sf_dir)
     names = (f"dp2025_orders_b_{key}", f"dp2025_lineitem_b_{key}")
     cat = Catalog(spark, sf_dir)
     for name, df, bucket_col in (

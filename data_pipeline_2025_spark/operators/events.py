@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..artifacts import materialize
+from ..artifacts import call_scratch, materialize
 from ..catalog import Catalog
 from ..functions.money import dec, money_out, to_double
 from ..registry import register
@@ -882,13 +882,7 @@ ORDER BY event_type
     tags=("source", "schema-evolution"),
 )
 def q141_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    from ..artifacts import artifact_path
-    from ..catalog import Catalog
-
-    run = uuid.uuid4().hex[:12]
-    sink = artifact_path(sf_dir, f"evo_run/{run}/sink")
+    sink = call_scratch(spark, sf_dir, "q141")
     events = Catalog(spark, sf_dir).events
     # producer v1: no props column; producer v2: full schema
     events.where(F.col("event_id") % 2 == 0).drop("props").write.mode(

@@ -228,28 +228,26 @@ def q239_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from functools import reduce
 
-    from ..session import session_scratch_dir
+    from ..artifacts import built_scratch
 
-    ev = Catalog(spark, sf_dir).events.select(
-        "event_id",
-        "user_id",
-        "value",
-        "event_type",
-        F.to_date("ts").cast("string").alias("day"),
-    )
-    import hashlib as _h
+    def build(root: str) -> None:
+        ev = Catalog(spark, sf_dir).events.select(
+            "event_id",
+            "user_id",
+            "value",
+            "event_type",
+            F.to_date("ts").cast("string").alias("day"),
+        )
+        for fmt in _RT_FORMATS:
+            w = ev.write.format(fmt)
+            if fmt == "csv":
+                w = w.option("header", "true")
+            w.save(os.path.join(root, fmt))
 
-    root, fresh = session_scratch_dir(
-        spark, "fmt_q239_" + _h.md5(sf_dir.encode()).hexdigest()[:8]
-    )
+    root = built_scratch(spark, sf_dir, "q239", build)
     legs = []
     for fmt in _RT_FORMATS:
         path = os.path.join(root, fmt)
-        if fresh or not os.path.isdir(path):
-            w = ev.write.mode("overwrite").format(fmt)
-            if fmt == "csv":
-                w = w.option("header", "true")
-            w.save(path)
         r = spark.read.schema(_RT_SCHEMA).format(fmt)
         if fmt == "csv":
             r = r.option("header", "true")

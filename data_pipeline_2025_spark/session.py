@@ -77,49 +77,3 @@ def get_spark(
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
-
-# ---------------------------------------------------------------
-# Session-scoped scratch directories (q161/q162 and friends).
-#
-# Queries that must materialize a throwaway sink or checkpoint
-# (state-store introspection, manifest time travel) previously
-# mkdtemp'd per INVOCATION and never cleaned up — each run of q162
-# rewrote the full events table into a newly leaked temp dir
-# (round-5 advisor, low). A scratch dir is now cached per
-# (session, tag): repeat invocations reuse the same directory (the
-# query rebuilds its content idempotently or skips the build), and
-# everything is removed at interpreter exit.
-
-import atexit as _atexit
-import shutil as _shutil
-import tempfile as _tempfile
-
-_SCRATCH: dict[tuple[str, str], str] = {}
-
-
-def _cleanup_scratch() -> None:
-    for path in _SCRATCH.values():
-        _shutil.rmtree(path, ignore_errors=True)
-    _SCRATCH.clear()
-
-
-_atexit.register(_cleanup_scratch)
-
-
-def session_scratch_dir(spark: SparkSession, tag: str) -> tuple[str, bool]:
-    """Return ``(path, fresh)`` for a session-scoped scratch dir.
-    ``fresh`` is True the first time this (session, tag) asks —
-    callers that build expensive sink content use it to build once
-    and reuse thereafter. The dir is deleted at interpreter exit.
-
-    Keyed on ``applicationId`` (stable for the session's lifetime),
-    NOT ``id(spark)``: after a stopped session is garbage-collected,
-    CPython can hand its id to a NEW session, which would silently
-    inherit a dead session's scratch dir as fresh=False (round-5
-    advisor, low)."""
-    key = (spark.sparkContext.applicationId, tag)
-    if key in _SCRATCH:
-        return _SCRATCH[key], False
-    path = _tempfile.mkdtemp(prefix=f"spark_graft_{tag}_")
-    _SCRATCH[key] = path
-    return path, True

@@ -161,14 +161,12 @@ ORDER BY window_start, event_type
 
 
 def q83_stream_cagg_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
+    from ..artifacts import call_scratch
 
-    from ..artifacts import artifact_path
-
-    run = uuid.uuid4().hex[:12]
-    silver = artifact_path(sf_dir, f"cagg_run/{run}/silver")
-    rollup = artifact_path(sf_dir, f"cagg_run/{run}/rollup")
-    ckpt = artifact_path(sf_dir, f"cagg_run/{run}/ckpt")
+    root = call_scratch(spark, sf_dir, "q83")
+    silver, rollup, ckpt = (
+        os.path.join(root, d) for d in ("silver", "rollup", "ckpt")
+    )
     # same defensive confs as the other streaming queries: a bare
     # session must read the events parquet and render timestamps
     # UTC-naively like DuckDB

@@ -46,9 +46,7 @@ here the "queue" is the table's own commit log.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,10 +57,10 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
+from ..artifacts import call_scratch
 from ..catalog import Catalog
 from ..functions.money import dec, money_out
 from ..registry import register
-from ..session import session_scratch_dir
 from . import txn
 
 _FEED_SCHEMA = (
@@ -402,11 +400,9 @@ def _apply_feed_batch(mv_dir: str):
 )
 def q228_streaming_cdf_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_txn_changes_source(spark)
-    tag = "cdfs_q228_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root, _fresh = session_scratch_dir(spark, tag)
     # rebuilt per invocation BY DESIGN: the two-run replay lifecycle
     # (and its checkpoint) IS the query, like q219/q220
-    shutil.rmtree(root, ignore_errors=True)
+    root = call_scratch(spark, sf_dir, "q228")
     src = os.path.join(root, "src")
     mv = os.path.join(root, "mv")
     ckpt = os.path.join(root, "ckpt")

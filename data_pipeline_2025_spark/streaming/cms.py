@@ -168,15 +168,13 @@ ORDER BY exact_n DESC, user_id
 
 
 def q97_stream_cms_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    from ..artifacts import artifact_path
+    from ..artifacts import call_scratch
     from ..catalog import Catalog
 
-    run = uuid.uuid4().hex[:12]
-    silver = artifact_path(sf_dir, f"cms_run/{run}/silver")
-    sketch = artifact_path(sf_dir, f"cms_run/{run}/sketch")
-    ckpt = artifact_path(sf_dir, f"cms_run/{run}/ckpt")
+    root = call_scratch(spark, sf_dir, "q97")
+    silver, sketch, ckpt = (
+        os.path.join(root, d) for d in ("silver", "sketch", "ckpt")
+    )
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     start_events_cms(

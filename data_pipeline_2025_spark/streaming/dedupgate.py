@@ -231,15 +231,12 @@ ORDER BY d.doc_id
 
 
 def q120_stream_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
+    from ..artifacts import call_scratch
 
-    from ..artifacts import artifact_path
-
-    run = uuid.uuid4().hex[:12]
-    src = artifact_path(sf_dir, f"gate_run/{run}/in")
-    store = artifact_path(sf_dir, f"gate_run/{run}/store")
-    verdicts = artifact_path(sf_dir, f"gate_run/{run}/verdicts")
-    ckpt = artifact_path(sf_dir, f"gate_run/{run}/ckpt")
+    root = call_scratch(spark, sf_dir, "q120")
+    src, store, verdicts, ckpt = (
+        os.path.join(root, d) for d in ("in", "store", "verdicts", "ckpt")
+    )
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     split_ascending(spark, sf_dir, src)
     start_dedup_gate(spark, src, store, verdicts, ckpt).awaitTermination()

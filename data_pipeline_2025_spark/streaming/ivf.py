@@ -145,14 +145,10 @@ SELECT vec_id, centroid_id, d2_r FROM assign
 
 
 def q126_stream_ivf_indexing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
+    from ..artifacts import call_scratch
 
-    from ..artifacts import artifact_path
-
-    run = uuid.uuid4().hex[:12]
-    src = artifact_path(sf_dir, f"ivf_run/{run}/in")
-    index = artifact_path(sf_dir, f"ivf_run/{run}/index")
-    ckpt = artifact_path(sf_dir, f"ivf_run/{run}/ckpt")
+    root = call_scratch(spark, sf_dir, "q126")
+    src, index, ckpt = (os.path.join(root, d) for d in ("in", "index", "ckpt"))
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     split_ascending_embeddings(spark, sf_dir, src)
     cent = load_centroids(spark, src)

@@ -89,18 +89,16 @@ def sessionize_stream(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
 
 
 def _sentinel_stream_dir(spark, sf_dir: str) -> tuple[str, int]:
-    """Build (once per sf_dir) a stream dir with events + sentinels;
-    returns (dir, sentinel_horizon_us). The sentinel file carries the
-    SAME raw ts physical type as the events file (long nanos or NTZ
-    micros), so one inferred schema reads both."""
-    import os
-
+    """Build (once per session and sf_dir) a stream dir with events +
+    sentinels; returns (dir, sentinel_horizon_us). The sentinel file
+    carries the SAME raw ts physical type as the events file (long
+    nanos or NTZ micros), so one inferred schema reads both."""
     from pyspark.sql import functions as F
 
-    from ..artifacts import artifact_path
+    from ..artifacts import built_scratch
     from ..catalog import table_path
+    from ..fixtures import write_single_file
 
-    path = artifact_path(sf_dir, "stateful_session_src")
     raw = spark.read.parquet(table_path(sf_dir, "events"))
     ts_type = dict(raw.dtypes)["ts"]
     if ts_type == "bigint":  # long nanoseconds
@@ -112,13 +110,10 @@ def _sentinel_stream_dir(spark, sf_dir: str) -> tuple[str, int]:
             dict(raw.dtypes)["ts"]
         )
     horizon_us = raw.agg(F.max(ts_us)).collect()[0][0] + 2 * 30 * 60 * 1_000_000
-    done = os.path.join(path, "_DONE")
-    if not os.path.exists(done):
-        os.makedirs(path, exist_ok=True)
+
+    def build(path: str) -> None:
         src = os.path.abspath(table_path(sf_dir, "events"))
-        link = os.path.join(path, "events.parquet")
-        if not os.path.exists(link):
-            os.symlink(src, link)
+        os.symlink(src, os.path.join(path, "events.parquet"))
         sentinels = (
             raw.select("user_id")
             .distinct()
@@ -133,17 +128,9 @@ def _sentinel_stream_dir(spark, sf_dir: str) -> tuple[str, int]:
         )
         # The file source lists only top-level files — land the
         # sentinel rows as a FLAT file, not a Spark output directory.
-        tmp_out = os.path.join(path, "_sentinels_build")
-        sentinels.coalesce(1).write.mode("overwrite").parquet(tmp_out)
-        part = next(
-            f for f in os.listdir(tmp_out)
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
-        os.replace(
-            os.path.join(tmp_out, part), os.path.join(path, "sentinels.parquet")
-        )
-        open(done, "w").close()
-    return path, horizon_us
+        write_single_file(sentinels, os.path.join(path, "sentinels.parquet"))
+
+    return built_scratch(spark, sf_dir, "q111", build), horizon_us
 
 
 _ORACLE_Q111 = """

@@ -14,17 +14,16 @@ way."""
 
 from __future__ import annotations
 
-import hashlib
+import contextlib
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import built_scratch, call_scratch
 from ..catalog import Catalog
 from ..functions.money import dec, money_out
 from ..registry import register
-from ..session import session_scratch_dir
 from . import txn
 
 _TT_SPLIT = "2024-01-16 00:00:00"
@@ -69,17 +68,7 @@ ORDER BY version
     tags=("streaming", "txn", "timetravel"),
 )
 def q162_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Session-scoped scratch sink: built once per (session, sf_dir),
-    # reused by later invocations, removed at interpreter exit — a
-    # fresh mkdtemp per call leaked a full copy of events each run.
-    tag = "tt_q162_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink, fresh = session_scratch_dir(spark, tag)
-    if not fresh and len(txn.versions(sink)) != 2:
-        # a crashed earlier build left partial history — start over
-        shutil.rmtree(sink, ignore_errors=True)
-        os.makedirs(sink, exist_ok=True)
-        fresh = True
-    if fresh:
+    def build(sink: str) -> None:
         ev = Catalog(spark, sf_dir).events.select(
             "event_id", "ts", "value", F.to_date("ts").alias("day")
         )
@@ -89,6 +78,8 @@ def q162_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             ev.where(F.col("ts") >= split),
         ):
             txn.commit_append(sink, txn.stage_append(batch, sink, ("day",)))
+
+    sink = built_scratch(spark, sf_dir, "q162", build)
     per_version = [
         txn.read_version(spark, sink, v)
         .agg(
@@ -136,15 +127,8 @@ _CDC_FIX_DAY = "2024-01-10"
 
 
 def _build_cdc_sink(spark: SparkSession, sf_dir: str) -> str:
-    """Session-scoped 3-commit sink: append / append / replace-fix.
-    Rebuilt only if a crashed earlier build left partial history."""
-    tag = "cdc_q177_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink, fresh = session_scratch_dir(spark, tag)
-    if not fresh and len(txn.versions(sink)) != 3:
-        shutil.rmtree(sink, ignore_errors=True)
-        os.makedirs(sink, exist_ok=True)
-        fresh = True
-    if fresh:
+    """Session-scoped 3-commit sink: append / append / replace-fix."""
+    def build(sink: str) -> None:
         ev = Catalog(spark, sf_dir).events.select(
             "event_id", "ts", "value", F.to_date("ts").alias("day")
         )
@@ -160,7 +144,8 @@ def _build_cdc_sink(spark: SparkSession, sf_dir: str) -> str:
             & (F.col("event_id") % 2 == 0)
         )
         txn.commit_replace(sink, txn.stage_append(fix, sink, ("day",)))
-    return sink
+
+    return built_scratch(spark, sf_dir, "q177", build)
 
 
 _ORACLE_Q177 = f"""
@@ -289,13 +274,7 @@ ORDER BY 1
 def q188_compaction_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..maintenance import txn_compact
 
-    tag = "opt_q188_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink, fresh = session_scratch_dir(spark, tag)
-    if not fresh and len(txn.versions(sink)) != 3:
-        shutil.rmtree(sink, ignore_errors=True)
-        os.makedirs(sink, exist_ok=True)
-        fresh = True
-    if fresh:
+    def build(sink: str) -> None:
         ev = Catalog(spark, sf_dir).events.select(
             "event_id", "ts", "value", F.to_date("ts").alias("day")
         )
@@ -307,6 +286,8 @@ def q188_compaction_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
         txn_compact(spark, sink, min_files=2)
+
+    sink = built_scratch(spark, sf_dir, "q188", build)
     pre_rows = txn.read_version(spark, sink, 2).count()
     snapshot = txn.read_committed(spark, sink)
     post_rows = snapshot.count()
@@ -422,13 +403,7 @@ SELECT
 
 
 def _build_skip_sink(spark: SparkSession, sf_dir: str) -> str:
-    tag = "skip_q201_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink, fresh = session_scratch_dir(spark, tag)
-    if not fresh and len(txn.versions(sink)) != 1:
-        shutil.rmtree(sink, ignore_errors=True)
-        os.makedirs(sink, exist_ok=True)
-        fresh = True
-    if fresh:
+    def build(sink: str) -> None:
         ev = Catalog(spark, sf_dir).events.select(
             "event_id",
             "value",
@@ -452,7 +427,8 @@ def _build_skip_sink(spark: SparkSession, sf_dir: str) -> str:
                 bucketed.repartition(F.col("b")), sink, ("b",)
             ),
         )
-    return sink
+
+    return built_scratch(spark, sf_dir, "q201", build)
 
 
 @register(
@@ -543,13 +519,7 @@ ORDER BY category
     tags=("streaming", "txn", "schema-evolution"),
 )
 def q203_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tag = "evo_q203_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink, fresh = session_scratch_dir(spark, tag)
-    if not fresh and len(txn.versions(sink)) != 2:
-        shutil.rmtree(sink, ignore_errors=True)
-        os.makedirs(sink, exist_ok=True)
-        fresh = True
-    if fresh:
+    def build(sink: str) -> None:
         ev = Catalog(spark, sf_dir).events.select(
             "event_id", "value", "event_type", F.to_date("ts").alias("day"),
             "ts",
@@ -565,6 +535,8 @@ def q203_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         txn.commit_append(
             sink, txn.stage_append(v2, sink, ("day",)), schema_ddl=_EVO_V2_DDL
         )
+
+    sink = built_scratch(spark, sf_dir, "q203", build)
     live = txn.read_committed(spark, sink)  # widened schema, v1 null-filled
     old = txn.read_version(spark, sink, 1)  # v1's OWN 3-column schema
     v1_cols, v2_cols = len(old.columns), len(live.columns)
@@ -641,11 +613,8 @@ FROM nation WHERE n_nationkey < 20
     tags=("streaming", "txn", "retention", "vacuum"),
 )
 def q204_log_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tag = "ret_q204_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink, _fresh = session_scratch_dir(spark, tag)
     # the lifecycle IS the query — always rebuild from empty
-    shutil.rmtree(sink, ignore_errors=True)
-    os.makedirs(sink, exist_ok=True)
+    sink = call_scratch(spark, sf_dir, "q204")
     nation = Catalog(spark, sf_dir).nation.select("n_nationkey", "n_name")
     for k in range(12):
         txn.commit_append(
@@ -748,13 +717,7 @@ ORDER BY 1
     tags=("streaming", "txn", "delete", "dv"),
 )
 def q207_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tag = "dv_q207_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink, fresh = session_scratch_dir(spark, tag)
-    if not fresh and len(txn.versions(sink)) != 2:
-        shutil.rmtree(sink, ignore_errors=True)
-        os.makedirs(sink, exist_ok=True)
-        fresh = True
-    if fresh:
+    def build(sink: str) -> None:
         ev = Catalog(spark, sf_dir).events.select(
             "event_id", "value", F.to_date("ts").alias("day")
         )
@@ -762,6 +725,8 @@ def q207_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         txn.delete_where(
             spark, sink, F.col("event_id") % _DV_MOD == _DV_REM
         )
+
+    sink = built_scratch(spark, sf_dir, "q207", build)
     deleted_rows = sum(txn.dv_counts_at(sink).values())
     pre_rows = txn.read_version(spark, sink, 1).count()
     files_unchanged = (
@@ -847,13 +812,7 @@ ORDER BY day
     tags=("streaming", "txn", "merge", "dv"),
 )
 def q208_dv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tag = "mrg_q208_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink, fresh = session_scratch_dir(spark, tag)
-    if not fresh and len(txn.versions(sink)) != 2:
-        shutil.rmtree(sink, ignore_errors=True)
-        os.makedirs(sink, exist_ok=True)
-        fresh = True
-    if fresh:
+    def build(sink: str) -> None:
         ev = Catalog(spark, sf_dir).events.select(
             "event_id", "value", F.to_date("ts").alias("day")
         )
@@ -869,6 +828,8 @@ def q208_dv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         txn.merge_upsert_dv(
             spark, sink, upd.unionByName(ins), "event_id", ("day",)
         )
+
+    sink = built_scratch(spark, sf_dir, "q208", build)
     matched = sum(txn.dv_counts_at(sink).values())
     # Row counts from manifest footer statistics (txn.metadata_agg —
     # the q209 metadata-only COUNT, exact even under DVs): the v1
@@ -945,13 +906,7 @@ FROM events
     tags=("streaming", "txn", "metadata", "stats"),
 )
 def q209_metadata_only_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tag = "meta_q209_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink, fresh = session_scratch_dir(spark, tag)
-    if not fresh and len(txn.versions(sink)) != 2:
-        shutil.rmtree(sink, ignore_errors=True)
-        os.makedirs(sink, exist_ok=True)
-        fresh = True
-    if fresh:
+    def build(sink: str) -> None:
         ev = Catalog(spark, sf_dir).events.select(
             "event_id", "value", F.to_date("ts").alias("day")
         )
@@ -959,6 +914,8 @@ def q209_metadata_only_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         txn.delete_where(
             spark, sink, F.col("event_id") % _META_DEL_MOD == _META_DEL_REM
         )
+
+    sink = built_scratch(spark, sf_dir, "q209", build)
     pre = txn.metadata_agg(sink, "event_id", version=1)
     post = txn.metadata_agg(sink, "event_id")
     refused = 1 if post["min"] is None and post["max"] is None else 0
@@ -1021,15 +978,7 @@ FROM events
     tags=("streaming", "txn", "constraints", "quality"),
 )
 def q210_check_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tag = "chk_q210_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink, fresh = session_scratch_dir(spark, tag)
-    if not fresh and len(txn.versions(sink)) != 3:
-        shutil.rmtree(sink, ignore_errors=True)
-        os.makedirs(sink, exist_ok=True)
-        fresh = True
-    violations = 0
-    refused = 0
-    if fresh:
+    def build(sink: str) -> None:
         txn.add_check(spark, sink, "value_nonneg", "value >= 0")
         txn.add_check(spark, sink, "day_not_null", "day IS NOT NULL")
         ev = Catalog(spark, sf_dir).events.select(
@@ -1045,20 +994,16 @@ def q210_check_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(F.col("value")),
         )
         staged_bad = txn.stage_append(bad, sink, ("day",))
-        try:
+        with contextlib.suppress(txn.CheckViolation):
             txn.commit_append_checked(spark, sink, staged_bad)
-        except txn.CheckViolation as exc:
-            violations = exc.violations
-            refused = 1
-    else:
-        # deterministic on re-invocation: the violation count is
-        # re-derivable from the table and the refusal from the
-        # unchanged version count
-        ev = Catalog(spark, sf_dir).events
-        violations = ev.where(
-            F.col("event_id") % _CHK_BAD_MOD == 0
-        ).count()
-        refused = 1 if len(txn.versions(sink)) == 3 else 0
+
+    sink = built_scratch(spark, sf_dir, "q210", build)
+    # the violation count is re-derivable from the table and the
+    # refusal from the unchanged version count
+    violations = (
+        Catalog(spark, sf_dir).events.where(F.col("event_id") % _CHK_BAD_MOD == 0)
+    ).count()
+    refused = 1 if len(txn.versions(sink)) == 3 else 0
     committed = txn.read_committed(spark, sink).count()
     return spark.createDataFrame(
         [
@@ -1122,13 +1067,7 @@ ORDER BY 1
     tags=("streaming", "txn", "restore", "dv"),
 )
 def q211_restore_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tag = "rst_q211_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink, fresh = session_scratch_dir(spark, tag)
-    if not fresh and len(txn.versions(sink)) != 3:
-        shutil.rmtree(sink, ignore_errors=True)
-        os.makedirs(sink, exist_ok=True)
-        fresh = True
-    if fresh:
+    def build(sink: str) -> None:
         ev = Catalog(spark, sf_dir).events.select(
             "event_id", "value", F.to_date("ts").alias("day")
         )
@@ -1137,6 +1076,8 @@ def q211_restore_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, sink, F.col("event_id") % _RST_MOD == _RST_REM
         )
         txn.restore(sink, 1)
+
+    sink = built_scratch(spark, sf_dir, "q211", build)
     deleted_at_v2 = sum(txn.dv_counts_at(sink, 2).values())
     v2_rows = txn.read_version(spark, sink, 2).count()
     restore_clean = (
@@ -1210,13 +1151,7 @@ ORDER BY version
     tags=("streaming", "txn", "history", "metadata"),
 )
 def q212_describe_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tag = "hst_q212_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink, fresh = session_scratch_dir(spark, tag)
-    if not fresh and len(txn.versions(sink)) != 3:
-        shutil.rmtree(sink, ignore_errors=True)
-        os.makedirs(sink, exist_ok=True)
-        fresh = True
-    if fresh:
+    def build(sink: str) -> None:
         ev = Catalog(spark, sf_dir).events.select(
             "event_id", "value", F.to_date("ts").alias("day")
         )
@@ -1232,6 +1167,8 @@ def q212_describe_history(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, sink, F.col("event_id") % _HIST_MOD == _HIST_REM
         )
         txn.restore(sink, 1)
+
+    sink = built_scratch(spark, sf_dir, "q212", build)
     rows = [
         (
             int(h["version"]),
@@ -1339,13 +1276,7 @@ ORDER BY probe_user
 
 
 def _build_bloom_sink(spark: SparkSession, sf_dir: str) -> str:
-    tag = "bloom_q213_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink, fresh = session_scratch_dir(spark, tag)
-    if not fresh and len(txn.versions(sink)) != 1:
-        shutil.rmtree(sink, ignore_errors=True)
-        os.makedirs(sink, exist_ok=True)
-        fresh = True
-    if fresh:
+    def build(sink: str) -> None:
         ev = Catalog(spark, sf_dir).events.select(
             "event_id",
             "user_id",
@@ -1356,7 +1287,8 @@ def _build_bloom_sink(spark: SparkSession, sf_dir: str) -> str:
         txn.commit_append(
             sink, staged, bloom=txn.build_bloom(spark, sink, staged, "user_id")
         )
-    return sink
+
+    return built_scratch(spark, sf_dir, "q213", build)
 
 
 @register(
@@ -1445,13 +1377,7 @@ def _cdf_sink(spark: SparkSession, sf_dir: str) -> str:
     min-user's rows (DV delete + re-insert in ONE commit — note the
     merge's update set comes from the BASE table, so it also
     re-inserts that user's v3-deleted rows with doubled values)."""
-    tag = "cdf_q214_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink, fresh = session_scratch_dir(spark, tag)
-    if not fresh and len(txn.versions(sink)) != 4:
-        shutil.rmtree(sink, ignore_errors=True)
-        os.makedirs(sink, exist_ok=True)
-        fresh = True
-    if fresh:
+    def build(sink: str) -> None:
         ev = Catalog(spark, sf_dir).events.select(
             "event_id", "user_id", "value", F.to_date("ts").alias("day"), "ts"
         )
@@ -1476,7 +1402,8 @@ def _cdf_sink(spark: SparkSession, sf_dir: str) -> str:
             "day",
         )
         txn.merge_upsert_dv(spark, sink, upd, "event_id", ("day",))
-    return sink
+
+    return built_scratch(spark, sf_dir, "q214", build)
 
 
 _ORACLE_Q214 = f"""
@@ -1757,13 +1684,7 @@ _EVOLVE_BUCKETS = 8
 
 
 def _evolution_sink(spark: SparkSession, sf_dir: str) -> str:
-    tag = "pevo_q218_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink, fresh = session_scratch_dir(spark, tag)
-    if not fresh and len(txn.versions(sink)) != 2:
-        shutil.rmtree(sink, ignore_errors=True)
-        os.makedirs(sink, exist_ok=True)
-        fresh = True
-    if fresh:
+    def build(sink: str) -> None:
         ev = Catalog(spark, sf_dir).events.select(
             "event_id",
             "user_id",
@@ -1793,7 +1714,8 @@ def _evolution_sink(spark: SparkSession, sf_dir: str) -> str:
             txn.stage_append(era2.repartition(F.col("up")), sink, ("up",)),
             partspec=f"bucket({_EVOLVE_BUCKETS}, user_id)",
         )
-    return sink
+
+    return built_scratch(spark, sf_dir, "q218", build)
 
 
 def _evo_read(spark: SparkSession, sink: str, files: list[str]) -> DataFrame:
@@ -1969,11 +1891,8 @@ ORDER BY stage
 def q219_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     from functools import reduce
 
-    tag = "wap_q219_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink, _fresh = session_scratch_dir(spark, tag)
     # the lifecycle IS the query — always rebuild from empty
-    shutil.rmtree(sink, ignore_errors=True)
-    os.makedirs(sink, exist_ok=True)
+    sink = call_scratch(spark, sf_dir, "q219")
     ev = Catalog(spark, sf_dir).events.select(
         "event_id", "user_id", "value", F.to_date("ts").alias("day"), "ts"
     )
@@ -2075,10 +1994,7 @@ FROM nation WHERE n_nationkey < {_TAG_AT}
     tags=("txn", "tags", "retention"),
 )
 def q222_snapshot_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tag_dir = "tags_q222_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink, _fresh = session_scratch_dir(spark, tag_dir)
-    shutil.rmtree(sink, ignore_errors=True)
-    os.makedirs(sink, exist_ok=True)
+    sink = call_scratch(spark, sf_dir, "q222")
     nation = Catalog(spark, sf_dir).nation.select("n_nationkey", "n_name")
     for k in range(25):
         txn.commit_append(
@@ -2144,13 +2060,7 @@ ORDER BY day
     tags=("txn", "metadata", "skipping"),
 )
 def q223_metadata_partition_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tag = "meta_q223_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink, fresh = session_scratch_dir(spark, tag)
-    if not fresh and len(txn.versions(sink)) != 2:
-        shutil.rmtree(sink, ignore_errors=True)
-        os.makedirs(sink, exist_ok=True)
-        fresh = True
-    if fresh:
+    def build(sink: str) -> None:
         ev = Catalog(spark, sf_dir).events.select(
             "event_id", "value", F.to_date("ts").alias("day")
         )
@@ -2160,6 +2070,8 @@ def q223_metadata_partition_counts(spark: SparkSession, sf_dir: str) -> DataFram
         txn.delete_where(
             spark, sink, F.col("event_id") % _META_MOD == _META_REM
         )
+
+    sink = built_scratch(spark, sf_dir, "q223", build)
     live = txn.metadata_count_by_dir(sink)  # after the DV delete
     before = txn.metadata_count_by_dir(sink, version=1)
     rows = [
@@ -2213,13 +2125,7 @@ ORDER BY day
     tags=("txn", "schema-evolution", "column-mapping"),
 )
 def q224_column_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tag = "cmap_q224_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink, fresh = session_scratch_dir(spark, tag)
-    if not fresh and len(txn.versions(sink)) != 3:
-        shutil.rmtree(sink, ignore_errors=True)
-        os.makedirs(sink, exist_ok=True)
-        fresh = True
-    if fresh:
+    def build(sink: str) -> None:
         ev = Catalog(spark, sf_dir).events.select(
             "event_id", "value", F.to_date("ts").alias("day"), "ts"
         )
@@ -2238,6 +2144,8 @@ def q224_column_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
                 txn.to_physical(post.repartition("day"), sink), sink, ("day",)
             ),
         )
+
+    sink = built_scratch(spark, sf_dir, "q224", build)
     # the zero-rewrite invariant is re-verified on EVERY invocation
     # (advisor round-6: a cached session sink previously hard-coded
     # 0): the v1 and v2 listings must be identical sets — the rename
@@ -2316,10 +2224,7 @@ ORDER BY 1
     tags=("streaming", "txn", "delete", "dv", "concurrency"),
 )
 def q227_concurrent_dv_writers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tag = "cc_q227_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink, _fresh = session_scratch_dir(spark, tag)
-    shutil.rmtree(sink, ignore_errors=True)
-    os.makedirs(sink, exist_ok=True)
+    sink = call_scratch(spark, sf_dir, "q227")
     ev = Catalog(spark, sf_dir).events.select(
         "event_id", "value", F.to_date("ts").alias("day")
     )
@@ -2424,13 +2329,7 @@ def _build_dfp_sink(spark: SparkSession, sf_dir: str) -> str:
     repartitioned on b then hive-partitioned by it so each bucket is
     exactly one data file whose footer o_custkey bounds become the
     skip index."""
-    tag = "dfp_q230_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink, fresh = session_scratch_dir(spark, tag)
-    if not fresh and len(txn.versions(sink)) != 1:
-        shutil.rmtree(sink, ignore_errors=True)
-        os.makedirs(sink, exist_ok=True)
-        fresh = True
-    if fresh:
+    def build(sink: str) -> None:
         ords = Catalog(spark, sf_dir).orders.select(
             "o_orderkey", "o_custkey", "o_totalprice"
         )
@@ -2441,7 +2340,8 @@ def _build_dfp_sink(spark: SparkSession, sf_dir: str) -> str:
             sink,
             txn.stage_append(bucketed.repartition(F.col("b")), sink, ("b",)),
         )
-    return sink
+
+    return built_scratch(spark, sf_dir, "q230", build)
 
 
 @register(
@@ -2549,13 +2449,7 @@ def _build_opt_sink(spark: SparkSession, sf_dir: str) -> str:
     """v1: natural ingest layout (one file per day). v2: OPTIMIZE
     ZORDER(u, d) — the same rows rewritten into z-bucketed files via
     one commit_replace."""
-    tag = "opt_q232_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink, fresh = session_scratch_dir(spark, tag)
-    if not fresh and len(txn.versions(sink)) != 2:
-        shutil.rmtree(sink, ignore_errors=True)
-        os.makedirs(sink, exist_ok=True)
-        fresh = True
-    if fresh:
+    def build(sink: str) -> None:
         ev = Catalog(spark, sf_dir).events.select(
             "event_id",
             "value",
@@ -2586,7 +2480,8 @@ def _build_opt_sink(spark: SparkSession, sf_dir: str) -> str:
             txn.stage_append(bucketed.repartition(F.col("b")), sink, ("b",)),
             op="optimize",
         )
-    return sink
+
+    return built_scratch(spark, sf_dir, "q232", build)
 
 
 @register(
@@ -2672,13 +2567,7 @@ FROM base
 
 
 def _build_hp_sink(spark: SparkSession, sf_dir: str) -> str:
-    tag = "hp_q233_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink, fresh = session_scratch_dir(spark, tag)
-    if not fresh and len(txn.versions(sink)) != 1:
-        shutil.rmtree(sink, ignore_errors=True)
-        os.makedirs(sink, exist_ok=True)
-        fresh = True
-    if fresh:
+    def build(sink: str) -> None:
         ev = Catalog(spark, sf_dir).events.select(
             "event_id",
             "value",
@@ -2695,7 +2584,8 @@ def _build_hp_sink(spark: SparkSession, sf_dir: str) -> str:
             txn.stage_append(ev.repartition(F.col("pd")), sink, ("pd",)),
             partspec=f"days(ts, {_Z_EPOCH}) AS d",
         )
-    return sink
+
+    return built_scratch(spark, sf_dir, "q233", build)
 
 
 @register(
@@ -2819,13 +2709,7 @@ def _io_zbucket(df: DataFrame, offset: int) -> DataFrame:
 
 
 def _build_io_sink(spark: SparkSession, sf_dir: str) -> str:
-    tag = "io_q235_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink, fresh = session_scratch_dir(spark, tag)
-    if not fresh and len(txn.versions(sink)) != 3:
-        shutil.rmtree(sink, ignore_errors=True)
-        os.makedirs(sink, exist_ok=True)
-        fresh = True
-    if fresh:
+    def build(sink: str) -> None:
         ev = Catalog(spark, sf_dir).events.select(
             "event_id",
             "value",
@@ -2860,7 +2744,8 @@ def _build_io_sink(spark: SparkSession, sf_dir: str) -> str:
             txn.stage_append(zb2.repartition(F.col("zb")), sink, ("zb",)),
             raw_dirs,
         )
-    return sink
+
+    return built_scratch(spark, sf_dir, "q235", build)
 
 
 @register(
@@ -2923,7 +2808,7 @@ def q235_incremental_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and would close intervals the same way. The oracle re-derives
 # every interval from batch algebra over events: which users
 # changed at which version, with which running count, is pure
-# day-window arithmetic. Rebuilt per invocation at day-split
+# day-window arithmetic. Built once per session at day-split
 # boundaries 10/20 (the merge IS the lifecycle under test).
 
 _SCD_D1, _SCD_D2 = 10, 20
@@ -2961,13 +2846,7 @@ ORDER BY user_id, valid_from
 
 
 def _build_scd_sink(spark: SparkSession, sf_dir: str) -> str:
-    tag = "scd_q238_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink, fresh = session_scratch_dir(spark, tag)
-    if not fresh and len(txn.versions(sink)) != 3:
-        shutil.rmtree(sink, ignore_errors=True)
-        os.makedirs(sink, exist_ok=True)
-        fresh = True
-    if fresh:
+    def build(sink: str) -> None:
         base = Catalog(spark, sf_dir).events.select(
             "user_id",
             F.datediff(F.to_date("ts"), F.lit(_Z_EPOCH).cast("date")).alias(
@@ -2994,7 +2873,8 @@ def _build_scd_sink(spark: SparkSession, sf_dir: str) -> str:
                 .withColumn("p", F.col("user_id") % 4)
             )
             txn.merge_upsert_dv(spark, sink, upd, "user_id", ("p",))
-    return sink
+
+    return built_scratch(spark, sf_dir, "q238", build)
 
 
 @register(
@@ -3077,13 +2957,7 @@ FROM base
     tags=("txn", "metadata", "maintenance"),
 )
 def q242_table_health(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tag = "th_q242_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink, fresh = session_scratch_dir(spark, tag)
-    if not fresh and len(txn.versions(sink)) != 2:
-        shutil.rmtree(sink, ignore_errors=True)
-        os.makedirs(sink, exist_ok=True)
-        fresh = True
-    if fresh:
+    def build(sink: str) -> None:
         ev = Catalog(spark, sf_dir).events.select(
             "event_id", F.to_date("ts").alias("day")
         )
@@ -3091,6 +2965,8 @@ def q242_table_health(spark: SparkSession, sf_dir: str) -> DataFrame:
             sink, txn.stage_append(ev.repartition(F.col("day")), sink, ("day",))
         )
         txn.delete_where(spark, sink, F.col("event_id") % _TH_MOD == 0)
+
+    sink = built_scratch(spark, sf_dir, "q242", build)
     h = txn.table_health(sink)
     return spark.createDataFrame(
         [(
@@ -3152,11 +3028,8 @@ FROM agg a, ranked r
     tags=("txn", "dv", "delete", "gdpr"),
 )
 def q243_gdpr_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tag = "gdpr_q243_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink, _fresh = session_scratch_dir(spark, tag)
     # rebuilt per invocation: the erasure IS the query
-    shutil.rmtree(sink, ignore_errors=True)
-    os.makedirs(sink, exist_ok=True)
+    sink = call_scratch(spark, sf_dir, "q243")
     ev = Catalog(spark, sf_dir).events.select(
         "event_id", "user_id", F.to_date("ts").alias("day")
     )
@@ -3255,13 +3128,7 @@ FROM base
     tags=("txn", "maintenance", "compaction"),
 )
 def q245_auto_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tag = "ac_q245_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink, fresh = session_scratch_dir(spark, tag)
-    if not fresh and len(txn.versions(sink)) != 5:
-        shutil.rmtree(sink, ignore_errors=True)
-        os.makedirs(sink, exist_ok=True)
-        fresh = True
-    if fresh:
+    def build(sink: str) -> None:
         ev = Catalog(spark, sf_dir).events.select(
             "event_id",
             "value",
@@ -3295,6 +3162,8 @@ def q245_auto_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             txn.stage_append(raw.repartition(F.col("day")), sink, ("day",)),
             op="optimize",
         )
+
+    sink = built_scratch(spark, sf_dir, "q245", build)
     # ---- evidence, recomputed from the log on every invocation
     v4 = txn.listing_at(sink, 4)
     head = txn.committed_files(sink)
@@ -3368,18 +3237,8 @@ FROM events
     tags=("txn", "check", "quality", "ingest"),
 )
 def q246_quarantine_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    main, fresh_m = session_scratch_dir(spark, "qi_main_q246_" + tag)
-    quar, _fresh_q = session_scratch_dir(spark, "qi_quar_q246_" + tag)
-    if not fresh_m and (
-        len(txn.versions(main)) != 2 or len(txn.versions(quar)) != 1
-    ):
-        for d in (main, quar):
-            shutil.rmtree(d, ignore_errors=True)
-            os.makedirs(d, exist_ok=True)
-        fresh_m = True
-    refused_violations = None
-    if fresh_m:
+    def build(root: str) -> None:
+        main, quar = os.path.join(root, "main"), os.path.join(root, "quarantine")
         txn.add_check(spark, main, "value_floor", _QI_EXPR)  # v1
         ev = Catalog(spark, sf_dir).events.select(
             "event_id", "value", F.to_date("ts").alias("day")
@@ -3389,8 +3248,8 @@ def q246_quarantine_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         try:
             txn.commit_append_checked(spark, main, staged_all)
             raise AssertionError("violating batch was not refused")
-        except txn.CheckViolation as e:
-            refused_violations = e.violations
+        except txn.CheckViolation:
+            pass
         # 2) split on the TABLE'S declared rule, not the job's copy
         rule = txn.checks_at(main)["value_floor"]
         clean = ev.where(F.expr(rule))
@@ -3401,8 +3260,11 @@ def q246_quarantine_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, main, txn.stage_append(clean, main, ("day",))
         )  # v2
         txn.commit_append(quar, txn.stage_append(bad, quar, ("day",)))
-    if refused_violations is None:  # cached sink: re-derive, metadata-free
-        refused_violations = txn.metadata_agg(quar)["count"]
+
+    root = built_scratch(spark, sf_dir, "q246", build)
+    main, quar = os.path.join(root, "main"), os.path.join(root, "quarantine")
+    # the refused rows are exactly the quarantined ones: metadata-only
+    refused_violations = txn.metadata_agg(quar)["count"]
     main_count = txn.metadata_agg(main)["count"]
     quar_count = txn.metadata_agg(quar)["count"]
     bad_visible = (

@@ -1503,9 +1503,10 @@ def _commit(
     replace_all: bool = False,
     drop_dirs: list[str] | None = None,
     op: str | None = None,
-) -> bool:
+) -> int | None:
     """Build one commit's delta lines and publish them through
-    :func:`_publish` (the CAS loop, retried on contention).
+    :func:`_publish` (the CAS loop, retried on contention). Returns
+    the committed version.
 
     ``op`` (round 9) records COMMIT INTENT as a ``#op\\t<name>``
     metadata line — the analog of Delta's ``operation`` field on
@@ -1532,7 +1533,7 @@ def _commit(
 
     With ``expected_version`` set, the commit is CONDITIONAL: it only
     publishes while the log head is exactly that version (0 = no
-    commits yet) and returns False the moment any other writer lands
+    commits yet) and returns None the moment any other writer lands
     first — blind retry would be a lost update for a rewrite derived
     from the old snapshot (Delta's ConcurrentModificationException)."""
     stats = _collect_stats(sink_dir, new_files)
@@ -1574,7 +1575,7 @@ def _commit(
                 drops |= {os.path.dirname(f) for f in head().listing}
         return [f"~{d}" for d in sorted(drops)] + added
 
-    return _publish(sink_dir, op, delta, expected_version) is not None
+    return _publish(sink_dir, op, delta, expected_version)
 
 
 def _publish(
@@ -1778,7 +1779,7 @@ def add_check(spark: SparkSession, sink_dir: str, name: str, expr: str) -> None:
 
 def commit_append_checked(
     spark: SparkSession, sink_dir: str, new_files: list[str]
-) -> None:
+) -> int:
     """:func:`commit_append` gated on the snapshot's CHECK
     constraints: the staged batch is validated (one scan of the NEW
     files only — O(batch), never O(table)) and a violating batch
@@ -1786,17 +1787,31 @@ def commit_append_checked(
     never observe a row that failed a check, which is the write-side
     quality gate a 100 TB ingest needs (a bad batch caught at commit
     time costs one batch scan; caught downstream it costs a
-    table-wide audit + DV erasure)."""
-    snap = _snap(sink_dir)
-    if snap.checks and new_files:
-        from pyspark.sql import functions as F
+    table-wide audit + DV erasure). The commit lands only on the
+    version whose checks were validated; when another writer lands
+    first, the batch is re-validated if that changed the checks (a
+    concurrent ADD CONSTRAINT, Delta's metadata conflict) and the
+    commit retries. Returns the committed version."""
+    from pyspark.sql import functions as F
 
-        df = _read_files(spark, sink_dir, snap, new_files)
-        for name, expr in sorted(snap.checks.items()):
-            bad = df.where(~F.expr(expr)).count()
-            if bad:
-                raise CheckViolation(name, expr, bad)
-    commit_append(sink_dir, new_files)
+    validated = None
+    while True:
+        vs = versions(sink_dir)
+        head = vs[-1] if vs else 0
+        snap = _snapshot_at(sink_dir, head) if head else EMPTY
+        if snap.checks and snap.checks != validated and new_files:
+            df = _read_files(spark, sink_dir, snap, new_files)
+            for name, expr in sorted(snap.checks.items()):
+                bad = df.where(~F.expr(expr)).count()
+                if bad:
+                    raise CheckViolation(name, expr, bad)
+        validated = snap.checks
+        version = _commit(
+            sink_dir, list(new_files), replace=False, expected_version=head,
+            op="write",
+        )
+        if version is not None:
+            return version
 
 
 def commit_replace(
@@ -1864,7 +1879,7 @@ def commit_replace_if(
         replace=True,
         expected_version=expected_version,
         op=op,
-    )
+    ) is not None
 
 
 def vacuum(
@@ -2614,12 +2629,12 @@ def wap_publish(spark: SparkSession, sink_dir: str, branch: str) -> int:
     ``branch`` as ONE atomic commit, gated on the snapshot's CHECK
     constraints (scanning only the branch files — O(branch)). On
     CheckViolation NOTHING publishes and the branch stays staged
-    (fix or abandon). Returns the new head version; the branch
+    (fix or abandon). Returns the version it committed; the branch
     records are retired on success."""
     staged = wap_files(sink_dir, branch)
-    commit_append_checked(spark, sink_dir, staged)
+    version = commit_append_checked(spark, sink_dir, staged)
     wap_abandon(sink_dir, branch)  # retire records; files are now committed
-    return versions(sink_dir)[-1]
+    return version
 
 
 def wap_abandon(sink_dir: str, branch: str) -> int:

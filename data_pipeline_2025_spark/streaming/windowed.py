@@ -18,11 +18,11 @@ from __future__ import annotations
 
 import itertools
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import built_scratch, call_scratch
 from ..catalog import table_path
 from ..functions.money import dec, money_out
 from ..registry import register
@@ -518,13 +518,8 @@ ORDER BY window_start, event_type
     tags=("streaming", "watermark", "late-data"),
 )
 def q137_late_data_drops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    from ..artifacts import artifact_path
-
-    run = uuid.uuid4().hex[:12]
-    src = artifact_path(sf_dir, f"late_run/{run}/in")
-    ckpt = artifact_path(sf_dir, f"late_run/{run}/ckpt")
+    root = call_scratch(spark, sf_dir, "q137")
+    src, ckpt = os.path.join(root, "in"), os.path.join(root, "ckpt")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     _split_events_by_time(spark, sf_dir, src)
@@ -780,28 +775,7 @@ ORDER BY event_type
     tags=("streaming", "state", "introspection"),
 )
 def q161_state_store_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-
-    from ..session import session_scratch_dir
-
-    # Session-scoped checkpoint: the streaming probe runs once per
-    # (session, sf_dir); later invocations read the same state files
-    # (removed at interpreter exit) — a per-call mkdtemp leaked a
-    # checkpoint per run.
-    tag = "state_q161_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    ck, fresh = session_scratch_dir(spark, tag)
-    # Partial-build guard (round-5 advisor): session_scratch_dir
-    # registers the dir BEFORE the streaming probe runs, so a crash
-    # mid-build would hand every later invocation fresh=False over a
-    # broken checkpoint. A completion marker (written only after
-    # awaitTermination) is the q162-style version-count guard for a
-    # state-store checkpoint; absent marker → wipe and rebuild.
-    marker = os.path.join(ck, "_probe_complete")
-    if not fresh and not os.path.exists(marker):
-        shutil.rmtree(ck, ignore_errors=True)
-        os.makedirs(ck, exist_ok=True)
-        fresh = True
-    if fresh:
+    def build(ck: str) -> None:
         agg = (
             _events_stream(spark, sf_dir)
             .groupBy("event_type")
@@ -817,8 +791,8 @@ def q161_state_store_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        with open(marker, "w", encoding="utf-8") as f:
-            f.write("ok\n")
+
+    ck = built_scratch(spark, sf_dir, "q161", build)
     state = spark.read.format("statestore").load(ck)
     return state.select(
         F.col("key.event_type").alias("event_type"),
@@ -872,21 +846,12 @@ ORDER BY event_type
     tags=("streaming", "txn", "upsert", "dv"),
 )
 def q220_stream_dv_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid as _uuid
-
-    from ..session import session_scratch_dir
     from . import txn
 
-    import hashlib as _hashlib
+    root = call_scratch(spark, sf_dir, "q220")
+    sink = os.path.join(root, "sink")
 
-    tag = "dvup_q220_" + _hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    sink, _fresh = session_scratch_dir(spark, tag)
-    shutil.rmtree(sink, ignore_errors=True)
-    os.makedirs(sink, exist_ok=True)
-    ckpt_root = sink + "_ckpt"
-    shutil.rmtree(ckpt_root, ignore_errors=True)
-
-    def _run_stream() -> None:
+    def _run_stream(ckpt: str) -> None:
         # duplicate delivery: every event arrives twice
         doubled = _events_stream(spark, sf_dir).unionByName(
             _events_stream(spark, sf_dir)
@@ -912,20 +877,17 @@ def q220_stream_dv_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         q = (
             sel.writeStream.foreachBatch(_apply)
-            .option(
-                "checkpointLocation",
-                os.path.join(ckpt_root, _uuid.uuid4().hex[:12]),
-            )
+            .option("checkpointLocation", os.path.join(root, ckpt))
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
 
-    _run_stream()
+    _run_stream("ckpt1")
     first = txn.read_committed(spark, sink)  # snapshot-isolated plan
     # crash-recovery worst case: replay the WHOLE stream from a
     # fresh checkpoint — every batch redelivered, table unchanged
-    _run_stream()
+    _run_stream("ckpt2")
     second = txn.read_committed(spark, sink)
     a = first.select(
         "event_id",

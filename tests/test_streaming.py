@@ -450,104 +450,6 @@ def test_ivf_indexer_end_to_end(spark, tmp_path):
     assert spark.read.parquet(index).count() == 10  # replay absorbed
 
 
-def test_compaction_preserves_rows_and_skips_healthy_partitions(spark, tmp_path):
-    """maintenance.compact_partitioned_table: a day partition with
-    many small files is rewritten to few; row count + content hash
-    are unchanged; partitions under the threshold are not touched
-    (directory mtime-stable); a second run is a no-op."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from data_pipeline_2025_spark.maintenance import (
-        compact_partitioned_table,
-        table_row_fingerprint,
-    )
-
-    table = str(tmp_path / "silver")
-    # day=2024-01-01: 6 tiny files (append per "micro-batch")
-    for i in range(6):
-        (
-            spark.range(i * 10, (i + 1) * 10)
-            .select(
-                F.col("id").alias("event_id"),
-                F.lit("2024-01-01").alias("day"),
-            )
-            .coalesce(1)
-            .write.mode("append")
-            .partitionBy("day")
-            .parquet(table)
-        )
-    # day=2024-01-02: single healthy file
-    (
-        spark.range(100, 120)
-        .select(F.col("id").alias("event_id"), F.lit("2024-01-02").alias("day"))
-        .coalesce(1)
-        .write.mode("append")
-        .partitionBy("day")
-        .parquet(table)
-    )
-    before = table_row_fingerprint(spark, table)
-    healthy = os.path.join(table, "day=2024-01-02")
-    healthy_mtime = os.path.getmtime(healthy)
-
-    touched = compact_partitioned_table(spark, table, min_files=4)
-    assert set(touched) == {"day=2024-01-01"}
-    files_before, files_after = touched["day=2024-01-01"]
-    assert files_before == 6 and files_after < files_before
-    assert table_row_fingerprint(spark, table) == before
-    assert os.path.getmtime(healthy) == healthy_mtime  # untouched
-
-    assert compact_partitioned_table(spark, table, min_files=4) == {}
-
-
-def test_compaction_crash_leftovers_invisible_and_cleaned(spark, tmp_path):
-    """Round-3 advisor finding: compaction scratch dirs must be
-    invisible to Spark partition discovery if a crash leaves them
-    behind, and the next run must clean them before compacting.
-    Simulates the worst leftover state (a stale _compact_tmp with
-    DIFFERENT rows plus a stale _compact_trash) and asserts reads
-    are unaffected and one compaction pass heals the directory."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from data_pipeline_2025_spark.maintenance import (
-        _scratch_dirs,
-        compact_partitioned_table,
-        table_row_fingerprint,
-    )
-
-    table = str(tmp_path / "silver")
-    for i in range(5):
-        (
-            spark.range(i * 10, (i + 1) * 10)
-            .select(F.col("id").alias("event_id"), F.lit("2024-01-01").alias("day"))
-            .coalesce(1)
-            .write.mode("append")
-            .partitionBy("day")
-            .parquet(table)
-        )
-    before = table_row_fingerprint(spark, table)
-
-    # crash leftovers: a half-written staging dir with WRONG rows and
-    # a trash dir with a stale copy of the partition
-    part = os.path.join(table, "day=2024-01-01")
-    staging, trash = _scratch_dirs(part)
-    spark.range(900, 950).select(F.col("id").alias("event_id")).write.parquet(staging)
-    spark.range(700, 710).select(F.col("id").alias("event_id")).write.parquet(trash)
-
-    # leftovers are invisible to partition discovery (leading "_")
-    assert table_row_fingerprint(spark, table) == before
-
-    touched = compact_partitioned_table(spark, table, min_files=4)
-    assert set(touched) == {"day=2024-01-01"}
-    assert table_row_fingerprint(spark, table) == before
-    # scratch (stale AND this run's) fully cleaned up
-    leftovers = [n for n in os.listdir(table) if n.startswith("_compact")]
-    assert leftovers == []
-
-
 def test_dedup_gate_crash_between_verdicts_and_store(spark, tmp_path):
     """q120's two-write window: the gate writes verdicts BEFORE
     signatures. Simulate a crash exactly between the writes (first

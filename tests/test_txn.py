@@ -2581,3 +2581,72 @@ def test_read_pins_one_version(spark, tmp_path, monkeypatch, reader):
     assert got == sorted(want)
     head = txn.read_committed(spark, sink)
     assert {r["id"] for r in head.collect()} == {100, 101, 102}
+
+
+# A CHECK recorded while a checked append is between its read and its
+# commit must still gate that batch; a concurrent plain append must
+# not turn into a refusal. Both writers are injected right after the
+# append's first log listing.
+
+
+def _inject_after_first_listing(monkeypatch, action):
+    real_versions = txn.versions
+    fired = []
+
+    def versions_then_act(sink_dir):
+        vs = real_versions(sink_dir)
+        if not fired:
+            fired.append(vs)
+            action()
+        return vs
+
+    monkeypatch.setattr(txn, "versions", versions_then_act)
+    return fired
+
+
+def test_checked_append_sees_check_added_mid_commit(spark, tmp_path, monkeypatch):
+    sink = str(tmp_path / "t")
+    txn.commit_append(sink, txn.stage_append(_mk(spark, 0, 3, "a"), sink, ("day",)))
+    bad = spark.range(1).select(F.lit(-5).cast("bigint").alias("id"), F.lit("a").alias("day"))
+    staged = txn.stage_append(bad, sink, ("day",))
+    fired = _inject_after_first_listing(
+        monkeypatch, lambda: txn.add_check(spark, sink, "nonneg", "id >= 0")
+    )
+    with pytest.raises(txn.CheckViolation) as exc:
+        txn.commit_append_checked(spark, sink, staged)
+    assert fired == [[1]] and exc.value.name == "nonneg"
+    assert txn.checks_at(sink) == {"nonneg": "id >= 0"}
+    assert _rows(spark, sink) == {(i, "a") for i in range(3)}
+
+
+def test_checked_append_retries_past_concurrent_append(spark, tmp_path, monkeypatch):
+    sink = str(tmp_path / "t")
+    txn.add_check(spark, sink, "nonneg", "id >= 0")  # v1
+    mine = txn.stage_append(_mk(spark, 0, 3, "a"), sink, ("day",))
+    theirs = txn.stage_append(_mk(spark, 10, 12, "b"), sink, ("day",))
+    fired = _inject_after_first_listing(
+        monkeypatch, lambda: txn.commit_append(sink, theirs)  # v2
+    )
+    assert txn.commit_append_checked(spark, sink, mine) == 3
+    assert fired == [[1]]
+    assert _rows(spark, sink) == {(i, "a") for i in range(3)} | {
+        (10, "b"),
+        (11, "b"),
+    }
+
+
+def test_wap_publish_returns_its_own_version(spark, tmp_path, monkeypatch):
+    sink = str(tmp_path / "t")
+    txn.commit_append(sink, txn.stage_append(_mk(spark, 0, 3, "a"), sink, ("day",)))
+    txn.wap_stage(sink, "b", txn.stage_append(_mk(spark, 3, 5, "a"), sink, ("day",)))
+    other = txn.stage_append(_mk(spark, 7, 8, "c"), sink, ("day",))
+    real_abandon = txn.wap_abandon
+
+    def abandon_then_append(sink_dir, branch):
+        n = real_abandon(sink_dir, branch)
+        txn.commit_append(sink, other)  # v3, another writer
+        return n
+
+    monkeypatch.setattr(txn, "wap_abandon", abandon_then_append)
+    assert txn.wap_publish(spark, sink, "b") == 2
+    assert txn.versions(sink) == [1, 2, 3]

@@ -42,32 +42,38 @@ def table_path(sf_dir: str, name: str) -> str:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    if name == "events":
-        # Defensive confs for sessions that didn't come from
-        # session.get_spark (e.g. the grading driver's own):
-        # nanosAsLong makes a TIMESTAMP(NANOS) ts readable (older
-        # generator versions); UTC makes the NTZ→LTZ cast below
-        # epoch-exact and renders timestamps identically to DuckDB's
-        # timezone-naive values.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(table_path(sf_dir, name))
-    if name == "events":
-        # Normalize ts to TIMESTAMP whatever the generator wrote:
-        # - TIMESTAMP(NANOS) → long nanos under nanosAsLong →
-        #   truncate to µs exactly like DuckDB's ns→µs conversion;
-        # - timestamp[us] without tz → TIMESTAMP_NTZ → reinterpret
-        #   the wall clock as UTC (session tz pinned above), which is
-        #   bit-identical to what DuckDB reads into its naive
-        #   TIMESTAMP. Downstream epoch math (unix_micros, windows,
-        #   watermarks) requires the LTZ type.
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import LongType, TimestampNTZType
+    if name != "events":
+        return spark.read.parquet(table_path(sf_dir, name))
+    # Defensive confs for sessions that didn't come from
+    # session.get_spark:
+    # nanosAsLong makes a TIMESTAMP(NANOS) ts readable (older
+    # generator versions); UTC makes normalize_ts's NTZ→LTZ cast
+    # epoch-exact and renders timestamps identically to DuckDB's
+    # timezone-naive values.
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    return normalize_ts(spark.read.parquet(table_path(sf_dir, name)))
 
-        if isinstance(df.schema["ts"].dataType, LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(df.schema["ts"].dataType, TimestampNTZType):
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+
+def normalize_ts(df: DataFrame) -> DataFrame:
+    """Normalize an events ``ts`` to TIMESTAMP whatever the generator
+    wrote (a frame without ``ts`` passes through):
+
+    - TIMESTAMP(NANOS) → long nanos under nanosAsLong → truncate to
+      µs exactly like DuckDB's ns→µs conversion;
+    - timestamp[us] without tz → TIMESTAMP_NTZ → reinterpret the wall
+      clock as UTC (the caller pins the session tz), which is
+      bit-identical to what DuckDB reads into its naive TIMESTAMP.
+
+    Downstream epoch math (unix_micros, windows, watermarks) requires
+    the LTZ type. Works on batch and streaming frames alike."""
+    from pyspark.sql import functions as F
+
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_type == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 

@@ -24,6 +24,7 @@ import glob
 import os
 import random
 import shutil
+import time
 from datetime import datetime, timedelta
 from decimal import Decimal, ROUND_HALF_UP
 
@@ -220,3 +221,22 @@ def write_single_file(df, dst: str, mtime: float | None = None) -> None:
     shutil.rmtree(tmp)
     if mtime is not None:
         os.utime(dst, (mtime, mtime))
+
+
+def split_ascending(spark, path: str, id_col: str, out_dir: str, parts: int = 3) -> None:
+    """Write the parquet table at ``path`` into ``out_dir`` as
+    ``parts`` single files of ascending ``id_col`` ranges with
+    increasing mtimes, so a one-file-per-batch stream replays a
+    time-ordered crawl (oldest first)."""
+    from pyspark.sql import functions as F
+
+    table = spark.read.parquet(path)
+    max_id = table.agg(F.max(id_col)).collect()[0][0] or 0
+    step = max_id // parts + 1
+    os.makedirs(out_dir, exist_ok=True)
+    now = time.time()
+    for p in range(parts):
+        in_range = (F.col(id_col) >= p * step) & (F.col(id_col) < (p + 1) * step)
+        write_single_file(
+            table.where(in_range), os.path.join(out_dir, f"part{p:03d}.parquet"), now + p
+        )

@@ -2,6 +2,9 @@
 to-end version of q75's pattern (operators/events.py): a
 materialized hourly rollup that updates INCREMENTALLY as micro-
 batches land, touching only the day partitions the batch contains.
+``start_events_rollup`` keeps any per-day rollup this way: the
+hourly rollup here (q83) and the count-min sketch partials in
+streaming/cms.py (q97).
 
 The reference's analog is the "prices per hour"-style rollup served
 from Postgres tables kept fresh by the consumer container (SURVEY.md
@@ -13,9 +16,8 @@ Shape per micro-batch (foreachBatch):
    partitioned by event day — the same partition-bounded anti-join
    upsert as the price ingest (streaming/ingest.py), so duplicate
    file delivery / checkpoint replay never duplicates rows;
-2. recompute the hourly rollup FOR THE TOUCHED DAYS ONLY from
-   silver, and dynamic-partition-overwrite exactly those day
-   partitions of the rollup table.
+2. recompute the rollup FOR THE TOUCHED DAYS ONLY from silver, and
+   replace exactly those day partitions of the rollup table.
 
 Recompute-from-silver (rather than merging batch partials into the
 rollup) is what makes a crash-replayed batch idempotent: step 1
@@ -28,12 +30,14 @@ arrival window, not the table size.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from . import txn
+from .stream import file_stream
 
 from ..functions.money import dec, money_out
 
@@ -54,30 +58,21 @@ def _hourly_partial(events: DataFrame) -> DataFrame:
     )
 
 
-def start_events_cagg(
+def start_events_rollup(
     spark: SparkSession,
     source_dir: str,
     silver_dir: str,
-    rollup_dir: str,
+    out_dir: str,
     checkpoint_dir: str,
+    partial: Callable[[DataFrame], DataFrame],
     glob: str | None = None,
 ) -> StreamingQuery:
-    """Maintain silver events + the hourly rollup from a parquet file
+    """Maintain silver events + the rollup ``partial(silver rows of
+    the touched days)``, partitioned by day, from a parquet file
     stream (AvailableNow: drain-and-stop for tests/backfills; swap
     the trigger for a cadence to mirror the reference's poller).
-    ``glob`` narrows a mixed directory to one table's files (the
-    file source wants a directory, not a file path)."""
-    schema_src = source_dir if glob is None else os.path.join(source_dir, glob)
-    schema = spark.read.parquet(schema_src).schema
-    reader = spark.readStream.schema(schema)
-    if glob is not None:
-        reader = reader.option("pathGlobFilter", glob)
-    stream = reader.parquet(source_dir)
-    ts_type = dict(stream.dtypes)["ts"]
-    if ts_type == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    ``glob`` narrows a mixed directory to one table's files."""
+    stream = file_stream(spark, source_dir, glob=glob)
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
         spark_ = batch.sparkSession
@@ -108,12 +103,12 @@ def start_events_cagg(
         # transaction (Spark's native partitionOverwriteMode=dynamic
         # deletes files per-partition during job commit — a crash
         # mid-commit could leave a mixed old/new rollup visible).
-        fresh = _hourly_partial(
+        fresh = partial(
             txn.read_committed(spark_, silver_dir)
             .where(F.col(DAY_COL).isin(touched))
         )
         txn.commit_replace(
-            rollup_dir, txn.stage_append(fresh, rollup_dir, (DAY_COL,))
+            out_dir, txn.stage_append(fresh, out_dir, (DAY_COL,))
         )
 
     return (
@@ -128,11 +123,8 @@ def serve_hourly(spark: SparkSession, rollup_dir: str) -> DataFrame:
     """The serving view over the maintained rollup (same output
     schema as q75 / q50): reads ONLY the materialized table — no
     touch of the raw events."""
-    rollup = txn.read_committed(spark, rollup_dir)
-    if rollup is None:  # legacy / externally-written table
-        rollup = spark.read.parquet(rollup_dir)
     return (
-        rollup
+        txn.read_committed(spark, rollup_dir)
         .select(
             "window_start",
             "event_type",
@@ -167,13 +159,8 @@ def q83_stream_cagg_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     silver, rollup, ckpt = (
         os.path.join(root, d) for d in ("silver", "rollup", "ckpt")
     )
-    # same defensive confs as the other streaming queries: a bare
-    # session must read the events parquet and render timestamps
-    # UTC-naively like DuckDB
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    start_events_cagg(
-        spark, sf_dir, silver, rollup, ckpt, glob="events.parquet"
+    start_events_rollup(
+        spark, sf_dir, silver, rollup, ckpt, _hourly_partial, glob="events.parquet"
     ).awaitTermination()
     return serve_hourly(spark, rollup)
 

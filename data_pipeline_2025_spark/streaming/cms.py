@@ -3,8 +3,8 @@ sketch story (operators/sketches.py q79) run END-TO-END by a real
 stream, the way a 100 TB deployment would actually keep frequency
 state fresh.
 
-Per micro-batch (foreachBatch, same skeleton as the continuous
-aggregate in streaming/cagg.py):
+Per micro-batch (foreachBatch, cagg.start_events_rollup — the
+continuous aggregate's own maintenance loop):
 
 1. idempotent silver append of the batch's events, partitioned by
    event day (partition-bounded anti-join — replayed batches are
@@ -33,13 +33,12 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from . import txn
+from .cagg import DAY_COL, start_events_rollup
 
 from ..operators.sketches import CMS_DEPTH, _cms_bucket, _cms_bucket_sql
 
-DAY_COL = "day"
 TOP_USERS = 20
 
 
@@ -64,72 +63,11 @@ def _day_partial_sketch(events: DataFrame) -> DataFrame:
     )
 
 
-def start_events_cms(
-    spark: SparkSession,
-    source_dir: str,
-    silver_dir: str,
-    sketch_dir: str,
-    checkpoint_dir: str,
-    glob: str | None = None,
-) -> StreamingQuery:
-    """Maintain silver events + per-day CMS partials from a parquet
-    file stream (AvailableNow for tests/backfills)."""
-    schema_src = source_dir if glob is None else os.path.join(source_dir, glob)
-    schema = spark.read.parquet(schema_src).schema
-    reader = spark.readStream.schema(schema)
-    if glob is not None:
-        reader = reader.option("pathGlobFilter", glob)
-    stream = reader.parquet(source_dir)
-    ts_type = dict(stream.dtypes)["ts"]
-    if ts_type == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-
-    def upsert(batch: DataFrame, batch_id: int) -> None:
-        spark_ = batch.sparkSession
-        batch = batch.withColumn(DAY_COL, F.to_date("ts"))
-        touched = [r[DAY_COL] for r in batch.select(DAY_COL).distinct().collect()]
-        if not touched:
-            return
-        # txn manifest on both sinks (see streaming/txn.py): the
-        # anti-join reads only COMMITTED silver (crash orphans can't
-        # absorb a replay) and each write publishes atomically.
-        committed = txn.read_committed(spark_, silver_dir)
-        if committed is not None:
-            existing = (
-                committed
-                .where(F.col(DAY_COL).isin(touched))
-                .select("event_id")
-            )
-            batch = batch.join(existing, "event_id", "left_anti")
-        txn.commit_append(
-            silver_dir, txn.stage_append(batch, silver_dir, (DAY_COL,))
-        )
-        fresh = _day_partial_sketch(
-            txn.read_committed(spark_, silver_dir)
-            .where(F.col(DAY_COL).isin(touched))
-        )
-        txn.commit_replace(
-            sketch_dir, txn.stage_append(fresh, sketch_dir, (DAY_COL,))
-        )
-
-    return (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def merged_sketch(spark: SparkSession, sketch_dir: str) -> DataFrame:
     """Cell-wise merge of the per-day partials — the CMS merge
     operation itself (d·w rows out, however many days in)."""
-    sk = txn.read_committed(spark, sketch_dir)
-    if sk is None:  # legacy / externally-written table
-        sk = spark.read.parquet(sketch_dir)
     return (
-        sk
+        txn.read_committed(spark, sketch_dir)
         .groupBy("r", "b")
         .agg(F.sum("cnt").cast("bigint").alias("cnt"))
     )
@@ -175,10 +113,8 @@ def q97_stream_cms_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     silver, sketch, ckpt = (
         os.path.join(root, d) for d in ("silver", "sketch", "ckpt")
     )
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    start_events_cms(
-        spark, sf_dir, silver, sketch, ckpt, glob="events.parquet"
+    start_events_rollup(
+        spark, sf_dir, silver, sketch, ckpt, _day_partial_sketch, glob="events.parquet"
     ).awaitTermination()
     grid = merged_sketch(spark, sketch)
     # probe: top-N exact heavy users (raw table, as in q79 — the

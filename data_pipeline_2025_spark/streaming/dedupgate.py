@@ -48,7 +48,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from . import txn
+from .stream import file_stream
 
+from ..catalog import table_path
+from ..fixtures import split_ascending
 from ..operators.dedup import (
     NUM_HASHES,
     SHINGLES_SQL,
@@ -115,16 +118,11 @@ def start_dedup_gate(
     store_dir: str,
     verdict_dir: str,
     checkpoint_dir: str,
-    glob: str | None = None,
 ) -> StreamingQuery:
-    """Admit/reject a documents file stream against the persistent
-    signature store (AvailableNow for tests/backfills)."""
-    schema_src = source_dir if glob is None else os.path.join(source_dir, glob)
-    schema = spark.read.parquet(schema_src).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-    if glob is not None:
-        reader = reader.option("pathGlobFilter", glob)
-    stream = reader.parquet(source_dir)
+    """Admit/reject a documents file stream (one file per micro-batch,
+    AvailableNow for tests/backfills) against the persistent
+    signature store."""
+    stream = file_stream(spark, source_dir, max_files=1)
 
     def gate(batch: DataFrame, batch_id: int) -> None:
         spark_ = batch.sparkSession
@@ -174,30 +172,6 @@ def start_dedup_gate(
     )
 
 
-def split_ascending(
-    spark: SparkSession, sf_dir: str, out_dir: str, parts: int = 3
-) -> None:
-    """Write the documents table as `parts` single-file ascending
-    doc_id ranges with increasing mtimes, so the file stream replays
-    a time-ordered crawl (oldest first)."""
-    import time
-
-    from ..fixtures import write_single_file
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    max_id = docs.agg(F.max("doc_id")).collect()[0][0] or 0
-    step = max_id // parts + 1
-    os.makedirs(out_dir, exist_ok=True)
-    now = time.time()
-    for p in range(parts):
-        lo, hi = p * step, (p + 1) * step
-        write_single_file(
-            docs.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)),
-            os.path.join(out_dir, f"part{p:03d}.parquet"),
-            now + p,
-        )
-
-
 _ORACLE_Q120 = f"""
 WITH {SHINGLES_SQL},
 minhash AS (
@@ -237,13 +211,9 @@ def q120_stream_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     src, store, verdicts, ckpt = (
         os.path.join(root, d) for d in ("in", "store", "verdicts", "ckpt")
     )
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    split_ascending(spark, sf_dir, src)
+    split_ascending(spark, table_path(sf_dir, "documents"), "doc_id", src)
     start_dedup_gate(spark, src, store, verdicts, ckpt).awaitTermination()
-    served = txn.read_committed(spark, verdicts)
-    if served is None:  # legacy / externally-written sink
-        served = spark.read.parquet(verdicts)
-    return served.orderBy("doc_id")
+    return txn.read_committed(spark, verdicts).orderBy("doc_id")
 
 
 def _register() -> None:

@@ -31,7 +31,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from . import txn
+from .stream import file_stream
 
+from ..catalog import table_path
+from ..fixtures import split_ascending
 from ..operators.similarity import _IVF_CTE, N_CENTROIDS
 
 
@@ -85,16 +88,11 @@ def start_ivf_indexer(
     index_dir: str,
     checkpoint_dir: str,
     centroids: DataFrame,
-    glob: str | None = None,
 ) -> StreamingQuery:
-    """Assign an embeddings file stream to the frozen centroids and
-    append (idempotently) to the inverted-list table."""
-    schema_src = source_dir if glob is None else os.path.join(source_dir, glob)
-    schema = spark.read.parquet(schema_src).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-    if glob is not None:
-        reader = reader.option("pathGlobFilter", glob)
-    stream = reader.parquet(source_dir)
+    """Assign an embeddings file stream (one file per micro-batch) to
+    the frozen centroids and append (idempotently) to the
+    inverted-list table."""
+    stream = file_stream(spark, source_dir, max_files=1)
     cent = centroids.persist()
 
     def index(batch: DataFrame, batch_id: int) -> None:
@@ -115,29 +113,6 @@ def start_ivf_indexer(
     )
 
 
-def split_ascending_embeddings(
-    spark: SparkSession, sf_dir: str, out_dir: str, parts: int = 3
-) -> None:
-    """Embeddings as `parts` single-file ascending vec_id ranges
-    (same fixture shape as dedupgate.split_ascending)."""
-    import time
-
-    from ..fixtures import write_single_file
-
-    embs = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    max_id = embs.agg(F.max("vec_id")).collect()[0][0] or 0
-    step = max_id // parts + 1
-    os.makedirs(out_dir, exist_ok=True)
-    now = time.time()
-    for p in range(parts):
-        lo, hi = p * step, (p + 1) * step
-        write_single_file(
-            embs.where((F.col("vec_id") >= lo) & (F.col("vec_id") < hi)),
-            os.path.join(out_dir, f"part{p:03d}.parquet"),
-            now + p,
-        )
-
-
 _ORACLE_Q126 = f"""
 WITH {_IVF_CTE}
 SELECT vec_id, centroid_id, d2_r FROM assign
@@ -149,15 +124,11 @@ def q126_stream_ivf_indexing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = call_scratch(spark, sf_dir, "q126")
     src, index, ckpt = (os.path.join(root, d) for d in ("in", "index", "ckpt"))
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    split_ascending_embeddings(spark, sf_dir, src)
+    split_ascending(spark, table_path(sf_dir, "embeddings"), "vec_id", src)
     cent = load_centroids(spark, src)
     start_ivf_indexer(spark, src, index, ckpt, cent).awaitTermination()
     cent.unpersist()
-    served = txn.read_committed(spark, index)
-    if served is None:  # legacy / externally-written sink
-        served = spark.read.parquet(index)
-    return served.orderBy("vec_id")
+    return txn.read_committed(spark, index).orderBy("vec_id")
 
 
 def _register() -> None:

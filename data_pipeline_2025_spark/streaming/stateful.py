@@ -14,12 +14,17 @@ tests/test_stateful.py.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from ..registry import register
+from .stream import drain, file_stream
 
 OUTPUT_SCHEMA = (
     "user_id bigint, session_start timestamp, session_end timestamp, events bigint"
@@ -76,55 +81,35 @@ def sessionize_stream(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
 # applyInPandasWithState emits only CLOSED sessions by design (the
 # trailing open session per user survives in state across
 # micro-batches). To make the operator oracle-checkable end-to-end,
-# the query streams from a prepared directory = the events file plus
-# a SENTINEL file holding one far-future event per user (2x the gap
-# past the corpus max ts). Every real session then closes and is
-# emitted; each sentinel opens its own one-event session that stays
-# in state — so filtering is unnecessary on the emitted side, but we
-# keep a guard anyway (session_start below the sentinel horizon).
+# the query streams the events file unioned with a SENTINEL stream
+# holding one far-future event per user (2x the gap past the corpus
+# max ts). Every real session then closes and is emitted; each
+# sentinel opens its own one-event session that stays in state — so
+# filtering is unnecessary on the emitted side, but we keep a guard
+# anyway (session_start below the sentinel horizon).
 # The oracle is the batch lag-based sessionization with the SAME
 # strict-> gap rule the state machine uses. Scale shape: state is
 # one (start, last, n) triple per user; each micro-batch touches
 # only keys present in it.
 
 
-def _sentinel_stream_dir(spark, sf_dir: str) -> tuple[str, int]:
-    """Build (once per session and sf_dir) a stream dir with events +
-    sentinels; returns (dir, sentinel_horizon_us). The sentinel file
-    carries the SAME raw ts physical type as the events file (long
-    nanos or NTZ micros), so one inferred schema reads both."""
-    from pyspark.sql import functions as F
-
+def _sentinel_dir(spark, sf_dir: str) -> tuple[str, int]:
+    """Build (once per session and sf_dir) a stream dir holding one
+    sentinel (user_id, ts) row per user; returns (dir,
+    sentinel_horizon_us)."""
     from ..artifacts import built_scratch
-    from ..catalog import table_path
+    from ..catalog import load_table
     from ..fixtures import write_single_file
 
-    raw = spark.read.parquet(table_path(sf_dir, "events"))
-    ts_type = dict(raw.dtypes)["ts"]
-    if ts_type == "bigint":  # long nanoseconds
-        ts_us = F.expr("ts div 1000")
-        mk_sentinel_ts = lambda us: (F.lit(us) * 1000).cast("bigint")  # noqa: E731
-    else:  # timestamp_ntz micros (or plain timestamp)
-        ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-        mk_sentinel_ts = lambda us: F.timestamp_micros(F.lit(us)).cast(  # noqa: E731
-            dict(raw.dtypes)["ts"]
-        )
-    horizon_us = raw.agg(F.max(ts_us)).collect()[0][0] + 2 * 30 * 60 * 1_000_000
+    events = load_table(spark, sf_dir, "events")
+    horizon_us = (
+        events.agg(F.max(F.unix_micros("ts"))).collect()[0][0]
+        + 2 * 30 * 60 * 1_000_000
+    )
 
     def build(path: str) -> None:
-        src = os.path.abspath(table_path(sf_dir, "events"))
-        os.symlink(src, os.path.join(path, "events.parquet"))
-        sentinels = (
-            raw.select("user_id")
-            .distinct()
-            .select(
-                (F.lit(-1) - F.col("user_id")).alias("event_id"),
-                mk_sentinel_ts(horizon_us).alias("ts"),
-                "user_id",
-                F.lit("sentinel").alias("event_type"),
-                F.lit(0.0).alias("value"),
-                F.lit("{}").alias("props"),
-            )
+        sentinels = events.select("user_id").distinct().select(
+            "user_id", F.timestamp_micros(F.lit(horizon_us)).alias("ts")
         )
         # The file source lists only top-level files — land the
         # sentinel rows as a FLAT file, not a Spark output directory.
@@ -161,45 +146,7 @@ ORDER BY user_id, session_start
 """
 
 
-def q111_stream_stateful_sessions(spark, sf_dir: str) -> DataFrame:
-    import itertools
-
-    from pyspark.sql import functions as F
-
-    from .windowed import _COUNTER
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    src_dir, horizon_us = _sentinel_stream_dir(spark, sf_dir)
-    schema = spark.read.parquet(os.path.join(src_dir, "sentinels.parquet")).schema
-    stream = spark.readStream.schema(schema).format("parquet").load(src_dir)
-    ts_type = dict(stream.dtypes)["ts"]
-    if ts_type == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    sessions = sessionize_stream(stream.select("user_id", "ts"), gap_minutes=30)
-    name = f"stateful_sessions_{next(_COUNTER)}"
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return (
-        spark.table(name)
-        .where(F.unix_micros("session_start") < horizon_us)
-        .orderBy("user_id", "session_start")
-    )
-
-
-import os  # noqa: E402  (used inside q111; kept at bottom near its user)
-
-from ..registry import register as _register  # noqa: E402
-
-_register(
+@register(
     "q111_stream_stateful_sessions",
     oracle=_ORACLE_Q111,
     doc="CUSTOM stateful streaming operator driver-verified: "
@@ -209,7 +156,19 @@ _register(
     "every real session; hash-matches the batch lag-based "
     "sessionization SQL (T7 arbitrary stateful ops).",
     tags=("streaming", "stateful", "session"),
-)(q111_stream_stateful_sessions)
+)
+def q111_stream_stateful_sessions(spark, sf_dir: str) -> DataFrame:
+    sentinel_dir, horizon_us = _sentinel_dir(spark, sf_dir)
+    stream = (
+        file_stream(spark, sf_dir, glob="events.parquet")
+        .select("user_id", "ts")
+        .unionByName(file_stream(spark, sentinel_dir))
+    )
+    return (
+        drain(sessionize_stream(stream, gap_minutes=30), "append")
+        .where(F.unix_micros("session_start") < horizon_us)
+        .orderBy("user_id", "session_start")
+    )
 
 
 # ------- q146: transformWithStateInPandas (the Spark 4 state API)
@@ -229,10 +188,6 @@ TWS_OUTPUT_SCHEMA = "user_id bigint, n bigint, sum_event_id bigint"
 
 
 def _make_totals_processor():
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
     from pyspark.sql.types import LongType, StructField, StructType
 
@@ -288,10 +243,6 @@ ORDER BY user_id
 
 
 def q146_stream_transform_with_state(spark, sf_dir: str) -> DataFrame:
-    import itertools
-
-    from .windowed import _events_stream
-
     # Unlock the protobuf state protocol (bundled-runtime shim) for
     # both the driver and the JVM-spawned python runners.
     enable_vendored_protobuf(spark)
@@ -301,24 +252,10 @@ def q146_stream_transform_with_state(spark, sf_dir: str) -> DataFrame:
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
-    out = running_totals_stream(_events_stream(spark, sf_dir))
-    name = f"tws_totals_{next(_Q146_COUNTER)}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    out = running_totals_stream(file_stream(spark, sf_dir, glob="events.parquet"))
     # single micro-batch (one events file) -> the emitted update IS
     # the global total per user
-    return spark.table(name).orderBy("user_id")
-
-
-import itertools as _it  # noqa: E402
-
-_Q146_COUNTER = _it.count()
+    return drain(out, "update").orderBy("user_id")
 
 
 def enable_vendored_protobuf(spark=None) -> bool:
@@ -376,8 +313,6 @@ def _tws_available() -> bool:
 
 
 def register_q146() -> None:
-    from ..registry import register
-
     register(
         "q146_stream_transform_with_state",
         oracle=_ORACLE_Q146,

@@ -4,30 +4,17 @@ session stays open in state (append semantics)."""
 
 from __future__ import annotations
 
-import itertools
-
 from data_pipeline_2025_spark import registry
 from data_pipeline_2025_spark.streaming.stateful import sessionize_stream
-from data_pipeline_2025_spark.streaming.windowed import _events_stream
-
-_N = itertools.count()
+from data_pipeline_2025_spark.streaming.stream import drain, file_stream
 
 
 def test_stateful_sessionizer_matches_batch(spark, sf_smoke):
-    stream = _events_stream(spark, sf_smoke)
+    stream = file_stream(spark, sf_smoke, glob="events.parquet")
     sessions = sessionize_stream(stream, gap_minutes=30)
-    name = f"stateful_sessions_{next(_N)}"
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     streamed = {
         (r["user_id"], r["session_start"], r["events"])
-        for r in spark.table(name).collect()
+        for r in drain(sessions, "append").collect()
     }
 
     batch = registry.get("q29_sessionization").spark_fn(spark, sf_smoke).collect()

@@ -137,18 +137,23 @@ def test_watermark_drops_late_and_emits_once(spark, tmp_path):
 def test_streaming_queries_set_nanos_conf_themselves(spark, sf_correct):
     """Round-2 driver regression: the grading driver's own SparkSession
     lacks DEFAULT_CONF (notably spark.sql.legacy.parquet.nanosAsLong),
-    so the events schema read inside _events_stream threw
+    so the events schema read inside the events stream threw
     PARQUET_TYPE_ILLEGAL for q50/q51/q74 even though the same queries
     passed under session.get_spark. Simulate the driver by unsetting
     the conf before each call and assert the queries re-set it
     defensively (same contract as catalog.load_table)."""
-    from data_pipeline_2025_spark.streaming import windowed
+    from data_pipeline_2025_spark.streaming import (
+        cagg,
+        cms,
+        dedupgate,
+        ivf,
+        stateful,
+        windowed,
+    )
 
     key = "spark.sql.legacy.parquet.nanosAsLong"
     tz = "spark.sql.session.timeZone"
     try:
-        from data_pipeline_2025_spark.streaming import ivf
-
         for fn in (
             windowed.q50_stream_hourly_rollup,
             windowed.q51_stream_dedup_replay,
@@ -166,6 +171,13 @@ def test_streaming_queries_set_nanos_conf_themselves(spark, sf_correct):
             windowed.q149_stream_outer_join,
             windowed.q157_stream_approx_distinct,
             windowed.q161_state_store_reader,
+            # their confs now come from streaming/stream.file_stream
+            # (q111's sentinel build from catalog.load_table), not
+            # from their own bodies:
+            cagg.q83_stream_cagg_serving,
+            cms.q97_stream_cms_serving,
+            stateful.q111_stream_stateful_sessions,
+            dedupgate.q120_stream_dedup_gate,
         ):
             spark.conf.unset(key)
             # A bare session may also run in a non-UTC zone; the
@@ -191,8 +203,9 @@ def test_events_cagg_incremental_end_to_end(spark, tmp_path):
     import shutil
 
     from data_pipeline_2025_spark.streaming.cagg import (
+        _hourly_partial,
         serve_hourly,
-        start_events_cagg,
+        start_events_rollup,
     )
     from data_pipeline_2025_spark.functions.money import dec, money_out
 
@@ -229,7 +242,9 @@ def test_events_cagg_incremental_end_to_end(spark, tmp_path):
         (2, "2024-01-01 11:20:00", "view", 2.5),
         (3, "2024-01-01 11:40:00", "purchase", 10.0),
     ])
-    start_events_cagg(spark, src, silver, rollup, ckpt).awaitTermination()
+    start_events_rollup(
+        spark, src, silver, rollup, ckpt, _hourly_partial
+    ).awaitTermination()
     assert served() == groundtruth()
 
     day1 = os.path.join(rollup, "day=2024-01-01")
@@ -243,7 +258,9 @@ def test_events_cagg_incremental_end_to_end(spark, tmp_path):
         (4, "2024-01-02 09:10:00", "view", 3.0),
         (5, "2024-01-02 09:15:00", "purchase", 7.0),
     ])
-    start_events_cagg(spark, src, silver, rollup, ckpt).awaitTermination()
+    start_events_rollup(
+        spark, src, silver, rollup, ckpt, _hourly_partial
+    ).awaitTermination()
     assert served() == groundtruth()
     sig_after = sorted(
         (f, os.path.getmtime(os.path.join(day1, f)))
@@ -256,7 +273,9 @@ def test_events_cagg_incremental_end_to_end(spark, tmp_path):
     before = served()
     files = [f for f in os.listdir(src) if f.endswith(".parquet")]
     shutil.copy(os.path.join(src, files[0]), os.path.join(src, "replay_" + files[0]))
-    start_events_cagg(spark, src, silver, rollup, ckpt).awaitTermination()
+    start_events_rollup(
+        spark, src, silver, rollup, ckpt, _hourly_partial
+    ).awaitTermination()
     assert served() == before
 
 
@@ -271,9 +290,10 @@ def test_events_cms_incremental_end_to_end(spark, tmp_path):
     import shutil
 
     from data_pipeline_2025_spark.operators.sketches import CMS_DEPTH, _cms_bucket
+    from data_pipeline_2025_spark.streaming.cagg import start_events_rollup
     from data_pipeline_2025_spark.streaming.cms import (
+        _day_partial_sketch,
         merged_sketch,
-        start_events_cms,
     )
 
     src = str(tmp_path / "events_src")
@@ -318,7 +338,9 @@ def test_events_cms_incremental_end_to_end(spark, tmp_path):
         (2, "2024-01-01 11:20:00", 7),
         (3, "2024-01-01 11:40:00", 9),
     ])
-    start_events_cms(spark, src, silver, sketch, ckpt).awaitTermination()
+    start_events_rollup(
+        spark, src, silver, sketch, ckpt, _day_partial_sketch
+    ).awaitTermination()
     assert served_grid() == batch_grid()
 
     day1 = os.path.join(sketch, "day=2024-01-01")
@@ -332,7 +354,9 @@ def test_events_cms_incremental_end_to_end(spark, tmp_path):
         (4, "2024-01-02 09:00:00", 7),
         (5, "2024-01-02 09:30:00", 11),
     ])
-    start_events_cms(spark, src, silver, sketch, ckpt).awaitTermination()
+    start_events_rollup(
+        spark, src, silver, sketch, ckpt, _day_partial_sketch
+    ).awaitTermination()
     assert served_grid() == batch_grid()
     sig_after = sorted(
         (f, os.path.getmtime(os.path.join(day1, f)))
@@ -344,7 +368,9 @@ def test_events_cms_incremental_end_to_end(spark, tmp_path):
     # checkpoint loss → full source replay; silver anti-join absorbs
     # every duplicate, partials recompute to identical content
     shutil.rmtree(ckpt)
-    start_events_cms(spark, src, silver, sketch, ckpt).awaitTermination()
+    start_events_rollup(
+        spark, src, silver, sketch, ckpt, _day_partial_sketch
+    ).awaitTermination()
     assert served_grid() == batch_grid()
 
 
@@ -511,17 +537,17 @@ def test_state_reader_exposes_join_sides(spark, sf_correct, tmp_path):
     extended to the join operator's four-store state."""
     from pyspark.sql import functions as F
 
-    from data_pipeline_2025_spark.streaming.windowed import _events_stream
+    from data_pipeline_2025_spark.streaming.stream import drain, file_stream
 
     ck = str(tmp_path / "ck")
     s = (
-        _events_stream(spark, sf_correct)
+        file_stream(spark, sf_correct, glob="events.parquet")
         .where(F.col("event_type") == "signup")
         .select(F.col("user_id").alias("su"), F.col("ts").alias("sts"))
         .withWatermark("sts", "2 hours")
     )
     p = (
-        _events_stream(spark, sf_correct)
+        file_stream(spark, sf_correct, glob="events.parquet")
         .where(F.col("event_type") == "purchase")
         .select(F.col("user_id").alias("pu"), F.col("ts").alias("pts"))
         .withWatermark("pts", "2 hours")
@@ -532,15 +558,7 @@ def test_state_reader_exposes_join_sides(spark, sf_correct, tmp_path):
         & (F.col("pts") >= F.col("sts"))
         & (F.col("pts") <= F.col("sts") + F.expr("INTERVAL 1 HOUR")),
     )
-    q = (
-        j.writeStream.format("memory")
-        .queryName("state_join_probe")
-        .outputMode("append")
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(j, "append", checkpoint=ck)
     ev = spark.read.parquet(f"{sf_correct}/events.parquet")
     users = {
         t: {r["user_id"] for r in ev.where(F.col("event_type") == t).select("user_id").distinct().collect()}
@@ -551,3 +569,29 @@ def test_state_reader_exposes_join_sides(spark, sf_correct, tmp_path):
         keys = {r["key"]["field0"] if "field0" in st.schema["key"].dataType.names else list(r["key"])[0] for r in st.select("key").collect()}
         assert keys, f"{side} state empty"
         assert keys <= pop, (side, keys - pop)
+
+
+def test_registry_streams_leave_no_views(spark, sf_smoke):
+    """A registry stream that ends in a memory sink must not leave its
+    temp view (and the sink's rows) in the session: q50 (complete
+    mode), q137 (append, one file per batch) and q111 (stateful,
+    two unioned sources) run twice each; the temp views are the same
+    before and after, no stream is still active, and each second
+    answer equals the first."""
+    from data_pipeline_2025_spark import registry
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    for name in (
+        "q50_stream_hourly_rollup",
+        "q137_late_data_drops",
+        "q111_stream_stateful_sessions",
+    ):
+        fn = registry.get(name).spark_fn
+        first = fn(spark, sf_smoke).collect()
+        assert first, name
+        assert fn(spark, sf_smoke).collect() == first, name
+    assert temp_views() == before
+    assert spark.streams.active == []

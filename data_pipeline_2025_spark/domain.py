@@ -176,19 +176,32 @@ def cheapest_per_store(products: DataFrame) -> DataFrame:
 def lowest_prices_page(products: DataFrame, limit: int = 20) -> DataFrame:
     """ORDER BY effective LIMIT limit*3, then savings%% against the
     max of the returned page (O1 + A11/W3, products.py:115-126).
-    Output adds eff / savings_pct columns."""
+    Output adds eff / savings_pct columns.
+
+    The page is one partition (a top-k), so its max and its rows come
+    from one global aggregate with no Exchange; the rows are
+    re-sorted into page order (struct order = eff, then product_id)
+    and expanded back. An unpartitioned window would plan the same
+    but log Spark's "No Partition Defined" WARN on every call."""
     page = (
         products.withColumn("eff", effective())
         .orderBy("eff", "product_id")
         .limit(limit * 3)
     )
-    maxc = F.max("eff").over(Window.partitionBy())
-    return page.withColumn(
-        "savings_pct",
-        F.when(
-            F.col("eff") < maxc,
-            to_double(maxc - F.col("eff")) * 100 / to_double(maxc),
-        ),
+    cols = page.columns
+    first = ["eff", "product_id"]
+    rows = F.collect_list(F.struct(*first, *[c for c in cols if c not in first]))
+    maxc = F.col("_max")
+    return (
+        page.agg(F.max("eff").alias("_max"), F.sort_array(rows).alias("_rows"))
+        .select("_max", F.inline("_rows"))
+        .select(
+            *cols,
+            F.when(
+                F.col("eff") < maxc,
+                to_double(maxc - F.col("eff")) * 100 / to_double(maxc),
+            ).alias("savings_pct"),
+        )
     )
 
 

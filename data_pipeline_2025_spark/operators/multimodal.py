@@ -49,16 +49,6 @@ METADATA_SCHEMA = StructType(
 _MEDIA_TYPES = ("image", "audio", "video")
 
 
-def decode_media_real(blob: bytes, media_type: str):  # pragma: no cover
-    """Real decode path — requires PIL / soundfile / av, which are
-    not installed in this environment. The pipeline is wired so this
-    is the only function to replace."""
-    raise NotImplementedError(
-        "media codecs not available in this container; "
-        "_fake_decode provides the deterministic test double"
-    )
-
-
 def _fake_decode(blob: bytes, media_type: str) -> tuple[int, int, int, int]:
     """Deterministic stand-in for decode: metadata derived purely
     from the payload bytes (so the DuckDB oracle can recompute it)."""

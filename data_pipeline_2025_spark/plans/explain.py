@@ -18,13 +18,3 @@ def plan_of(df: DataFrame, mode: str = "formatted") -> str:
     with contextlib.redirect_stdout(buf):
         df.explain(mode)
     return buf.getvalue()
-
-
-def scan_pushdown_summary(df: DataFrame) -> list[str]:
-    """The PushedFilters/ReadSchema lines — what actually reaches
-    the parquet reader."""
-    return [
-        line.strip()
-        for line in plan_of(df).splitlines()
-        if "PushedFilters" in line or "ReadSchema" in line
-    ]

@@ -15,22 +15,17 @@ hand-rolled watermark files.
 
 Implementation notes, honestly stated:
 
-- ROUND 8 (r7 verdict #3): the DEFAULT reader is now the
-  partition-parallel ``DataSourceStreamReader`` —
+- The reader is a partition-parallel ``DataSourceStreamReader``:
   ``partitions(start, end)`` plans one :class:`_ChangeUnit` per
   changed FILE per commit from the manifest alone (O(#files)
-  metadata on the driver: file path, change kind, inline DV
-  positions, and the DV *sidecar refs* — never the sidecar
-  contents), and ``read(unit)`` runs ON EXECUTORS, each reading
-  only its own parquet file + the referenced DV sidecars via
-  pyarrow. A 100 TB backfill through the source fans out instead
-  of serializing through the planner. The original
-  ``SimpleDataSourceStreamReader`` remains behind
-  ``option("reader", "simple")`` — same offsets, same row
-  derivation (both drive the shared ``_plan_units``/``_unit_rows``
-  core) — and tests/test_txn.py
-  (test_cdf_partitioned_reader_row_identical_to_simple) proves the
-  two are row-identical across the full lifecycle grammar
+  metadata on the driver: file path, change kind and the DV
+  *sidecar refs* — never the sidecar contents), and ``read(unit)``
+  runs ON EXECUTORS, each reading only its own parquet file + the
+  referenced DV sidecars via pyarrow. A 100 TB backfill through the
+  source fans out instead of serializing through the planner.
+  tests/test_txn.py checks it row for row, in every offset window,
+  against :func:`txn.read_changes` — the same feed derived
+  independently by Spark joins — across the full lifecycle grammar
   (append / merge / sidecar-delete / restore).
 - Exactly-once END TO END despite foreachBatch's at-least-once: the
   consumer commits ONE matview version per batch id, so version
@@ -54,7 +49,6 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
 
 from ..artifacts import call_scratch
@@ -83,41 +77,22 @@ class TxnChangeFeedDataSource(DataSource):
         return self.options.get("readSchema", _FEED_SCHEMA)
 
     def streamReader(self, schema):
-        if self.options.get("reader", "").lower() == "simple":
-            # fall back to simpleStreamReader() (the pre-round-8
-            # single-planner shape, kept for the equivalence test)
-            from pyspark.errors import PySparkNotImplementedError
-
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "streamReader"},
-            )
         return _TxnChangesPartitionedReader(self.options["path"], schema)
 
-    def simpleStreamReader(self, schema):
-        return _TxnChangesReader(self.options["path"], schema)
 
-
-# ----- shared change derivation core (both readers drive this)
+# ----- change derivation
 #
 # Planning is MANIFEST-ONLY: a _ChangeUnit carries the file path,
-# the change kind, the manifest-inline DV positions, and the DV
-# sidecar REFS — O(1) metadata per changed file, never the sidecar
-# contents, never row data. Reading a unit (parquet file + its
-# referenced sidecars) happens wherever read() runs: on the driver
-# for the simple reader, ON EXECUTORS for the partitioned one.
+# the change kind and the DV sidecar REFS — O(1) metadata per
+# changed file, never the sidecar contents, never row data. Reading
+# a unit (parquet file + its referenced sidecars) runs ON EXECUTORS.
 
 
 class _ChangeUnit(InputPartition):
-    def __init__(
-        self, kind, version, rel, inline_prev, inline_cur,
-        refs_prev, refs_cur,
-    ):
+    def __init__(self, kind, version, rel, refs_prev, refs_cur):
         self.kind = kind  # "added" | "removed" | "surviving"
         self.version = version
         self.rel = rel
-        self.inline_prev = inline_prev  # tuple[int, ...]
-        self.inline_cur = inline_cur
         self.refs_prev = refs_prev  # tuple[str, ...] sidecar refs
         self.refs_cur = refs_cur
 
@@ -141,8 +116,6 @@ def _plan_units(sink_dir: str, frm: int, to: int):
                 kind,
                 v,
                 rel,
-                tuple(prev_snap.dvs.get(rel, ())),
-                tuple(snap.dvs.get(rel, ())),
                 _relevant_refs(prev_snap, rel),
                 _relevant_refs(snap, rel),
             )
@@ -154,12 +127,11 @@ def _plan_units(sink_dir: str, frm: int, to: int):
         for p in sorted(p for p in listing if p in prev_listing):
             u = unit("surviving", p)
             # plan-time fast path: sidecars are immutable once
-            # written (txn.write_dv_sidecar never rewrites a path),
-            # so identical inline DVs AND identical ref sets
-            # guarantee an empty per-file delta — skip the unit
-            # entirely instead of spawning a no-op executor task
-            # per surviving DV-carrying file per commit.
-            if u.inline_prev == u.inline_cur and u.refs_prev == u.refs_cur:
+            # written (txn._stage_dv never rewrites a ref), so
+            # identical ref sets guarantee an empty per-file delta —
+            # skip the unit entirely instead of spawning a no-op
+            # executor task per surviving DV-carrying file per commit.
+            if u.refs_prev == u.refs_cur:
                 continue
             units.append(u)
         prev_snap = snap
@@ -188,51 +160,31 @@ def _file_rows(sink_dir: str, cols, rel: str) -> list[tuple]:
     return list(zip(*out)) if n else []
 
 
-def _dv_positions_for(
-    sink_dir: str, rel: str, inline, refs, ref_cache: dict | None = None
-) -> set:
-    """Dead positions for one file = manifest-inline positions +
-    the referenced sidecars' entries for that file. ``ref_cache``
-    (optional, {ref: parsed rows}) lets a caller that walks MANY
-    units — the simple reader's driver-side loop — parse each
-    immutable sidecar once instead of once per unit; executor tasks
-    hold one unit each, so they pass nothing."""
-    dead = set(inline)
-    for ref in refs:
-        if ref_cache is not None and ref in ref_cache:
-            rows = ref_cache[ref]
-        else:
-            rows = txn._read_dv_sidecar(sink_dir, ref)
-            if ref_cache is not None:
-                ref_cache[ref] = rows
-        for p, pos in rows:
-            if p == rel:
-                dead.add(pos)
-    return dead
+def _dv_positions_for(sink_dir: str, rel: str, refs) -> set:
+    """Dead positions of one file: the referenced sidecars' entries
+    for that file."""
+    return {
+        pos
+        for ref in refs
+        for p, pos in txn._read_dv_sidecar(sink_dir, ref)
+        if p == rel
+    }
 
 
-def _unit_rows(sink_dir: str, cols, u: "_ChangeUnit", ref_cache=None):
+def _unit_rows(sink_dir: str, cols, u: "_ChangeUnit"):
     if u.kind == "added":
-        dead = _dv_positions_for(
-            sink_dir, u.rel, u.inline_cur, u.refs_cur, ref_cache
-        )
+        dead = _dv_positions_for(sink_dir, u.rel, u.refs_cur)
         for i, row in enumerate(_file_rows(sink_dir, cols, u.rel)):
             if i not in dead:
                 yield (*row, "insert", u.version)
     elif u.kind == "removed":
-        dead = _dv_positions_for(
-            sink_dir, u.rel, u.inline_prev, u.refs_prev, ref_cache
-        )
+        dead = _dv_positions_for(sink_dir, u.rel, u.refs_prev)
         for i, row in enumerate(_file_rows(sink_dir, cols, u.rel)):
             if i not in dead:
                 yield (*row, "delete", u.version)
     else:  # surviving — DV delta only
-        prev = _dv_positions_for(
-            sink_dir, u.rel, u.inline_prev, u.refs_prev, ref_cache
-        )
-        cur = _dv_positions_for(
-            sink_dir, u.rel, u.inline_cur, u.refs_cur, ref_cache
-        )
+        prev = _dv_positions_for(sink_dir, u.rel, u.refs_prev)
+        cur = _dv_positions_for(sink_dir, u.rel, u.refs_cur)
         new_dead = cur - prev
         undead = prev - cur
         if not new_dead and not undead:
@@ -271,39 +223,6 @@ class _TxnChangesPartitionedReader(DataSourceStreamReader):
 
     def commit(self, end: dict) -> None:
         pass  # manifest versions are durable; nothing to release
-
-
-class _TxnChangesReader(SimpleDataSourceStreamReader):
-    def __init__(self, sink_dir: str, schema):
-        self._sink = sink_dir
-        self._cols = [f.name for f in schema.fields if not f.name.startswith("_")]
-
-    def initialOffset(self) -> dict:
-        return {"version": 0}
-
-    def read(self, start: dict):
-        head = (txn.versions(self._sink) or [0])[-1]
-        frm = int(start["version"])
-        if head <= frm:
-            return [], dict(start)
-        # materialized (not a generator): Spark's prefetch cache
-        # copies the entry, and the batch is delta-sized by contract
-        return list(self._rows(frm, head)), {"version": head}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        # deterministic replay: manifest entries and data files are
-        # immutable, so re-deriving the same window yields the same
-        # rows after any crash
-        return list(self._rows(int(start["version"]), int(end["version"])))
-
-    def _rows(self, frm: int, to: int):
-        # same planning + row derivation as the partitioned reader,
-        # just executed in-place (single planner); the ref cache
-        # parses each immutable DV sidecar once per call, not once
-        # per changed file
-        cache: dict = {}
-        for u in _plan_units(self._sink, frm, to):
-            yield from _unit_rows(self._sink, self._cols, u, cache)
 
 
 def register_txn_changes_source(spark: SparkSession) -> None:

@@ -668,11 +668,11 @@ def q204_log_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # The fourth lakehouse write primitive beside append/replace/schema:
 # DELETE FROM ... WHERE, executed as a deletion-vector commit
-# (txn.commit_delete / delete_where — Delta's DV sidecars). The
-# point at 100 TB: a selective delete (GDPR erasure, bad-batch
-# takeback) cannot pay an O(partition rewrite); a DV commit is
-# O(deleted positions) manifest bytes, readers anti-join
-# (file, row_index) against the broadcast DV set, and every data
+# (txn.delete_where — Delta's DV sidecars). The point at 100 TB: a
+# selective delete (GDPR erasure, bad-batch takeback) cannot pay an
+# O(partition rewrite); a DV commit is an executor-written position
+# sidecar plus O(#files) manifest bytes, readers anti-join
+# (file, row_index) against the sidecar positions, and every data
 # file stays byte-identical — which ALSO keeps time travel to the
 # pre-delete snapshot exact. This query builds a day-partitioned
 # events sink, deletes event_id % 7 == 3 through the real
@@ -680,9 +680,10 @@ def q204_log_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (hash-checked against batch SQL with the same predicate), the
 # deleted-row count recomputed FROM THE MANIFEST's DVs, the
 # pre-delete row count via time travel, and a files_unchanged flag
-# comparing the v1 and v2 file sets. Scale shape: the DV set is
-# bounded by deleted rows (bitmap seam documented in txn.py); the
-# read is the plain snapshot scan plus one broadcast anti-join.
+# comparing the v1 and v2 file sets. Scale shape: the DV sidecar is
+# bounded by deleted rows and never passes through the driver; the
+# read is the plain snapshot scan plus one anti-join (AQE broadcasts
+# a small DV set).
 
 _DV_MOD = 7
 _DV_REM = 3
@@ -1193,10 +1194,11 @@ def q212_describe_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 # values interleave across every file (each file's [min, max] spans
 # the probe). Delta's answer is per-file bloom filter indexes; this
 # is that feature on the txn manifest (txn.build_bloom — one
-# O(batch) aggregation at commit time, hex bitmaps in the stats
-# JSON, checkpoint-carried). Layout: events bucketed user_id % 12,
-# one committed file per bucket — by construction every file's
-# user_id bounds span the probe, so ONLY the bloom can prune.
+# O(batch) aggregation at commit time, bitmaps in an executor-written
+# sidecar that the stats JSON references, checkpoint-carried).
+# Layout: events bucketed user_id % 12, one committed file per
+# bucket — by construction every file's user_id bounds span the
+# probe, so ONLY the bloom can prune.
 # Probes: the 6 smallest user_ids (each lives in exactly one file;
 # no false negatives means files_kept >= 1 and the row totals are
 # exact) plus 2 absent ids (a bloom-only engine proves absence
@@ -1204,9 +1206,9 @@ def q212_describe_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 # two-engine md5 hash family, so the oracle re-derives the EXACT
 # keep/skip decision — bit-identical false positives included —
 # from SQL algebra, and the row/value sums prove no wrong skip.
-# Scale shape: the index is O(m) manifest bytes per file (the
-# documented sidecar seam), probing is a driver-side manifest scan,
-# and a 100 TB point lookup reads ~1 file instead of the table.
+# Scale shape: the manifest carries O(1) bytes per file and the
+# sidecar O(m) bits, probing is a driver-side index scan, and a
+# 100 TB point lookup reads ~1 file instead of the table.
 
 _BLOOM_FILES = 12
 _BLOOM_PRESENT = 6
@@ -1324,8 +1326,8 @@ def q213_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     parts = []
     for u, is_present in probes:
-        kept, total = txn.prune_files_eq(sink, "user_id", u)
-        pruned = txn.read_committed(spark, sink, prune_eq=("user_id", u))
+        kept, total = txn.prune_files_in(sink, "user_id", [u])
+        pruned = txn.read_committed(spark, sink, prune_in=("user_id", [u]))
         if pruned is None:
             agg = spark.createDataFrame(
                 [(0, 0.0)], "n_rows bigint, value_sum_d double"

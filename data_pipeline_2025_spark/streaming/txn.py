@@ -29,14 +29,18 @@ an atomic exclusive-create primitive:
    EEXIST — creation IS the commit (no separate pointer swap, no
    claimed-but-unpublished limbo state).
 
-**One fold, one snapshot.** A version's table state is a
-:class:`Snapshot` (listing with stats, schema, deletion vectors,
-checks, partition spec, column mapping, DV sidecar refs), and
+**One fold, one snapshot, one form per fact.** A version's table
+state is a :class:`Snapshot` (listing with stats, schema, checks,
+partition spec, column mapping, deletion-vector sidecar refs), and
 :func:`_fold` is the only code that gives a log line its meaning:
 it applies one entry to the snapshot before it. Reading version v
 folds the nearest checkpoint at-or-below v onto :data:`EMPTY`, then
 each delta after it. Every read pins one version and takes files,
-schema, DVs and column mapping from that one snapshot.
+schema, DVs and column mapping from that one snapshot. Each fact
+has one on-disk form: deleted positions live only in DV sidecars,
+bitmaps only in bloom sidecars, and a file's stats line is always
+``{"n", "c"[, "b"]}`` — as in Delta, whose add actions and DV
+descriptors each have a single format.
 
 **Commit cost is O(batch), not O(table)** (round-5): a normal commit
 writes a DELTA entry — the partition directories it retires
@@ -139,19 +143,6 @@ def _txn_dir(sink_dir: str) -> str:
     return os.path.join(sink_dir, TXN_DIR)
 
 
-def is_transactional(sink_dir: str) -> bool:
-    """True when the sink is managed by this commit log. Keyed on the
-    ``_txn`` DIRECTORY, not any committed version: stage_append
-    creates the directory before it moves a single data file, so a
-    crash during the sink's FIRST-ever commit (files renamed into the
-    partition layout, no log entry yet) still reads as
-    transactional, with an empty committed snapshot —
-    :func:`read_committed` returns None there, and no reader scans
-    the directory, so the ingest idempotence anti-join never absorbs
-    the replayed batch against orphans vacuum later deletes."""
-    return os.path.isdir(_txn_dir(sink_dir))
-
-
 def _entry_name(seq: int, is_checkpoint: bool) -> str:
     return f"v-{seq:08d}" + (_CKPT_SUFFIX if is_checkpoint else _DELTA_SUFFIX)
 
@@ -203,14 +194,13 @@ class Snapshot(NamedTuple):
 
     listing: dict[str, str | None]  # relative path -> stats json or None
     schema: str | None  # read-schema DDL
-    dvs: dict[str, list[int]]  # relative path -> sorted deleted rows
     checks: dict[str, str]  # CHECK name -> SQL expression
     partspec: str | None  # active partition spec
     colmap: dict[str, str]  # physical column -> logical name
     dvrefs: dict[str, dict[str, int]]  # DV sidecar ref -> {path: count}
 
 
-EMPTY = Snapshot({}, None, {}, {}, None, {}, {})
+EMPTY = Snapshot({}, None, {}, None, {}, {})
 
 
 def _fold(snap: Snapshot, lines: list[str]) -> Snapshot:
@@ -220,13 +210,13 @@ def _fold(snap: Snapshot, lines: list[str]) -> Snapshot:
     - ``~dir`` retires every file of partition ``dir`` with its DVs
       (the replace commit); all drops apply before the entry's other
       lines;
-    - ``+path[\tstats]`` (or a bare ``path[\tstats]``, the
-      checkpoint form) adds a file with its footer stats;
-    - ``-path\t[positions]`` marks row positions of ``path`` deleted
-      (inline DELETION VECTORS — unions accumulate across commits);
+    - ``path[\tstats]`` adds a file with its footer stats; a
+      ``+path`` prefix means the same (replace commits written
+      before the checkpoint grammar was shared still carry it);
     - ``%dv\t<ref>\t{path: count}`` references an executor-written
       DV sidecar under ``_txn/<ref>`` (the positions live in parquet,
-      the log carries O(#files) counts);
+      the log carries O(#files) counts) — the only form of a
+      deletion vector;
     - ``#schema\t<ddl>``, ``#partspec\t<spec>`` and
       ``#colmap\t{physical: logical}`` set the read schema, the
       active partition spec and the column mapping from this version
@@ -235,15 +225,16 @@ def _fold(snap: Snapshot, lines: list[str]) -> Snapshot:
       is no snapshot state; other unknown ``#``/``%`` lines are
       skipped (forward compatibility).
 
-    DVs and sidecar counts of files the result no longer lists drop
-    with them."""
+    A ``-path\t[positions]`` line (the inline deletion vector no
+    writer produces any more) raises ValueError: read as a file it
+    would resurrect the rows it deleted. Sidecar counts of files the
+    result no longer lists drop with them."""
     drops = {line[1:] for line in lines if line.startswith("~")}
     listing = (
         {p: s for p, s in snap.listing.items() if os.path.dirname(p) not in drops}
         if drops
         else dict(snap.listing)
     )
-    dvs = {p: v for p, v in snap.dvs.items() if p in listing}
     dvrefs = {
         r: {p: n for p, n in c.items() if p in listing}
         for r, c in snap.dvrefs.items()
@@ -276,16 +267,13 @@ def _fold(snap: Snapshot, lines: list[str]) -> Snapshot:
         elif line.startswith("#"):
             pass
         elif line.startswith("-"):
-            path, posjson = _split_stats(line[1:])
-            if posjson:
-                dvs[path] = sorted({*dvs.get(path, ()), *json.loads(posjson)})
+            raise ValueError(f"inline deletion-vector line in the log: {line!r}")
         else:
             path, stats = _split_stats(line[1:] if line.startswith("+") else line)
             listing[path] = stats
     return Snapshot(
         listing,
         schema,
-        {p: v for p, v in dvs.items() if p in listing},
         checks,
         partspec,
         colmap,
@@ -309,7 +297,6 @@ def _serialize(snap: Snapshot) -> list[str]:
         )
         + [f"#check\t{n}\t{e}" for n, e in sorted(snap.checks.items())]
         + [p if s is None else f"{p}\t{s}" for p, s in snap.listing.items()]
-        + [f"-{p}\t{json.dumps(v)}" for p, v in sorted(snap.dvs.items())]
         + [
             f"%dv\t{r}\t{json.dumps(c, sort_keys=True)}"
             for r, c in sorted(snap.dvrefs.items())
@@ -388,14 +375,13 @@ def partspec_at(sink_dir: str, version: int | None = None) -> str | None:
 
 def dv_at(sink_dir: str, version: int | None = None) -> dict[str, list[int]]:
     """The snapshot's deletion vectors MATERIALIZED: {relative path
-    -> sorted deleted row positions}, merging manifest-inline
-    position lists with executor-written sidecar refs (round 7).
+    -> sorted deleted row positions}, read from its DV sidecars.
     Inspection/test API — materializing is O(deleted rows) DRIVER
     memory by definition; production paths never call this (reads
     anti-join the sidecars as DataFrames via :func:`_apply_dv`,
     counting uses :func:`dv_counts_at` — O(#files))."""
     snap = _snap(sink_dir, version)
-    out: dict[str, set[int]] = {p: set(ps) for p, ps in snap.dvs.items()}
+    out: dict[str, set[int]] = {}
     for ref, counts in snap.dvrefs.items():
         for path, pos in _read_dv_sidecar(sink_dir, ref):
             if path in counts:
@@ -413,7 +399,7 @@ def dvrefs_at(
 
 
 def _dv_counts(snap: Snapshot) -> dict[str, int]:
-    out: dict[str, int] = {p: len(ps) for p, ps in snap.dvs.items()}
+    out: dict[str, int] = {}
     for counts in snap.dvrefs.values():
         for path, n in counts.items():
             out[path] = out.get(path, 0) + n
@@ -423,11 +409,11 @@ def _dv_counts(snap: Snapshot) -> dict[str, int]:
 def dv_counts_at(
     sink_dir: str, version: int | None = None
 ) -> dict[str, int]:
-    """Per-file deleted-row COUNTS of the snapshot — inline position
-    lists plus sidecar count maps, from manifest bytes alone
-    (O(#files) driver memory at any deleted-row count; the scale-safe
-    replacement for ``sum(len(v) for v in dv_at(...).values())``).
-    Disjointness across sources is by construction: delete_where /
+    """Per-file deleted-row COUNTS of the snapshot — the sum of its
+    sidecar count maps, from manifest bytes alone (O(#files) driver
+    memory at any deleted-row count; the scale-safe replacement for
+    ``sum(len(v) for v in dv_at(...).values())``). Disjointness
+    across sidecars is by construction: delete_where /
     merge_upsert_dv locate against the DV-applied snapshot, so a
     position is never deleted twice while dead."""
     return _dv_counts(_snap(sink_dir, version))
@@ -459,59 +445,25 @@ def checks_at(sink_dir: str, version: int | None = None) -> dict[str, str]:
     return _snap(sink_dir, version).checks
 
 
-def commit_delete(sink_dir: str, dv: dict[str, list[int]]) -> None:
-    """Row-level DELETE without rewriting any data file (round 6 —
-    Delta's deletion vectors): publish ONE atomic log entry marking
-    ``{relative path -> row positions}`` deleted. Readers anti-join
-    the committed DVs against ``_metadata.row_index``, so the delete
-    is metadata-only — the O(rewrite) cost a 100 TB point-delete
-    cannot pay is replaced by O(deleted positions) manifest bytes.
-    Positions accumulate across delete commits; a replace commit of
-    the partition retires the file AND its DV. At production scale
-    the position lists become roaring bitmaps in sidecar files (the
-    Delta/Iceberg format seam); the protocol — versioned, CAS-
-    committed, checkpoint-carried — is identical."""
-    _commit(sink_dir, [], replace=False, delete_dv=dict(dv), op="delete")
-
-
 def _dv_pos_df(
     spark,
     sink_dir: str,
-    dvs: dict[str, list[int]],
-    dvrefs: dict[str, dict[str, int]] | None = None,
-    restrict: set[str] | None = None,
+    dvrefs: dict[str, dict[str, int]],
+    files: set[str],
 ):
-    """The deleted positions of a snapshot as a DataFrame
-    ``(__dv_path string — ABSOLUTE, __dv_pos long)``: inline
-    manifest position lists (driver-built, small by contract) union
-    the executor-read sidecar parquets (never materialized on the
-    driver). ``restrict`` limits output to those relative data-file
-    paths (used by compaction and the change feed). Returns None
-    when there is nothing deleted."""
+    """The deleted positions that ``dvrefs`` hold for ``files``
+    (sink-relative paths) as a DataFrame ``(__dv_path string —
+    ABSOLUTE, __dv_pos long)``, read from the sidecar parquets by the
+    executors (never materialized on the driver). Returns None when
+    none of ``files`` has a deleted row."""
     from functools import reduce
 
     from pyspark.sql import functions as F
 
     base = os.path.abspath(sink_dir)
     pieces = []
-    inline = {
-        p: ps
-        for p, ps in (dvs or {}).items()
-        if restrict is None or p in restrict
-    }
-    rows = [
-        (os.path.join(base, p), int(i))
-        for p, positions in inline.items()
-        for i in positions
-    ]
-    if rows:
-        pieces.append(
-            spark.createDataFrame(rows, "__dv_path string, __dv_pos long")
-        )
-    for ref, counts in sorted((dvrefs or {}).items()):
-        live = [
-            p for p in counts if restrict is None or p in restrict
-        ]
+    for ref, counts in sorted(dvrefs.items()):
+        live = [p for p in counts if p in files]
         if not live:
             continue
         side = spark.read.parquet(os.path.join(_txn_dir(sink_dir), ref))
@@ -535,22 +487,16 @@ def _dv_pos_df(
 def _apply_dv(spark, df, sink_dir: str, snap: Snapshot, files: set[str]):
     """Filter a read of ``files`` through ``snap``'s deletion vectors
     on those files: an anti-join of (file, row position) against the
-    DV set — inline lists broadcast, sidecar refs read executor-side
-    (round 7: the
-    positions of a 10⁹-row delete never touch the driver). No-op
-    (and no plan change) for DV-free snapshots. Paths are normalized
-    to absolute form on both sides (the reader reports
-    file:-prefixed URIs)."""
+    DV sidecars, read executor-side (round 7: the positions of a
+    10⁹-row delete never touch the driver; AQE still broadcasts the
+    common small case). No-op (and no plan change) for DV-free
+    snapshots. Paths are normalized to absolute form on both sides
+    (the reader reports file:-prefixed URIs)."""
     from pyspark.sql import functions as F
 
-    dv_df = _dv_pos_df(spark, sink_dir, snap.dvs, snap.dvrefs, restrict=files)
+    dv_df = _dv_pos_df(spark, sink_dir, snap.dvrefs, files)
     if dv_df is None:
         return df
-    # inline-only DV sets are small by contract → force the
-    # broadcast; sidecar-backed sets can be arbitrarily large → let
-    # AQE choose (it still broadcasts the common small case)
-    if not any(p in files for c in snap.dvrefs.values() for p in c):
-        dv_df = F.broadcast(dv_df)
     cols = df.columns
     keyed = df.withColumn(
         "__p", F.regexp_replace(F.col("_metadata.file_path"), "^file:/*", "/")
@@ -562,18 +508,13 @@ def _apply_dv(spark, df, sink_dir: str, snap: Snapshot, files: set[str]):
     ).select(*cols)
 
 
-
-def _listing_at(sink_dir: str, version: int) -> list[str]:
-    return list(_snapshot_at(sink_dir, version).listing)
-
-
 def listing_at(sink_dir: str, version: int) -> list[str]:
     """Public snapshot listing (relative paths) at ``version`` — the
     read half of optimistic concurrency: a maintenance job records
     the version it read, derives its rewrite from exactly this
     listing, and commits with :func:`commit_replace_if` against that
     same version."""
-    return _listing_at(sink_dir, version)
+    return list(_snapshot_at(sink_dir, version).listing)
 
 
 def committed_files(sink_dir: str) -> list[str]:
@@ -636,9 +577,7 @@ def file_stats_json(path: str) -> str | None:
     only when EVERY row group reports trustworthy min/max for it;
     anything questionable (nested paths, truncation-length strings,
     decimals) is dropped — a missing bound merely disables pruning
-    for that column, never a wrong skip. Round-6 entries written
-    before the ``n`` field used a flat ``{column: [min, max]}``
-    form; :func:`_parse_stats` accepts both."""
+    for that column, never a wrong skip."""
     try:
         import pyarrow.parquet as pq
 
@@ -681,11 +620,10 @@ def file_stats_json(path: str) -> str | None:
 
 
 def _parse_stats(stats: str | None) -> tuple[int | None, dict[str, tuple]]:
-    """A manifest stats token -> (row count or None, {column ->
-    (min, max)}). Accepts both the current ``{"n":…, "c":…}`` form
-    and the earlier flat ``{column: [min, max]}`` form (those lines
-    simply have no row count). Unparseable stats degrade to
-    (None, {}) — no pruning, no metadata count, never an error."""
+    """A manifest stats token ``{"n": rows, "c": bounds[, "b":
+    blooms]}`` -> (row count or None, {column -> (min, max)}).
+    Missing or unparseable stats degrade to (None, {}) — no pruning,
+    no metadata count, never an error."""
     if stats is None:
         return None, {}
     try:
@@ -694,17 +632,14 @@ def _parse_stats(stats: str | None) -> tuple[int | None, dict[str, tuple]]:
         return None, {}
     if not isinstance(parsed, dict):
         return None, {}
-    if {"n", "c", "b"} & parsed.keys():
-        # current structured form: {"n": rows, "c": bounds, "b": blooms}
-        cols = parsed.get("c")
-        n = parsed.get("n")
-        return (
-            int(n) if isinstance(n, int) and not isinstance(n, bool) else None,
-            {c: (b[0], b[1]) for c, b in cols.items()}
-            if isinstance(cols, dict)
-            else {},
-        )
-    return None, {c: (b[0], b[1]) for c, b in parsed.items()}
+    cols = parsed.get("c")
+    n = parsed.get("n")
+    return (
+        int(n) if isinstance(n, int) and not isinstance(n, bool) else None,
+        {c: (b[0], b[1]) for c, b in cols.items()}
+        if isinstance(cols, dict)
+        else {},
+    )
 
 
 def _collect_stats(sink_dir: str, new_files: list[str]) -> dict[str, str]:
@@ -751,9 +686,7 @@ def metadata_agg(
     total = 0
     count_ok = True
     mn = mx = None
-    minmax_ok = (
-        col is not None and bool(snap.listing) and not snap.dvs and not snap.dvrefs
-    )
+    minmax_ok = col is not None and bool(snap.listing) and not snap.dvrefs
     for path, stats in snap.listing.items():
         n, cols = _parse_stats(stats)
         if n is None:
@@ -869,10 +802,11 @@ def _prune_range(
 # column whose values are spread across every file (each file's
 # [min, max] spans the probe). Delta solves this with per-file bloom
 # filter indexes; this is that feature on the manifest: an optional
-# per-file, per-column bloom filter stored in the stats JSON under
-# "b" — {col: {"m": bits, "k": hashes, "h": hex bitmap}} — built
-# with ONE O(batch) aggregation over the staged files at commit
-# time and carried through checkpoints like every other stat. The
+# per-file, per-column bloom filter referenced from the stats JSON
+# under "b" — {col: {"m": bits, "k": hashes, "t": column type code,
+# "r": sidecar ref}} — built with ONE O(batch) aggregation over the
+# staged files at commit time and carried through checkpoints like
+# every other stat. The
 # hash family is the repo's two-engine md5 convention
 # (operators/dedup.py:306): a, b = first/second 48-bit halves of
 # md5(CAST(value AS STRING)); position_i = (a + i*b) mod m — exact
@@ -880,13 +814,11 @@ def _prune_range(
 # oracle can re-derive the exact keep/skip decision. A membership
 # test has NO false negatives (a file containing the value is
 # always kept — pruning stays an optimization, never a filter);
-# false positives only cost a wasted file read. Round 7: the
-# bitmaps live in EXECUTOR-WRITTEN parquet sidecars under
-# ``_txn/bloom/<uuid>`` (the manifest spec carries {"m","k","t",
-# "r": ref} — O(#files) manifest bytes at any bitmap size); the
-# driver loads a sidecar once per probe session (cached, immutable)
-# — the index read every point lookup pays. Round-6 inline hex
-# specs still parse.
+# false positives only cost a wasted file read. The bitmaps live
+# in EXECUTOR-WRITTEN parquet sidecars under ``_txn/bloom/<uuid>``
+# (O(#files) manifest bytes at any bitmap size); the driver loads a
+# sidecar once per probe session (cached, immutable) — the index
+# read every point lookup pays.
 
 BLOOM_K = 5
 BLOOM_BITS_PER_KEY = 16  # fpp ≈ (1 - e^(-k·n/m))^k ≈ 1.4e-3
@@ -975,9 +907,9 @@ def build_bloom(
 
     def _pack_fn(ps, m):
         # LSB-first bit layout: bit i lives at buf[i>>3], 1<<(i&7) —
-        # chosen so two hex nibbles per byte (low first) reproduce
-        # the round-6 nibble-hex layout exactly (blooms_at converts
-        # back, so the probe math and the q213 oracle are unchanged)
+        # chosen so two hex nibbles per byte (low first) give the
+        # nibble-hex string blooms_at converts back to (the probe
+        # math and the q213 oracle read that layout)
         out = []
         for positions, mm in zip(ps, m):
             buf = bytearray(int(mm) // 8)
@@ -1090,25 +1022,22 @@ _BLOOM_CACHE: dict[str, dict[str, tuple[int, bytes]]] = {}
 
 def blooms_at(
     sink_dir: str, version: int | None = None
-) -> dict[str, dict[str, tuple[int, int, str, str | None]]]:
+) -> dict[str, dict[str, tuple[int, int, str, str]]]:
     """The snapshot's bloom index: {relative path -> {column ->
-    (m, k, hex bitmap, type code or None)}} from the manifest plus
-    (round 7) the referenced bloom SIDECARS — the manifest carries
-    only ``{"m","k","t","r"}`` specs, O(#files) bytes; bitmaps load
-    from ``_txn/bloom/<uuid>`` parquet on demand (cached — refs are
-    immutable). Sidecar bytes convert to the round-6 nibble-hex
-    layout so the probe math (and the q213 oracle) is storage-
-    independent. Files committed without a bloom simply have no
-    entry; a ``None`` type code marks a pre-type-guard spec
-    (probe-time guard then falls back to the column's BOUNDS
-    type)."""
+    (m, k, hex bitmap, type code)}} from the manifest's ``{"m", "k",
+    "t", "r"}`` specs (O(#files) bytes) plus the referenced bloom
+    SIDECARS, loaded from ``_txn/bloom/<uuid>`` parquet on demand
+    (cached — refs are immutable). Sidecar bytes convert to a
+    nibble-hex string so the probe math (and the q213 oracle) is
+    storage-independent. Files committed without a bloom, or whose
+    sidecar is gone, have no entry."""
     return _blooms(sink_dir, _snap(sink_dir, version))
 
 
 def _blooms(
     sink_dir: str, snap: Snapshot
-) -> dict[str, dict[str, tuple[int, int, str, str | None]]]:
-    out: dict[str, dict[str, tuple[int, int, str, str | None]]] = {}
+) -> dict[str, dict[str, tuple[int, int, str, str]]]:
+    out: dict[str, dict[str, tuple[int, int, str, str]]] = {}
     for path, stats in snap.listing.items():
         if stats is None:
             continue
@@ -1119,95 +1048,44 @@ def _blooms(
         blooms = parsed.get("b") if isinstance(parsed, dict) else None
         if not isinstance(blooms, dict):
             continue
-        per_col: dict[str, tuple[int, int, str, str | None]] = {}
+        per_col: dict[str, tuple[int, int, str, str]] = {}
         for c, spec in blooms.items():
             if not (
                 isinstance(spec, dict)
                 and isinstance(spec.get("m"), int)
                 and isinstance(spec.get("k"), int)
+                and isinstance(spec.get("t"), str)
+                and isinstance(spec.get("r"), str)
             ):
                 continue
-            t = spec.get("t")
-            t = t if isinstance(t, str) else None
-            if isinstance(spec.get("h"), str) and len(spec["h"]) * 4 == spec["m"]:
-                per_col[c] = (spec["m"], spec["k"], spec["h"], t)
-            elif isinstance(spec.get("r"), str):
-                side = _bloom_sidecar(
-                    os.path.join(_txn_dir(sink_dir), spec["r"])
-                )
-                if path in side and side[path][0] == spec["m"]:
-                    bits = side[path][1]
-                    hx = "".join("%x%x" % (b & 15, b >> 4) for b in bits)
-                    per_col[c] = (spec["m"], spec["k"], hx, t)
-                # missing sidecar → no entry → conservative keep
+            side = _bloom_sidecar(os.path.join(_txn_dir(sink_dir), spec["r"]))
+            if path in side and side[path][0] == spec["m"]:
+                hx = "".join("%x%x" % (b & 15, b >> 4) for b in side[path][1])
+                per_col[c] = (spec["m"], spec["k"], hx, spec["t"])
+            # missing sidecar → no entry → conservative keep
         if per_col:
             out[path] = per_col
     return out
 
 
-def prune_files_eq(
-    sink_dir: str, col: str, value, version: int | None = None
-) -> tuple[list[str], int]:
-    """Point-lookup file skipping: ``(kept_paths, total)`` for the
-    predicate ``col = value``, combining BOTH skip indexes the way a
-    real engine does — a file is skipped when its min/max bounds
-    exclude the value OR its bloom filter proves absence (any of the
-    k bits unset). No false negatives by construction; files without
-    stats/bloom for ``col`` are kept. The caller still applies the
-    exact predicate to the survivors."""
-    return _prune_eq(sink_dir, _snap(sink_dir, version), col, value)
-
-
-def _prune_eq(
-    sink_dir: str, snap: Snapshot, col: str, value
-) -> tuple[list[str], int]:
-    index = _stats_index(snap)
-    blooms = _blooms(sink_dir, snap)
-    kept: list[str] = []
-    for path, cols in index.items():
-        skip = False
-        if col in cols:
-            mn, mx = cols[col]
-            try:
-                skip = value < mn or value > mx
-            except TypeError:
-                skip = False  # incomparable bound types: keep
-        # the bloom path requires the probe's string rendering to be
-        # IDENTICAL to the Spark-side CAST(col AS STRING) used at
-        # build time. That needs BOTH sides type-checked (advisor
-        # round-6 medium): an int/str probe AND an integral/string
-        # COLUMN — an int probe against a DOUBLE column hashes "5"
-        # while the filter holds "5.0", every bit misses, and a file
-        # holding the value would be wrongly skipped. The column's
-        # type comes from the spec's recorded type code; legacy
-        # specs without one fall back to the bounds' JSON type
-        # (an int column's bounds parse as Python int, a string
-        # column's as str). Any mismatch or unknown → bounds-only
-        # pruning, never a wrong skip.
-        spec = blooms.get(path, {}).get(col)
-        if not skip and spec is not None and not isinstance(value, bool):
-            m, k, h, t = spec
-            if isinstance(value, int):
-                want = "i"
-                bounds_ok = col in cols and all(
-                    isinstance(b, int) and not isinstance(b, bool)
-                    for b in cols[col]
-                )
-            elif isinstance(value, str):
-                want = "s"
-                bounds_ok = col in cols and all(
-                    isinstance(b, str) for b in cols[col]
-                )
-            else:
-                want, bounds_ok = None, False
-            if want is not None and (t == want if t is not None else bounds_ok):
-                for pos in _bloom_positions(value, m, k):
-                    if not (int(h[pos >> 2], 16) >> (pos & 3)) & 1:
-                        skip = True
-                        break
-        if not skip:
-            kept.append(path)
-    return kept, len(index)
+def _bloom_may_contain(spec: tuple[int, int, str, str], value) -> bool:
+    """False only when the bloom ``spec`` proves ``value`` absent.
+    The probe's string rendering must be IDENTICAL to the Spark-side
+    ``CAST(col AS STRING)`` the filter hashed, which holds only for
+    an int probe against an integral column (type code ``"i"``) and
+    a str probe against a string column (``"s"``): an int probe
+    against a DOUBLE column would hash "5" while the filter holds
+    "5.0", every bit would miss, and a file holding the value would
+    be wrongly skipped. Any other pairing cannot refute."""
+    m, k, h, t = spec
+    typed = not isinstance(value, bool) and (
+        (isinstance(value, int) and t == "i")
+        or (isinstance(value, str) and t == "s")
+    )
+    return not typed or all(
+        (int(h[pos >> 2], 16) >> (pos & 3)) & 1
+        for pos in _bloom_positions(value, m, k)
+    )
 
 
 def prune_files_in(
@@ -1216,29 +1094,29 @@ def prune_files_in(
     values,
     version: int | None = None,
 ) -> tuple[list[str], int]:
-    """DYNAMIC file pruning for a key set (Delta's dynamic file
-    pruning / Iceberg's join-pushdown analog): ``(kept_paths,
-    total)`` for the predicate ``col IN values``, where the values
-    come from a runtime source — typically a selective dimension
-    filter on the probe side of a join — rather than a literal in
-    the query text. A file is kept iff its recorded [min, max]
-    bounds admit at least one key (one ``bisect`` over the sorted
-    key list per file — O(#files · log #keys) driver work, pure
-    metadata, no data file opened) AND, when the file carries a
-    type-matched bloom sidecar for ``col``, at least one
-    bounds-admitted key passes the bloom — the leg that makes DFP
-    effective on an UNCLUSTERED column, where every file's range
-    spans most keys but each file holds few of them (worst case
-    O(#files · #keys · k) bit probes, still metadata-only). Files
-    without bounds for ``col`` are always kept; incomparable or
-    type-mismatched bound/key types keep the file — pruning is an
-    optimization, NEVER a wrong skip, and the caller still applies
-    the exact join/filter to the survivors (the
-    :func:`prune_files` contract).
+    """Key-set file skipping: ``(kept_paths, total)`` for the
+    predicate ``col IN values``. A point lookup is a key set of one
+    (``[value]``); a runtime key set — typically a selective
+    dimension filter on the probe side of a join — is Delta's
+    dynamic file pruning. Per file:
 
-    An EMPTY key set keeps nothing: ``col IN ()`` provably matches
-    no row, so reading zero files is the exact answer, not a
-    heuristic.
+    - its recorded [min, max] bounds for ``col``, when present,
+      narrow the candidate keys (one ``bisect`` over the sorted key
+      list — O(#files · log #keys) driver work, pure metadata);
+    - its type-matched bloom sidecar for ``col``, when present,
+      refutes candidates one by one (:func:`_bloom_may_contain`) —
+      also when the file has no bounds for ``col``. This is what
+      prunes an UNCLUSTERED column, where every file's range spans
+      most keys but each file holds few of them;
+    - the file is skipped only when no candidate survives.
+
+    Incomparable bound/key types leave the candidates un-narrowed;
+    a mixed, unorderable key set keeps every file. Pruning is an
+    optimization, NEVER a wrong skip: the caller still applies the
+    exact predicate to the survivors (the :func:`prune_files`
+    contract). An EMPTY key set keeps nothing: ``col IN ()``
+    provably matches no row, so reading zero files is the exact
+    answer, not a heuristic.
 
     Scale: the key list is bounded by the DIMENSION filter's
     selectivity — the same cardinality a broadcast join ships to
@@ -1262,56 +1140,18 @@ def _prune_in(
         # mixed incomparable key types: cannot order, cannot refute —
         # keep everything rather than crash or wrongly skip
         return list(index), len(index)
-    if not keys:
-        return [], len(index)
     blooms = _blooms(sink_dir, snap)
     kept: list[str] = []
     for path, cols in index.items():
-        if col not in cols:
-            kept.append(path)
-            continue
-        mn, mx = cols[col]
-        try:
-            i = bisect.bisect_left(keys, mn)
-            j = bisect.bisect_right(keys, mx)
-        except TypeError:
-            kept.append(path)  # incomparable types: keep, never wrong-skip
-            continue
-        if i >= j:
-            continue  # bounds exclude every key
-        # bounds admit keys[i:j]; the per-file BLOOM (when present
-        # and type-matched — the prune_files_eq guard) can refute
-        # each candidate key individually: skip the file only when
-        # EVERY candidate is provably absent. This is what makes DFP
-        # effective on an UNCLUSTERED column, where one file's
-        # [min, max] spans most of the key range.
+        cand = keys
+        if col in cols:
+            mn, mx = cols[col]
+            try:
+                cand = keys[bisect.bisect_left(keys, mn):bisect.bisect_right(keys, mx)]
+            except TypeError:
+                pass  # incomparable types: bounds cannot narrow
         spec = blooms.get(path, {}).get(col)
-        if spec is None:
-            kept.append(path)
-            continue
-        m, k, h, t = spec
-        bounds_int = all(
-            isinstance(b, int) and not isinstance(b, bool) for b in cols[col]
-        )
-        bounds_str = all(isinstance(b, str) for b in cols[col])
-
-        def _admits(v) -> bool:
-            if isinstance(v, bool):
-                return True
-            if isinstance(v, int):
-                ok = (t == "i") if t is not None else bounds_int
-            elif isinstance(v, str):
-                ok = (t == "s") if t is not None else bounds_str
-            else:
-                ok = False
-            if not ok:
-                return True  # type mismatch: cannot refute, keep
-            return all(
-                (int(h[pos >> 2], 16) >> (pos & 3)) & 1
-                for pos in _bloom_positions(v, m, k)
-            )
-
-        if any(_admits(v) for v in keys[i:j]):
+        if any(spec is None or _bloom_may_contain(spec, v) for v in cand):
             kept.append(path)
     return kept, len(index)
 
@@ -1362,7 +1202,6 @@ def read_committed(
     spark: SparkSession,
     sink_dir: str,
     prune: dict[str, tuple] | None = None,
-    prune_eq: tuple | None = None,
     prune_in: tuple | None = None,
 ) -> DataFrame | None:
     """DataFrame over exactly the committed snapshot, or None when no
@@ -1373,20 +1212,16 @@ def read_committed(
     With ``prune={col: (lo, hi)}`` the manifest's per-file min/max
     bounds drop provably-excluded files BEFORE Spark ever sees them
     — manifest-driven data skipping on non-partition columns. With
-    ``prune_eq=(col, value)`` the point-lookup path additionally
-    consults the per-file bloom filters (:func:`prune_files_eq`).
-    With ``prune_in=(col, values)`` a runtime KEY SET — typically a
-    filtered dimension's join keys — prunes dynamically
-    (:func:`prune_files_in`); an empty key set reads no files and
-    returns None, which is the exact ``IN ()`` answer.
+    ``prune_in=(col, values)`` a KEY SET — one point-lookup value, or
+    a filtered dimension's join keys — prunes by bounds and per-file
+    bloom filters (:func:`prune_files_in`); an empty key set reads no
+    files and returns None, which is the exact ``IN ()`` answer.
     The caller must still apply the exact predicate (kept files may
     contain non-matching rows). Files, schema, DVs and column mapping
     all come from one snapshot: a commit landing mid-call is never
     half seen."""
     snap = _snap(sink_dir)
-    if prune_eq is not None:
-        files = _prune_eq(sink_dir, snap, *prune_eq)[0]
-    elif prune_in is not None:
+    if prune_in is not None:
         files = _prune_in(sink_dir, snap, *prune_in)[0]
     elif prune:
         files = _prune_range(snap, prune)[0]
@@ -1494,7 +1329,6 @@ def _commit(
     replace: bool,
     expected_version: int | None = None,
     schema_ddl: str | None = None,
-    delete_dv: dict[str, list[int]] | None = None,
     add_check: tuple[str, str] | None = None,
     bloom: dict[str, dict] | None = None,
     partspec: str | None = None,
@@ -1545,8 +1379,6 @@ def _commit(
                 parsed = {}
             if not isinstance(parsed, dict):
                 parsed = {}
-            elif parsed and not ({"n", "c", "b"} & parsed.keys()):
-                parsed = {"c": parsed}  # legacy flat bounds form
             parsed["b"] = {**parsed.get("b", {}), **per_col}
             stats[path] = json.dumps(parsed, separators=(",", ":"))
 
@@ -1556,7 +1388,6 @@ def _commit(
         Snapshot(
             {f: stats.get(f) for f in new_files},
             schema_ddl,
-            {p: sorted(v) for p, v in (delete_dv or {}).items()},
             dict([add_check]) if add_check else {},
             partspec,
             colmap or {},
@@ -1684,7 +1515,7 @@ def restore(sink_dir: str, version: int) -> int:
 
     def delta(head: Callable[[], Snapshot]) -> list[str]:
         # drop every current and target dir (with their DVs), then
-        # re-add the target: its listing with stats, DVs and sidecar
+        # re-add the target: its listing with stats and DV sidecar
         # refs (re-referenced — immutable sidecars are shared with the
         # target version), under the current CHECKs. The colmap rolls
         # back EXACTLY — a target without one resets the mapping —
@@ -2260,8 +2091,8 @@ def _pos_join_df(keyed, pos_df, how: str):
     DataFrame from :func:`_dv_pos_df` (absolute ``__dv_path`` +
     ``__dv_pos``). ``pos_df=None`` means no positions: an anti join
     passes everything through, a semi join yields nothing. No
-    broadcast hint — inline position sets are small, sidecar-backed
-    ones may not be; AQE still broadcasts the small case."""
+    broadcast hint — a sidecar's position set may be large; AQE
+    still broadcasts the small case."""
     if pos_df is None:
         return keyed if how == "left_anti" else keyed.limit(0)
     return keyed.join(
@@ -2325,11 +2156,11 @@ def read_changes(
         return None
     target = _snapshot_at(sink_dir, to_version)
     prev = _snapshot_at(sink_dir, from_version) if from_version else EMPTY
-    prev_listing, prev_dvs, prev_refs = prev.listing, prev.dvs, prev.dvrefs
+    prev_listing, prev_refs = prev.listing, prev.dvrefs
 
     pieces = []
     for v, snap in _replay(sink_dir, from_version, to_version, prev):
-        cur_listing, cur_dvs, cur_refs = snap.listing, snap.dvs, snap.dvrefs
+        cur_listing, cur_refs = snap.listing, snap.dvrefs
         added = [p for p in cur_listing if p not in prev_listing]
         removed = [p for p in prev_listing if p not in cur_listing]
         # DV diff at the SIDECAR-REF level (round 7): a ref is
@@ -2343,58 +2174,26 @@ def read_changes(
         removed_refs = {
             r: c for r, c in prev_refs.items() if r not in cur_refs
         }
-        if added:
-            ins = _files_df(spark, sink_dir, added, target.schema)
-            pos = _dv_pos_df(
-                spark,
-                sink_dir,
-                {p: cur_dvs.get(p, []) for p in added},
-                cur_refs,
-                restrict=set(added),
-            )
-            pieces.append((v, "insert", _pos_join_df(ins, pos, "left_anti")))
-        if removed:
-            dels = _files_df(spark, sink_dir, removed, target.schema)
-            pos = _dv_pos_df(
-                spark,
-                sink_dir,
-                {p: prev_dvs.get(p, []) for p in removed},
-                prev_refs,
-                restrict=set(removed),
-            )
-            pieces.append((v, "delete", _pos_join_df(dels, pos, "left_anti")))
         surviving = {p for p in cur_listing if p in prev_listing}
-        new_dead = {
-            p: srt
-            for p in surviving
-            if (srt := sorted(set(cur_dvs.get(p, [])) - set(prev_dvs.get(p, []))))
-        }
-        dead_paths = sorted(
-            set(new_dead)
-            | {p for c in added_refs.values() for p in c if p in surviving}
-        )
-        if dead_paths:
-            d = _files_df(spark, sink_dir, dead_paths, target.schema)
-            pos = _dv_pos_df(
-                spark, sink_dir, new_dead, added_refs, restrict=set(dead_paths)
-            )
-            pieces.append((v, "delete", _pos_join_df(d, pos, "left_semi")))
-        undead = {
-            p: srt
-            for p in surviving
-            if (srt := sorted(set(prev_dvs.get(p, [])) - set(cur_dvs.get(p, []))))
-        }
-        undead_paths = sorted(
-            set(undead)
-            | {p for c in removed_refs.values() for p in c if p in surviving}
-        )
-        if undead_paths:
-            u = _files_df(spark, sink_dir, undead_paths, target.schema)
-            pos = _dv_pos_df(
-                spark, sink_dir, undead, removed_refs, restrict=set(undead_paths)
-            )
-            pieces.append((v, "insert", _pos_join_df(u, pos, "left_semi")))
-        prev_listing, prev_dvs, prev_refs = cur_listing, cur_dvs, cur_refs
+
+        def touched(refs):
+            return sorted({p for c in refs.values() for p in c if p in surviving})
+
+        # (kind, files, the DV refs that apply to them, join): added
+        # files insert their live rows and retired files delete theirs;
+        # on surviving files, positions of added refs are deletes and
+        # positions of removed refs are un-deletes
+        for kind, files, refs, how in (
+            ("insert", added, cur_refs, "left_anti"),
+            ("delete", removed, prev_refs, "left_anti"),
+            ("delete", touched(added_refs), added_refs, "left_semi"),
+            ("insert", touched(removed_refs), removed_refs, "left_semi"),
+        ):
+            if files:
+                rows = _files_df(spark, sink_dir, files, target.schema)
+                pos = _dv_pos_df(spark, sink_dir, refs, set(files))
+                pieces.append((v, kind, _pos_join_df(rows, pos, how)))
+        prev_listing, prev_refs = cur_listing, cur_refs
 
     if not pieces:
         return None

@@ -126,6 +126,19 @@ def test_cheapest_per_store_keeps_ties(frames, oracle):
     )
 
 
+def test_lowest_prices_page_plans_no_window_and_no_exchange(frames):
+    """The page max and the page rows come from one aggregate over
+    the one-partition top-k: no unpartitioned window (its WindowExec
+    logs a "No Partition Defined" WARN on every call) and no
+    shuffle."""
+    from data_pipeline_2025_spark.plans import plan_of
+
+    products, _ = frames
+    plan = plan_of(domain.lowest_prices_page(products, limit=5))
+    assert "TakeOrderedAndProject" in plan
+    assert "Window" not in plan and "Exchange" not in plan
+
+
 def test_lowest_prices_page_local_max(frames, oracle):
     products, _ = frames
     got = domain.lowest_prices_page(products, limit=5).select(

@@ -342,14 +342,13 @@ def test_silver_publish_crash_never_partial(spark, price_dir, tmp_path, monkeypa
 
 
 def test_silver_first_commit_crash_no_absorption(spark, price_dir, tmp_path, monkeypatch):
-    """Round-5 advisor fix (streaming/txn.py is_transactional): a
-    crash during the sink's FIRST-ever commit — stage_append has
+    """A crash during the sink's FIRST-ever commit — stage_append has
     renamed the batch's files into the partition layout, the
     manifest was never published — must NOT make read_silver fall
     back to a directory scan. The orphans would feed the idempotence
     anti-join, the replayed batch would be absorbed by rows that
-    vacuum later deletes: permanent loss. The sink must read as
-    transactional-with-empty-snapshot from the moment _txn exists."""
+    vacuum later deletes: permanent loss. The sink must read as an
+    empty committed snapshot from the moment _txn exists."""
     import glob
 
     from data_pipeline_2025_spark.streaming import ingest, txn
@@ -381,9 +380,8 @@ def test_silver_first_commit_crash_no_absorption(spark, price_dir, tmp_path, mon
         if "/_txn/" not in f
     ]
     assert orphans
-    # ...but the sink already reads as transactional with an EMPTY
-    # committed snapshot — never a directory scan over the orphans.
-    assert txn.is_transactional(sink)
+    # ...but the sink already reads as an EMPTY committed snapshot —
+    # never a directory scan over the orphans.
     assert txn.committed_files(sink) == []
     assert read_silver(spark, sink) is None
 

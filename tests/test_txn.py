@@ -130,8 +130,8 @@ def test_commit_cost_bounded_by_batch_not_table(spark, tmp_path):
     # whose digit counts vary — still O(batch), never O(table))
     assert max(delta_sizes) - min(delta_sizes) <= 24
     # reconstruction crosses checkpoint boundaries exactly
-    assert len(txn._listing_at(sink, 15)) == 15
-    assert len(txn._listing_at(sink, 21)) == 21
+    assert len(txn.listing_at(sink, 15)) == 15
+    assert len(txn.listing_at(sink, 21)) == 21
     assert txn.versions(sink) == list(range(1, 26))
 
 
@@ -568,10 +568,6 @@ def test_metadata_agg_counts_and_bounds_without_scans(spark, tmp_path):
     # DV-free) — metadata time travel
     agg1 = txn.metadata_agg(sink, "id", version=3)
     assert (agg1["count"], agg1["min"], agg1["max"]) == (30, 0, 209)
-    # legacy flat-form stats lines (round-6 pre-"n" format): counts
-    # refuse (None), bounds still parse
-    n, cols = txn._parse_stats('{"id":[1,9]}')
-    assert n is None and cols == {"id": (1, 9)}
 
 
 def test_check_constraints_enforced_at_commit(spark, tmp_path):
@@ -758,10 +754,10 @@ def test_bloom_point_lookup_prunes_without_false_negatives(spark, tmp_path):
     # every present value: its owning file is ALWAYS kept and the
     # pruned read returns exactly its rows
     for v in (0, 1, 29, 58, 59):
-        kept, total = txn.prune_files_eq(sink, "k", v)
+        kept, total = txn.prune_files_in(sink, "k", [v])
         assert total == 3
         got = (
-            txn.read_committed(spark, sink, prune_eq=("k", v))
+            txn.read_committed(spark, sink, prune_in=("k", [v]))
             .where(F.col("k") == v)
             .count()
         )
@@ -779,13 +775,13 @@ def test_bloom_point_lookup_prunes_without_false_negatives(spark, tmp_path):
         assert sorted(kept) == sorted(expected)
 
     # absent value beyond every file's max: bounds alone prune all
-    kept, _ = txn.prune_files_eq(sink, "k", 10_000)
+    kept, _ = txn.prune_files_in(sink, "k", [10_000])
     assert kept == []
     # absent value INSIDE the global range: only the bloom can prune
     # (every file's [min, max] spans it) — simulate to get the exact
     # deterministic keep count, which the machinery must reproduce
     probe = 1_000_003  # arbitrary; not in any file
-    kept2, _ = txn.prune_files_eq(sink, "k", probe)
+    kept2, _ = txn.prune_files_in(sink, "k", [probe])
     sim = [
         path
         for path, per_col in txn.blooms_at(sink).items()
@@ -823,14 +819,14 @@ def test_bloom_survives_checkpoint_and_conservative_without(spark, tmp_path):
     # the two indexes compose: the bloom proves 105 absent from v1's
     # file, min/max bounds prune the 9 bloom-less singleton files
     # that don't contain it, and the one file holding 105 is kept
-    kept, total = txn.prune_files_eq(sink, "k", 105)
+    kept, total = txn.prune_files_in(sink, "k", [105])
     assert total == 11
     assert staged[0] not in kept  # bloom proves absence of 105 in v1's file
     assert len(kept) == 1 and kept[0].startswith("day=b/")
     # and with bounds unable to decide (probe inside v1's range) the
     # bloom-less files' fate rests on bounds alone: probe 5 keeps
     # v1's file (bloom hit) and prunes every singleton by bounds
-    kept5, _ = txn.prune_files_eq(sink, "k", 5)
+    kept5, _ = txn.prune_files_in(sink, "k", [5])
     assert kept5 == staged
 
 
@@ -988,10 +984,10 @@ def test_bloom_probe_type_guard_falls_back_to_bounds(spark, tmp_path):
         sink, staged, bloom=txn.build_bloom(spark, sink, staged, "x")
     )
     # float probe: bloom bypassed (type guard), bounds keep both files
-    kept, total = txn.prune_files_eq(sink, "x", 2.5)
+    kept, total = txn.prune_files_in(sink, "x", [2.5])
     assert total == 2 and len(kept) == 2
     # out-of-range float still pruned by bounds alone
-    kept_hi, _ = txn.prune_files_eq(sink, "x", 1e6)
+    kept_hi, _ = txn.prune_files_in(sink, "x", [1e6])
     assert kept_hi == []
 
 
@@ -1159,11 +1155,11 @@ def test_bloom_type_guard_checks_column_type_not_just_probe(spark, tmp_path):
         sink, staged, bloom=txn.build_bloom(spark, sink, staged, "x")
     )
     # int probe 5: the value exists as 5.0 — the file must be KEPT
-    kept, total = txn.prune_files_eq(sink, "x", 5)
+    kept, total = txn.prune_files_in(sink, "x", [5])
     assert total == 2
     assert any("day=1" in p for p in kept), "wrong skip: 5.0 lives in day=1"
     got = (
-        txn.read_committed(spark, sink, prune_eq=("x", 5))
+        txn.read_committed(spark, sink, prune_in=("x", [5]))
         .where(F.col("x") == 5.0)
         .count()
     )
@@ -1183,31 +1179,8 @@ def test_bloom_type_guard_checks_column_type_not_just_probe(spark, tmp_path):
     )
     for per_col in txn.blooms_at(sink2).values():
         assert per_col["k"][3] == "i"
-    kept5, _ = txn.prune_files_eq(sink2, "k", 5)  # odd: absent, in range
+    kept5, _ = txn.prune_files_in(sink2, "k", [5])  # odd: absent, in range
     assert kept5 == []
-
-
-def test_bloom_legacy_spec_falls_back_to_bounds_type(spark, tmp_path):
-    """A pre-type-guard spec (no "t" field) is gated by the BOUNDS'
-    JSON type instead: int bounds admit an int probe; a double
-    column's float bounds refuse it (bounds-only pruning)."""
-    sink = str(tmp_path / "t")
-    df = spark.range(0, 10).select(
-        F.col("id").alias("k"), F.lit("a").alias("day")
-    )
-    staged = txn.stage_append(df.coalesce(1), sink, ("day",))
-    blooms = txn.build_bloom(spark, sink, staged, "k")
-    for per_col in blooms.values():
-        for spec in per_col.values():
-            del spec["t"]  # simulate a round-6 manifest line
-    txn.commit_append(sink, staged, bloom=blooms)
-    assert txn.blooms_at(sink)[staged[0]]["k"][3] is None
-    # int probe + int bounds: the bloom still prunes an absent value
-    kept, _ = txn.prune_files_eq(sink, "k", 1_000_003 % 7 + 100)
-    # (value 103 is outside [0,9]: bounds prune it regardless; use an
-    # in-range absent probe to isolate the bloom path)
-    present, _ = txn.prune_files_eq(sink, "k", 5)
-    assert present == staged  # present value kept via matching bloom
 
 
 def test_merge_upsert_dv_into_renamed_sink(spark, tmp_path):
@@ -1472,7 +1445,7 @@ def test_bloom_sidecar_manifest_stays_o_files_as_keys_grow(spark, tmp_path):
     assert big <= small + 32  # manifest flat; bitmap grew 30× in the sidecar
     # membership still exact: present keys keep the file, absent
     # in-range keys prune it (single file: bounds can't — keys 0..N)
-    kept, _ = txn.prune_files_eq(s2, "u", 7)
+    kept, _ = txn.prune_files_in(s2, "u", [7])
     assert len(kept) == 1
     # deterministic absent probe — simulate via the shared hash
     m, k, hx, _t = next(iter(txn.blooms_at(s2).values()))["u"]
@@ -1484,7 +1457,7 @@ def test_bloom_sidecar_manifest_stays_o_files_as_keys_grow(spark, tmp_path):
             for p in txn._bloom_positions(v, m, k)
         )
     )
-    kept_absent, _ = txn.prune_files_eq(s2, "u", absent)
+    kept_absent, _ = txn.prune_files_in(s2, "u", [absent])
     # absent may also be pruned by bounds (>1199) — both indexes
     # agree it is skippable
     assert kept_absent == []
@@ -1529,7 +1502,7 @@ def test_bloom_sidecar_vacuum_protection_and_orphans(spark, tmp_path):
     assert any(ref_name in r for r in removed)
     # and a probe against the gone-bloom snapshot still answers
     # (bounds-only pruning, conservative)
-    kept, total = txn.prune_files_eq(sink, "u", 105)
+    kept, total = txn.prune_files_in(sink, "u", [105])
     assert total == 1 and len(kept) == 1
 
 
@@ -1611,7 +1584,7 @@ def test_cdf_source_reader_matches_read_changes(spark, tmp_path):
     from pyspark.sql.types import StructType
 
     from data_pipeline_2025_spark.streaming.cdfsource import (
-        _TxnChangesReader,
+        _TxnChangesPartitionedReader,
     )
 
     sink = str(tmp_path / "t")
@@ -1625,8 +1598,9 @@ def test_cdf_source_reader_matches_read_changes(spark, tmp_path):
     schema = StructType.fromDDL(
         "id bigint, day string, _change_type string, _commit_version bigint"
     )
-    reader = _TxnChangesReader(sink, schema)
-    got = sorted(reader.readBetweenOffsets({"version": 0}, {"version": 5}))
+    reader = _TxnChangesPartitionedReader(sink, schema)
+    units = reader.partitions({"version": 0}, {"version": 5})
+    got = sorted(r for u in units for r in reader.read(u))
     want = sorted(
         tuple(r)
         for r in txn.read_changes(spark, sink, 0, 5)
@@ -1634,27 +1608,24 @@ def test_cdf_source_reader_matches_read_changes(spark, tmp_path):
         .collect()
     )
     assert got == want
-    # offset plumbing: read() from 0 reaches the head and a repeat
-    # read from the head is empty with an unchanged offset
-    rows, off = reader.read({"version": 0})
-    assert off == {"version": 5} and sorted(rows) == got
-    rows2, off2 = reader.read(off)
-    assert rows2 == [] and off2 == off
+    # offset plumbing: the latest offset is the head, and a window
+    # that starts at the head plans nothing
+    assert reader.latestOffset() == {"version": 5}
+    assert reader.partitions({"version": 5}, {"version": 5}) == []
 
 
-def test_cdf_partitioned_reader_row_identical_to_simple(spark, tmp_path):
-    """Round-8 (r7 verdict #3): the partition-parallel
-    DataSourceStreamReader must be row-identical to the simple
-    reader across the full lifecycle grammar (append, merge+DV,
-    sidecar delete, restore) — for the whole feed AND for every
-    per-version offset window — and its planning must carry only
-    manifest metadata (file path + inline positions + sidecar refs,
-    never row data)."""
+def test_cdf_partitioned_reader_row_identical_to_read_changes(spark, tmp_path):
+    """The partition-parallel DataSourceStreamReader must be
+    row-identical to txn.read_changes — the same feed derived
+    independently by Spark joins — across the full lifecycle
+    grammar (append, merge+DV, sidecar delete, restore), for the
+    whole feed AND for every offset window, compared by column name;
+    and its planning must carry only manifest metadata (file path +
+    sidecar refs, never row data)."""
     from pyspark.sql.types import StructType
 
     from data_pipeline_2025_spark.streaming.cdfsource import (
         _TxnChangesPartitionedReader,
-        _TxnChangesReader,
     )
 
     sink = str(tmp_path / "t")
@@ -1668,7 +1639,6 @@ def test_cdf_partitioned_reader_row_identical_to_simple(spark, tmp_path):
     schema = StructType.fromDDL(
         "id bigint, day string, _change_type string, _commit_version bigint"
     )
-    simple = _TxnChangesReader(sink, schema)
     part = _TxnChangesPartitionedReader(sink, schema)
     assert part.initialOffset() == {"version": 0}
     assert part.latestOffset() == {"version": 5}
@@ -1677,9 +1647,10 @@ def test_cdf_partitioned_reader_row_identical_to_simple(spark, tmp_path):
             units = part.partitions({"version": lo}, {"version": hi})
             got = sorted(r for u in units for r in part.read(u))
             want = sorted(
-                simple.readBetweenOffsets(
-                    {"version": lo}, {"version": hi}
-                )
+                tuple(r)
+                for r in txn.read_changes(spark, sink, lo, hi)
+                .select(*schema.fieldNames())
+                .collect()
             )
             assert got == want, (lo, hi)
     # planning is metadata-only: no unit carries row data, and a
@@ -1695,9 +1666,12 @@ def test_cdf_partitioned_reader_row_identical_to_simple(spark, tmp_path):
 
 
 def test_cdf_partitioned_reader_end_to_end_stream(spark, tmp_path):
-    """The default txn_changes format must run the partitioned
-    reader THROUGH the engine (read tasks on executors) and deliver
-    the same rows the simple reader delivers for the same sink."""
+    """The txn_changes format must run the partitioned reader
+    THROUGH the engine (read tasks on executors) and deliver the
+    rows txn.read_changes derives for the same sink, compared by
+    column name."""
+    from pyspark.sql.types import StructType
+
     from data_pipeline_2025_spark.streaming.cdfsource import (
         _FEED_SCHEMA,
         register_txn_changes_source,
@@ -1716,27 +1690,31 @@ def test_cdf_partitioned_reader_end_to_end_stream(spark, tmp_path):
     txn.commit_append(sink, txn.stage_append(ev, sink, ("day",)))
     txn.delete_where(spark, sink, F.col("event_id") % 4 == 0)
 
-    got = {}
-    for label, opts in (("partitioned", {}), ("simple", {"reader": "simple"})):
-        rows = []
-        b = spark.readStream.format("txn_changes").option(
-            "readSchema", _FEED_SCHEMA
+    rows = []
+    q = (
+        spark.readStream.format("txn_changes")
+        .option("readSchema", _FEED_SCHEMA)
+        .load(sink)
+        .writeStream.foreachBatch(
+            lambda df, _id: rows.extend(r.asDict() for r in df.collect())
         )
-        for k, v in opts.items():
-            b = b.option(k, v)
-        q = (
-            b.load(sink)
-            .writeStream.foreachBatch(
-                lambda df, _id: rows.extend(tuple(r) for r in df.collect())
-            )
-            .option("checkpointLocation", str(tmp_path / f"ck_{label}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        got[label] = sorted(rows)
-    assert got["partitioned"] == got["simple"]
-    assert got["partitioned"], "feed must not be empty"
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    feed = txn.read_changes(spark, sink, 0)
+    cols = [
+        F.col(f.name).cast(f.dataType).alias(f.name)
+        for f in StructType.fromDDL(_FEED_SCHEMA).fields
+    ]
+    want = [r.asDict() for r in feed.select(*cols).collect()]
+
+    def key(d):
+        return sorted(d.items())
+
+    assert sorted(rows, key=key) == sorted(want, key=key)
+    assert rows, "feed must not be empty"
 
 
 def test_cdf_matview_batch_apply_is_exactly_once(spark, tmp_path):
@@ -1959,6 +1937,34 @@ def test_prune_files_in_consults_blooms_on_unclustered_column(spark, tmp_path):
     # survivors still contain the true matches
     live = txn.read_committed(spark, sink, prune_in=("id", [9, 21]))
     assert {r["id"] for r in live.collect() if r["id"] in (9, 21)} == {9, 21}
+
+
+def test_prune_files_in_bloom_refutes_without_bounds(spark, tmp_path):
+    """A point probe is a key set of one, and a type-matched bloom
+    refutes it even where the file records no bounds for the column.
+    String values over 64 chars lose their bounds (parquet may
+    truncate them), so here only the bloom can skip a file."""
+    sink = str(tmp_path / "t")
+    files = {}
+    for g in ("a", "b"):
+        df = spark.range(0, 5).coalesce(1).select(
+            F.concat(F.lit(g * 70), F.col("id").cast("string")).alias("name"),
+            F.lit(g).alias("day"),
+        )
+        staged = txn.stage_append(df, sink, ("day",))
+        txn.commit_append(
+            sink, staged, bloom=txn.build_bloom(spark, sink, staged, "name")
+        )
+        files[g] = staged
+    assert all("name" not in cols for cols in txn.stats_at(sink).values())
+    assert all(c["name"][3] == "s" for c in txn.blooms_at(sink).values())
+    kept, total = txn.prune_files_in(sink, "name", ["a" * 70 + "3"])
+    assert total == 2 and kept == files["a"]
+    kept_absent, _ = txn.prune_files_in(sink, "name", ["c" * 70])
+    assert kept_absent == []
+    # the pruned read still holds the probed row
+    live = txn.read_committed(spark, sink, prune_in=("name", ["a" * 70 + "3"]))
+    assert live.where(F.col("name") == "a" * 70 + "3").count() == 1
 
 
 # ------------- randomized commit-grammar consistency (round 7 cont.)
@@ -2356,13 +2362,12 @@ def test_cdf_partitioned_reader_null_fills_schema_evolved_files(
     """Schema evolution through the STREAMING source: after a
     commit widens the read schema, a reader asking for the wide
     schema must null-fill the pre-evolution files' missing column —
-    identically on the executor (partitioned) and driver (simple)
-    paths."""
+    identically on the executor (partitioned reader) and Spark
+    (txn.read_changes) paths."""
     from pyspark.sql.types import StructType
 
     from data_pipeline_2025_spark.streaming.cdfsource import (
         _TxnChangesPartitionedReader,
-        _TxnChangesReader,
     )
 
     sink = str(tmp_path / "t")
@@ -2384,9 +2389,11 @@ def test_cdf_partitioned_reader_null_fills_schema_evolved_files(
     part = _TxnChangesPartitionedReader(sink, schema)
     units = part.partitions({"version": 0}, {"version": 2})
     got = sorted(r for u in units for r in part.read(u))
-    simple = _TxnChangesReader(sink, schema)
     want = sorted(
-        simple.readBetweenOffsets({"version": 0}, {"version": 2})
+        tuple(r)
+        for r in txn.read_changes(spark, sink, 0, 2)
+        .select(*schema.fieldNames())
+        .collect()
     )
     assert got == want
     # v1 files predate the note column → null-filled; v2 carries it
@@ -2432,13 +2439,11 @@ _HAND_LOG = [
         "#check\tpos\tid >= 0",
         f"{_F1}\t{_S1}",
         _F2,
-        f"-{_F1}\t[1]",
         f'%dv\tdv/r1\t{{"{_F2}": 2}}',
     ]),
     ("d", [
         "#op\twrite",
         f'+{_F3}\t{{"n":1}}',
-        f"-{_F1}\t[0, 1]",
         "#x\tfuture metadata",
         "%y\tfuture sidecar",
     ]),
@@ -2467,43 +2472,43 @@ _HAND_LOG = [
         _F4,
         _F5,
         f'{_F6}\t{{"n":4}}',
-        f"-{_F6}\t[3]",
         f'%dv\tdv/r2\t{{"{_F4}": 1}}',
     ]),
-    ("d", ["~day=b", f"-{_F6}\t[0]"]),
+    ("d", ["~day=b", f'%dv\tdv/r3\t{{"{_F6}": 2}}']),
 ]
 
 _HAND_SNAPSHOTS = [
     (
-        {_F1: _S1, _F2: None}, _DDL1, {_F1: [1]}, {"pos": "id >= 0"},
+        {_F1: _S1, _F2: None}, _DDL1, {"pos": "id >= 0"}, "day", {},
+        {"dv/r1": {_F2: 2}},
+    ),
+    (
+        {_F1: _S1, _F2: None, _F3: '{"n":1}'}, _DDL1, {"pos": "id >= 0"},
         "day", {}, {"dv/r1": {_F2: 2}},
     ),
     (
-        {_F1: _S1, _F2: None, _F3: '{"n":1}'}, _DDL1, {_F1: [0, 1]},
-        {"pos": "id >= 0"}, "day", {}, {"dv/r1": {_F2: 2}},
+        {_F1: _S1, _F3: '{"n":1}', _F4: None}, _DDL1, {"pos": "id >= 0"},
+        "day", {"id": "key"}, {},
     ),
     (
-        {_F1: _S1, _F3: '{"n":1}', _F4: None}, _DDL1, {_F1: [0, 1]},
-        {"pos": "id >= 0"}, "day", {"id": "key"}, {},
-    ),
-    (
-        {_F1: _S1, _F3: '{"n":1}', _F4: None}, _DDL2, {_F1: [0, 1]},
+        {_F1: _S1, _F3: '{"n":1}', _F4: None}, _DDL2,
         {"pos": "id >= 0", "small": "id < 100"}, "day", {"id": "key"},
         {"dv/r2": {_F3: 1, _F4: 1}},
     ),
     (
-        {_F4: None, _F5: None}, _DDL2, {},
+        {_F4: None, _F5: None}, _DDL2,
         {"pos": "id >= 0", "small": "id < 100"},
         "days(ts, 2024-01-01) AS d", {}, {"dv/r2": {_F4: 1}},
     ),
     (
-        {_F4: None, _F5: None, _F6: '{"n":4}'}, _DDL2, {_F6: [3]},
+        {_F4: None, _F5: None, _F6: '{"n":4}'}, _DDL2,
         {"pos": "id >= 0", "small": "id < 100"}, None, {},
         {"dv/r2": {_F4: 1}},
     ),
     (
-        {_F5: None, _F6: '{"n":4}'}, _DDL2, {_F6: [0, 3]},
-        {"pos": "id >= 0", "small": "id < 100"}, None, {}, {},
+        {_F5: None, _F6: '{"n":4}'}, _DDL2,
+        {"pos": "id >= 0", "small": "id < 100"}, None, {},
+        {"dv/r3": {_F6: 2}},
     ),
 ]
 
@@ -2544,6 +2549,22 @@ def test_checkpoint_is_the_fold_serialized(tmp_path):
     assert [snap for _v, snap in txn._replay(sink, 2, 5, txn._snapshot_at(sink, 2))] == (
         _HAND_SNAPSHOTS[2:5]
     )
+
+
+def test_fold_refuses_inline_dv_line(tmp_path):
+    """Deleted positions have one form, the ``%dv`` sidecar ref. A
+    ``-path\t[positions]`` line (the retired inline form) must make
+    the fold raise, naming the line: read as a file it would bring
+    back the rows it deleted."""
+    with pytest.raises(ValueError, match="inline deletion-vector"):
+        txn._fold(txn.EMPTY, [_F1, f"-{_F1}\t[0, 1]"])
+    sink = str(tmp_path / "t")
+    _write_hand_log(sink)
+    nxt = os.path.join(sink, "_txn", f"v-{len(_HAND_LOG) + 1:08d}.d.txt")
+    with open(nxt, "w") as f:
+        f.write(f"-{_F6}\t[1]\n")
+    with pytest.raises(ValueError, match=_F6):
+        txn.committed_files(sink)
 
 
 # A commit landing while one read is in flight must be invisible to

@@ -45,7 +45,14 @@ from pyspark.sql import functions as F
 
 from ..catalog import Catalog, fan_out
 from ..registry import register
-from .dedup import SHINGLES_SQL, shingles_df
+from .dedup import (
+    SHINGLES_SQL,
+    band_keys,
+    lsh_candidates,
+    minhash_df,
+    shingles_df,
+    signature_matches,
+)
 from .text import (
     PACK_STREAMS,
     PACK_WINDOW,
@@ -419,6 +426,19 @@ def q65_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 _GATE_MATCHES = 12  # = streaming/dedupgate.GATE_MATCHES (est >= 0.75)
 
 
+def _blocked_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id) of every doc the q120 batch policy blocks: the doc_b
+    of an LSH candidate pair whose signatures agree on >=
+    _GATE_MATCHES hashes, over the cached signature frame."""
+    sigs = minhash_df(spark, sf_dir)
+    return (
+        signature_matches(lsh_candidates(band_keys(sigs)), sigs)
+        .where(F.col("matches") >= _GATE_MATCHES)
+        .select(F.col("doc_b").alias("doc_id"))
+        .distinct()
+    )
+
+
 def _q124_oracle() -> str:
     from .chunking import (
         MAX_AVG_WL,
@@ -512,45 +532,10 @@ UNION ALL SELECT '6_test', dte, tte FROM agg
     tags=("curation", "pipeline", "dedup"),
 )
 def q124_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import NUM_HASHES, band_keys, minhash_df
-
-    sigs = minhash_df(spark, sf_dir)
-    bands = band_keys(sigs)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sa = sigs.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"h{i}").alias(f"a{i}") for i in range(NUM_HASHES)],
-    )
-    sb = sigs.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"h{i}").alias(f"b{i}") for i in range(NUM_HASHES)],
-    )
-    match_sum = None
-    for i in range(NUM_HASHES):
-        term = F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        match_sum = term if match_sum is None else match_sum + term
-    blocked = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .where(match_sum >= _GATE_MATCHES)
-        .select(F.col("doc_b").alias("doc_id"))
-        .distinct()
-        .withColumn("is_blocked", F.lit(1))
-    )
     from .chunking import MAX_WORDS, MIN_AVG_WL, MIN_UNIQ, MIN_WORDS, MAX_AVG_WL
     from .text import STOPWORDS
 
+    blocked = _blocked_docs(spark, sf_dir).withColumn("is_blocked", F.lit(1))
     cat = Catalog(spark, sf_dir)
     toks = tokens_col()
     stops = F.array(*[F.lit(w) for w in STOPWORDS])
@@ -717,43 +702,9 @@ def q130_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from .chunking import MAX_AVG_WL, MAX_WORDS, MIN_AVG_WL, MIN_UNIQ, MIN_WORDS
-    from .dedup import NUM_HASHES, band_keys, minhash_df
     from .text import STOPWORDS
 
-    sigs = minhash_df(spark, sf_dir)
-    bands = band_keys(sigs)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sa = sigs.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"h{i}").alias(f"a{i}") for i in range(NUM_HASHES)],
-    )
-    sb = sigs.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"h{i}").alias(f"b{i}") for i in range(NUM_HASHES)],
-    )
-    match_sum = None
-    for i in range(NUM_HASHES):
-        term = F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        match_sum = term if match_sum is None else match_sum + term
-    blocked = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .where(match_sum >= _GATE_MATCHES)
-        .select(F.col("doc_b").alias("doc_id"))
-        .distinct()
-        .withColumn("is_dup_f", F.lit(1))
-    )
+    blocked = _blocked_docs(spark, sf_dir).withColumn("is_dup_f", F.lit(1))
     cat = Catalog(spark, sf_dir)
     toks = tokens_col()
     stops = F.array(*[F.lit(w) for w in STOPWORDS])

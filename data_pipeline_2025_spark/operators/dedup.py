@@ -166,6 +166,51 @@ def band_keys(minhash: DataFrame) -> DataFrame:
     ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey"))
 
 
+def lsh_candidates(a_bands: DataFrame, b_bands: DataFrame | None = None) -> DataFrame:
+    """Distinct (doc_a, doc_b) pairs, doc_a < doc_b, sharing a (band,
+    bkey) bucket — doc_a from ``a_bands``, doc_b from ``b_bands``
+    (default: the same frame, a self-join). Candidates come only
+    from band buckets, never an all-pairs compare."""
+    a = a_bands.alias("a")
+    b = (a_bands if b_bands is None else b_bands).alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bkey") == F.col("b.bkey"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
+
+
+def signature_matches(
+    cand: DataFrame, a_sigs: DataFrame, b_sigs: DataFrame | None = None
+) -> DataFrame:
+    """(doc_a, doc_b, matches): for each candidate pair, the number of
+    the NUM_HASHES MinHash values on which doc_a's signature (from
+    ``a_sigs``) and doc_b's (from ``b_sigs``, default ``a_sigs``)
+    agree — a row-local integer sum."""
+    sa = a_sigs.select(
+        F.col("doc_id").alias("doc_a"),
+        *[F.col(f"h{i}").alias(f"a{i}") for i in range(NUM_HASHES)],
+    )
+    sb = (a_sigs if b_sigs is None else b_sigs).select(
+        F.col("doc_id").alias("doc_b"),
+        *[F.col(f"h{i}").alias(f"b{i}") for i in range(NUM_HASHES)],
+    )
+    matches = sum(
+        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
+        for i in range(NUM_HASHES)
+    )
+    return (
+        cand.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .select("doc_a", "doc_b", matches.cast("bigint").alias("matches"))
+    )
+
+
 def shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sh) distinct word-trigram shingles (persisted once
     per (session, sf_dir) — see _cached_persist)."""
@@ -382,19 +427,7 @@ def q36_minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # previous union-of-4-projections (x2 join sides) recomputed the
     # signature aggregation ~8x per run (24 HashAggregates in the
     # plan; now 4).
-    bands = band_keys(minhash)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = lsh_candidates(band_keys(minhash))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     sha = sh.select(F.col("doc_id").alias("da"), F.col("sh").alias("sh_a"))
     shb = sh.select(F.col("doc_id").alias("db"), F.col("sh").alias("sh_b"))
@@ -929,18 +962,7 @@ def q38_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("shiftright(simhash, CAST(band * 8 AS INT)) & 255").alias("bkey"),
         )
     )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = lsh_candidates(bands)
     sa = sim.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("fa"))
     sb = sim.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("fb"))
     hamming = F.bit_count(F.col("fa").bitwiseXOR(F.col("fb")))
@@ -1709,34 +1731,8 @@ ORDER BY m.doc_a, m.doc_b
 def q119_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = shingles_df(spark, sf_dir)
     minhash = minhash_df(spark, sf_dir)
-    bands = band_keys(minhash)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    ma = minhash.select(
-        F.col("doc_id").alias("doc_a"), *[F.col(f"h{i}").alias(f"a{i}") for i in range(NUM_HASHES)]
-    )
-    mb = minhash.select(
-        F.col("doc_id").alias("doc_b"), *[F.col(f"h{i}").alias(f"b{i}") for i in range(NUM_HASHES)]
-    )
-    match_sum = None
-    for i in range(NUM_HASHES):
-        term = F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        match_sum = term if match_sum is None else match_sum + term
-    mh = (
-        cand.join(ma, "doc_a")
-        .join(mb, "doc_b")
-        .select("doc_a", "doc_b", match_sum.cast("bigint").alias("matches"))
-    )
+    cand = lsh_candidates(band_keys(minhash))
+    mh = signature_matches(cand, minhash)
     sha = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     shb = sh.select(F.col("doc_id").alias("db"), F.col("sh").alias("sh_b"))
     exact = (

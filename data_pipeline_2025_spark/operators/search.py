@@ -226,14 +226,7 @@ def q47_trigram_fuzzy_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = Catalog(spark, sf_dir)
     term_tgs = _trigrams(FUZZY_TERM)
     names = cat.part.select(F.col("p_name").alias("name")).distinct()
-    tg = names.withColumn(
-        "padded", F.concat(F.lit("  "), F.lower("name"), F.lit(" "))
-    ).withColumn(
-        "tgs",
-        F.array_distinct(
-            F.expr("transform(sequence(1, length(padded) - 2), i -> substring(padded, i, 3))")
-        ),
-    )
+    tg = names.withColumn("tgs", trigram_set())
     term_arr = F.array(*[F.lit(t) for t in term_tgs])
     shared = F.size(F.array_intersect(F.col("tgs"), term_arr))
     sim = shared.cast("double") / (F.size("tgs") + len(term_tgs) - shared)
@@ -279,16 +272,25 @@ def _padded() -> Column:
     return F.concat(F.lit("  "), F.lower("name"), F.lit(" "))
 
 
+def trigram_set() -> Column:
+    """The distinct trigrams of the ``name`` column, padded as
+    pg_trgm pads a word (``'  ' || lower(name) || ' '``) — the Spark
+    side of ``_trigrams`` and of the oracles' ``tg`` CTEs."""
+    padded = _padded()
+    return F.array_distinct(
+        F.transform(
+            F.sequence(F.lit(1), F.length(padded) - 2),
+            lambda i: F.substring(padded, i, 3),
+        )
+    )
+
+
 def postings(names: DataFrame) -> DataFrame:
     """The (name, n_name, tg) postings of ``names`` as one partition
     sorted by tg — staged, it is one file whose row groups prune on
     tg."""
-    tgs = F.array_distinct(
-        F.expr("transform(sequence(1, length(padded) - 2), i -> substring(padded, i, 3))")
-    )
     return (
-        names.withColumn("padded", _padded())
-        .withColumn("tgs", tgs)
+        names.withColumn("tgs", trigram_set())
         .select("name", F.size("tgs").alias("n_name"), F.explode("tgs").alias("tg"))
         .coalesce(1)
         .sortWithinPartitions("tg", "name")
@@ -487,17 +489,7 @@ ORDER BY sim DESC, name_a, name_b
 
 def _tg_sets(cat: Catalog) -> DataFrame:
     names = cat.part.select(F.col("p_name").alias("name")).distinct()
-    return names.withColumn(
-        "padded", F.concat(F.lit("  "), F.lower("name"), F.lit(" "))
-    ).withColumn(
-        "tgs",
-        F.array_distinct(
-            F.expr(
-                "transform(sequence(1, length(padded) - 2),"
-                " i -> substring(padded, i, 3))"
-            )
-        ),
-    ).select("name", "tgs")
+    return names.select("name", trigram_set().alias("tgs"))
 
 
 @register(

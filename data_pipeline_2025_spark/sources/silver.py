@@ -77,13 +77,14 @@ def normalize_items(bronze: DataFrame) -> DataFrame:
     )
 
 
+# The natural key mirrors UNIQUE(supermarket_id, barcode,
+# collected_at) (tables.sql:40) with raw_hash as the content backstop.
+DEDUP_KEY = ["chain_id", "store_id", "item_code", "price_update_date", "raw_hash"]
+
+
 def dedupe_price_items(items: DataFrame) -> DataFrame:
-    """Idempotent under replay: the natural key mirrors
-    UNIQUE(supermarket_id, barcode, collected_at) (tables.sql:40)
-    with raw_hash as the content backstop."""
-    return items.dropDuplicates(
-        ["chain_id", "store_id", "item_code", "price_update_date", "raw_hash"]
-    )
+    """Idempotent under replay: one row per DEDUP_KEY."""
+    return items.dropDuplicates(DEDUP_KEY)
 
 
 def upsert_stores(existing: DataFrame, incoming: DataFrame) -> DataFrame:

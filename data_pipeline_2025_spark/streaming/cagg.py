@@ -13,9 +13,9 @@ from Postgres tables kept fresh by the consumer container (SURVEY.md
 Shape per micro-batch (foreachBatch):
 
 1. idempotent append of the batch's events into a silver table
-   partitioned by event day — the same partition-bounded anti-join
-   upsert as the price ingest (streaming/ingest.py), so duplicate
-   file delivery / checkpoint replay never duplicates rows;
+   partitioned by event day through stream.append_absent, keyed on
+   event_id and reading only the touched days, so duplicate file
+   delivery / checkpoint replay never duplicates rows;
 2. recompute the rollup FOR THE TOUCHED DAYS ONLY from silver, and
    replace exactly those day partitions of the rollup table.
 
@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from . import txn
-from .stream import file_stream
+from .stream import append_absent, file_stream, start_batches
 
 from ..functions.money import dec, money_out
 
@@ -82,22 +82,8 @@ def start_events_rollup(
         ]
         if not touched:
             return
-        # 1. idempotent silver append, scoped to touched partitions.
-        # Reads + writes go through the txn manifest (streaming/
-        # txn.py): the anti-join sees only COMMITTED rows, so crash
-        # orphans can never absorb a replayed batch, and the append
-        # publishes atomically (old-or-new, never partial).
-        committed = txn.read_committed(spark_, silver_dir)
-        if committed is not None:
-            existing = (
-                committed
-                .where(F.col(DAY_COL).isin(touched))
-                .select("event_id")
-            )
-            batch = batch.join(existing, "event_id", "left_anti")
-        txn.commit_append(
-            silver_dir, txn.stage_append(batch, silver_dir, (DAY_COL,))
-        )
+        # 1. idempotent silver append, scoped to touched partitions
+        append_absent(batch, silver_dir, ["event_id"], DAY_COL, touched)
         # 2. recompute rollup for touched days from committed silver;
         # commit_replace swaps exactly those day partitions in ONE
         # transaction (Spark's native partitionOverwriteMode=dynamic
@@ -111,12 +97,7 @@ def start_events_rollup(
             out_dir, txn.stage_append(fresh, out_dir, (DAY_COL,))
         )
 
-    return (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batches(stream, upsert, checkpoint_dir)
 
 
 def serve_hourly(spark: SparkSession, rollup_dir: str) -> DataFrame:

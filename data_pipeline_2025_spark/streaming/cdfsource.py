@@ -56,6 +56,7 @@ from ..catalog import Catalog
 from ..functions.money import dec, money_out
 from ..registry import register
 from . import txn
+from .stream import start_batches
 
 _FEED_SCHEMA = (
     "event_id bigint, user_id bigint, value double, day string, "
@@ -164,10 +165,7 @@ def _dv_positions_for(sink_dir: str, rel: str, refs) -> set:
     """Dead positions of one file: the referenced sidecars' entries
     for that file."""
     return {
-        pos
-        for ref in refs
-        for p, pos in txn._read_dv_sidecar(sink_dir, ref)
-        if p == rel
+        pos for ref in refs for _p, pos in txn._read_dv_sidecar(sink_dir, ref, [rel])
     }
 
 
@@ -337,16 +335,12 @@ def q228_streaming_cdf_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
     txn.commit_append(src, txn.stage_append(v1, src, ("day",)))
 
     def _run_stream() -> None:
-        q = (
+        feed = (
             spark.readStream.format("txn_changes")
             .option("readSchema", _FEED_SCHEMA)
             .load(src)
-            .writeStream.foreachBatch(_apply_feed_batch(mv))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
+        start_batches(feed, _apply_feed_batch(mv), ckpt).awaitTermination()
 
     _run_stream()  # run 1 consumes v1 only
     txn.commit_append(src, txn.stage_append(rest, src, ("day",)))

@@ -20,17 +20,19 @@ micro-batches, as long as arrival order is ascending by doc_id (the
 natural time-ordered-crawl property; the test fixture enforces it
 with file modification times).
 
-Per micro-batch (foreachBatch, same skeleton as cagg.py / cms.py):
+Per micro-batch (foreachBatch, started by stream.start_batches):
 1. signatures of the incoming docs via the SAME doc_shingles /
    doc_minhash / band_keys builders as the batch path (bit-identical
    features);
-2. idempotent anti-join on doc_id against the store (crash replays
-   absorbed);
-3. blockers = band-candidates with smaller doc_id from
-   (store ∪ earlier-in-this-batch) whose signature match count
-   >= GATE_MATCHES;
-4. append verdicts (doc_id, blockers, is_kept) and ALL new
-   signatures to the store.
+2. anti-join on doc_id against the store, BEFORE step 3 (crash
+   replays absorbed: a replayed signature counted again would
+   duplicate its row in store ∪ batch and double a blocker count);
+3. blockers = band-candidates (operators/dedup.lsh_candidates) with
+   smaller doc_id from (store ∪ earlier-in-this-batch) whose
+   signature match count (dedup.signature_matches) >= GATE_MATCHES;
+4. append verdicts (doc_id, blockers, is_kept) through
+   stream.append_absent on doc_id, then ALL new signatures to the
+   store.
 
 The registered query runs the real stream over an ascending 3-way
 split of the documents table into fresh scratch dirs and serves
@@ -48,7 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from . import txn
-from .stream import file_stream
+from .stream import append_absent, file_stream, start_batches
 
 from ..catalog import table_path
 from ..fixtures import split_ascending
@@ -60,52 +62,20 @@ from ..operators.dedup import (
     band_keys,
     doc_minhash,
     doc_shingles,
+    lsh_candidates,
+    signature_matches,
 )
 
 GATE_MATCHES = 12  # estimate >= 12/16 = 0.75 blocks admission
 
-_SIG_COLS = [f"h{i}" for i in range(NUM_HASHES)]
-
-
-def _match_count(a_prefix: str, b_prefix: str):
-    total = None
-    for i in range(NUM_HASHES):
-        term = F.when(
-            F.col(f"{a_prefix}{i}") == F.col(f"{b_prefix}{i}"), 1
-        ).otherwise(0)
-        total = term if total is None else total + term
-    return total.cast("bigint")
-
-
 def _blockers(new_sigs: DataFrame, known_sigs: DataFrame) -> DataFrame:
     """(doc_id, blockers) for every doc in new_sigs: count of
     distinct smaller-id docs in known_sigs sharing a band with
-    signature agreement >= GATE_MATCHES. Candidates only from band
-    buckets — never an all-pairs compare."""
-    nb = band_keys(new_sigs).select(
-        F.col("doc_id").alias("doc_b"), "band", "bkey"
-    )
-    kb = band_keys(known_sigs).select(
-        F.col("doc_id").alias("doc_a"), "band", "bkey"
-    )
-    cand = (
-        nb.join(kb, ["band", "bkey"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    sa = known_sigs.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"h{i}").alias(f"a{i}") for i in range(NUM_HASHES)],
-    )
-    sb = new_sigs.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"h{i}").alias(f"b{i}") for i in range(NUM_HASHES)],
-    )
+    signature agreement >= GATE_MATCHES."""
+    cand = lsh_candidates(band_keys(known_sigs), band_keys(new_sigs))
     return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .where(_match_count("a", "b") >= GATE_MATCHES)
+        signature_matches(cand, known_sigs, new_sigs)
+        .where(F.col("matches") >= GATE_MATCHES)
         .groupBy("doc_b")
         .agg(F.count(F.lit(1)).alias("blockers"))
         .select(F.col("doc_b").alias("doc_id"), "blockers")
@@ -128,21 +98,12 @@ def start_dedup_gate(
         spark_ = batch.sparkSession
         docs = batch.select("doc_id", "text")
         sigs = doc_minhash(doc_shingles(docs))
-        # both sinks go through the txn manifest: anti-joins see only
-        # COMMITTED rows (a crash mid-append can't half-absorb a
-        # replay) and each append publishes atomically.
+        # the store anti-join reads only COMMITTED rows, so a crash
+        # mid-append can't half-absorb a replay
         store = txn.read_committed(spark_, store_dir)
         store_exists = store is not None
         if store_exists:
             sigs = sigs.join(store.select("doc_id"), "doc_id", "left_anti")
-        committed_verdicts = txn.read_committed(spark_, verdict_dir)
-        if committed_verdicts is not None:
-            # verdicts are written before signatures, so each is
-            # anti-joined against ITS OWN sink — a crash between the
-            # two writes replays to a consistent store either way
-            docs = docs.join(
-                committed_verdicts.select("doc_id"), "doc_id", "left_anti"
-            )
         # Micro-batch state is small; materialize once — blockers
         # reads new_sigs twice (bands + signature probe).
         sigs = sigs.persist()
@@ -158,18 +119,14 @@ def start_dedup_gate(
             )
             .withColumn("is_kept", F.col("blockers") == 0)
         )
-        txn.commit_append(
-            verdict_dir, txn.stage_append(verdicts, verdict_dir, ())
-        )
+        # verdicts are written before signatures, so each is
+        # anti-joined against ITS OWN sink — a crash between the two
+        # writes replays to a consistent store either way
+        append_absent(verdicts, verdict_dir, ["doc_id"])
         txn.commit_append(store_dir, txn.stage_append(sigs, store_dir, ()))
         sigs.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batches(stream, gate, checkpoint_dir)
 
 
 _ORACLE_Q120 = f"""

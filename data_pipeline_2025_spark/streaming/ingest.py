@@ -15,24 +15,22 @@ foreachBatch body becomes a single MERGE. The replay test in
 tests/test_ingest.py proves duplicate file delivery does not
 duplicate rows.
 
-The sink append is TRANSACTIONAL (streaming/txn.py): each
-micro-batch is staged invisibly and published by one atomic log-entry
-create, so a crash mid-batch leaves readers on the previous snapshot —
+The sink append is stream.append_absent, the one replay-safe append
+of every streaming txn sink (streaming/stream.py): each micro-batch
+is staged invisibly and published by one atomic log-entry create, so
+a crash mid-batch leaves readers on the previous snapshot —
 old-or-new, never partial (the reference's Postgres transaction
-boundary, rabbitmq-to-postgres/app.py:158-176). Crucially, the
-idempotence anti-join reads the COMMITTED snapshot: orphaned files
-from a crashed batch are invisible to it, so the replayed batch
-re-appends those rows instead of being wrongly absorbed —
-partial-visibility data loss is structurally impossible
+boundary, rabbitmq-to-postgres/app.py:158-176). Its anti-join reads
+the COMMITTED snapshot: orphaned files from a crashed batch are
+invisible to it, so the replayed batch re-appends those rows instead
+of being wrongly absorbed
 (tests/test_ingest.py::test_silver_publish_crash_never_partial).
 
 The sink is PARTITIONED BY event date (ingest_date =
-date(price_update_date)) and the idempotence anti-join reads ONLY
-the partitions present in the micro-batch — the MERGE-shaped,
-partition-bounded upsert: replays arrive within a bounded event-time
-window (T6), so the dedup read is O(replay window), never
-O(history). With Delta the same scoping is the MERGE predicate
-`target.ingest_date IN (...)` that enables file skipping.
+date(price_update_date)) and the anti-join reads ONLY the partitions
+present in the micro-batch: replays arrive within a bounded
+event-time window (T6), so the dedup read is O(replay window), never
+O(history).
 """
 
 from __future__ import annotations
@@ -42,39 +40,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..sources.bronze import explode_items, normalize_price_payload
-from ..sources.silver import dedupe_price_items, normalize_items
+from ..sources.silver import DEDUP_KEY, dedupe_price_items, normalize_items
 from . import txn
+from .stream import append_absent, start_batches
 
-DEDUP_KEY = ["chain_id", "store_id", "item_code", "price_update_date", "raw_hash"]
 PARTITION_COL = "ingest_date"
 
 
 # The serving read of the silver sink: its committed snapshot (crash
 # orphans invisible), None before the first commit.
 read_silver = txn.read_committed
-
-
-def scoped_existing_keys(
-    existing: DataFrame, touched_dates: list
-) -> DataFrame:
-    """Existing-key frame restricted to the sink partitions a batch
-    touches. The IN-list predicate on the partition column prunes at
-    the file index — untouched date partitions are never opened
-    (asserted by tests/test_ingest.py::test_upsert_reads_only_touched_partitions).
-    ``touched_dates`` may contain None (malformed PriceUpdateDate →
-    the null partition)."""
-    dates = [d for d in touched_dates if d is not None]
-    pred = F.col(PARTITION_COL).isin(dates) if dates else F.lit(False)
-    if any(d is None for d in touched_dates):
-        pred = pred | F.col(PARTITION_COL).isNull()
-    return existing.where(pred).select(*DEDUP_KEY)
-
-
-def _publish_silver(sink_dir: str, new_files: list[str]) -> None:
-    """The commit point of a micro-batch — module-level so the
-    crash-injection test can fail HERE (after the data files moved
-    into place, before any reader can see them)."""
-    txn.commit_append(sink_dir, new_files)
 
 
 def start_price_ingest(
@@ -125,22 +100,8 @@ def start_price_ingest(
         # (update_trigram_index skips names the index holds).
         pairs = batch.select(PARTITION_COL, "item_name").distinct().collect()
         names = sorted({r["item_name"] for r in pairs} - {None})
-        committed = txn.read_committed(spark_, sink_dir)
-        if committed is not None:
-            touched = list({r[PARTITION_COL] for r in pairs})
-            existing = scoped_existing_keys(committed, touched)
-            # eqNullSafe: a NULL key column (e.g. malformed
-            # PriceUpdateDate) must still match its replayed twin, or
-            # every replay re-appends those rows.
-            cond = None
-            for k in DEDUP_KEY:
-                c = batch[k].eqNullSafe(existing[k])
-                cond = c if cond is None else cond & c
-            batch = batch.join(existing, cond, "left_anti")
-        # stage invisibly, then publish atomically — the transaction
-        # boundary (see module docstring).
-        new_files = txn.stage_append(batch, sink_dir, (PARTITION_COL,))
-        _publish_silver(sink_dir, new_files)
+        touched = {r[PARTITION_COL] for r in pairs}
+        append_absent(batch, sink_dir, DEDUP_KEY, PARTITION_COL, touched)
         if index_dir is not None and names:
             from ..operators import search
 
@@ -157,9 +118,4 @@ def start_price_ingest(
                     spark_, silver_names.dropna().distinct(), index_dir
                 )
 
-    return (
-        silver.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batches(silver, write_batch, checkpoint_dir)

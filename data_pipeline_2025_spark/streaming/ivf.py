@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from . import txn
-from .stream import file_stream
+from .stream import append_absent, file_stream, start_batches
 
 from ..catalog import table_path
 from ..fixtures import split_ascending
@@ -96,21 +96,9 @@ def start_ivf_indexer(
     cent = centroids.persist()
 
     def index(batch: DataFrame, batch_id: int) -> None:
-        spark_ = batch.sparkSession
-        rows = _assign(_norms_of(batch), cent)
-        # txn manifest: idempotence anti-join over COMMITTED lists
-        # only, atomic per-batch publish (see streaming/txn.py).
-        committed = txn.read_committed(spark_, index_dir)
-        if committed is not None:
-            rows = rows.join(committed.select("vec_id"), "vec_id", "left_anti")
-        txn.commit_append(index_dir, txn.stage_append(rows, index_dir, ()))
+        append_absent(_assign(_norms_of(batch), cent), index_dir, ["vec_id"])
 
-    return (
-        stream.writeStream.foreachBatch(index)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batches(stream, index, checkpoint_dir)
 
 
 _ORACLE_Q126 = f"""

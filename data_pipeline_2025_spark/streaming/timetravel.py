@@ -3075,8 +3075,8 @@ def q243_gdpr_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (not a scan) identifies the small-file backlog — every partition
 # dir holding more than one file, here the days that accumulated
 # three per-day ingest batches — and ONLY those dirs are compacted,
-# via the dynamic-overwrite commit (the compacted files land in the
-# same day dirs, which is exactly commit_replace's drop rule). The
+# by maintenance.txn_compact (the one compaction path: one file out
+# per dir, retired by one conditional replace commit). The
 # single-file days are never touched (paths pinned carried), rows
 # and money are conserved bit-for-bit, and every count is re-derived
 # by the oracle from (day, event_id mod 3) algebra. At 100 TB the
@@ -3122,14 +3122,16 @@ FROM base
     oracle=_ORACLE_Q245,
     doc="Health-triggered auto-compaction, the closed maintenance "
     "loop: the manifest identifies every multi-file partition dir "
-    "(the ingest backlog), ONLY those dirs are compacted via the "
-    "dynamic-overwrite commit, single-file dirs carry over with "
+    "(the ingest backlog), ONLY those dirs are compacted by "
+    "txn_compact's replace commit, single-file dirs carry over with "
     "paths pinned, rows/money conserved bit-for-bit — O(backlog) "
     "rewrite, O(#dirs) trigger, never O(table). All counts "
     "oracle-derived from (day, batch) algebra.",
     tags=("txn", "maintenance", "compaction"),
 )
 def q245_auto_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..maintenance import txn_compact
+
     def build(sink: str) -> None:
         ev = Catalog(spark, sf_dir).events.select(
             "event_id",
@@ -3149,21 +3151,9 @@ def q245_auto_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
                 sink,
                 txn.stage_append(b.repartition(F.col("day")), sink, ("day",)),
             )
-        # ---- the daemon's pass: trigger from the MANIFEST alone
-        listing = txn.committed_files(sink)
-        per_dir: dict[str, int] = {}
-        for f in listing:
-            per_dir[os.path.dirname(f)] = per_dir.get(os.path.dirname(f), 0) + 1
-        backlog = sorted(d for d, n in per_dir.items() if n >= 2)
-        raw_files = [f for f in listing if os.path.dirname(f) in set(backlog)]
-        raw = spark.read.schema("event_id BIGINT, value DOUBLE").option(
-            "basePath", sink
-        ).parquet(*[os.path.join(sink, f) for f in raw_files])
-        txn.commit_replace(
-            sink,
-            txn.stage_append(raw.repartition(F.col("day")), sink, ("day",)),
-            op="optimize",
-        )
+        # ---- the daemon's pass: trigger from the MANIFEST alone —
+        # every dir holding >= 2 committed files, one file out each
+        txn_compact(spark, sink, min_files=2)
 
     sink = built_scratch(spark, sf_dir, "q245", build)
     # ---- evidence, recomputed from the log on every invocation

@@ -119,7 +119,7 @@ import json
 import os
 import time
 import uuid
-from typing import Callable, NamedTuple
+from typing import Callable, Iterable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -383,9 +383,8 @@ def dv_at(sink_dir: str, version: int | None = None) -> dict[str, list[int]]:
     snap = _snap(sink_dir, version)
     out: dict[str, set[int]] = {}
     for ref, counts in snap.dvrefs.items():
-        for path, pos in _read_dv_sidecar(sink_dir, ref):
-            if path in counts:
-                out.setdefault(path, set()).add(pos)
+        for path, pos in _read_dv_sidecar(sink_dir, ref, counts):
+            out.setdefault(path, set()).add(pos)
     return {p: sorted(v) for p, v in out.items()}
 
 
@@ -419,18 +418,25 @@ def dv_counts_at(
     return _dv_counts(_snap(sink_dir, version))
 
 
-def _read_dv_sidecar(sink_dir: str, ref: str) -> list[tuple[str, int]]:
-    """Driver-side sidecar read (pyarrow) for the inspection APIs —
-    returns [(relative path, position)]. Production read paths go
-    through Spark instead (:func:`_dv_pos_df`)."""
+def _read_dv_sidecar(
+    sink_dir: str, ref: str, paths: Iterable[str]
+) -> list[tuple[str, int]]:
+    """Sidecar read (pyarrow) of the entries for the relative data-file
+    ``paths`` — returns [(relative path, position)]. The path filter
+    is pushed into the parquet read, so only those files' positions
+    are parsed. Used by the inspection APIs and the change-feed
+    reader; table reads go through Spark instead (:func:`_dv_pos_df`)."""
     import pyarrow.parquet as pq
 
     d = os.path.join(_txn_dir(sink_dir), ref)
+    filters = [("path", "in", list(paths))]
     rows: list[tuple[str, int]] = []
     for fname in sorted(os.listdir(d)):
         if not fname.endswith(".parquet"):
             continue
-        t = pq.read_table(os.path.join(d, fname), columns=["path", "pos"])
+        t = pq.read_table(
+            os.path.join(d, fname), columns=["path", "pos"], filters=filters
+        )
         rows.extend(
             zip(t.column("path").to_pylist(), t.column("pos").to_pylist())
         )

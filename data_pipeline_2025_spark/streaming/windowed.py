@@ -26,7 +26,7 @@ from ..artifacts import built_scratch, call_scratch
 from ..catalog import load_table
 from ..functions.money import dec, money_out
 from ..registry import register
-from .stream import drain, file_stream
+from .stream import drain, file_stream, start_batches
 
 
 _ORACLE_Q50 = """
@@ -712,13 +712,7 @@ def q220_stream_dv_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ("day",),
             )
 
-        q = (
-            sel.writeStream.foreachBatch(_apply)
-            .option("checkpointLocation", os.path.join(root, ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        start_batches(sel, _apply, os.path.join(root, ckpt)).awaitTermination()
 
     _run_stream("ckpt1")
     first = txn.read_committed(spark, sink)  # snapshot-isolated plan

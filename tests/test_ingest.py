@@ -192,7 +192,8 @@ def test_upsert_reads_only_touched_partitions(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from data_pipeline_2025_spark.streaming.ingest import scoped_existing_keys
+    from data_pipeline_2025_spark.streaming.ingest import DEDUP_KEY, PARTITION_COL
+    from data_pipeline_2025_spark.streaming.stream import existing_keys
 
     sink = str(tmp_path / "part_sink")
     df = spark.range(30).select(
@@ -208,16 +209,18 @@ def test_upsert_reads_only_touched_partitions(spark, tmp_path):
     df.write.mode("append").partitionBy("ingest_date").parquet(sink)
 
     existing = spark.read.parquet(sink)
-    scoped = scoped_existing_keys(existing, [datetime.date(2025, 8, 21)])
+    scoped = existing_keys(
+        existing, DEDUP_KEY, PARTITION_COL, [datetime.date(2025, 8, 21)]
+    )
     assert scoped.count() == 10  # one of three date partitions
     plan = scoped._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
     assert "ingest_date" in plan.split("PartitionFilters")[1].split("]")[0]
 
     # null event date → only the null partition (plus nothing else)
-    assert scoped_existing_keys(existing, [None]).count() == 0
-    both = scoped_existing_keys(
-        existing, [None, datetime.date(2025, 8, 20)]
+    assert existing_keys(existing, DEDUP_KEY, PARTITION_COL, [None]).count() == 0
+    both = existing_keys(
+        existing, DEDUP_KEY, PARTITION_COL, [None, datetime.date(2025, 8, 20)]
     )
     assert both.count() == 10
 
@@ -279,12 +282,14 @@ def test_silver_publish_crash_never_partial(spark, price_dir, tmp_path, monkeypa
     txt = open(f"{price_dir}/f3_new_content.json").read().replace('"400"', '"500"')
     open(f"{price_dir}/f3_new_content.json", "w").write(txt)
 
-    real_publish = ingest._publish_silver
+    real_publish = txn.commit_append
 
-    def boom(sink_dir, new_files):
-        raise RuntimeError("injected crash before manifest publish")
+    def boom(sink_dir, new_files, *args, **kwargs):
+        if sink_dir == sink:
+            raise RuntimeError("injected crash before manifest publish")
+        return real_publish(sink_dir, new_files, *args, **kwargs)
 
-    monkeypatch.setattr(ingest, "_publish_silver", boom)
+    monkeypatch.setattr(txn, "commit_append", boom)
     q = start_price_ingest(spark, price_dir, sink, ckpt)
     try:
         q.awaitTermination()
@@ -306,7 +311,7 @@ def test_silver_publish_crash_never_partial(spark, price_dir, tmp_path, monkeypa
 
     # ---- retry with the SAME checkpoint: replay re-appends and
     # commits; content equals a clean one-shot run
-    monkeypatch.setattr(ingest, "_publish_silver", real_publish)
+    monkeypatch.setattr(txn, "commit_append", real_publish)
     start_price_ingest(spark, price_dir, sink, ckpt).awaitTermination()
     final = read_silver(spark, sink)
     assert final.count() == 5  # 4 old + the genuinely-new item
@@ -360,12 +365,14 @@ def test_silver_first_commit_crash_no_absorption(spark, price_dir, tmp_path, mon
     sink = str(tmp_path / "silver")
     ckpt = str(tmp_path / "ckpt")
 
-    real_publish = ingest._publish_silver
+    real_publish = txn.commit_append
 
-    def boom(sink_dir, new_files):
-        raise RuntimeError("injected crash before first manifest publish")
+    def boom(sink_dir, new_files, *args, **kwargs):
+        if sink_dir == sink:
+            raise RuntimeError("injected crash before first manifest publish")
+        return real_publish(sink_dir, new_files, *args, **kwargs)
 
-    monkeypatch.setattr(ingest, "_publish_silver", boom)
+    monkeypatch.setattr(txn, "commit_append", boom)
     q = start_price_ingest(spark, price_dir, sink, ckpt)
     try:
         q.awaitTermination()
@@ -387,7 +394,7 @@ def test_silver_first_commit_crash_no_absorption(spark, price_dir, tmp_path, mon
 
     # retry with the same checkpoint: the replayed batch is NOT
     # absorbed; content equals a clean one-shot run.
-    monkeypatch.setattr(ingest, "_publish_silver", real_publish)
+    monkeypatch.setattr(txn, "commit_append", real_publish)
     start_price_ingest(spark, price_dir, sink, ckpt).awaitTermination()
     final = read_silver(spark, sink)
     clean_sink = str(tmp_path / "silver_clean")

@@ -595,3 +595,21 @@ def test_registry_streams_leave_no_views(spark, sf_smoke):
         assert fn(spark, sf_smoke).collect() == first, name
     assert temp_views() == before
     assert spark.streams.active == []
+
+
+def test_only_stream_module_starts_streams():
+    """Every stream in the package starts through streaming/stream.py
+    (``start_batches`` for foreachBatch sinks, ``drain`` for memory
+    sinks), so the checkpoint and trigger rules live in one place:
+    no other module calls ``.writeStream``."""
+    from pathlib import Path
+
+    import data_pipeline_2025_spark
+
+    pkg = Path(data_pipeline_2025_spark.__file__).parent
+    callers = sorted(
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if ".writeStream" in p.read_text(encoding="utf-8")
+    )
+    assert callers == [str(Path("streaming", "stream.py"))]

@@ -1665,6 +1665,55 @@ def test_cdf_partitioned_reader_row_identical_to_read_changes(spark, tmp_path):
         assert sorted(part.read(u2)) == sorted(part.read(u))
 
 
+def test_cdf_reader_reads_only_each_files_dv_positions(spark, tmp_path, monkeypatch):
+    """A change unit reads, from each referenced DV sidecar, only the
+    positions of its own file — not the whole sidecar once per
+    changed file. 20 files of 20 rows, two delete_where commits
+    (134 then 133 rows): each file is read against the first sidecar
+    at v2 (134 positions in all) and against its prev and cur refs at
+    v3 (134 + 134 + 133), so 535 positions, where reading every
+    sidecar in full parses 10,700. The rows still equal
+    txn.read_changes."""
+    from pyspark.sql.types import StructType
+
+    from data_pipeline_2025_spark.streaming.cdfsource import (
+        _TxnChangesPartitionedReader,
+    )
+
+    sink = str(tmp_path / "t")
+    df = spark.range(0, 400, numPartitions=20)
+    txn.commit_append(sink, txn.stage_append(df, sink, ()))
+    assert len(txn.committed_files(sink)) == 20
+    assert txn.delete_where(spark, sink, F.col("id") % 3 == 0) == 134
+    assert txn.delete_where(spark, sink, F.col("id") % 3 == 1) == 133
+
+    read = []
+    real = txn._read_dv_sidecar
+
+    def counting(*args, **kwargs):
+        rows = real(*args, **kwargs)
+        read.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(txn, "_read_dv_sidecar", counting)
+    schema = StructType.fromDDL(
+        "id bigint, _change_type string, _commit_version bigint"
+    )
+    reader = _TxnChangesPartitionedReader(sink, schema)
+    units = reader.partitions({"version": 0}, {"version": 3})
+    got = sorted(r for u in units for r in reader.read(u))
+    assert len(units) == 60 and len(read) == 80
+    assert sum(read) == 134 + (134 + 134 + 133)
+    monkeypatch.setattr(txn, "_read_dv_sidecar", real)
+    want = sorted(
+        tuple(r)
+        for r in txn.read_changes(spark, sink, 0, 3)
+        .select(*schema.fieldNames())
+        .collect()
+    )
+    assert got == want
+
+
 def test_cdf_partitioned_reader_end_to_end_stream(spark, tmp_path):
     """The txn_changes format must run the partitioned reader
     THROUGH the engine (read tasks on executors) and deliver the

@@ -431,8 +431,9 @@ def _blocked_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     of an LSH candidate pair whose signatures agree on >=
     _GATE_MATCHES hashes, over the cached signature frame."""
     sigs = minhash_df(spark, sf_dir)
+    bands = band_keys(sigs)
     return (
-        signature_matches(lsh_candidates(band_keys(sigs)), sigs)
+        signature_matches(lsh_candidates(bands, bands), sigs, sigs)
         .where(F.col("matches") >= _GATE_MATCHES)
         .select(F.col("doc_b").alias("doc_id"))
         .distinct()

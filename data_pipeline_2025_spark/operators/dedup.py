@@ -166,13 +166,13 @@ def band_keys(minhash: DataFrame) -> DataFrame:
     ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey"))
 
 
-def lsh_candidates(a_bands: DataFrame, b_bands: DataFrame | None = None) -> DataFrame:
+def lsh_candidates(a_bands: DataFrame, b_bands: DataFrame) -> DataFrame:
     """Distinct (doc_a, doc_b) pairs, doc_a < doc_b, sharing a (band,
     bkey) bucket — doc_a from ``a_bands``, doc_b from ``b_bands``
-    (default: the same frame, a self-join). Candidates come only
-    from band buckets, never an all-pairs compare."""
+    (the same frame for a self-join). Candidates come only from band
+    buckets, never an all-pairs compare."""
     a = a_bands.alias("a")
-    b = (a_bands if b_bands is None else b_bands).alias("b")
+    b = b_bands.alias("b")
     return (
         a.join(
             b,
@@ -186,17 +186,17 @@ def lsh_candidates(a_bands: DataFrame, b_bands: DataFrame | None = None) -> Data
 
 
 def signature_matches(
-    cand: DataFrame, a_sigs: DataFrame, b_sigs: DataFrame | None = None
+    cand: DataFrame, a_sigs: DataFrame, b_sigs: DataFrame
 ) -> DataFrame:
     """(doc_a, doc_b, matches): for each candidate pair, the number of
     the NUM_HASHES MinHash values on which doc_a's signature (from
-    ``a_sigs``) and doc_b's (from ``b_sigs``, default ``a_sigs``)
-    agree — a row-local integer sum."""
+    ``a_sigs``) and doc_b's (from ``b_sigs``) agree — a row-local
+    integer sum."""
     sa = a_sigs.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"h{i}").alias(f"a{i}") for i in range(NUM_HASHES)],
     )
-    sb = (a_sigs if b_sigs is None else b_sigs).select(
+    sb = b_sigs.select(
         F.col("doc_id").alias("doc_b"),
         *[F.col(f"h{i}").alias(f"b{i}") for i in range(NUM_HASHES)],
     )
@@ -427,7 +427,8 @@ def q36_minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # previous union-of-4-projections (x2 join sides) recomputed the
     # signature aggregation ~8x per run (24 HashAggregates in the
     # plan; now 4).
-    cand = lsh_candidates(band_keys(minhash))
+    bands = band_keys(minhash)
+    cand = lsh_candidates(bands, bands)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     sha = sh.select(F.col("doc_id").alias("da"), F.col("sh").alias("sh_a"))
     shb = sh.select(F.col("doc_id").alias("db"), F.col("sh").alias("sh_b"))
@@ -962,7 +963,7 @@ def q38_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("shiftright(simhash, CAST(band * 8 AS INT)) & 255").alias("bkey"),
         )
     )
-    cand = lsh_candidates(bands)
+    cand = lsh_candidates(bands, bands)
     sa = sim.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("fa"))
     sb = sim.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("fb"))
     hamming = F.bit_count(F.col("fa").bitwiseXOR(F.col("fb")))
@@ -1731,8 +1732,9 @@ ORDER BY m.doc_a, m.doc_b
 def q119_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = shingles_df(spark, sf_dir)
     minhash = minhash_df(spark, sf_dir)
-    cand = lsh_candidates(band_keys(minhash))
-    mh = signature_matches(cand, minhash)
+    bands = band_keys(minhash)
+    cand = lsh_candidates(bands, bands)
+    mh = signature_matches(cand, minhash, minhash)
     sha = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     shb = sh.select(F.col("doc_id").alias("db"), F.col("sh").alias("sh_b"))
     exact = (

@@ -122,7 +122,7 @@ def start_dedup_gate(
         # verdicts are written before signatures, so each is
         # anti-joined against ITS OWN sink — a crash between the two
         # writes replays to a consistent store either way
-        append_absent(verdicts, verdict_dir, ["doc_id"])
+        append_absent(verdicts, verdict_dir, ["doc_id"], None, ())
         txn.commit_append(store_dir, txn.stage_append(sigs, store_dir, ()))
         sigs.unpersist()
 

@@ -96,7 +96,8 @@ def start_ivf_indexer(
     cent = centroids.persist()
 
     def index(batch: DataFrame, batch_id: int) -> None:
-        append_absent(_assign(_norms_of(batch), cent), index_dir, ["vec_id"])
+        rows = _assign(_norms_of(batch), cent)
+        append_absent(rows, index_dir, ["vec_id"], None, ())
 
     return start_batches(stream, index, checkpoint_dir)
 

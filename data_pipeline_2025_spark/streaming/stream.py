@@ -106,8 +106,8 @@ def start_batches(
 def existing_keys(
     committed: DataFrame,
     keys: list[str],
-    part_col: str | None = None,
-    touched: Iterable = (),
+    part_col: str | None,
+    touched: Iterable,
 ) -> DataFrame:
     """The ``keys`` columns of ``committed``; with ``part_col``, only
     those of the partitions in ``touched``. The IN-list predicate on
@@ -128,14 +128,15 @@ def append_absent(
     batch: DataFrame,
     sink: str,
     keys: list[str],
-    part_col: str | None = None,
-    touched: Iterable = (),
+    part_col: str | None,
+    touched: Iterable,
 ) -> None:
     """Stage and commit, in one commit, the rows of ``batch`` whose
     ``keys`` the committed snapshot of ``sink`` does not hold. The key
     match is null-safe, so a NULL key column still matches its
-    replayed twin. ``part_col`` partitions the sink; ``touched`` are
-    the batch's values of it, already collected by the caller."""
+    replayed twin. ``part_col`` partitions the sink (None: not
+    partitioned); ``touched`` are the batch's values of it, already
+    collected by the caller."""
     committed = txn.read_committed(batch.sparkSession, sink)
     if committed is not None:
         existing = existing_keys(committed, keys, part_col, touched)
